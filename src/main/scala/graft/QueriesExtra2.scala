@@ -434,18 +434,9 @@ object QueriesExtra2 {
       corpus: org.apache.spark.sql.DataFrame, idCol: String,
       variant: String, dir: String,
       edges: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import graft.dedup.MinHashDedup
-    val path = dedupEdgesPath(variant, scaleKey(dir))
-    val withId = MinHashDedup.assignId(corpus, Some(idCol))
-    val e = graft.dedup.SideChannel.through(edges(withId), sinkOnce(path))
-    val out = MinHashDedup
-      .keepFirst(withId, e, 10000000L)
-      .select(idCol).orderBy(idCol)
-      .localCheckpoint(true) // lineage cut so the id cache can release
-    withId.unpersist()
-    out
-  }
+      : org.apache.spark.sql.DataFrame =
+    sigOracledDedup(s, corpus, idCol, dedupEdgesPath(variant, scaleKey(dir)),
+      (withId, sink) => graft.dedup.SideChannel.through(edges(withId), sink))
 
   /** Shared body for the signature-oracled dedup queries: assign
     * doc-derived ids, build the variant's edges with its signature
@@ -455,16 +446,12 @@ object QueriesExtra2 {
       corpus: org.apache.spark.sql.DataFrame, idCol: String,
       sinkPath: String,
       edges: (org.apache.spark.sql.DataFrame, Option[String]) =>
-        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import graft.dedup.MinHashDedup
-    val withId = MinHashDedup.assignId(corpus, Some(idCol))
-    val out = MinHashDedup
-      .keepFirst(withId, edges(withId, sinkOnce(sinkPath)), 10000000L)
-      .select(idCol).orderBy(idCol)
-      .localCheckpoint(true) // lineage cut so the id cache can release
-    withId.unpersist()
-    out
-  }
+        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.dedup.Clustering.run(corpus, Some(idCol), 10000000L,
+      graft.dedup.Clustering.Pin.Released)(
+      (withId, _) => edges(withId, sinkOnce(sinkPath)))(
+      // lineage cut so the id cache can release
+      _.keep(_).select(idCol).orderBy(idCol).localCheckpoint(true))
 
   /** SimHash near-dedup — SIGNATURE-oracled since r7: the query exports
     * (id, sig) and DuckDB derives banding, verification and clustering.

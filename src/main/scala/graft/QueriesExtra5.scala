@@ -31,8 +31,6 @@ object QueriesExtra5 {
     "de" -> "deutschwort", "fr" -> "bonjourmark")
 
   /** text || repeat(' ' || marker(lang), doc_id % 3 + 1) on both engines. */
-  private[graft] def docExprSparkPublic: Column = docExprSpark
-
   private def docExprSpark: Column = {
     val marker = Markers.init.foldLeft(null: Column) { case (acc, (l, m)) =>
       if (acc == null) when(col("lang") === l, lit(m))

@@ -89,22 +89,21 @@ object QueriesFlagshipOracle {
     * `ChatPipeline.flagship`.
     */
   private[graft] def runMinhash(s: SparkSession, dir: String): DataFrame = {
-    import graft.dedup.{MinHashConfig, MinHashDedup}
+    import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
     val rendered = trunk(s, dir)
       .withColumn("__mid__", col("custkey") * (1L << 20) + col("pos0"))
     val cfg = MinHashConfig(ngramSize = 5, numPerm = 256, threshold = 0.7,
       minNgramSize = 5)
-    // assignId persists the rendered trunk: the banded write below both
-    // computes and caches it, and keepFirst's probe + the final scan reuse
-    // the cache (same leak-until-action pattern as the other dedup
-    // queries; a localCheckpoint here cost ~1s of copy at sf0.1)
+    // the id pin caches the rendered trunk: the banded write below both
+    // computes and caches it, and the clustering probe + the final scan
+    // reuse the cache (Pin.Held — same leak-until-action pattern as the
+    // other dedup queries; a localCheckpoint here cost ~1s of copy at
+    // sf0.1)
     val path =
       QueriesExtra2.bandedPath("flagship", QueriesExtra2.scaleKey(dir))
-    val withId = MinHashDedup.assignId(rendered, Some("__mid__"))
-    MinHashDedup
-      .keepFirst(withId,
-        MinHashDedup.candidateEdges(withId, "response", cfg,
-          QueriesExtra2.sinkOnce(path)), 10000000L)
+    Clustering.run(rendered, Some("__mid__"), 10000000L, Clustering.Pin.Held)(
+        (withId, _) => MinHashDedup.candidateEdges(withId, "response", cfg,
+          QueriesExtra2.sinkOnce(path)))(_.keep(_))
       .where(Filters.checkLowercaseRatio(0.55).keep(col("instruction")))
       .select(col("source"), col("rendered"))
       .orderBy("source", "rendered")

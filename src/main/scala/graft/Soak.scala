@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{DedupMetrics, MinHash, MinHashConfig, MinHashDedup}
+import graft.dedup.{Clustering, DedupMetrics, MinHash, MinHashConfig,
+  MinHashDedup}
 
 /** One-shot scale soak (VERDICT r6 #1): at the derived sf1 corpus, run
   * minhash dedup through BOTH clustering paths — driver UnionFind and the
@@ -115,7 +116,7 @@ object Soak {
   *   3. salted two-stage bucket-min wall time (skewSalts = 32);
   *
   * then proves END-TO-END kept-set AND cluster-root equality of
-  * `deduplicate`/`componentRoots` with skewSalts on vs off (min is
+  * `deduplicate`/`clusterRoots` with skewSalts on vs off (min is
   * associative; the salted edge set differs but connectivity and
   * component minima are identical — SkewSoakSpec pins the same at test
   * scale). Prints the PERF.md skew table row.
@@ -146,7 +147,8 @@ object SoakSkew {
       s"zipf=$exponent hottest: $hottest")
 
     // isolate the bucket-min stage: banding once, persisted
-    val withId = MinHashDedup.assignId(docs, Some("doc_id"))
+    val withId = docs.withColumn(Clustering.IdCol,
+      Clustering.idExpr(Some("doc_id")))
     val (_, banded0) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
     val banded = banded0.persist()
     val bandedRows = banded.count()
@@ -429,8 +431,9 @@ object SoakEdges {
     // untimed verification: the corpus really does exceed the 10M-edge
     // driver crossover (so the distributed branch fired on volume, not
     // on a lowered threshold)
-    val nEdges = MinHashDedup.candidateEdges(
-      MinHashDedup.assignId(corpus, Some("doc_id")), "text", cfg).count()
+    val nEdges = MinHashDedup.candidateEdges(corpus.withColumn(
+      Clustering.IdCol, Clustering.idExpr(Some("doc_id"))), "text", cfg)
+      .count()
     println(s"[soak-edges] candidate edges = $nEdges (must be > 10M)")
     assert(nEdges > 10_000_000L, s"edge list too small: $nEdges")
     // keep-first at scale: the kept exact-class representatives must be

@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * `n` tokens are excluded from banding up front (they cannot shingle;
   * byte-identical short docs are exact-dedup's job), candidates are
   * star-shaped per bucket via the streaming bucket-min window, the
-  * Levenshtein verify joins texts back on the bounded candidate list,
-  * and clustering goes through [[MinHashDedup.keepFirst]]'s driver/
-  * distributed crossover. O(len²) per verified pair is paid on candidate
+  * Levenshtein verify joins texts back on the bounded candidate list
+  * ([[MinHashDedup.verifiedCandidates]]), and clustering goes through
+  * [[Clustering]]'s driver/distributed crossover. O(len²) per verified pair is paid on candidate
   * pairs only — banding keeps that set near-linear in corpus size.
   */
 object EditDistanceDedup {
@@ -51,20 +51,10 @@ object EditDistanceDedup {
       threshold: Double = 0.8,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    // cache hygiene parity with MinHashDedup.deduplicate (ADVICE r14):
-    // with skew_salts auto/salted the bucket-min stage pins the banded /
-    // staged frame; keepFirst materializes the verified edges before
-    // returning, so releasing here is safe by the same argument
-    val out = MinHashDedup.withCacheRelease { sink =>
-      MinHashDedup.keepFirst(withId,
-        verifiedEdges(withId, column, n, threshold, cfg,
-          cacheSink = Some(sink)), maxDriverEdges)
-    }
-    MinHashDedup.releasePinIf(withId, orderCol)
-    out
-  }
+      orderCol: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
+      verifiedEdges(withId, column, n, threshold, cfg,
+        cacheSink = Some(sink)))(_.keep(_))
 
   /** Levenshtein-verified candidate pairs — the edge list feeding the
     * clustering. `bandedSink` exports the exploded (id, band, bsig)
@@ -75,33 +65,8 @@ object EditDistanceDedup {
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
       bandedSink: Option[String] = None,
-      cacheSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame = {
-    val spark = withId.sparkSession
-    val text = coalesce(col(column), lit(""))
-    val sig = MinHashDedup.signatureColumn(cfg.copy(ngramSize = n,
-      minNgramSize = n))
-    // r20: early-exit fused gate (no token-array materialization) —
-    // ≡ size(split(text, "[^A-Za-z_0-9]", -1)) >= n, FusedTextSpec
-    val shingleable = graft.text.FusedText.nonAlphaPartsAtLeast(text, n)
-    val base = withId.where(shingleable)
-    val par = spark.sparkContext.defaultParallelism
-    val srcFiles = withId.inputFiles.length
-    val spread =
-      if (srcFiles == 0 || srcFiles * 2 < par) base.repartition(par)
-      else base
-    val banded = spread
-      .select(col(MinHashDedup.IdCol).as("id"),
-        posexplode(sig(text)).as(Seq("band", "bsig")))
-    // cfg.skewSalts reaches the bucket-min stage (VERDICT r12 #3)
-    val candidates = MinHashDedup.bucketMinEdges(
-      SideChannel.through(banded, bandedSink), cfg.skewSalts, cacheSink)
-    candidates
-      .join(withId.select(col(MinHashDedup.IdCol).as("__x__"),
-        col(column).as("__ta__")), Seq("__x__"))
-      .join(withId.select(col(MinHashDedup.IdCol).as("__y__"),
-        col(column).as("__tb__")), Seq("__y__"))
-      .where(levSimilarity(col("__ta__"), col("__tb__")) >= threshold)
-      .select(col("__x__"), col("__y__"))
-  }
+      cacheSink: Option[Clustering.Sink] = None): DataFrame =
+    MinHashDedup.verifiedCandidates(withId, column,
+      cfg.copy(ngramSize = n, minNgramSize = n), bandedSink, cacheSink)(
+      levSimilarity(_, _) >= threshold)
 }

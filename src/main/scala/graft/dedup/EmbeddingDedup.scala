@@ -35,19 +35,15 @@ object EmbeddingDedup {
   /** Dedup `df` keeping one row per cosine-cluster (≥ `threshold` within
     * `blockCol` blocks). Pass an existing cell column (e.g. an IVF label)
     * or pre-compute one with [[hyperplaneBits]]. Clustering goes through
-    * [[MinHashDedup.keepFirst]] — driver UnionFind for small edge lists,
-    * distributed min-label propagation beyond `maxDriverEdges`.
+    * [[Clustering]] — driver UnionFind for small edge lists, distributed
+    * min-label propagation beyond `maxDriverEdges`.
     */
   def deduplicate(df: DataFrame, embCol: String, blockCol: String,
       threshold: Double,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    val out = MinHashDedup.keepFirst(withId,
-      verifiedEdges(withId, embCol, blockCol, threshold), maxDriverEdges)
-    MinHashDedup.releasePinIf(withId, orderCol) // VERDICT r14 #5
-    out
-  }
+      orderCol: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)((withId, _) =>
+      verifiedEdges(withId, embCol, blockCol, threshold))(_.keep(_))
 
   /** Above-threshold within-block cosine pairs — the verified edge list
     * feeding the clustering. Exposed for the keep-first invariant specs.
@@ -58,7 +54,7 @@ object EmbeddingDedup {
     // norms once per row, NOT per pair (primitive kernel — the Column HOF
     // version is CodegenFallback, ~100× slower on the pair scan)
     val normed = withId.select(col(blockCol).as("blk"),
-      col(MinHashDedup.IdCol).as("nid"), col(embCol).as("e"),
+      col(Clustering.IdCol).as("nid"), col(embCol).as("e"),
       Ann.normFast(col(embCol)).as("nn"))
     val a = normed.select(col("blk"), col("nid").as("xid"),
       col("e").as("ea"), col("nn").as("na"))

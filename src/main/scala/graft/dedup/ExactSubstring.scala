@@ -90,26 +90,15 @@ object ExactSubstring {
     * exclusive end) covered by length-`L` windows whose content occurs in
     * MORE THAN ONE document. Rows shorter than L produce no spans.
     */
-  /** Probe hooks (r19 measurement): the explode stage and the marked
-    * stage as standalone frames, so phase costs are timeable in
-    * isolation (graft.EsProbe). Not query API.
+  /** The explode stage: one (id, pos, h1, h2) row per length-`L`
+    * window of every row at least `L` long.
     */
-  private[graft] def gramsFor(df: DataFrame, idCol: String,
+  private def gramsFor(df: DataFrame, idCol: String,
       textCol: String, L: Int): DataFrame =
     df.where(length(col(textCol)) >= L).select(col(idCol),
         posexplode(windowKeys(col(textCol), L)).as(Seq("pos", "h")))
       .select(col(idCol), col("pos"),
         col("h._1").as("h1"), col("h._2").as("h2"))
-
-  private[graft] def markedFor(df: DataFrame, idCol: String,
-      textCol: String, L: Int): DataFrame = {
-    val wh = Window.partitionBy("h1", "h2")
-    gramsFor(df, idCol, textCol, L)
-      .withColumn("__mn__", min(col(idCol)).over(wh))
-      .withColumn("__mx__", max(col(idCol)).over(wh))
-      .where(col("__mn__") =!= col("__mx__"))
-      .drop("__mn__", "__mx__")
-  }
 
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       L: Int): DataFrame = {

@@ -1,265 +1,10 @@
 package graft.dedup
 
-import java.nio.ByteBuffer
-import java.security.MessageDigest
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-/** MinHash + LSH near-deduplication with the reference's exact hash family
-  * (minhash_deduplication.py — BigCode lineage): word-ngram shingles over a
-  * `[^A-Za-z_0-9]` split, sha1-32 token hashes, 256 seed-42 universal
-  * hashes with numpy-uint64 WRAPPING arithmetic `((h*a + b) mod 2^64) mod
-  * (2^61-1) & 0xFFFFFFFF` (Java Long wraps identically), column-min, and
-  * big-endian banded byte signatures — byte-identical to the reference.
-  */
-object MinHash {
-  val MaxHash: Long = (1L << 32) - 1
-  val MersennePrime: Long = (1L << 61) - 1
-
-  private val sha1 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest =
-      MessageDigest.getInstance("SHA-1")
-  }
-
-  /** First 4 bytes of SHA-1, little-endian uint32
-    * (minhash_deduplication.py:59-71).
-    */
-  def sha1Hash32(data: Array[Byte]): Long = {
-    val md = sha1.get()
-    md.reset()
-    val d = md.digest(data)
-    ((d(0) & 0xffL)) | ((d(1) & 0xffL) << 8) |
-      ((d(2) & 0xffL) << 16) | ((d(3) & 0xffL) << 24)
-  }
-
-  /** The reference's NON_ALPHA split pattern, compiled ONCE (r20:
-    * `String.split` fast-paths only single-char literals — a multi-char
-    * regex is `Pattern.compile`d on every call, i.e. once per ROW in the
-    * signature kernel; `Pattern.split` is the same algorithm on the
-    * shared compiled automaton, so the parts are identical).
-    */
-  private val NonAlpha = java.util.regex.Pattern.compile("[^A-Za-z_0-9]")
-
-  /** Distinct space-joined word n-grams over the NON_ALPHA split, empty
-    * when the doc has fewer than `minNgramSize` tokens
-    * (minhash_deduplication.py:32-56,110). Split keeps empty tokens for
-    * consecutive separators, exactly like Python `re.split`.
-    */
-  def tokens(content: String, n: Int, minNgramSize: Int): mutable.Set[String] = {
-    val parts = NonAlpha.split(content, -1)
-    val set = mutable.Set.empty[String]
-    if (parts.length < minNgramSize) return set
-    var i = 0
-    val sb = new java.lang.StringBuilder
-    while (i + n <= parts.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(parts(i + j))
-        j += 1
-      }
-      set += sb.toString
-      i += 1
-    }
-    set
-  }
-
-  /** Unsigned `x mod (2^61-1)` without hardware division: 2^61 ≡ 1, so
-    * with x = hi·2^61 + lo, x ≡ hi + lo; hi ≤ 7 and lo ≤ 2^61-1 make one
-    * conditional subtract enough. Exact for the full unsigned 64-bit range
-    * (property-tested against `Long.remainderUnsigned`); ~3× faster inner
-    * loop — this is THE hot path of dedup at scale (tokens × 256 perms).
-    */
-  @inline def modMersenne(x: Long): Long = {
-    val r = (x & MersennePrime) + (x >>> 61)
-    if (r >= MersennePrime) r - MersennePrime else r
-  }
-
-  // Per-JVM shingle → 256-permutation-value cache. Real corpora are Zipfian
-  // (shingles repeat across near-dup docs and templated text), so the
-  // sha1 + 256-multiply work per shingle is paid once per executor, not
-  // once per occurrence. Bounded: above the cap new shingles are computed
-  // but not stored (no eviction churn); values are pure functions of the
-  // token bytes, so the cache never affects results. Retained footprint at
-  // the cap is ~35 MB/executor (16k entries × (256×8 B values + ~60 B
-  // key/CHM overhead)) and is NOT released after dedup — an accepted
-  // steady-state cost for a long-running pipeline JVM; call
-  // [[clearPermCache]] to drop it. The size-check-then-putIfAbsent below
-  // is racy, so concurrent tasks can overshoot the cap by a few entries —
-  // benign (the cap is a soft bound, values are deterministic).
-  private val PermCacheCap = 1 << 14
-  private val permCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]](1 << 12)
-
-  /** Drop the shingle cache (benchmarks use this between warmup and timed
-    * runs so dedup numbers measure cold-shingle throughput; local-mode only
-    * — on a cluster each executor JVM has its own cache).
-    */
-  def clearPermCache(): Unit = permCache.clear()
-
-  /** All 256 permuted hash values for one shingle (first `numPerm` are
-    * used). Cached per JVM — see [[PermCacheCap]].
-    */
-  def permValues(token: String): Array[Long] = {
-    val hit = permCache.get(token)
-    if (hit != null) return hit
-    val h = sha1Hash32(token.getBytes("UTF-8"))
-    val a = Permutations.A
-    val b = Permutations.B
-    val out = new Array[Long](a.length)
-    var p = 0
-    while (p < out.length) {
-      // numpy uint64 wraps mod 2^64 — Java Long * and + do the same;
-      // the Mersenne reduction then equals `% (2^61-1)` unsigned.
-      out(p) = modMersenne(h * a(p) + b(p)) & MaxHash
-      p += 1
-    }
-    if (permCache.size < PermCacheCap) permCache.putIfAbsent(token, out)
-    out
-  }
-
-  /** Test-only instrumentation: per-JVM count of [[bandSignatures]]
-    * invocations (one per row signatured). local-mode tests pin "the
-    * signature kernel runs once per row per batch" through the
-    * streaming journal wiring with it; on a real cluster the count is
-    * per-executor and carries no cross-JVM meaning. One uncontended
-    * atomic add next to per-shingle sha1 work — noise.
-    */
-  private[graft] val sigCalls = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Full minhash signature then banded bytes: B bands of R big-endian
-    * uint64s (minhash_deduplication.py:109-116).
-    */
-  def bandSignatures(
-      content: String,
-      numPerm: Int, ngramSize: Int, minNgramSize: Int,
-      bands: Int, rows: Int): Array[Array[Byte]] = {
-    sigCalls.incrementAndGet()
-    val hv = new Array[Long](numPerm)
-    java.util.Arrays.fill(hv, MaxHash)
-    tokens(if (content == null) "" else content, ngramSize, minNgramSize)
-      .foreach { t =>
-        val v = permValues(t)
-        var p = 0
-        while (p < numPerm) {
-          if (v(p) < hv(p)) hv(p) = v(p)
-          p += 1
-        }
-      }
-    val out = new Array[Array[Byte]](bands)
-    var bi = 0
-    while (bi < bands) {
-      val buf = ByteBuffer.allocate(8 * rows) // big-endian by default
-      var ri = 0
-      while (ri < rows) { buf.putLong(hv(bi * rows + ri)); ri += 1 }
-      out(bi) = buf.array()
-      bi += 1
-    }
-    out
-  }
-}
-
-/** Driver-side optimal LSH banding parameters
-  * (minhash_deduplication.py:119-176, datasketch lineage): minimize
-  * 0.5·FP + 0.5·FN with the integrals evaluated by composite Simpson (the
-  * integrand is smooth on [0,1]; agrees with scipy.integrate.quad to ~1e-10
-  * — (25, 10) at threshold=0.7, num_perm=256).
-  */
-object OptimalParam {
-  private def simpson(f: Double => Double, a: Double, b: Double,
-      n: Int = 2000): Double = {
-    val h = (b - a) / n
-    var s = f(a) + f(b)
-    var i = 1
-    while (i < n) {
-      s += f(a + i * h) * (if (i % 2 == 1) 4.0 else 2.0)
-      i += 1
-    }
-    s * h / 3.0
-  }
-
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Int, Double, Double),
-      (Int, Int)]()
-
-  def apply(threshold: Double, numPerm: Int,
-      fpWeight: Double = 0.5, fnWeight: Double = 0.5): (Int, Int) =
-    memo.computeIfAbsent((threshold, numPerm, fpWeight, fnWeight),
-      _ => compute(threshold, numPerm, fpWeight, fnWeight))
-
-  private def compute(threshold: Double, numPerm: Int,
-      fpWeight: Double, fnWeight: Double): (Int, Int) = {
-    var best = (0, 0)
-    var minError = Double.PositiveInfinity
-    var b = 1
-    while (b <= numPerm) {
-      var r = 1
-      while (r <= numPerm / b) {
-        val fp = simpson(s => 1.0 - math.pow(1.0 - math.pow(s, r), b),
-          0.0, threshold)
-        val fn = simpson(s => math.pow(1.0 - math.pow(s, r), b),
-          threshold, 1.0)
-        val err = fp * fpWeight + fn * fnWeight
-        if (err < minError) { minError = err; best = (b, r) }
-        r += 1
-      }
-      b += 1
-    }
-    best
-  }
-}
-
-final case class MinHashConfig(
-    ngramSize: Int = 5,
-    numPerm: Int = 256,
-    threshold: Double = 0.7,
-    minNgramSize: Int = 5,
-    /** > 1 routes the LSH bucket-min stage through the salted two-stage
-      * variant ([[MinHashDedup.bucketMinEdgesSalted]]): a TEMPLATED
-      * corpus (boilerplate docs that are near- but not exact-identical,
-      * so the identical-text pre-collapse cannot absorb them) lands one
-      * (band, bsig) bucket of the whole template class on ONE window
-      * task; salting splits it `skewSalts` ways at the cost of a second
-      * (reduced-frame) shuffle. Kept sets and cluster roots are
-      * IDENTICAL either way (SkewSoakSpec); 0 = plain single window;
-      * [[MinHashConfig.AutoSalts]] (-1) probes the banded frame's max
-      * bucket depth and routes hot frames to a skew-safe bucket-min
-      * only above [[MinHashConfig.SkewDepthThreshold]] — the measured
-      * crossover (`graft.SoakSkewSweep`, PERF.md round-13 skew table:
-      * the plain window WINS at shallow buckets, where a single-task
-      * sort is cheaper than any extra stage). Auto mode persists the
-      * banded frame (it is scanned twice: probe + edges); prefer an
-      * explicit 0 when the corpus shape is already known flat.
-      */
-    skewSalts: Int = 0)
-
-object MinHashConfig {
-  /** `skewSalts` sentinel: probe the banded frame and decide. */
-  val AutoSalts: Int = -1
-  /** Salt count convention for the EXPLICIT salted variant (kept for
-    * its equality lineage; the r13 sweep measured it slower than the
-    * plain window at every depth except a marginal 1.15× at 10^6 —
-    * PERF.md round-13 — so auto mode routes skew to
-    * [[MinHashDedup.bucketMinEdgesAgg]] instead).
-    */
-  val DefaultSkewSalts: Int = 32
-  /** Measured plain-vs-agg crossover depth (graft.SoakSkewSweep,
-    * local[32], 25 hot buckets of this depth + 2M background rows —
-    * the PERF.md round-13 skew table): below it the plain single
-    * window wins (1.1 s vs agg 1.7 s at 10^5 — a single-task sort of a
-    * shallow hot bucket is cheaper than a second scan; the judge's r12
-    * measurement, reproduced), at and above it the agg-join variant
-    * wins (1.33× at 10^6, 1.43× at 4×10^6, 1.18× at 10^7 — and the
-    * local numbers UNDERSTATE the cluster win, where the hot-bucket
-    * task is a straggler on one executor core, not 32).
-    */
-  val SkewDepthThreshold: Long = 1_000_000L
-}
 
 /** Spark dataflow for the dedup (SURVEY.md §2.6), de-skewed for 100 TB:
   *
@@ -277,25 +22,11 @@ object MinHashConfig {
   *     instead of materializing one giant reducer-side array;
   *  4. clustering: driver UnionFind (reference-faithful) below
   *     `maxDriverEdges`, distributed min-label propagation above — shared by
-  *     every dedup variant through [[MinHashDedup.keepFirst]].
+  *     every dedup family through [[Clustering]].
   */
 object MinHashDedup {
 
-  private[graft] val IdCol = "__graft_dedup_id__"
-
-  /** Attach the keep-first id: a DATA-DERIVED unique non-null Long column
-    * when `orderCol` is given (kept set then deterministic under ANY
-    * partitioning), physical row order otherwise (reference semantics).
-    * Shared by every dedup variant; persisted because every variant scans
-    * it at least twice (edge building + final keep filter).
-    */
-  private[graft] def idExpr(orderCol: Option[String]): Column = orderCol match {
-    case Some(c) => col(c).cast(org.apache.spark.sql.types.LongType)
-    case None => monotonically_increasing_id()
-  }
-
-  private[graft] def assignId(df: DataFrame, orderCol: Option[String]): DataFrame =
-    df.withColumn(IdCol, idExpr(orderCol)).persist()
+  import Clustering.{IdCol, Pin, idExpr}
 
   def signatureColumn(cfg: MinHashConfig): Column => Column = {
     val (b, r) = OptimalParam(cfg.threshold, cfg.numPerm)
@@ -332,7 +63,7 @@ object MinHashDedup {
       // branches (member + merge edges): persist the input so a failed
       // exchange reuse (AQE replan, reuse disabled) cannot re-run the
       // signature stage twice (ADVICE r12). Registered with the
-      // cacheSink so entry points release it once keepFirst has
+      // cacheSink so entry points release it once the clustering has
       // materialized the edges (ADVICE r13 / VERDICT r13 #3).
       val pinned = banded.persist()
       cacheSink.foreach(_ += pinned)
@@ -455,173 +186,6 @@ object MinHashDedup {
       .distinct()
   }
 
-  /** ONE limited collect decides the clustering branch AND delivers the
-    * edges in the common case (a separate count() would be a whole extra
-    * job), but the speculative collect is BOUNDED at ~1M rows: above
-    * that, a count-only probe (limit stops early; no rows reach the
-    * driver) decides driver-vs-distributed, and rows are collected only
-    * when the driver path is actually taken — an edge set overflowing
-    * `maxDriverEdges` never materializes ~10M Rows on the driver just to
-    * be discarded. The probe and the collect share the persisted
-    * partitions. None = over budget (distributed path).
-    */
-  private def boundedEdgeHead(edges: DataFrame,
-      maxDriverEdges: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    val cap = math.min(maxDriverEdges, Int.MaxValue - 2L).toInt
-    val directCap = math.min(cap, 1 << 20)
-    val probe = edges.limit(directCap + 1).collect()
-    if (probe.length <= directCap) Some(probe)
-    else if (cap > directCap && edges.limit(cap + 1).count() <= cap)
-      Some(edges.collect())
-    else None
-  }
-
-  /** The clustering OUTCOME, path-explicit (r20): the driver path's
-    * UnionFind map is ALREADY driver-resident and bounded (≤ 2×
-    * `maxDriverEdges` entries), so consumers that only need per-cluster
-    * aggregates — weights, size histograms, keep filters — can answer
-    * them from the map with ZERO additional shuffles instead of
-    * re-shuffling a corpus-scale (id, root) frame through groupBy/join
-    * (guide §2.4 "remove shuffles outright", §8 "decide with small
-    * rows"). The distributed path keeps its DataFrame shape — there the
-    * roots frame is NOT bounded and the corpus-scale aggregation is the
-    * honest cost.
-    */
-  private[graft] sealed trait Clustering
-  private[graft] object Clustering {
-    /** No candidate edges — every row is a singleton. */
-    case object Empty extends Clustering
-    /** Bounded edge set: component-min roots for every id that appears
-      * in an edge (UnionFind, reference-faithful). Ids absent from the
-      * map are singletons rooting to themselves.
-      */
-    final case class Driver(roots: Map[Long, Long]) extends Clustering
-    /** Edge set over `maxDriverEdges`: (id, root) frame from min-label
-      * propagation, one row per id that appears in an edge.
-      */
-    final case class Distributed(roots: DataFrame) extends Clustering
-  }
-
-  /** Probe + cluster an edge frame ONCE, shared by every dedup tail:
-    * bounded-head collect decides driver UnionFind vs distributed
-    * min-label (mirrors minhash_deduplication.py:179-193,273-280 on the
-    * driver path). The edge frame is persisted for the probe and
-    * released before returning — the Distributed roots frame is
-    * persisted by [[ConnectedComponents.distributed]] itself.
-    */
-  private[graft] def clusterEdges(edgesRaw: DataFrame,
-      maxDriverEdges: Long): Clustering = {
-    val edges = edgesRaw.toDF("__x__", "__y__").persist()
-    val headOpt = boundedEdgeHead(edges, maxDriverEdges)
-    val out = if (headOpt.exists(_.isEmpty)) {
-      DedupMetrics.emptyPath.incrementAndGet()
-      Clustering.Empty
-    } else if (headOpt.isDefined) {
-      DedupMetrics.driverPath.incrementAndGet()
-      val pairs = headOpt.get.map(r => (r.getLong(0), r.getLong(1)))
-      Clustering.Driver(ConnectedComponents.unionFindRoots(pairs))
-    } else {
-      // 100 TB path: roots computed distributed — no driver
-      // materialization anywhere
-      DedupMetrics.distributedPath.incrementAndGet()
-      println(s"[graft] clusterEdges: edge list exceeded maxDriverEdges=" +
-        s"$maxDriverEdges — distributed min-label clustering engaged")
-      Clustering.Distributed(
-        ConnectedComponents.distributed(edges.toDF("id", "root")))
-    }
-    edges.unpersist()
-    out
-  }
-
-  /** root → cluster size from a driver UnionFind map. Exact for every
-    * non-singleton cluster: the map holds one entry per id that appears
-    * in ANY edge (both endpoints are always inserted), and every such id
-    * belongs to a ≥2 cluster (edges never self-loop — both edge builders
-    * filter id ≠ min), so counting entries per resolved root counts full
-    * memberships. Ids absent from the map are singletons (size 1).
-    */
-  private[graft] def rootSizes(roots: Map[Long, Long]): Map[Long, Long] = {
-    val m = mutable.Map.empty[Long, Long]
-    roots.valuesIterator.foreach(r => m.update(r, m.getOrElse(r, 0L) + 1L))
-    m.toMap
-  }
-
-  /** (cluster_size, n_clusters) histogram of a driver clustering:
-    * non-singleton buckets from the map, singleton bucket = corpus rows
-    * minus mapped ids. Pure driver arithmetic over the bounded map — the
-    * Spark-aggregation form this replaces shuffled the corpus-scale
-    * (id, root) frame twice for the same numbers.
-    */
-  private[graft] def driverHistogram(roots: Map[Long, Long],
-      totalRows: Long): Map[Long, Long] = {
-    val hist = mutable.Map.empty[Long, Long]
-    rootSizes(roots).valuesIterator
-      .foreach(s => hist.update(s, hist.getOrElse(s, 0L) + 1L))
-    val singletons = totalRows - roots.size
-    if (singletons > 0)
-      hist.update(1L, hist.getOrElse(1L, 0L) + singletons)
-    hist.toMap
-  }
-
-  /** Local (cluster_size, n_clusters) frame with the exact schema the
-    * previous two-aggregate form produced (both columns non-nullable
-    * LongType from count()).
-    */
-  private[graft] def histogramDf(spark: org.apache.spark.sql.SparkSession,
-      hist: Map[Long, Long]): DataFrame =
-    spark.createDataFrame(hist.toSeq.sortBy(_._1))
-      .toDF("cluster_size", "n_clusters")
-
-  /** Shared clustering tail for every dedup variant: edge list →
-    * component-min roots → keep rows that are their own root. Driver
-    * UnionFind below `maxDriverEdges`; distributed min-label propagation
-    * above — no unconditional driver materialization anywhere.
-    */
-  private[graft] def keepFirst(withId: DataFrame, edgesRaw: DataFrame,
-      maxDriverEdges: Long): DataFrame =
-    clusterEdges(edgesRaw, maxDriverEdges) match {
-      case Clustering.Empty => withId.drop(IdCol)
-      case Clustering.Driver(roots) =>
-        val bRoots = withId.sparkSession.sparkContext.broadcast(roots)
-        val keepUdf = udf { (id: Long) => bRoots.value.getOrElse(id, id) == id }
-        withId.where(keepUdf(col(IdCol))).drop(IdCol)
-      case Clustering.Distributed(roots) =>
-        // dropped rows removed via broadcast-able anti-join on the
-        // (id, root) pairs with root ≠ id
-        val dropped = roots.where(col("root") =!= col("id")).select("id")
-        withId.join(dropped.withColumnRenamed("id", IdCol),
-          Seq(IdCol), "left_anti").drop(IdCol)
-    }
-
-  /** (id, root) for EVERY row — rows in no duplicate cluster root to
-    * themselves. The dedup OBSERVABILITY surface (cluster membership and
-    * size auditing — "how duplicated is my corpus"), sharing the driver
-    * UnionFind ↔ distributed min-label crossover with [[keepFirst]].
-    */
-  private[graft] def componentRoots(withId: DataFrame, edgesRaw: DataFrame,
-      maxDriverEdges: Long): DataFrame =
-    componentRootsOf(withId, clusterEdges(edgesRaw, maxDriverEdges))
-
-  /** The (id, root) frame of a [[Clustering]] over `withId`'s ids —
-    * zero additional shuffles on every path (projection, broadcast-map
-    * UDF, or left join against the already-persisted min-label roots).
-    */
-  private[graft] def componentRootsOf(withId: DataFrame,
-      clustering: Clustering): DataFrame = {
-    val ids = withId.select(col(IdCol).as("id"))
-    clustering match {
-      case Clustering.Empty => ids.withColumn("root", col("id"))
-      case Clustering.Driver(roots) =>
-        val bRoots = withId.sparkSession.sparkContext.broadcast(roots)
-        val rootUdf = udf { (id: Long) => bRoots.value.getOrElse(id, id) }
-        ids.withColumn("root", rootUdf(col("id")))
-      case Clustering.Distributed(ccRoots) =>
-        val roots = ccRoots.withColumnRenamed("id", "__rid__")
-        ids.join(roots, ids("id") === col("__rid__"), "left")
-          .select(col("id"), coalesce(col("root"), col("id")).as("root"))
-    }
-  }
-
   /** Cluster-size histogram of the near-dup clustering over `column`:
     * (cluster_size, n_clusters), singletons included as size-1 clusters.
     * Invariants: Σ cluster_size·n_clusters = corpus rows and
@@ -629,45 +193,18 @@ object MinHashDedup {
     * config — each cluster keeps exactly one representative.
     *
     * EAGER, unlike the dedup entry points: the histogram is tiny (one
-    * row per distinct cluster size), so it is materialized via
-    * localCheckpoint and the corpus cache `assignId` pinned is released
-    * before returning — a long-running pipeline JVM calling this per
-    * batch must not accumulate cached corpus copies.
+    * row per distinct cluster size), so it is collected to a
+    * driver-local frame and the corpus pin is released before returning
+    * — a long-running pipeline JVM calling this per batch must not
+    * accumulate cached corpus copies.
     */
   def clusterSizeStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame = {
-    val withId = assignId(df, orderCol)
-    val spark = withId.sparkSession
-    val out = withCacheRelease { sink =>
-      clusterEdges(
-        candidateEdges(withId, column, cfg, bandedSink, Some(sink)),
-        maxDriverEdges) match {
-        // r20: on the bounded paths the histogram is pure driver
-        // arithmetic over the UnionFind map plus ONE count() of the
-        // cached corpus — replacing a rootUdf scan shuffled through TWO
-        // corpus-scale aggregations (groupBy root never reduces
-        // map-side: singleton roots are unique keys, so that exchange
-        // carried ~|corpus| rows). Values identical (driverHistogram
-        // counts the same memberships), spec- and oracle-pinned.
-        case Clustering.Empty =>
-          val total = withId.count()
-          histogramDf(spark,
-            if (total > 0) Map(1L -> total) else Map.empty)
-        case Clustering.Driver(roots) =>
-          histogramDf(spark, driverHistogram(roots, withId.count()))
-        case Clustering.Distributed(ccRoots) =>
-          componentRootsOf(withId, Clustering.Distributed(ccRoots))
-            .groupBy("root").agg(count(lit(1)).as("cluster_size"))
-            .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-            .localCheckpoint(true)
-      }
-    }
-    withId.unpersist()
-    out
-  }
+      bandedSink: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges, Pin.Released)(
+      candidates(column, cfg, bandedSink))(_.histogram(_))
 
   /** One clustering pass, two outputs: (kept rows, cluster-size
     * histogram). Calling [[deduplicate]] and [[clusterSizeStats]]
@@ -678,69 +215,32 @@ object MinHashDedup {
     *   - driver path (edges under budget): the broadcast UnionFind map
     *     serves kept as a zero-shuffle filter — the IDENTICAL plan
     *     [[deduplicate]] produces, so the flagship plan-shape guard sees
-    *     no new exchange — and the histogram as one tiny eager agg over
-    *     rootUdf(id);
-    *   - distributed path (100 TB): min-label roots localCheckpointed
-    *     once, kept = anti-join against the root≠id rows (the small
-    *     side — AQE broadcasts it), stats = the same histogram as
-    *     [[clusterSizeStats]].
+    *     no new exchange — and the histogram as driver arithmetic over
+    *     the map plus one cached count();
+    *   - distributed path (100 TB): kept = anti-join against the
+    *     checkpointed root≠id rows (the small side — AQE broadcasts it),
+    *     stats = the same histogram as [[clusterSizeStats]].
     * Kept SET equality with [[deduplicate]] + [[clusterSizeStats]] is
     * proven by DedupInvariantSpec (driver path) and ScaleSoakSpec
-    * (distributed path). The corpus cache `assignId` pinned stays live
-    * for the lazy kept frame, exactly like [[deduplicate]].
+    * (distributed path). The corpus pin stays live for the lazy kept
+    * frame.
     */
   def deduplicateWithStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): (DataFrame, DataFrame) = {
-    val withId = assignId(df, orderCol)
-    val spark = withId.sparkSession
-    val res = withCacheRelease { cacheSink =>
-      clusterEdges(
-        candidateEdges(withId, column, cfg, bandedSink, Some(cacheSink)),
-        maxDriverEdges) match {
-        case Clustering.Empty =>
-          val total = withId.count()
-          val stats = histogramDf(spark,
-            if (total > 0) Map(1L -> total) else Map.empty)
-          (withId.drop(IdCol), stats)
-        case Clustering.Driver(roots) =>
-          // r20: kept filter unchanged (the zero-shuffle broadcast-map
-          // plan the flagship PlanSpec pins); the histogram moves to
-          // driver arithmetic + one cached count() — see
-          // [[clusterSizeStats]] for the shuffle accounting.
-          val bRoots = spark.sparkContext.broadcast(roots)
-          val keepUdf =
-            udf { (id: Long) => bRoots.value.getOrElse(id, id) == id }
-          val kept = withId.where(keepUdf(col(IdCol))).drop(IdCol)
-          val stats = histogramDf(spark,
-            driverHistogram(roots, withId.count()))
-          (kept, stats)
-        case Clustering.Distributed(ccRoots) =>
-          val roots = componentRootsOf(withId,
-            Clustering.Distributed(ccRoots)).localCheckpoint(true)
-          val dropped = roots.where(col("root") =!= col("id"))
-            .select(col("id").as(IdCol))
-          val kept = withId.join(dropped, Seq(IdCol), "left_anti")
-            .drop(IdCol)
-          val stats = roots.groupBy("root")
-            .agg(count(lit(1)).as("cluster_size"))
-            .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-            .localCheckpoint(true)
-          (kept, stats)
-      }
-    }
-    // NO releasePinIf here, deliberately: this is a TWO-consumer API —
-    // stats materialize eagerly inside the call (reading the corpus
-    // cache), the kept frame lazily afterwards. Releasing between the
-    // two makes the second consumer re-run the whole upstream (the
-    // flagship's cleaner trunk: measured +1.4 s on
-    // flagship_chat_pipeline at sf0.1, r15). Single-consumer entry
-    // points ([[deduplicate]] et al.) release — their one output
-    // materialization pays the same recompute a cache write would.
-    res
-  }
+      bandedSink: Option[String] = None): (DataFrame, DataFrame) =
+    // Pin.Held, deliberately: this is a TWO-consumer API — stats
+    // materialize eagerly inside the call (reading the corpus cache), the
+    // kept frame lazily afterwards. Releasing between the two makes the
+    // second consumer re-run the whole upstream (the flagship's cleaner
+    // trunk: measured +1.4 s on flagship_chat_pipeline at sf0.1, r15).
+    // Single-consumer entry points ([[deduplicate]] et al.) release —
+    // their one output materialization pays the same recompute a cache
+    // write would.
+    Clustering.run(df, orderCol, maxDriverEdges, Pin.Held)(
+      candidates(column, cfg, bandedSink))((c, withId) =>
+      (c.keep(withId), c.histogram(withId)))
 
   /** PUBLIC (id, root) cluster-membership frame — every row maps to its
     * near-dup cluster representative (singletons to themselves), id =
@@ -756,16 +256,9 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame = {
-    val withId = assignId(df, orderCol)
-    val out = withCacheRelease { sink =>
-      componentRoots(withId,
-        candidateEdges(withId, column, cfg, bandedSink, Some(sink)),
-        maxDriverEdges)
-    }
-    releasePinIf(withId, orderCol)
-    out
-  }
+      bandedSink: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      candidates(column, cfg, bandedSink))(_.roots(_))
 
   /** Duplication-aware SOFT dedup: keep each cluster's first row and
     * attach `weight` = cluster size instead of silently discarding the
@@ -777,9 +270,9 @@ object MinHashDedup {
     * is IDENTICAL (same clustering, same keep-first minima) and
     * Σ weight = corpus rows — both spec-pinned.
     *
-    * Plan shape: the clustering pass is exactly [[componentRoots]]
-    * (shared driver ↔ distributed crossover); on top of it, one
-    * map-side-combined count over the tiny (id, root) pairs and one
+    * Plan shape: on the driver path, keep filter + weight column are
+    * broadcast-map UDFs (zero shuffles); on the distributed path, one
+    * count by root over [[clusterRoots]]' (id, root) frame and one
     * id-keyed join of the kept-count-sized weight frame back to the
     * corpus (AQE broadcasts it when small). No driver state beyond what
     * the clustering already holds.
@@ -788,49 +281,9 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame = {
-    val withId = assignId(df, orderCol)
-    val out = withCacheRelease { sink =>
-      clusterEdges(
-        candidateEdges(withId, column, cfg, bandedSink, Some(sink)),
-        maxDriverEdges) match {
-        case Clustering.Empty =>
-          withId.withColumn("weight", lit(1L)).drop(IdCol)
-        case Clustering.Driver(roots) =>
-          // r20: weights from the driver map — keep filter + weight
-          // column are broadcast-map UDFs, zero shuffles, identical
-          // values to the groupBy(root)+join form this replaces (which
-          // exchanged ~|corpus| rows: singleton roots are unique agg
-          // keys, so map-side partial aggregation never reduced them,
-          // then joined the kept-sized weight frame back corpus-wide).
-          // A row survives iff it is its cluster's representative; its
-          // weight is its cluster size (absent from the map =
-          // singleton, weight 1).
-          val sc = withId.sparkSession.sparkContext
-          val bRoots = sc.broadcast(roots)
-          val bSizes = sc.broadcast(rootSizes(roots))
-          val keepUdf =
-            udf { (id: Long) => bRoots.value.getOrElse(id, id) == id }
-          val weightUdf =
-            udf { (id: Long) => bSizes.value.getOrElse(id, 1L) }
-              .asNonNullable()
-          withId.where(keepUdf(col(IdCol)))
-            .withColumn("weight", weightUdf(col(IdCol))).drop(IdCol)
-        case Clustering.Distributed(ccRoots) =>
-          // corpus-scale clustering: weights honestly need the
-          // aggregation — same shape as before
-          val weights = componentRootsOf(withId,
-            Clustering.Distributed(ccRoots))
-            .groupBy("root").agg(count(lit(1)).as("weight"))
-            .withColumnRenamed("root", IdCol)
-          // inner join on id == root: a row survives iff it is its
-          // cluster's representative (singletons root to themselves)
-          withId.join(weights, Seq(IdCol)).drop(IdCol)
-      }
-    }
-    releasePinIf(withId, orderCol)
-    out
-  }
+      bandedSink: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      candidates(column, cfg, bandedSink))(_.weighted(_))
 
   /** Near-dedup `df` on `column`, keeping each cluster's first row
     * (min id == first in row order, matching the reference's contiguous-id
@@ -845,7 +298,8 @@ object MinHashDedup {
     * be RECOMPUTE-STABLE (a real column, not a synthetic
     * monotonically_increasing_id): with a named order the corpus cache
     * is released as soon as clustering materializes
-    * ([[releasePinIf]]), and the lazy output re-derives ids from source.
+    * ([[Clustering.Pin.IfStable]]), and the lazy output re-derives ids
+    * from source.
     *
     * `maxDriverEdges`: above this, clustering switches from the driver
     * UnionFind (reference-faithful) to distributed min-label propagation —
@@ -855,44 +309,14 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame = {
-    val withId = assignId(df, orderCol)
-    val out = withCacheRelease { sink =>
-      keepFirst(withId,
-        candidateEdges(withId, column, cfg, bandedSink, Some(sink)),
-        maxDriverEdges)
-    }
-    releasePinIf(withId, orderCol)
-    out
-  }
+      bandedSink: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      candidates(column, cfg, bandedSink))(_.keep(_))
 
-  /** Release the `assignId` corpus pin AFTER clustering materialized
-    * (keepFirst/componentRoots collect edges or converge+count roots
-    * before returning — nothing re-reads the cache except the LAZY
-    * output frame): with a DATA-DERIVED `orderCol` the ids recompute
-    * deterministically, so that output safely re-reads the source
-    * instead of each call pinning one corpus-sized cache for the JVM
-    * lifetime — the r14 soak showed a long-lived driver accumulating
-    * exactly one `LocalTableScan/FileScan + id` cache per dedup call
-    * (VERDICT r14 #5). `orderCol = None` keeps the pin:
-    * monotonically_increasing_id is NOT recompute-stable, and re-rolling
-    * ids under an already-broadcast root map would keep the wrong rows
-    * (same reason [[deduplicateAgainst]] keeps its pin — its order
-    * column is synthetic even though it is named).
-    *
-    * r19 NOTE (measured, kept as-is): a deferred one-slot release (park
-    * the pin, drain at the next dedup call) was tried so the caller's
-    * terminal action could read the cache instead of re-deriving the
-    * upstream plan. Paired best-of-3 benches showed NO win — the lazy
-    * output's re-derivation is cheap because the keep-filter (a
-    * deterministic UDF on the id column) pushes below the expensive
-    * projections, e.g. the flagship re-runs its trunk only up to the io
-    * select for the 547 kept rows — and flagship_e2e_minhash regressed
-    * ~0.4 s under the extra retained blocks. Immediate release stands.
-    */
-  private[dedup] def releasePinIf(withId: DataFrame,
-      orderCol: Option[String]): Unit =
-    if (orderCol.isDefined) withId.unpersist()
+  /** [[candidateEdges]] as a [[Clustering.run]] edge builder. */
+  private def candidates(column: String, cfg: MinHashConfig,
+      bandedSink: Option[String]): (DataFrame, Clustering.Sink) => DataFrame =
+    (withId, sink) => candidateEdges(withId, column, cfg, bandedSink, Some(sink))
 
   /** The candidate edge list feeding the clustering (identical-class star
     * edges + LSH band collisions — candidates, not verified pairs: the
@@ -916,25 +340,56 @@ object MinHashDedup {
     bucketMinEdges(banded, cfg.skewSalts, cacheSink).union(identEdges)
   }
 
-  /** One-shot entry-point cache hygiene (VERDICT r13 #3 / ADVICE r13):
-    * run `body` with a fresh cacheSink, then release every frame the
-    * skew machinery pinned (auto-probe banded frame, salted staged
-    * frame). Safe immediately after the clustering tail returns: both
-    * [[keepFirst]] and [[componentRoots]] fully materialize the edge
-    * frame before returning (driver collect, or the distributed
-    * min-label loop whose converged roots frame is persisted and
-    * counted), so the released caches are never re-read in the normal
-    * path — exactly the guarantee their own `edges.unpersist()` already
-    * relies on. A long-lived session calling dedup repeatedly no longer
-    * accumulates one pinned |corpus|×bands cache per call. Shared by the
-    * minhash-candidate siblings ([[EditDistanceDedup.deduplicate]],
-    * [[NgramJaccard.deduplicate]]) whose verify-join tails feed the same
-    * materializing [[keepFirst]] (ADVICE r14).
+  /** LSH candidates verified by an exact pair predicate — the one body
+    * behind [[NgramJaccard.verifiedEdges]] and
+    * [[EditDistanceDedup.verifiedEdges]]. Docs below
+    * `sigCfg.minNgramSize` tokens are excluded from banding up front
+    * (they cannot shingle, so the reference LSH would flood them into ONE
+    * all-MAX_HASH bucket only for verification to reject every pair);
+    * candidates are star-shaped per bucket via the streaming bucket-min
+    * window (`sigCfg.skewSalts` reaches it — VERDICT r12 #3); then only
+    * candidate pairs pull their texts back in (broadcast-able candidate
+    * side at bench scale, shuffle join on id at cluster scale) and keep
+    * the pair iff `verified(textA, textB)`. ALL verified pairs go to
+    * clustering (multi-edges are fine for both union-find and min-label
+    * propagation); a per-node min-reduction would drop cross-links and
+    * over-keep vs transitive clustering.
+    *
+    * `bandedSink`: when given, the exploded (id, band, bsig) frame is
+    * written there (overwrite) and candidates come from the read-back —
+    * the oracle then derives bucket-min candidates AND the verification
+    * itself in SQL. `cacheSink` collects the frames the skew remedies
+    * pin, for entry-point release.
     */
-  private[dedup] def withCacheRelease[A](body: mutable.Buffer[DataFrame] => A): A = {
-    val sink = mutable.Buffer.empty[DataFrame]
-    try body(sink)
-    finally sink.foreach(_.unpersist())
+  private[dedup] def verifiedCandidates(withId: DataFrame, column: String,
+      sigCfg: MinHashConfig, bandedSink: Option[String],
+      cacheSink: Option[Clustering.Sink])(
+      verified: (Column, Column) => Column): DataFrame = {
+    val text = coalesce(col(column), lit(""))
+    // r20: early-exit fused gate (no token-array materialization) —
+    // ≡ size(split(text, "[^A-Za-z_0-9]", -1)) >= n, FusedTextSpec
+    val base = withId.where(
+      graft.text.FusedText.nonAlphaPartsAtLeast(text, sigCfg.minNgramSize))
+    // the signature UDF is the CPU hot path; a small parquet input arrives
+    // as 1-2 splits, which would serialize it — spread AFTER id assignment
+    // (ids anchor keep-first order) when the source is under-parallel.
+    // Probe via the scan's file list, NOT df.rdd.getNumPartitions: touching
+    // .rdd forces plan→RDD conversion (an extra job) in this constructor.
+    val par = withId.sparkSession.sparkContext.defaultParallelism
+    val srcFiles = withId.inputFiles.length
+    val spread =
+      if (srcFiles == 0 || srcFiles * 2 < par) base.repartition(par)
+      else base
+    val banded = spread.select(col(IdCol).as("id"),
+      posexplode(signatureColumn(sigCfg)(text)).as(Seq("band", "bsig")))
+    bucketMinEdges(SideChannel.through(banded, bandedSink), sigCfg.skewSalts,
+        cacheSink)
+      .join(withId.select(col(IdCol).as("__x__"), col(column).as("__ta__")),
+        Seq("__x__"))
+      .join(withId.select(col(IdCol).as("__y__"), col(column).as("__tb__")),
+        Seq("__y__"))
+      .where(verified(col("__ta__"), col("__tb__")))
+      .select(col("__x__"), col("__y__"))
   }
 
   /** The shared front half of every minhash-family pass: the identical/
@@ -989,52 +444,22 @@ object MinHashDedup {
     (identEdges, SideChannel.through(banded, bandedSink))
   }
 
-  private val MarkCol = "__graft_dedup_new__"
-
-  private val OrderCol = "__graft_dedup_order__"
-
   /** Incremental dedup — the production shape for a continuously-growing
     * corpus: drop rows of `newDf` that are near-duplicates of `refDf`
     * (the already-kept corpus) or of earlier `newDf` rows; `refDf` is
-    * never modified. Keep-first dedup over `refDf ∪ newDf` with an
-    * EXPLICIT order column: each side gets monotonically_increasing_id
-    * BEFORE the union, and new-side ids are offset by 2^62 — so every
-    * reference row orders below every new row by construction, not by the
-    * union's physical row order (which is an optimizer artifact, not a
-    * contract). A new row clustered with ANY reference row can never be
-    * its cluster's min. Returns the surviving `newDf` rows only.
-    *
-    * The 2^62 offset is safe: monotonically_increasing_id packs the
-    * partition id into the upper 31 bits, so values stay below 2^62
-    * until a side exceeds 2^29 (~537M) partitions — far beyond Spark's
-    * practical partition count (100 TB at 128 MB splits is ~800k).
+    * never modified. Returns the surviving `newDf` rows; every reference
+    * row orders below every new row by construction — see
+    * [[Clustering.against]].
     */
   def deduplicateAgainst(newDf: DataFrame, refDf: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
-      maxDriverEdges: Long = 10_000_000L): DataFrame = {
-    val cols = newDf.columns
-    val tagged = refDf.selectExpr(cols.map(c => s"`$c`").toIndexedSeq: _*)
-      .withColumn(MarkCol, lit(false))
-      .withColumn(OrderCol, monotonically_increasing_id())
-      .unionByName(newDf.withColumn(MarkCol, lit(true))
-        .withColumn(OrderCol, monotonically_increasing_id() + lit(1L << 62)))
-    // inline of [[deduplicate]] MINUS the orderCol pin release: OrderCol
-    // is monotonically_increasing_id underneath — not recompute-stable —
-    // so the assignId pin must outlive the lazy output (releasePinIf's
-    // named-column heuristic would wrongly free it here)
-    val withId = assignId(tagged, Some(OrderCol))
-    withCacheRelease { sink =>
-      keepFirst(withId,
-        candidateEdges(withId, column, cfg, None, Some(sink)),
-        maxDriverEdges)
-    }
-      .where(col(MarkCol)).drop(MarkCol, OrderCol)
-  }
+      maxDriverEdges: Long = 10_000_000L): DataFrame =
+    Clustering.against(newDf, refDf, maxDriverEdges)(
+      candidates(column, cfg, None))
 
-  /** The increment side's id offset: see [[deduplicateAgainst]] for why
-    * 2^62 clears every monotonically_increasing_id / sane data-derived id.
-    */
-  val NewIdOffset: Long = 1L << 62
+  /** The increment side's id offset: see [[Clustering.NewIdOffset]]. */
+  val NewIdOffset: Long = Clustering.NewIdOffset
+
 
   /** The banded-signature STORE frame for a retained corpus: one row per
     * occupied LSH bucket, (band, bsig, id = bucket-min member id). This is
@@ -1063,7 +488,7 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       orderCol: Option[String] = None): DataFrame = {
     // the ident-edge branch is discarded, so the corpus is scanned ONCE —
-    // no assignId persist (ADVICE r10: a cache unpersisted before the
+    // no id-pin persist (ADVICE r10: a cache unpersisted before the
     // store materializes is pure bookkeeping overhead)
     val withId = refDf.withColumn(IdCol, idExpr(orderCol))
     val (_, banded) = classEdgesAndBanded(withId, column, cfg)
@@ -1187,225 +612,26 @@ object MinHashDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
       newIdOffset: Long = NewIdOffset,
-      bandedSink: Option[String] = None): DataFrame = {
-    val withId = newDf.withColumn(IdCol, (orderCol match {
-      case Some(c) => col(c).cast(org.apache.spark.sql.types.LongType)
-      case None => monotonically_increasing_id()
-    }) + lit(newIdOffset)).persist()
-    val (identEdges, banded0) = classEdgesAndBanded(withId, column, cfg,
-      bandedSink)
-    // one signature pass feeds both the within-increment bucket edges and
-    // the store join (a bandedSink read-back is already materialized;
-    // otherwise persist — |increment|×bands rows, the frame a nightly run
-    // would append to the store afterwards anyway)
-    val banded = if (bandedSink.isDefined) banded0 else banded0.persist()
-    // EAGER, unlike the one-shot entry points (ADVICE r10): this API's
-    // whole premise is a long-lived nightly JVM calling it per batch, so
-    // leaking a cached withId/banded per call accumulates corpus copies
-    // (the clusterSizeStats hazard). The survivors are |increment|-
-    // bounded — localCheckpoint them, then release EVERY cache,
-    // including the ones the skew machinery pins (ADVICE r13: with
-    // AutoSalts + a bandedSink, probeSkewDeep persisted the read-back
-    // frame and the old bandedSink.isEmpty guard skipped its release;
-    // with skewSalts > 1 the salted staged frame leaked the same way).
-    val out = withCacheRelease { sink =>
-      val incEdges = bucketMinEdges(banded, cfg.skewSalts, Some(sink))
-        .union(identEdges)
-      val crossEdges = banded
-        .join(store.withColumnRenamed("id", "__sid__"), Seq("band", "bsig"))
-        .select(col("id").as("__x__"), col("__sid__").as("__y__"))
-        .distinct()
-      keepFirst(withId, incEdges.union(crossEdges), maxDriverEdges)
-        .localCheckpoint(true)
+      bandedSink: Option[String] = None): DataFrame =
+    Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
+      (withId, sink) =>
+        val (identEdges, banded0) = classEdgesAndBanded(withId, column, cfg,
+          bandedSink)
+        // one signature pass feeds both the within-increment bucket edges
+        // and the store join (a bandedSink read-back is already
+        // materialized; otherwise persist — |increment|×bands rows, the
+        // frame a nightly run would append to the store afterwards
+        // anyway). Every frame pinned here or by the skew machinery goes
+        // to the sink (ADVICE r13), released once the survivors are
+        // checkpointed.
+        val banded =
+          if (bandedSink.isDefined) banded0
+          else { val p = banded0.persist(); sink += p; p }
+        val crossEdges = banded
+          .join(store.withColumnRenamed("id", "__sid__"), Seq("band", "bsig"))
+          .select(col("id").as("__x__"), col("__sid__").as("__y__"))
+          .distinct()
+        bucketMinEdges(banded, cfg.skewSalts, Some(sink))
+          .union(identEdges).union(crossEdges)
     }
-    if (bandedSink.isEmpty) banded.unpersist()
-    withId.unpersist()
-    out
-  }
-}
-
-/** Oracle side-channel export bookkeeping, shared by every dedup variant:
-  * `once` reports whether a path still needs exporting in this JVM
-  * (exports are deterministic per (variant, scale), so later bench
-  * repetitions skip the write but still recompute everything the query is
-  * timed on); `through` performs the write-then-read-back so the
-  * clustering consumes exactly the bytes the oracle will read. The claim
-  * is recorded only AFTER the write action succeeds (ADVICE r7: a
-  * claim-at-`once` design left the claim set if the query failed anywhere
-  * between `once` and the write — the export would then be silently
-  * skipped for the JVM lifetime and the oracle could read a stale frame
-  * from a previous JVM at the same /tmp path). Two unclaimed callers of
-  * the SAME path are serialized by a per-path lock and the second
-  * re-checks the claim inside it, so it reads instead of re-writing —
-  * concurrent `overwrite` writes to one directory could interleave the
-  * delete and write phases. In practice every side-channel path is
-  * written by exactly one query (audited r19), but the bench warm pass
-  * now runs queries on a thread pool, so the lock is the guarantee
-  * rather than the call pattern.
-  */
-object SideChannel {
-  private val claimed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val pathLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def lockFor(path: String): Object =
-    pathLocks.computeIfAbsent(path, _ => new Object)
-
-  def once(path: String): Option[String] =
-    if (claimed.contains(path)) None else Some(path)
-
-  def through(df: DataFrame, sink: Option[String]): DataFrame = sink match {
-    case Some(p) =>
-      lockFor(p).synchronized {
-        if (!claimed.contains(p)) {
-          df.write.mode("overwrite").parquet(p)
-          claimed.add(p) // write-then-claim: only a SUCCESSFUL export claims
-        }
-      }
-      df.sparkSession.read.parquet(p)
-    case None => df
-  }
-
-  /** Register an export performed outside [[through]] (e.g. the IVF
-    * cells/probe frames) so it appears in [[exportedPaths]]. */
-  def record(path: String): Unit = claimed.add(path)
-
-  /** Every side-channel path successfully exported by THIS JVM.
-    * `graft.Verify` dumps this as `side_channels.json` next to the query
-    * outputs so the oracle harness can prove a /tmp frame came from the
-    * same run as the artifacts it is compared against — an existing
-    * directory alone could be a stale frame from an older JVM, code
-    * version, or corpus. */
-  def exportedPaths: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    claimed.asScala.toSeq.sorted
-  }
-}
-
-/** Observability for the scale-crossover machinery: which clustering path
-  * each [[MinHashDedup.keepFirst]] call took. The soak harness asserts the
-  * distributed branch actually FIRES (VERDICT r6 #1 — before r7 it had
-  * never executed) and that its kept set equals the driver UnionFind's.
-  */
-object DedupMetrics {
-  val emptyPath = new java.util.concurrent.atomic.AtomicLong
-  val driverPath = new java.util.concurrent.atomic.AtomicLong
-  val distributedPath = new java.util.concurrent.atomic.AtomicLong
-  /** Rounds the last [[ConnectedComponents.distributed]] run took to
-    * converge (star-shaped LSH components ⇒ expect 2-3; a high value
-    * means long propagation chains — worth a look at the edge shape).
-    */
-  val lastCcRounds = new java.util.concurrent.atomic.AtomicLong
-  /** Routing evidence for the banded-hamming bucket guard
-    * (`SimHash.boundedBucketPairs` — shared by simhash and the
-    * image/audio/video perceptual dedups): levels the LAST recursion
-    * ran, the max bucket depth its level-0 probe saw, and the cumulative
-    * number of deep-bucket SPLIT levels taken (0 ⇒ every frontier was
-    * flat and the guard cost one map-side agg, nothing else). The
-    * recursion loop is driver-side, so plain atomics are exact.
-    */
-  val lastBucketLevels = new java.util.concurrent.atomic.AtomicLong
-  val lastBucketMaxDepth = new java.util.concurrent.atomic.AtomicLong
-  val bucketDeepSplits = new java.util.concurrent.atomic.AtomicLong
-  def snapshot: String = s"empty=${emptyPath.get} driver=${driverPath.get} " +
-    s"distributed=${distributedPath.get} ccRounds=${lastCcRounds.get}"
-
-  /** Point-in-time counter values, for PER-PHASE deltas in soak logs:
-    * the cumulative counters read misleadingly next to a phase-local
-    * flag once an earlier phase has incremented them (r17 VERDICT
-    * "what's wrong" #3 — `distributedBranch=false` beside
-    * `distributed=1`).
-    */
-  final case class Counts(empty: Long, driver: Long, distributed: Long)
-  def counts: Counts =
-    Counts(emptyPath.get, driverPath.get, distributedPath.get)
-  /** Human-readable delta since `prev` (ccRounds stays last-value).
-    * ASCII "d" prefix, not Δ — soak logs pass through JVMs whose
-    * default stderr charset mangles non-ASCII to '?'.
-    */
-  def deltaString(prev: Counts): String = {
-    val c = counts
-    s"dEmpty=${c.empty - prev.empty} dDriver=${c.driver - prev.driver} " +
-      s"dDistributed=${c.distributed - prev.distributed} " +
-      s"ccRounds=${lastCcRounds.get}"
-  }
-}
-
-/** Cluster-representative assignment. Driver UnionFind mirrors the
-  * reference exactly (minhash_deduplication.py:179-193,273-280) — path
-  * compression, union-to-min.
-  */
-object ConnectedComponents {
-
-  def unionFindRoots(edges: Array[(Long, Long)]): Map[Long, Long] = {
-    val parent = mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var root = x
-      while (parent.getOrElse(root, root) != root)
-        root = parent.getOrElse(root, root)
-      // path compression
-      var cur = x
-      while (parent.getOrElse(cur, cur) != root) {
-        val next = parent(cur)
-        parent(cur) = root
-        cur = next
-      }
-      root
-    }
-    edges.foreach { case (x, y) =>
-      val px = find(x)
-      val py = find(y)
-      val m = math.min(px, py)
-      parent(px) = m
-      parent(py) = m
-      if (!parent.contains(x)) parent(x) = m
-    }
-    // SNAPSHOT the keys before resolving: find()'s path compression
-    // mutates `parent`, and iterating a mutable.HashMap's key view while
-    // writing to the map silently skips entries (observed: ~15% of edge
-    // orders dropped rows from the roots map → over-kept clusters; caught
-    // by the reference-golden spec, r4)
-    val ks = parent.keys.toArray
-    ks.map(k => k -> find(k)).toMap
-  }
-
-  /** 100 TB-scale path: UNDIRECTED min-label propagation over the edge
-    * DataFrame — no driver materialization, same component-min
-    * representative as the UnionFind. Each round every node takes the min
-    * of its own root and its neighbors' roots; converges within component
-    * diameter rounds (LSH components are star-shaped → 2-3 rounds).
-    * Input: (a, b) candidate pairs (any direction); output: (id, root)
-    * for every node that appears in an edge.
-    */
-  def distributed(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val e = pairs.toDF("a", "b")
-    val sym = e.union(e.select(col("b"), col("a"))).distinct().persist()
-    var cur = sym.groupBy(col("a").as("id"))
-      .agg(min(col("b")).as("mn"))
-      .select(col("id"), least(col("id"), col("mn")).as("root"))
-      .persist()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val viaNeighbor = sym
-        .join(cur, sym("b") === cur("id"))
-        .select(sym("a").as("id"), col("root"))
-      val next = cur.select(col("id"), col("root"))
-        .union(viaNeighbor)
-        .groupBy("id").agg(min("root").as("root"))
-        .persist()
-      val changed = next
-        .join(cur.withColumnRenamed("root", "prev"), Seq("id"))
-        .where(col("root") =!= col("prev"))
-        .limit(1).count()
-      cur.unpersist()
-      cur = next
-      converged = changed == 0
-      i += 1
-    }
-    DedupMetrics.lastCcRounds.set(i)
-    sym.unpersist()
-    cur
-  }
 }

@@ -82,38 +82,19 @@ object NgramJaccard {
 
   /** Near-dedup via MinHash candidates + exact-Jaccard verification at
     * `threshold`, keep-first. More precise than banding alone (LSH false
-    * positives are filtered by the exact check).
-    *
-    * Scale shape: docs with fewer than `n` tokens are excluded from
-    * banding up front — their shingle set is empty, so the reference LSH
-    * would flood them into ONE all-MAX_HASH bucket (the r2 24.8 s hot key)
-    * only for exact verification to reject every pair (empty gram sets
-    * have Jaccard 0). Candidate edges are STAR-SHAPED per bucket (member
-    * vs bucket-min, via a streaming window — no per-bucket array), and
-    * verification joins the candidate ids back against the corpus, staging
-    * the word arrays in their own projection so the split isn't
-    * re-evaluated inside the n-gram lambda. Clustering goes through
-    * [[MinHashDedup.keepFirst]]: driver UnionFind for small edge lists,
-    * distributed min-label propagation beyond `maxDriverEdges`.
+    * positives are filtered by the exact check). Scale shape: see
+    * [[MinHashDedup.verifiedCandidates]]; clustering goes through
+    * [[Clustering]] — driver UnionFind for small edge lists, distributed
+    * min-label propagation beyond `maxDriverEdges`.
     */
   def deduplicate(df: DataFrame, column: String, n: Int = 5,
       threshold: Double = 0.7,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    // cache hygiene parity with MinHashDedup.deduplicate (ADVICE r14):
-    // with skew_salts auto/salted the bucket-min stage pins the banded /
-    // staged frame; keepFirst materializes the verified edges before
-    // returning, so releasing here is safe by the same argument
-    val out = MinHashDedup.withCacheRelease { sink =>
-      MinHashDedup.keepFirst(withId,
-        verifiedEdges(withId, column, n, threshold, cfg,
-          cacheSink = Some(sink)), maxDriverEdges)
-    }
-    MinHashDedup.releasePinIf(withId, orderCol)
-    out
-  }
+      orderCol: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
+      verifiedEdges(withId, column, n, threshold, cfg,
+        cacheSink = Some(sink)))(_.keep(_))
 
   /** Exact-Jaccard-verified candidate pairs — the edge list feeding the
     * clustering. Exposed for the keep-first invariant specs.
@@ -123,54 +104,16 @@ object NgramJaccard {
     * the correctness oracle then derives bucket-min candidates AND the
     * exact-Jaccard verification itself in SQL from the signatures + corpus
     * (QueriesExtra2.ngramKeepFirstSql); both engines' division is IEEE
-    * double, so the ≥ threshold comparison agrees bit-for-bit.
+    * double, so the ≥ threshold comparison agrees bit-for-bit. The verify
+    * is the single-pass JVM kernel [[jaccardDocs]].
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
       bandedSink: Option[String] = None,
-      cacheSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame = {
-    val spark = withId.sparkSession
-    val text = coalesce(col(column), lit(""))
-    val sig = MinHashDedup.signatureColumn(cfg.copy(ngramSize = n,
-      minNgramSize = n, threshold = threshold))
-    // Short docs can never verify (empty gram set ⇒ Jaccard 0 < threshold):
-    // skip banding for them instead of materializing the degenerate bucket.
-    // r20: early-exit fused gate (no token-array materialization) —
-    // ≡ size(split(text, "[^A-Za-z_0-9]", -1)) >= n, FusedTextSpec
-    val shingleable = graft.text.FusedText.nonAlphaPartsAtLeast(text, n)
-    val base = withId.where(shingleable)
-    // the signature UDF is the CPU hot path; a small parquet input arrives
-    // as 1-2 splits, which would serialize it — spread AFTER id assignment
-    // (ids anchor keep-first order) when the source is under-parallel.
-    // Probe via the scan's file list, NOT df.rdd.getNumPartitions: touching
-    // .rdd forces plan→RDD conversion (an extra job) in this constructor.
-    val par = spark.sparkContext.defaultParallelism
-    val srcFiles = withId.inputFiles.length
-    val spread =
-      if (srcFiles == 0 || srcFiles * 2 < par) base.repartition(par)
-      else base
-    val banded = spread
-      .select(col(MinHashDedup.IdCol).as("id"),
-        posexplode(sig(text)).as(Seq("band", "bsig")))
-    // cfg.skewSalts reaches the bucket-min stage (VERDICT r12 #3: the
-    // jaccard candidate path hits the same templated-corpus hot buckets
-    // as plain minhash, and previously had no knob)
-    val candidates = MinHashDedup.bucketMinEdges(
-      SideChannel.through(banded, bandedSink), cfg.skewSalts, cacheSink)
-    // exact verification: only candidate pairs pull their texts back in
-    // (broadcast-able candidate side at bench scale, shuffle join on id
-    // at cluster scale); single-pass JVM kernel — see [[jaccardDocs]]
+      cacheSink: Option[Clustering.Sink] = None): DataFrame = {
     val jac = udf { (a: String, b: String) => jaccardDocs(a, b, n) }
-    // ALL verified pairs go to clustering (multi-edges are fine for both
-    // union-find and min-label propagation); a per-node min-reduction
-    // would drop cross-links and over-keep vs transitive clustering
-    candidates
-      .join(withId.select(col(MinHashDedup.IdCol).as("__x__"),
-        col(column).as("__ta__")), Seq("__x__"))
-      .join(withId.select(col(MinHashDedup.IdCol).as("__y__"),
-        col(column).as("__tb__")), Seq("__y__"))
-      .where(jac(col("__ta__"), col("__tb__")) >= threshold)
-      .select(col("__x__"), col("__y__"))
+    MinHashDedup.verifiedCandidates(withId, column,
+      cfg.copy(ngramSize = n, minNgramSize = n, threshold = threshold),
+      bandedSink, cacheSink)(jac(_, _) >= threshold)
   }
 }

@@ -38,25 +38,21 @@ object SemDedup {
   private[graft] def verifiedEdges(withId: DataFrame, embCol: String,
       k: Int, threshold: Double, iters: Int = 3,
       trainFraction: Double = 1.0): DataFrame = {
-    val assigned = Ann.kmeansAssign(withId, embCol, MinHashDedup.IdCol,
+    val assigned = Ann.kmeansAssign(withId, embCol, Clustering.IdCol,
       CellCol, k, iters, trainFraction)
     EmbeddingDedup.verifiedEdges(assigned, embCol, CellCol, threshold)
   }
 
   /** Dedup `df` keeping one row per within-cell cosine component.
-    * Clustering goes through [[MinHashDedup.keepFirst]] — driver
-    * UnionFind for small edge lists, distributed min-label propagation
-    * beyond `maxDriverEdges`.
+    * Clustering goes through [[Clustering]] — driver UnionFind for
+    * small edge lists, distributed min-label propagation beyond
+    * `maxDriverEdges`.
     */
   def deduplicate(df: DataFrame, embCol: String, k: Int,
       threshold: Double, iters: Int = 3, trainFraction: Double = 1.0,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    val out = MinHashDedup.keepFirst(withId,
-      verifiedEdges(withId, embCol, k, threshold, iters, trainFraction),
-      maxDriverEdges)
-    MinHashDedup.releasePinIf(withId, orderCol) // VERDICT r14 #5
-    out
-  }
+      orderCol: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)((withId, _) =>
+      verifiedEdges(withId, embCol, k, threshold, iters, trainFraction))(
+      _.keep(_))
 }

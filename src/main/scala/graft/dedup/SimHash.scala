@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   * join) → explode k+1 small band keys over the distinct signatures →
   * shuffle on (band, chunk) → self-join inside buckets (bounded by
   * distinct-signature bucket size) → edge list → min-label clustering
-  * through [[MinHashDedup.keepFirst]] (driver UnionFind small, distributed
-  * min-label propagation beyond `maxDriverEdges`).
+  * through [[Clustering]] (driver UnionFind small, distributed min-label
+  * propagation beyond `maxDriverEdges`).
   */
 object SimHash {
+
+  import Clustering.{IdCol, Sink, idExpr}
 
   /** FNV-1a 64-bit — public-domain hash, stable across JVMs. */
   def fnv1a64(s: String): Long = {
@@ -68,19 +70,9 @@ object SimHash {
   def deduplicate(df: DataFrame, column: String,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    // cache hygiene (VERDICT r14 #5): the bounded guard persists each
-    // recursion frontier; release them once keepFirst materialized the
-    // edges, and drop the assignId pin when the order is data-derived
-    val out = MinHashDedup.withCacheRelease { sink =>
-      MinHashDedup.keepFirst(withId,
-        verifiedEdges(withId, column, maxHamming,
-          cacheSink = Some(sink)), maxDriverEdges)
-    }
-    MinHashDedup.releasePinIf(withId, orderCol)
-    out
-  }
+      orderCol: Option[String] = None): DataFrame =
+    deduplicateBySig(df, column, signature, maxHamming, maxDriverEdges,
+      orderCol)
 
   /** The verified edge list feeding the clustering: hamming-0 star edges
     * plus band-join pairs checked at ≤ `maxHamming` bits. Exposed for the
@@ -96,12 +88,15 @@ object SimHash {
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       maxHamming: Int, sigSink: Option[String] = None,
-      cacheSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame =
-    verifiedEdgesFromSigs(SideChannel.through(
-      withId.select(col(MinHashDedup.IdCol).as("id"),
-        signature(col(column)).as("sig")),
-      sigSink), maxHamming, cacheSink = cacheSink)
+      cacheSink: Option[Sink] = None): DataFrame =
+    verifiedEdgesFromSigs(
+      SideChannel.through(sigsOf(withId, column, signature), sigSink),
+      maxHamming, cacheSink = cacheSink)
+
+  /** The (id, sig) frame of an id-carrying frame. */
+  private def sigsOf(withId: DataFrame, column: String,
+      sigOf: Column => Column): DataFrame =
+    withId.select(col(IdCol).as("id"), sigOf(col(column)).as("sig"))
 
   /** Hot-bucket depth cap for the pigeonhole self-join (VERDICT r12
     * #2): a (band, chunk) bucket deeper than this is SPLIT by
@@ -144,18 +139,16 @@ object SimHash {
     * map-side-combined max-depth probe over the banded frame — no
     * depth tagging, no window (r14; the r13 unconditional window count
     * cost `incr_img_dedup` ~0.3 s on a flat corpus). The frame is
-    * (k+1)×reps narrow rows, persisted (`cacheSink` lets the
-    * EAGER store path release those caches after it materializes;
-    * one-shot entry points leave them pinned, the assignId
-    * convention). The store-side cross join
+    * (k+1)×reps narrow rows, persisted (`cacheSink` lets the entry
+    * points release those caches once the clustering materialized).
+    * The store-side cross join
     * ([[crossEdgesPreBanded]]) is a different shape (increment ×
     * store, bounded by the increment) and keeps the plain join.
     */
   private[graft] def verifiedEdgesFromSigs(sigsRaw: DataFrame,
       maxHamming: Int,
       bucketCap: Int = DefaultBucketCap,
-      cacheSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame = {
+      cacheSink: Option[Sink] = None): DataFrame = {
     val bands = maxHamming + 1
     val width = 64 / bands
     val sigs = sigsRaw.where(col("sig").isNotNull)
@@ -167,11 +160,7 @@ object SimHash {
       .select(col("id").as("__x__"), col("__smin__").as("__y__"))
     val reps = withMin.where(col("id") === col("__smin__"))
       .select("id", "sig")
-    val banded = reps.select(col("id"), col("sig"),
-      explode(array((0 until bands).map(lit): _*)).as("band"))
-      .withColumn("chunk",
-        expr(s"shiftrightunsigned(sig, band * $width)")
-          .bitwiseAND(lit(chunkMask(width))))
+    val banded = bandSig(reps, maxHamming)
     val pairs =
       if (bucketCap == Int.MaxValue) {
         // unguarded legacy plan — zero probe overhead, O(depth²) hazard
@@ -228,8 +217,7 @@ object SimHash {
     */
   private def boundedBucketPairs(level0: DataFrame, remWidth0: Int,
       maxHamming: Int, bucketCap: Int,
-      cacheSink: Option[scala.collection.mutable.Buffer[DataFrame]])
-      : DataFrame = {
+      cacheSink: Option[Sink]): DataFrame = {
     val bands = maxHamming + 1
     def verify(b: DataFrame): DataFrame =
       b.select(col("bkey"), col("id").as("__ida__"),
@@ -313,32 +301,24 @@ object SimHash {
   }
 
   /** Near-dedup rows by ANY 64-bit signature of a payload column — the
-    * ONE body behind the image/audio/video perceptual dedups
-    * ([[graft.multimodal.ImageHash.deduplicateByDHash]] and siblings):
-    * signature column, shared pigeonhole edges, shared keepFirst
-    * crossover; null signatures (undecodable payloads) always survive.
-    * `sigSink` exports the (id, sig) frame for the SQL oracle.
+    * ONE body behind text simhash and the image/audio/video perceptual
+    * dedups ([[graft.multimodal.ImageHash.deduplicateByDHash]] and
+    * siblings): signature column, shared pigeonhole edges, shared
+    * [[Clustering]] crossover; null signatures (undecodable payloads)
+    * always survive. `sigSink` exports the (id, sig) frame for the SQL
+    * oracle. The bounded guard's per-level frontier caches are released
+    * once the clustering materialized (VERDICT r14 #5).
     */
   def deduplicateBySig(df: DataFrame, column: String,
       sigOf: Column => Column,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      sigSink: Option[String] = None): DataFrame = {
-    val withId = MinHashDedup.assignId(df, orderCol)
-    val sigs = SideChannel.through(
-      withId.select(col(MinHashDedup.IdCol).as("id"),
-        sigOf(col(column)).as("sig")),
-      sigSink)
-    // cache hygiene (VERDICT r14 #5): see [[deduplicate]]
-    val out = MinHashDedup.withCacheRelease { sink =>
-      MinHashDedup.keepFirst(withId,
-        verifiedEdgesFromSigs(sigs, maxHamming, cacheSink = Some(sink)),
-        maxDriverEdges)
-    }
-    MinHashDedup.releasePinIf(withId, orderCol)
-    out
-  }
+      sigSink: Option[String] = None): DataFrame =
+    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
+      verifiedEdgesFromSigs(
+        SideChannel.through(sigsOf(withId, column, sigOf), sigSink),
+        maxHamming, cacheSink = Some(sink)))(_.keep(_))
 
   // ------------------------------------------------------------------
   // Persisted SIGNATURE store — the hamming family's twin of
@@ -372,11 +352,7 @@ object SimHash {
   def sigStore(refDf: DataFrame, column: String,
       sigOf: Column => Column = signature,
       orderCol: Option[String] = None): DataFrame =
-    refDf.withColumn(MinHashDedup.IdCol, MinHashDedup.idExpr(orderCol))
-      .select(col(MinHashDedup.IdCol).as("id"),
-        sigOf(col(column)).as("sig"))
-      .where(col("sig").isNotNull)
-      .groupBy("sig").agg(min(col("id")).as("id"))
+    compactSigJournal(sigJournal(refDf, column, sigOf, orderCol))
 
   /** Fold one signature store into another: min-per-sig of the union —
     * ≤ |distinct sigs| rows shuffle, associative, order-free.
@@ -395,9 +371,7 @@ object SimHash {
   def sigJournal(refDf: DataFrame, column: String,
       sigOf: Column => Column = signature,
       orderCol: Option[String] = None): DataFrame =
-    refDf.withColumn(MinHashDedup.IdCol, MinHashDedup.idExpr(orderCol))
-      .select(col(MinHashDedup.IdCol).as("id"),
-        sigOf(col(column)).as("sig"))
+    refDf.select(idExpr(orderCol).as("id"), sigOf(col(column)).as("sig"))
       .where(col("sig").isNotNull)
 
   /** Takedown: drop every journal row of the given ids (one-column
@@ -514,26 +488,14 @@ object SimHash {
       sigOf: Column => Column, maxHamming: Int, maxDriverEdges: Long,
       orderCol: Option[String], newIdOffset: Long,
       sigSink: Option[String])(
-      crossOf: DataFrame => DataFrame): DataFrame = {
-    val withId = newDf.withColumn(MinHashDedup.IdCol,
-      MinHashDedup.idExpr(orderCol) + lit(newIdOffset)).persist()
-    val sigs = SideChannel.through(
-      withId.select(col(MinHashDedup.IdCol).as("id"),
-        sigOf(col(column)).as("sig")),
-      sigSink)
-    // the bounded-bucket recursion persists its per-level frontiers;
-    // collect them so this EAGER per-batch API releases every cache
-    // after the survivors materialize (the clusterSizeStats hazard)
-    val levelCaches = scala.collection.mutable.Buffer.empty[DataFrame]
-    val edges = verifiedEdgesFromSigs(sigs, maxHamming,
-        cacheSink = Some(levelCaches))
-      .union(crossOf(sigs))
-    val out = MinHashDedup.keepFirst(withId, edges, maxDriverEdges)
-      .localCheckpoint(true)
-    levelCaches.foreach(_.unpersist())
-    withId.unpersist()
-    out
-  }
+      crossOf: DataFrame => DataFrame): DataFrame =
+    Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
+      (withId, sink) =>
+        val sigs =
+          SideChannel.through(sigsOf(withId, column, sigOf), sigSink)
+        verifiedEdgesFromSigs(sigs, maxHamming, cacheSink = Some(sink))
+          .union(crossOf(sigs))
+    }
 
   /** Recompute-path incremental dedup (the spec twin of
     * [[deduplicateAgainstSigStore]], mirroring
@@ -545,27 +507,8 @@ object SimHash {
       column: String,
       sigOf: Column => Column = signature,
       maxHamming: Int = 3,
-      maxDriverEdges: Long = 10_000_000L): DataFrame = {
-    val mark = "__graft_sim_new__"
-    val ord = "__graft_sim_order__"
-    val cols = newDf.columns
-    val tagged = refDf.selectExpr(cols.map(c => s"`$c`").toIndexedSeq: _*)
-      .withColumn(mark, lit(false))
-      .withColumn(ord, monotonically_increasing_id())
-      .unionByName(newDf.withColumn(mark, lit(true))
-        .withColumn(ord, monotonically_increasing_id() + lit(1L << 62)))
-    val withId = MinHashDedup.assignId(tagged, Some(ord))
-    val sigs = withId.select(col(MinHashDedup.IdCol).as("id"),
-      sigOf(col(column)).as("sig"))
-    // ADVICE r15: the bounded-guard recursion pins per-level frontier
-    // frames; release them once keepFirst has materialized the edges
-    // (the withId pin itself stays — `ord` is synthetic, so the lazy
-    // output must re-read the cache, the releasePinIf exception)
-    MinHashDedup.withCacheRelease { sink =>
-      MinHashDedup.keepFirst(withId,
-          verifiedEdgesFromSigs(sigs, maxHamming, cacheSink = Some(sink)),
-          maxDriverEdges)
-        .where(col(mark)).drop(mark, ord)
-    }
-  }
+      maxDriverEdges: Long = 10_000_000L): DataFrame =
+    Clustering.against(newDf, refDf, maxDriverEdges)((withId, sink) =>
+      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
+        cacheSink = Some(sink)))
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{MinHashDedup, SimHash}
+import graft.dedup.SimHash
 
 /** Perceptual audio near-dedup — the audio member of the dedup family
   * beside [[ImageHash]]: re-encoded or volume-adjusted copies of the
@@ -130,7 +130,7 @@ object AudioHash {
 
   /** Near-dedup rows whose clips hash within `maxHamming` bits, keeping
     * each cluster's first row — [[SimHash.deduplicate]] with the audio
-    * fingerprint as the signature (shared banding/verify/keepFirst;
+    * fingerprint as the signature (shared banding/verify/clustering;
     * undecodable payloads keep a null signature and always survive).
     * `sigSink` exports the (id, sig) frame for the SQL oracle.
     */

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{MinHashDedup, SimHash}
+import graft.dedup.SimHash
 
 /** Perceptual image near-dedup — the multimodal member of the dedup
   * family: crawled corpora carry the same image re-encoded, resized, or
@@ -32,7 +32,7 @@ import graft.dedup.{MinHashDedup, SimHash}
   * stands in for the image everywhere downstream — ship THAT between
   * stages, not the pixels); dedup reuses the simhash pigeonhole
   * machinery (hamming-0 window collapse, bit-sliced band self-join,
-  * popcount verify, shared keepFirst crossover) — never all-pairs.
+  * popcount verify, shared clustering crossover) — never all-pairs.
   */
 object ImageHash {
 
@@ -170,7 +170,7 @@ object ImageHash {
   /** Near-dedup rows whose images hash within `maxHamming` bits, keeping
     * each cluster's first row. Exactly [[SimHash.deduplicate]] with the
     * image hash as the signature — shared banding, verify, and
-    * keepFirst crossover; rows whose payload doesn't decode keep a null
+    * clustering crossover; rows whose payload doesn't decode keep a null
     * signature and always survive. `sigSink` exports the (id, sig)
     * frame for the SQL oracle.
     */

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{MinHashDedup, SimHash}
+import graft.dedup.SimHash
 
 /** Shared 64-bit envelope fingerprint: 65 equal windows over a
   * non-negative Long sequence, window value = Σ entries (exact), bit

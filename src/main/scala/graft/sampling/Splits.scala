@@ -49,7 +49,7 @@ object Splits {
     * [[hashSplit]] has on an undeduplicated (or deliberately
     * duplicate-retaining) corpus: a test document's near-copy sitting
     * in train. Composes the minhash clustering
-    * ([[graft.dedup.MinHashDedup.componentRoots]] — shared driver
+    * ([[graft.dedup.MinHashDedup.clusterRoots]] — shared driver
     * UnionFind ↔ distributed min-label crossover, bounded edge probe)
     * with the hash-threshold assignment: every member of a cluster
     * hashes the SAME root, so whole clusters move between splits as a

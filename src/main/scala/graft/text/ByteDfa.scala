@@ -24,8 +24,8 @@ object ByteDfa {
   // every TASK (it rides the WholeStageCodegen references array), and its
   // @transient lazy field re-triggers the build per deserialized copy —
   // ~150 ms for the NSFW table, which at 32 tasks was 5× the actual scan
-  // time (r18 DfaProbe). Content-keyed, so every task of every query over
-  // the same needle list shares one automaton per JVM.
+  // time (r18 measurement, PERF.md). Content-keyed, so every task of
+  // every query over the same needle list shares one automaton per JVM.
   //
   // BOUNDED (r19, VERDICT r18 nit): `MultiMatch.containsAny/countMatches`
   // is a public API taking arbitrary needle arrays, and the NSFW-sized

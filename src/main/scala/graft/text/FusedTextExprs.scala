@@ -199,6 +199,12 @@ object GraftTextKernels {
     * Differential: FusedTextSpec pins equality with the composed
     * `size(split(...)) >= k` over random unicode + the shared fuzz
     * edge corpus.
+    *
+    * Precondition: `s` is well-formed UTF-8 (every engine producer
+    * validates on ingest). On malformed bytes the scan stays total but
+    * diverges from the regex form: a stray continuation byte is skipped
+    * as a non-separator, while the regex path decodes it to U+FFFD, a
+    * separator (FusedTextSpec pins the malformed-input results).
     */
   def nonAlphaPartsAtLeast(s: UTF8String, k: Int): Boolean = {
     if (k <= 1) return true // ≥ 1 part always (split of "" is [""])

@@ -15,7 +15,7 @@ final class AhoHolder(val needles: Array[String]) extends Serializable {
   // resolved through the JVM-global ByteDfa cache: this holder is
   // deserialized once PER TASK, so building here directly would rebuild
   // the automaton per task (the dominant cost of the whole filter at
-  // 32 tasks — r18 DfaProbe measurement)
+  // 32 tasks — r18 measurement, PERF.md)
   @transient private lazy val dfa = ByteDfa.forNeedles(needles)
   // Locale.ROOT: default-locale toLowerCase diverges under tr-TR ('I' →
   // dotless 'ı'), which would stop ASCII needles like "ai" from matching.

@@ -140,4 +140,27 @@ class CacheReleaseSpec extends AnyFunSuite {
         "a dedup entry point is leaking persisted frames")
     store.unpersist()
   }
+
+  test("distributed clustering (maxDriverEdges = 0) leaves no roots " +
+      "frame pinned across deduplicate / weighted / clusterSizeStats calls") {
+    // every call takes the min-label path, whose converged (id, root)
+    // frame the lazy outputs read; a frame left persisted per call grows
+    // getPersistentRDDs by one per call (≈ +18 below, over the +8 slack)
+    def call(i: Int): Long = (i % 3) match {
+      case 0 => MinHashDedup.deduplicate(corpus(i), "text", Cfg,
+        maxDriverEdges = 0L, orderCol = Some("doc_id")).count()
+      case 1 => MinHashDedup.deduplicateWeighted(corpus(i), "text", Cfg,
+        maxDriverEdges = 0L, orderCol = Some("doc_id")).count()
+      case _ => MinHashDedup.clusterSizeStats(corpus(i), "text", Cfg,
+        maxDriverEdges = 0L, orderCol = Some("doc_id")).count()
+    }
+
+    (0 until 3).foreach(call) // warmup
+    val baseline = settledFloor()
+    (3 until 21).foreach(call)
+    val after = settledCount(atMost = baseline + 8)
+    assert(after <= baseline + 8,
+      s"pinned caches grew $baseline -> $after over 18 distributed-path " +
+        "calls — the min-label roots frame is leaking")
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{DedupMetrics, EmbeddingDedup, MinHashConfig, MinHashDedup, NgramJaccard, SimHash}
+import graft.dedup.{Clustering, DedupMetrics, EmbeddingDedup, MinHashConfig, MinHashDedup, NgramJaccard, SimHash}
 
 /** Semantic keep-first invariants for the dedup variants whose kept-id
   * goldens are self-pinned (simhash / embedding / ngram-jaccard): instead
@@ -80,7 +80,7 @@ class DedupInvariantSpec extends AnyFunSuite {
 
   test("simhash: edges valid, kept = component mins, pigeonhole complete") {
     val corpus = corpusWithDupes
-    val withId = MinHashDedup.assignId(corpus, Some("doc_id"))
+    val withId = Clustering.assignId(corpus, Some("doc_id"))
     val edges = SimHash.verifiedEdges(withId, "text", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val texts = corpus.collect()
@@ -120,7 +120,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     val n = 5
     val threshold = 0.7
     val corpus = corpusWithDupes
-    val withId = MinHashDedup.assignId(corpus, Some("doc_id"))
+    val withId = Clustering.assignId(corpus, Some("doc_id"))
     val edges = NgramJaccard
       .verifiedEdges(withId, "text", n, threshold, MinHashConfig())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -312,7 +312,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     val corpus = base.union(base.orderBy("vec_id").limit(20)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"),
         col("label")))
-    val withId = MinHashDedup.assignId(corpus, Some("vec_id"))
+    val withId = Clustering.assignId(corpus, Some("vec_id"))
     val edges = EmbeddingDedup
       .verifiedEdges(withId, "embedding", "label", threshold)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -363,7 +363,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     val corpus = base.union(base.orderBy("vec_id").limit(20)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"),
         col("label")))
-    val withId = MinHashDedup.assignId(corpus, Some("vec_id"))
+    val withId = Clustering.assignId(corpus, Some("vec_id"))
     // ONE k-means training anchors every exact assertion below: centroid
     // averaging is a shuffled double sum whose partial-merge order is an
     // engine artifact (see the p12 oracle note), so independent retrains
@@ -371,7 +371,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     // checks must all derive from the same assignment, and the
     // end-to-end retraining path gets only ulp-robust assertions.
     val assigned = graft.similarity.Ann.kmeansAssign(withId, "embedding",
-      MinHashDedup.IdCol, SemDedup.CellCol, k)
+      Clustering.IdCol, SemDedup.CellCol, k)
     val cells = assigned
       .select(col("vec_id"), col(SemDedup.CellCol), col("embedding"))
       .collect()
@@ -396,7 +396,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     val ids = cells.keys.toSeq
     val roots = unionRoots(ids, edges)
     val expected = ids.filter(i => roots(i) == i).toSet
-    val kept = MinHashDedup.keepFirst(withId, edgesDf, 10000000L)
+    val kept = Clustering.keepFirst(withId, edgesDf, 10000000L)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == expected,
       s"kept diff: extra=${kept -- expected}, missing=${expected -- kept}")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{EditDistanceDedup, MinHashConfig, MinHashDedup}
+import graft.dedup.{Clustering, EditDistanceDedup, MinHashConfig}
 
 class EditDistanceSpec extends AnyFunSuite {
 
@@ -77,8 +77,8 @@ class EditDistanceSpec extends AnyFunSuite {
       5L -> ("unrelated corpus paragraph regarding ancient pottery and " +
         "the slow firing of river clay in wood kilns before dawn light"))
       .toDF("doc_id", "text")
-    val withId = MinHashDedup.assignId(docs, Some("doc_id"))
-    val texts = withId.select(col(MinHashDedup.IdCol).as("id"),
+    val withId = Clustering.assignId(docs, Some("doc_id"))
+    val texts = withId.select(col(Clustering.IdCol).as("id"),
       col("text")).as[(Long, String)].collect().toMap
     val edges = EditDistanceDedup.verifiedEdges(withId, "text", 5, 0.8,
       MinHashConfig()).as[(Long, Long)].collect()

@@ -440,6 +440,17 @@ class FusedTextSpec extends AnyFunSuite {
     assert(GraftTextKernels.removeEmptyLines(truncLead).numBytes >= 0)
     assert(GraftTextKernels.cleanNewLines(contAfterAscii).numBytes >= 0)
     assert(GraftTextKernels.c4CleanLines(loneCont, 3).numBytes >= 0)
+
+    // nonAlphaPartsAtLeast counts a lead byte as one separator and skips
+    // continuation bytes, so a STRAY continuation is a non-separator —
+    // where the regex form decodes it to U+FFFD, a separator. Pinned:
+    // parts = 1 + lead bytes + ASCII separators.
+    assert(!GraftTextKernels.nonAlphaPartsAtLeast(loneCont, 2))       // 1 part
+    assert(GraftTextKernels.nonAlphaPartsAtLeast(truncLead, 2))       // 2 parts
+    assert(!GraftTextKernels.nonAlphaPartsAtLeast(truncLead, 3))
+    assert(!GraftTextKernels.nonAlphaPartsAtLeast(contAfterAscii, 2)) // 1 part
+    assert(GraftTextKernels.nonAlphaPartsAtLeast(leadAtEnd, 3))       // 3 parts
+    assert(!GraftTextKernels.nonAlphaPartsAtLeast(leadAtEnd, 4))
   }
 
   test("null propagates: null in, null out") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{MinHashDedup, SimHash}
+import graft.dedup.{Clustering, SimHash}
 
 /** Depth-bounded pigeonhole recursion ≡ the unguarded self-join
   * (VERDICT r12 #2): on templated signature clouds — many DISTINCT
@@ -65,13 +65,13 @@ class SimHashBoundedSpec extends AnyFunSuite {
       "on a skewed sig corpus") {
     val base = ScaleGen.templateSigCloud(spark, 2000L,
       varyingBits = 20, flips = 4)
-      .select(col("id").as(MinHashDedup.IdCol), col("id").as("keep_id"),
+      .select(col("id").as(Clustering.IdCol), col("id").as("keep_id"),
         col("sig"))
       .persist()
     def kept(cap: Int): Set[Long] =
-      MinHashDedup.keepFirst(base,
+      Clustering.keepFirst(base,
         SimHash.verifiedEdgesFromSigs(
-          base.select(col(MinHashDedup.IdCol).as("id"), col("sig")),
+          base.select(col(Clustering.IdCol).as("id"), col("sig")),
           3, cap),
         maxDriverEdges = 10_000_000L)
         .select("keep_id").collect().map(_.getLong(0)).toSet

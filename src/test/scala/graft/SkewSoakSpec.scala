@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{MinHashConfig, MinHashDedup}
+import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
 
 /** Salted two-stage bucket-min equivalence (VERDICT r11 #1): on a
   * Zipf-template skewed corpus — near- but not exact-identical
@@ -93,7 +93,7 @@ class SkewSoakSpec extends AnyFunSuite {
     import graft.dedup.MinHashConfig.{AutoSalts, SkewDepthThreshold}
     // shallow frame: hottest bucket far below the crossover → plain
     val docs = ScaleGen.zipfTemplateDocs(spark, 500L, 5, 1.5).persist()
-    val withId = MinHashDedup.assignId(docs, Some("doc_id"))
+    val withId = Clustering.assignId(docs, Some("doc_id"))
     val (_, banded) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
     assert(!MinHashDedup.probeSkewDeep(banded))
     // synthetic threshold-deep frame → skew handling engaged
@@ -118,7 +118,7 @@ class SkewSoakSpec extends AnyFunSuite {
   test("agg-join bucket-min emits EXACTLY the plain window's edge frame " +
       "(same member → bucket-min stars) on a skewed corpus") {
     val docs = ScaleGen.zipfTemplateDocs(spark, 600L, 6, 1.5).persist()
-    val withId = MinHashDedup.assignId(docs, Some("doc_id"))
+    val withId = Clustering.assignId(docs, Some("doc_id"))
     val (_, banded0) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
     val banded = banded0.persist()
     val plain = MinHashDedup.bucketMinEdges(banded)
@@ -132,7 +132,7 @@ class SkewSoakSpec extends AnyFunSuite {
   test("salted edge set differs in shape but spans the same components; " +
       "salts > bucket depth and salts = corpus size degenerate safely") {
     val docs = ScaleGen.zipfTemplateDocs(spark, 300L, 3, 1.2).persist()
-    val withId = MinHashDedup.assignId(docs, Some("doc_id"))
+    val withId = Clustering.assignId(docs, Some("doc_id"))
     val (_, banded) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
     val bandedP = banded.persist()
     val plain = MinHashDedup.bucketMinEdges(bandedP)
