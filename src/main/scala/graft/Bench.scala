@@ -25,7 +25,11 @@ import org.apache.spark.sql.SparkSession
   *  - `warmup_sec`: the untimed full-pass wall time (where all one-time
   *    side-channel exports land);
   *  - the per-query map printed SORTED BY COST DESCENDING, so tail
-  *    truncation of the line can never again hide the expensive half.
+  *    truncation of the line can never again hide the expensive half;
+  *  - `errors`: every query that threw (warm pass or a timed rep) with
+  *    its first exception. A failed rep is never a time (`null` in
+  *    `reps`), and a query with no successful rep is absent from
+  *    `queries` — a broken query can no longer look fast.
   */
 object Bench {
   /** (1-min, 5-min) loadavg — both figures, because the 1-min average
@@ -126,7 +130,10 @@ object Bench {
     // jobs FIFO at stage granularity, most queries leave most of the 32
     // cores idle, and the one-time exports are race-free — every
     // side-channel path is written by exactly ONE query (audited r19)
-    // and SideChannel.through serializes per-path as defense-in-depth.
+    // and SideChannel serializes each path's export as defense-in-depth.
+    // A query's exports happen before it calls its library entry point,
+    // so once the warm pass has claimed them a timed rep runs exactly the
+    // entry point's plan — the one pipeline.Runner runs.
     // The heaviest dedup/flagship lines showed ±20-40% swings between
     // rounds with no plan change (r5 verdict); give them an extra repeat so
     // the reported best is load-noise-resistant where it matters most.
@@ -141,21 +148,30 @@ object Bench {
     val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").contains("1")
     val warmThreads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "4").toInt)
+    // every exception is recorded per query (first one wins), never
+    // turned into a time: a throwing query must not look fast
+    val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def attempt(name: String, phase: String)(body: => Unit): Boolean =
+      try { body; true } catch { case e: Throwable =>
+        errors.putIfAbsent(name, s"$phase: ${e.getClass.getName}: " +
+          e.getMessage)
+        false
+      }
     val w0 = System.nanoTime()
     if (warmThreads <= 1) {
-      qs.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      qs.foreach { case (name, fn) =>
+        attempt(name, "warmup")(fn(spark, sfDir).count())
       }
     } else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
       try {
-        val futures = qs.map { case (_, fn) =>
+        val futures = qs.map { case (name, fn) =>
           pool.submit(new Runnable {
             def run(): Unit =
-              try fn(spark, sfDir).count() catch { case _: Throwable => () }
+              attempt(name, "warmup")(fn(spark, sfDir).count())
           })
         }
-        futures.foreach(f => try f.get() catch { case _: Throwable => () })
+        futures.foreach(_.get())
       } finally pool.shutdown()
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
@@ -177,15 +193,19 @@ object Bench {
         System.gc()
       }
       val n = if (hot(name)) hotRepeat else repeat
-      val reps = (1 to n).map { _ =>
+      // a failed rep is None: it never counts toward the best time
+      val reps = (1 to n).map { i =>
         isolate()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+        if (attempt(name, s"rep $i")(fn(spark, sfDir).count()))
+          Some((System.nanoTime() - t0) / 1e9)
+        else None
       }
-      if (verbose) System.err.println(
-        f"[bench] $name reps=${reps.map(r => f"$r%.3f").mkString(",")}")
-      (name, reps.min, reps)
+      if (verbose) System.err.println(f"[bench] $name reps=" +
+        reps.map(_.fold("failed")(r => f"$r%.3f")).mkString(","))
+      (name, reps)
+    }.collect { case (name, reps) if reps.exists(_.isDefined) =>
+      (name, reps.flatten.min, reps)
     }
     val (loadAfter, load5After) = loadavg
     // cost-descending: truncation from the tail drops only cheap queries
@@ -207,8 +227,19 @@ object Bench {
     val qjson = byCost.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
     val repsJson = byCost.map { case (k, _, rs) =>
-      "\"" + k + "\":[" + rs.map(r => f"$r%.3f").mkString(",") + "]"
+      "\"" + k + "\":[" +
+        rs.map(_.fold("null")(r => f"$r%.3f")).mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // queries absent from `queries` (no successful rep) and queries that
+    // threw in any phase, with their first exception
+    val errorsJson = {
+      import scala.jdk.CollectionConverters._
+      errors.asScala.toSeq.sorted.map { case (k, m) =>
+        Verify.jsonString(k) + ":" + Verify.jsonString(m)
+      }.mkString("{", ",", "}")
+    }
+    if (!errors.isEmpty) System.err.println(
+      s"[bench] ${errors.size} queries threw: $errorsJson")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // per-rep variance data (machine-load noise vs plan change), its own
     // line so the contract line stays short
@@ -221,7 +252,7 @@ object Bench {
     println(s"""{"metric":"total_compact","value":$total,"unit":"sec","sf":"$sfDir","n":${results.size},"loadavg_before":$loadBefore,"loadavg5_before":$load5Before,"loadavg_after":$loadAfter,"loadavg5_after":$load5After,"load_invalid":$loadInvalid,"warmup_sec":$warmupSec,"top20":$top20,"total_sec":$total}""")
     // THE contract line, last: total_sec/n duplicated at the END so the
     // headline survives truncation from either side (BENCH_r05 lesson).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,"sf":"$sfDir","loadavg_before":$loadBefore,"loadavg5_before":$load5Before,"loadavg_after":$loadAfter,"loadavg5_after":$load5After,"load_invalid":$loadInvalid,"warmup_sec":$warmupSec,"total_sec":$total,"n":${results.size}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,"errors":$errorsJson,"sf":"$sfDir","loadavg_before":$loadBefore,"loadavg5_before":$load5Before,"loadavg_after":$loadAfter,"loadavg5_after":$load5After,"load_invalid":$loadInvalid,"warmup_sec":$warmupSec,"total_sec":$total,"n":${results.size}}""")
     spark.stop()
   }
 }

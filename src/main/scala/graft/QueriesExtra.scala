@@ -330,7 +330,7 @@ object QueriesExtra {
       val key = QueriesExtra2.scaleKey(dir)
       val cells = Ann.kmeansAssign(emb, "embedding", "vec_id", "__cell__",
         k = 8, iters = 3, trainFraction = 0.2).persist()
-      // write-then-claim (same contract as dedup.SideChannel, ADVICE r7):
+      // write-then-claim (same contract as SideChannel, ADVICE r7):
       // the key is recorded only after BOTH exports succeed, so a failed
       // probe write cannot leave later invocations silently reading a
       // stale/absent frame for the JVM lifetime. Concurrent unclaimed
@@ -343,8 +343,8 @@ object QueriesExtra {
           .select(col("__cell__").as("cell"))
           .write.mode("overwrite").parquet(ivfProbedPath(key))
         ivfWritten.add(key)
-        graft.dedup.SideChannel.record(ivfCellsPath(key))
-        graft.dedup.SideChannel.record(ivfProbedPath(key))
+        SideChannel.record(ivfCellsPath(key))
+        SideChannel.record(ivfProbedPath(key))
       }
       // prune against the JUST-WRITTEN probe list instead of re-deriving
       // it (a second centroids aggregate over the corpus) — the oracle and

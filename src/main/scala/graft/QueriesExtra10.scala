@@ -76,7 +76,7 @@ object QueriesExtra10 {
         .write.mode("overwrite").parquet(pqkProbesPath(key))
       pqkWritten.add(key)
       Seq(pqkCellsPath(key), pqkCodesPath(key), pqkTablesPath(key),
-        pqkProbesPath(key)).foreach(graft.dedup.SideChannel.record)
+        pqkProbesPath(key)).foreach(SideChannel.record)
     }
     (queries, encoded, model, s.read.parquet(pqkProbesPath(key)),
       () => { cells.unpersist(); () })
@@ -266,14 +266,23 @@ object QueriesExtra10 {
       "ORDER BY t.doc_id"
   }
 
+  /** Export the (id = doc_id + `idOffset`, sig) frame a perceptual
+    * dedup derives its edges from, for its SQL oracle.
+    */
+  private def exportSigs(docs: DataFrame, column: String,
+      sigOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      path: String, idOffset: Long = 0L): Unit =
+    SideChannel.exportOnce(path)(graft.dedup.SimHash.sigFrame(docs, column,
+      sigOf, Some("doc_id"), idOffset))
+
   val imgDhashDedup: QueryDef = QueryDef("img_dhash_dedup",
     (s, dir) => {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), imgBytesUdf(col("doc_id")).as("img"))
+      exportSigs(docs, "img", graft.multimodal.ImageHash.dhashUdf,
+        QueriesExtra2.sigPath(imgSigVariant, QueriesExtra2.scaleKey(dir)))
       graft.multimodal.ImageHash.deduplicateByDHash(docs, "img",
-          maxHamming = 3, orderCol = Some("doc_id"),
-          sigSink = QueriesExtra2.sinkOnce(
-            QueriesExtra2.sigPath(imgSigVariant, QueriesExtra2.scaleKey(dir))))
+          maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
     },
     Some(nullableSigKeepFirstSql(imgSigVariant)))
@@ -342,10 +351,10 @@ object QueriesExtra10 {
     (s, dir) => {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), wavBytesUdf(col("doc_id")).as("clip"))
+      exportSigs(docs, "clip", graft.multimodal.AudioHash.ehashUdf,
+        QueriesExtra2.sigPath(audioSigVariant, QueriesExtra2.scaleKey(dir)))
       graft.multimodal.AudioHash.deduplicateByEHash(docs, "clip",
-          maxHamming = 3, orderCol = Some("doc_id"),
-          sigSink = QueriesExtra2.sinkOnce(QueriesExtra2.sigPath(
-            audioSigVariant, QueriesExtra2.scaleKey(dir))))
+          maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
     },
     Some(nullableSigKeepFirstSql(audioSigVariant)))
@@ -355,9 +364,6 @@ object QueriesExtra10 {
   private val Off = graft.dedup.MinHashDedup.NewIdOffset
 
   private def sigStorePath(key: String) = s"/tmp/graft_sig_store_img_$key"
-
-  private val sigStoreWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Retained-corpus image per doc: 20 hash classes (so the store is 20
     * rows — one per distinct signature), with ≡0 mod 83 docs carrying
@@ -404,18 +410,12 @@ object QueriesExtra10 {
       val inc = docs.where(col("doc_id") % 11 === 0)
         .select(col("doc_id"), incImgUdf(col("doc_id")).as("img"))
       val key = QueriesExtra2.scaleKey(dir)
-      val store = SimHash.sigStore(ref, "img", ImageHash.dhashUdf,
-        Some("doc_id"))
-      if (!sigStoreWritten.contains(key)) {
-        store.write.mode("overwrite").parquet(sigStorePath(key))
-        sigStoreWritten.add(key)
-        graft.dedup.SideChannel.record(sigStorePath(key))
-      }
-      SimHash.deduplicateAgainstSigStore(inc,
-          s.read.parquet(sigStorePath(key)), "img", ImageHash.dhashUdf,
-          maxHamming = 3, orderCol = Some("doc_id"),
-          sigSink = QueriesExtra2.sinkOnce(QueriesExtra2.sigPath(
-            "incrimg", key)))
+      val store = SideChannel.readBack(sigStorePath(key))(
+        SimHash.sigStore(ref, "img", ImageHash.dhashUdf, Some("doc_id")))
+      exportSigs(inc, "img", ImageHash.dhashUdf,
+        QueriesExtra2.sigPath("incrimg", key), Off)
+      SimHash.deduplicateAgainstSigStore(inc, store, "img",
+          ImageHash.dhashUdf, maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
     },
     Some {
@@ -522,10 +522,10 @@ object QueriesExtra10 {
     (s, dir) => {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), mp4BytesUdf(col("doc_id")).as("clip"))
+      exportSigs(docs, "clip", graft.multimodal.VideoHash.fhashUdf,
+        QueriesExtra2.sigPath(videoSigVariant, QueriesExtra2.scaleKey(dir)))
       graft.multimodal.VideoHash.deduplicateByFHash(docs, "clip",
-          maxHamming = 3, orderCol = Some("doc_id"),
-          sigSink = QueriesExtra2.sinkOnce(QueriesExtra2.sigPath(
-            videoSigVariant, QueriesExtra2.scaleKey(dir))))
+          maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
     },
     Some(nullableSigKeepFirstSql(videoSigVariant)))

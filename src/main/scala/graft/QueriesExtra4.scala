@@ -106,11 +106,11 @@ object QueriesExtra4 {
     */
   val compressRatio: QueryDef = QueryDef("ta_compress_ratio",
     (s, dir) => {
-      val side = graft.dedup.SideChannel.through(
+      val side = SideChannel.through(
         docs(s, dir).select(col(d).as("id"),
           graft.analysis.Compression.deflateLen(col("text"))
             .as("comp_len")),
-        QueriesExtra2.sinkOnce(
+        SideChannel.once(
           QueriesExtra2.compLenPath(QueriesExtra2.scaleKey(dir))))
       docs(s, dir)
         // coalesce: null text must keep deflateRatio's null/empty ⇒ 1.0

@@ -92,10 +92,10 @@ object QueriesExtra5 {
       val model = NaiveBayes.train(withDoc, "_doc", "lang", VocabV)
       val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      graft.dedup.SideChannel.through(wDf,
-        QueriesExtra2.sinkOnce(nbPath(key) + "/weights"))
-      graft.dedup.SideChannel.through(pDf,
-        QueriesExtra2.sinkOnce(nbPath(key) + "/priors"))
+      SideChannel.through(wDf,
+        SideChannel.once(nbPath(key) + "/weights"))
+      SideChannel.through(pDf,
+        SideChannel.once(nbPath(key) + "/priors"))
       // r19: fused tokenize+score kernel — same integer sums as predict
       // with the default featurizer (ClassifierSpec differential)
       NaiveBayes.predictTokens(
@@ -159,10 +159,10 @@ object QueriesExtra5 {
         distinctFeatures = Some(c => NaiveBayes.charGramsDistinctCol(c, 2, 4)))
       val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      graft.dedup.SideChannel.through(wDf,
-        QueriesExtra2.sinkOnce(nbCgramPath(key) + "/weights"))
-      graft.dedup.SideChannel.through(pDf,
-        QueriesExtra2.sinkOnce(nbCgramPath(key) + "/priors"))
+      SideChannel.through(wDf,
+        SideChannel.once(nbCgramPath(key) + "/weights"))
+      SideChannel.through(pDf,
+        SideChannel.once(nbCgramPath(key) + "/priors"))
       // r19: scoring via one DFA scan of the same lowercased haystack the
       // gram featurizer reads — identical integer sums (ClassifierSpec
       // pins predictSubstring == predict on this featurizer)
@@ -260,9 +260,9 @@ object QueriesExtra5 {
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
       val key = QueriesExtra2.scaleKey(dir)
-      graft.dedup.SideChannel.through(
+      SideChannel.through(
         graft.text.Bpe.wordEncodings(s, docs, model, "text"),
-        QueriesExtra2.sinkOnce(bpePath(key)))
+        SideChannel.once(bpePath(key)))
       val counts = graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"))
       Mixture.tokenBudgetSelectCounted(docs, d, "source", counts,
@@ -328,9 +328,9 @@ object QueriesExtra5 {
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
       val key = QueriesExtra2.scaleKey(dir)
-      graft.dedup.SideChannel.through(
+      SideChannel.through(
         graft.text.Bpe.wordEncodings(s, docs, model, "text"),
-        QueriesExtra2.sinkOnce(bpePath(key)))
+        SideChannel.once(bpePath(key)))
       graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"), col("bpe_text"))
         .orderBy(d)

@@ -130,8 +130,8 @@ object QueriesExtra6 {
       val docs = dsirDocs(s, dir)
       val (m, grid) = Dsir.fitWithGrid(docs.where(col("lang") === "en"),
         docs, col("_doc"), Buckets)
-      graft.dedup.SideChannel.through(Dsir.modelFrame(s, m),
-        QueriesExtra2.sinkOnce(dsirPath(key)))
+      SideChannel.through(Dsir.modelFrame(s, m),
+        SideChannel.once(dsirPath(key)))
       (m, grid)
     })
 
@@ -228,11 +228,11 @@ object QueriesExtra6 {
         k = 16, iters = 5, maxTrain = 2000)
       val encoded = Pq.encode(emb, "embedding", model, "_codes")
       val key = QueriesExtra2.scaleKey(dir)
-      graft.dedup.SideChannel.through(
+      SideChannel.through(
         Pq.codesFrame(encoded, "vec_id", "_codes"),
-        QueriesExtra2.sinkOnce(pqCodesPath(key)))
-      graft.dedup.SideChannel.through(Pq.adcTable(s, qv, model),
-        QueriesExtra2.sinkOnce(pqTablePath(key)))
+        SideChannel.once(pqCodesPath(key)))
+      SideChannel.through(Pq.adcTable(s, qv, model),
+        SideChannel.once(pqTablePath(key)))
       Pq.adcTopK(encoded, "vec_id", "_codes", qv, model, 10)
         .orderBy("rank")
     },

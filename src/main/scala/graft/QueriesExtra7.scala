@@ -99,11 +99,16 @@ object QueriesExtra7 {
     * candidates and re-verifies the normalized Levenshtein itself.
     */
   val dedupEditDistance: QueryDef = QueryDef("dedup_edit_distance",
-    (s, dir) => QueriesExtra2.sigOracledDedup(s,
-      Queries.table(s, dir, "documents"), "doc_id",
-      QueriesExtra2.bandedPath("editdist", QueriesExtra2.scaleKey(dir)),
-      (withId, sink) => graft.dedup.EditDistanceDedup.verifiedEdges(
-        withId, "text", 5, 0.8, graft.dedup.MinHashConfig(), sink)),
+    (s, dir) => {
+      import graft.dedup.{EditDistanceDedup, MinHashConfig}
+      val docs = Queries.table(s, dir, "documents")
+      SideChannel.exportOnce(
+        QueriesExtra2.bandedPath("editdist", QueriesExtra2.scaleKey(dir)))(
+        EditDistanceDedup.bandedFrame(docs, "text", 5, MinHashConfig(),
+          Some("doc_id")))
+      EditDistanceDedup.deduplicate(docs, "text", 5, 0.8,
+        orderCol = Some("doc_id")).select("doc_id").orderBy("doc_id")
+    },
     Some(levKeepFirstSql("editdist", 0.8, "documents", "doc_id")))
 
   // ---- Bloom n-gram decontamination ----
@@ -165,8 +170,8 @@ object QueriesExtra7 {
           "vec_id", "cell", k = 16, iters = 3, trainFraction = 0.5)
         .select(col("vec_id"), col("cell"))
       val key = QueriesExtra2.scaleKey(dir)
-      val cells = graft.dedup.SideChannel.through(assigned,
-        QueriesExtra2.sinkOnce(cellsBalPath(key)))
+      val cells = SideChannel.through(assigned,
+        SideChannel.once(cellsBalPath(key)))
       graft.sampling.ClusterBalance.capPerCell(cells, "vec_id", "cell",
           quota = 20, seed = 5L)
         .orderBy("vec_id")

@@ -89,11 +89,9 @@ object QueriesExtra8 {
     */
   val splitLeakageSafe: QueryDef = QueryDef("split_leakage_safe",
     (s, dir) => graft.sampling.Splits.leakageSafeSplit(
-      Queries.table(s, dir, "documents"), "text", "doc_id",
-      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-      graft.dedup.MinHashConfig(ngramSize = 3, minNgramSize = 3),
-      bandedSink = QueriesExtra2.sinkOnce(QueriesExtra2
-        .bandedPath("minhash_leaksplit", QueriesExtra2.scaleKey(dir))))
+      QueriesExtra2.docsBanded(s, dir, "minhash_leaksplit"), "text",
+      "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
+      QueriesExtra2.DocsMinhash)
       .orderBy("doc_id"),
     Some {
       val glob = QueriesExtra2
@@ -144,11 +142,8 @@ object QueriesExtra8 {
     */
   val dedupWeighted: QueryDef = QueryDef("dedup_weighted",
     (s, dir) => graft.dedup.MinHashDedup.deduplicateWeighted(
-      Queries.table(s, dir, "documents"), "text",
-      graft.dedup.MinHashConfig(ngramSize = 3, minNgramSize = 3),
-      orderCol = Some(d),
-      bandedSink = QueriesExtra2.sinkOnce(QueriesExtra2
-        .bandedPath("minhash_weighted", QueriesExtra2.scaleKey(dir))))
+      QueriesExtra2.docsBanded(s, dir, "minhash_weighted"), "text",
+      QueriesExtra2.DocsMinhash, orderCol = Some(d))
       .select(col(d), col("weight"))
       .orderBy(d),
     Some {

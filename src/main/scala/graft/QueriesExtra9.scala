@@ -35,9 +35,6 @@ object QueriesExtra9 {
 
   private def storePath(key: String) = s"/tmp/graft_dedup_store_incrnear_$key"
 
-  private val storeWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Retained corpus: every non-(≡0 mod 11) doc, with ≡3 mod 19 docs
     * carrying the two-parity seed text the increment collides with.
     */
@@ -85,21 +82,19 @@ object QueriesExtra9 {
   val incrNearDedup: QueryDef = QueryDef("incr_near_dedup",
     (s, dir) => {
       val key = QueriesExtra2.scaleKey(dir)
-      val store =
-        if (storeWritten.contains(key)) s.read.parquet(storePath(key))
-        else {
-          val st = MinHashDedup.exportBandedStore(refFrame(s, dir), "text",
-            storePath(key), IncrCfg, orderCol = Some(d))
-          storeWritten.add(key)
-          st
-        }
+      if (SideChannel.once(storePath(key)).isDefined) {
+        MinHashDedup.exportBandedStore(refFrame(s, dir), "text",
+          storePath(key), IncrCfg, orderCol = Some(d))
+        SideChannel.record(storePath(key))
+      }
+      val store = s.read.parquet(storePath(key))
       val docs = Queries.table(s, dir, "documents")
       val inc = docs.where(col(d) % 11 === 0)
         .select(col(d), incTextSpark.as("text"))
+      SideChannel.exportOnce(QueriesExtra2.bandedPath("incrnear", key))(
+        MinHashDedup.bandedFrame(inc, "text", IncrCfg, Some(d), Off))
       MinHashDedup.deduplicateAgainstStore(inc, store, "text", IncrCfg,
-        orderCol = Some(d),
-        bandedSink = QueriesExtra2.sinkOnce(
-          QueriesExtra2.bandedPath("incrnear", key)))
+        orderCol = Some(d))
         .select(col(d))
         .orderBy(d)
     },
@@ -202,12 +197,8 @@ object QueriesExtra9 {
       // takedown cost (journal read + delete + compact + store dedup),
       // not a |corpus| re-signaturing the production pipeline never pays.
       val jPath = QueriesExtra2.bandedPath("retjournal", key)
-      val journal = QueriesExtra2.sinkOnce(jPath) match {
-        case claim @ Some(_) => graft.dedup.SideChannel.through(
-          MinHashDedup.bandedJournal(retRefFrame(s, dir), "text", IncrCfg,
-            orderCol = Some(d)), claim)
-        case None => s.read.parquet(jPath)
-      }
+      val journal = SideChannel.readBack(jPath)(MinHashDedup.bandedJournal(
+        retRefFrame(s, dir), "text", IncrCfg, orderCol = Some(d)))
       val docs = Queries.table(s, dir, "documents")
       val delIds = docs.where(col(d).isin(3, 60) ||
         (col(d) % 23 === 5 && col(d) % 19 =!= 3)).select(col(d))
@@ -215,10 +206,10 @@ object QueriesExtra9 {
         MinHashDedup.deleteFromJournal(journal, delIds))
       val inc = docs.where(col(d) % 11 === 0)
         .select(col(d), retIncTextSpark.as("text"))
+      SideChannel.exportOnce(QueriesExtra2.bandedPath("retinc", key))(
+        MinHashDedup.bandedFrame(inc, "text", IncrCfg, Some(d), Off))
       MinHashDedup.deduplicateAgainstStore(inc, store, "text", IncrCfg,
-        orderCol = Some(d),
-        bandedSink = QueriesExtra2.sinkOnce(
-          QueriesExtra2.bandedPath("retinc", key)))
+        orderCol = Some(d))
         .select(col(d))
         .orderBy(d)
     },
@@ -278,12 +269,8 @@ object QueriesExtra9 {
       val key = QueriesExtra2.scaleKey(dir)
       // persisted-journal read-back on bench reps — see [[incrRetention]]
       val jPath = QueriesExtra2.sigPath("retsigjournal", key)
-      val journal = QueriesExtra2.sinkOnce(jPath) match {
-        case claim @ Some(_) => graft.dedup.SideChannel.through(
-          SimHash.sigJournal(retRefFrame(s, dir), "text",
-            SimHash.signature, Some(d)), claim)
-        case None => s.read.parquet(jPath)
-      }
+      val journal = SideChannel.readBack(jPath)(SimHash.sigJournal(
+        retRefFrame(s, dir), "text", SimHash.signature, Some(d)))
       val docs = Queries.table(s, dir, "documents")
       val delIds = docs.where(col(d).isin(3, 60) ||
         (col(d) % 23 === 5 && col(d) % 19 =!= 3)).select(col(d))
@@ -291,10 +278,10 @@ object QueriesExtra9 {
         SimHash.deleteFromSigJournal(journal, delIds))
       val inc = docs.where(col(d) % 11 === 0)
         .select(col(d), retIncTextSpark.as("text"))
+      SideChannel.exportOnce(QueriesExtra2.sigPath("retsiginc", key))(
+        SimHash.sigFrame(inc, "text", SimHash.signature, Some(d), Off))
       SimHash.deduplicateAgainstSigStore(inc, store, "text",
-        SimHash.signature, maxHamming = 3, orderCol = Some(d),
-        sigSink = QueriesExtra2.sinkOnce(
-          QueriesExtra2.sigPath("retsiginc", key)))
+        SimHash.signature, maxHamming = 3, orderCol = Some(d))
         .select(col(d))
         .orderBy(d)
     },
@@ -481,12 +468,17 @@ object QueriesExtra9 {
     * replays bit-exactly.
     */
   val dedupEditDistUnicode: QueryDef = QueryDef("dedup_editdist_unicode",
-    (s, dir) => QueriesExtra2.sigOracledDedup(s,
-      Queries.table(s, dir, "documents")
-        .select(col(d), uniTextSpark.as("text")), d,
-      QueriesExtra2.bandedPath("editdistuni", QueriesExtra2.scaleKey(dir)),
-      (withId, sink) => graft.dedup.EditDistanceDedup.verifiedEdges(
-        withId, "text", 5, 0.8, MinHashConfig(), sink)),
+    (s, dir) => {
+      import graft.dedup.EditDistanceDedup
+      val docs = Queries.table(s, dir, "documents")
+        .select(col(d), uniTextSpark.as("text"))
+      SideChannel.exportOnce(
+        QueriesExtra2.bandedPath("editdistuni", QueriesExtra2.scaleKey(dir)))(
+        EditDistanceDedup.bandedFrame(docs, "text", 5, MinHashConfig(),
+          Some(d)))
+      EditDistanceDedup.deduplicate(docs, "text", 5, 0.8, orderCol = Some(d))
+        .select(d).orderBy(d)
+    },
     Some {
       val glob = QueriesExtra2
         .bandedPath("editdistuni", QueriesExtra2.OracleScaleKey) +
@@ -557,7 +549,7 @@ object QueriesExtra9 {
           .write.mode("overwrite").parquet(ivfpqAdcPath(key))
         ivfpqWritten.add(key)
         Seq(ivfpqCellsPath(key), ivfpqProbedPath(key), ivfpqCodesPath(key),
-          ivfpqAdcPath(key)).foreach(graft.dedup.SideChannel.record)
+          ivfpqAdcPath(key)).foreach(SideChannel.record)
       }
       // prune against the just-written probe decision (shared with the
       // oracle), then ADC-scan only the probed cells' codes

@@ -163,12 +163,10 @@ object QueriesPipeline {
     * specs pin the signature math itself.
     */
   val dedupMinhash: QueryDef = QueryDef("dedup_minhash",
-    (s, dir) => QueriesExtra2.sigOracledDedup(s,
-      Queries.table(s, dir, "documents"), "doc_id",
-      QueriesExtra2.bandedPath("minhash", QueriesExtra2.scaleKey(dir)),
-      (withId, sink) => graft.dedup.MinHashDedup.candidateEdges(withId,
-        "text", graft.dedup.MinHashConfig(ngramSize = 3, minNgramSize = 3),
-        sink)),
+    (s, dir) => graft.dedup.MinHashDedup.deduplicate(
+      QueriesExtra2.docsBanded(s, dir, "minhash"), "text",
+      QueriesExtra2.DocsMinhash, orderCol = Some("doc_id"))
+      .select("doc_id").orderBy("doc_id"),
     Some(QueriesExtra2.minhashKeepFirstSql("minhash", 3,
       "documents", "doc_id")))
 
@@ -182,11 +180,8 @@ object QueriesPipeline {
     */
   val dedupClusterStats: QueryDef = QueryDef("dedup_cluster_stats",
     (s, dir) => graft.dedup.MinHashDedup.clusterSizeStats(
-        Queries.table(s, dir, "documents"), "text",
-        graft.dedup.MinHashConfig(ngramSize = 3, minNgramSize = 3),
-        orderCol = Some("doc_id"),
-        bandedSink = QueriesExtra2.sinkOnce(QueriesExtra2
-          .bandedPath("minhash_stats", QueriesExtra2.scaleKey(dir))))
+        QueriesExtra2.docsBanded(s, dir, "minhash_stats"), "text",
+        QueriesExtra2.DocsMinhash, orderCol = Some("doc_id"))
       .orderBy("cluster_size"),
     Some {
       val glob = QueriesExtra2

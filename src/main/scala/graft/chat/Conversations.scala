@@ -230,16 +230,32 @@ object ChatPipeline {
     * set of the headline pipeline, exposed so the sf0.1 golden spec can
     * pin it (the minhash twin of the DuckDB-oracled exact-dedup flagship).
     */
-  private[graft] def flagshipKept(spark: SparkSession, dir: String,
-      dedupBandedSink: Option[String] = None): DataFrame = {
-    import graft.pipeline.{MiniYaml, PipelineConfig, Preprocessor}
+  private[graft] def flagshipKept(spark: SparkSession,
+      dir: String): DataFrame = {
+    val instrCfg = columnConfig("instruction_config")
+    new graft.pipeline.Preprocessor(flagshipResponse(spark, dir).run(),
+      "instruction",
+      cleaners = Seq.empty, // main.py:54-56: cleaners never run on instructions
+      filters = instrCfg.filters, dedup = instrCfg.dedup,
+      dedupOrderCol = Some("__mid__"),
+      dedupAuditStats = instrCfg.dedupAudit,
+      dedupJournalPath = instrCfg.dedupJournalPath).run()
+  }
 
-    val cfg = MiniYaml.parse(FlagshipYaml)
-    val respCfg = PipelineConfig.columnConfig(
-      cfg("response_config").asInstanceOf[Map[String, Any]])
-    val instrCfg = PipelineConfig.columnConfig(
-      cfg("instruction_config").asInstanceOf[Map[String, Any]])
+  private def columnConfig(key: String) = {
+    import graft.pipeline.{MiniYaml, PipelineConfig}
+    PipelineConfig.columnConfig(
+      MiniYaml.parse(FlagshipYaml)(key).asInstanceOf[Map[String, Any]])
+  }
 
+  /** The first half of [[flagshipKept]]: the response-column pass
+    * (clean, filter, audited MinHash dedup) over the flat trained-message
+    * trunk — split out so the flagship's oracle query can band the same
+    * dedup input ([[graft.pipeline.Preprocessor.dedupInput]]).
+    */
+  private[graft] def flagshipResponse(spark: SparkSession,
+      dir: String): graft.pipeline.Preprocessor = {
+    val respCfg = columnConfig("response_config")
     val msgs = syntheticMessages(spark, dir)
     // R1+R2 on flat rows: trained messages only; response = stripped
     // content, instruction = stripped previous content ("" at pos 0).
@@ -265,28 +281,20 @@ object ChatPipeline {
         (col("custkey") * (1L << 20) + col("pos0")).as("__mid__"))
       .repartition(numPart, col("custkey"), col("pos0"))
 
-    val afterResponse = new Preprocessor(io, "response",
+    new graft.pipeline.Preprocessor(io, "response",
       respCfg.cleaners, respCfg.filters, respCfg.dedup,
       dedupOrderCol = Some("__mid__"),
-      dedupBandedSink = dedupBandedSink,
       dedupAuditStats = respCfg.dedupAudit,
-      dedupJournalPath = respCfg.dedupJournalPath).run()
-    new Preprocessor(afterResponse, "instruction",
-      cleaners = Seq.empty, // main.py:54-56: cleaners never run on instructions
-      filters = instrCfg.filters, dedup = instrCfg.dedup,
-      dedupOrderCol = Some("__mid__"),
-      dedupAuditStats = instrCfg.dedupAudit,
-      dedupJournalPath = instrCfg.dedupJournalPath).run()
+      dedupJournalPath = respCfg.dedupJournalPath)
   }
 
-  def flagship(spark: SparkSession, dir: String,
-      dedupBandedSink: Option[String] = None): DataFrame = {
+  def flagship(spark: SparkSession, dir: String): DataFrame = {
     val msgs = syntheticMessages(spark, dir)
 
     // R3 chatml: rebuild each kept row's prefix (messages before pos0,
     // do_train forced false) from the flat view — the join output is
     // O(kept × prefix), a few thousand structs, not 75k arrays
-    val kept = flagshipKept(spark, dir, dedupBandedSink)
+    val kept = flagshipKept(spark, dir)
     val prefixParts = kept.select(col("custkey").as("k"), col("pos0").as("p"))
       .join(msgs.select(col("custkey").as("k"), col("pos0").as("mp"),
         col("content").as("mc"), col("role").as("mr")), Seq("k"))

@@ -67,15 +67,19 @@ private[graft] object Clustering {
     case None => monotonically_increasing_id()
   }
 
-  /** Attach the keep-first id (plus `idOffset`), persisted because every
-    * family scans it at least twice (edge building + the output).
-    */
-  def assignId(df: DataFrame, orderCol: Option[String],
+  /** Attach the keep-first id (plus `idOffset`) as [[IdCol]]. */
+  def withIds(df: DataFrame, orderCol: Option[String],
       idOffset: Long = 0L): DataFrame = {
     val id = idExpr(orderCol)
     df.withColumn(IdCol, if (idOffset == 0L) id else id + lit(idOffset))
-      .persist()
   }
+
+  /** [[withIds]], persisted because every family scans it at least twice
+    * (edge building + the output).
+    */
+  def assignId(df: DataFrame, orderCol: Option[String],
+      idOffset: Long = 0L): DataFrame =
+    withIds(df, orderCol, idOffset).persist()
 
   /** When [[run]] releases the `assignId` corpus pin. */
   sealed trait Pin

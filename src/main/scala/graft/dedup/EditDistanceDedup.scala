@@ -57,16 +57,23 @@ object EditDistanceDedup {
         cacheSink = Some(sink)))(_.keep(_))
 
   /** Levenshtein-verified candidate pairs — the edge list feeding the
-    * clustering. `bandedSink` exports the exploded (id, band, bsig)
-    * frame so the oracle re-derives bucket-min candidates AND the
-    * Levenshtein verify itself in SQL (QueriesExtra7). `cacheSink`
-    * collects the frames the skew remedies pin, for entry-point release.
+    * clustering. `cacheSink` collects the frames the skew remedies pin,
+    * for entry-point release.
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
-      bandedSink: Option[String] = None,
       cacheSink: Option[Clustering.Sink] = None): DataFrame =
     MinHashDedup.verifiedCandidates(withId, column,
-      cfg.copy(ngramSize = n, minNgramSize = n), bandedSink, cacheSink)(
+      cfg.copy(ngramSize = n, minNgramSize = n), cacheSink)(
       levSimilarity(_, _) >= threshold)
+
+  /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates
+    * from, over the ids [[Clustering.run]] assigns for `orderCol`: the
+    * SQL oracle re-derives bucket-min candidates AND the Levenshtein
+    * verify from it (QueriesExtra7).
+    */
+  private[graft] def bandedFrame(df: DataFrame, column: String, n: Int,
+      cfg: MinHashConfig, orderCol: Option[String]): DataFrame =
+    MinHashDedup.gatedBanded(Clustering.withIds(df, orderCol), column,
+      cfg.copy(ngramSize = n, minNgramSize = n))
 }

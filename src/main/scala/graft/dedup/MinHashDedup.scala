@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object MinHashDedup {
 
-  import Clustering.{IdCol, Pin, idExpr}
+  import Clustering.{IdCol, Pin}
 
   def signatureColumn(cfg: MinHashConfig): Column => Column = {
     val (b, r) = OptimalParam(cfg.threshold, cfg.numPerm)
@@ -201,10 +201,9 @@ object MinHashDedup {
   def clusterSizeStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges, Pin.Released)(
-      candidates(column, cfg, bandedSink))(_.histogram(_))
+      candidates(column, cfg))(_.histogram(_))
 
   /** One clustering pass, two outputs: (kept rows, cluster-size
     * histogram). Calling [[deduplicate]] and [[clusterSizeStats]]
@@ -228,8 +227,7 @@ object MinHashDedup {
   def deduplicateWithStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): (DataFrame, DataFrame) =
+      orderCol: Option[String] = None): (DataFrame, DataFrame) =
     // Pin.Held, deliberately: this is a TWO-consumer API — stats
     // materialize eagerly inside the call (reading the corpus cache), the
     // kept frame lazily afterwards. Releasing between the two makes the
@@ -239,7 +237,7 @@ object MinHashDedup {
     // their one output materialization pays the same recompute a cache
     // write would.
     Clustering.run(df, orderCol, maxDriverEdges, Pin.Held)(
-      candidates(column, cfg, bandedSink))((c, withId) =>
+      candidates(column, cfg))((c, withId) =>
       (c.keep(withId), c.histogram(withId)))
 
   /** PUBLIC (id, root) cluster-membership frame — every row maps to its
@@ -255,10 +253,9 @@ object MinHashDedup {
   def clusterRoots(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg, bandedSink))(_.roots(_))
+      candidates(column, cfg))(_.roots(_))
 
   /** Duplication-aware SOFT dedup: keep each cluster's first row and
     * attach `weight` = cluster size instead of silently discarding the
@@ -280,10 +277,9 @@ object MinHashDedup {
   def deduplicateWeighted(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg, bandedSink))(_.weighted(_))
+      candidates(column, cfg))(_.weighted(_))
 
   /** Near-dedup `df` on `column`, keeping each cluster's first row
     * (min id == first in row order, matching the reference's contiguous-id
@@ -308,35 +304,26 @@ object MinHashDedup {
   def deduplicate(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      bandedSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg, bandedSink))(_.keep(_))
+      candidates(column, cfg))(_.keep(_))
 
   /** [[candidateEdges]] as a [[Clustering.run]] edge builder. */
-  private def candidates(column: String, cfg: MinHashConfig,
-      bandedSink: Option[String]): (DataFrame, Clustering.Sink) => DataFrame =
-    (withId, sink) => candidateEdges(withId, column, cfg, bandedSink, Some(sink))
+  private def candidates(column: String,
+      cfg: MinHashConfig): (DataFrame, Clustering.Sink) => DataFrame =
+    (withId, sink) => candidateEdges(withId, column, cfg, Some(sink))
 
   /** The candidate edge list feeding the clustering (identical-class star
     * edges + LSH band collisions — candidates, not verified pairs: the
     * reference treats any band collision as a duplicate,
-    * minhash_deduplication.py:230-247). Exposed so the correctness oracle
-    * can replay the clustering over a materialized edge list.
-    *
-    * `bandedSink`: when given, the exploded (id, band, bsig) SIGNATURE
-    * frame is written there (overwrite) and the LSH edges are computed
-    * from the read-back — so the correctness oracle's input is the
-    * signatures themselves, and DuckDB derives bucket-min candidate edges
-    * independently (the identical-text star edges are recomputed in SQL
-    * from the corpus; only the sha1/permutation math crosses the
-    * side-channel). See QueriesExtra2.minhashCtes.
+    * minhash_deduplication.py:230-247). The correctness oracle reads the
+    * signatures instead ([[bandedFrame]]) and derives these edges in SQL
+    * (QueriesExtra2.minhashCtes).
     */
   private[graft] def candidateEdges(withId: DataFrame, column: String,
-      cfg: MinHashConfig, bandedSink: Option[String] = None,
+      cfg: MinHashConfig,
       cacheSink: Option[mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val (identEdges, banded) = classEdgesAndBanded(withId, column, cfg,
-      bandedSink)
+    val (identEdges, banded) = classEdgesAndBanded(withId, column, cfg)
     bucketMinEdges(banded, cfg.skewSalts, cacheSink).union(identEdges)
   }
 
@@ -353,18 +340,27 @@ object MinHashDedup {
     * the pair iff `verified(textA, textB)`. ALL verified pairs go to
     * clustering (multi-edges are fine for both union-find and min-label
     * propagation); a per-node min-reduction would drop cross-links and
-    * over-keep vs transitive clustering.
-    *
-    * `bandedSink`: when given, the exploded (id, band, bsig) frame is
-    * written there (overwrite) and candidates come from the read-back —
-    * the oracle then derives bucket-min candidates AND the verification
-    * itself in SQL. `cacheSink` collects the frames the skew remedies
-    * pin, for entry-point release.
+    * over-keep vs transitive clustering. `cacheSink` collects the frames
+    * the skew remedies pin, for entry-point release.
     */
   private[dedup] def verifiedCandidates(withId: DataFrame, column: String,
-      sigCfg: MinHashConfig, bandedSink: Option[String],
-      cacheSink: Option[Clustering.Sink])(
-      verified: (Column, Column) => Column): DataFrame = {
+      sigCfg: MinHashConfig, cacheSink: Option[Clustering.Sink])(
+      verified: (Column, Column) => Column): DataFrame =
+    bucketMinEdges(gatedBanded(withId, column, sigCfg), sigCfg.skewSalts,
+        cacheSink)
+      .join(withId.select(col(IdCol).as("__x__"), col(column).as("__ta__")),
+        Seq("__x__"))
+      .join(withId.select(col(IdCol).as("__y__"), col(column).as("__tb__")),
+        Seq("__y__"))
+      .where(verified(col("__ta__"), col("__tb__")))
+      .select(col("__x__"), col("__y__"))
+
+  /** The exploded (id, band, bsig) frame [[verifiedCandidates]] draws its
+    * candidates from: every doc of at least `sigCfg.minNgramSize` tokens,
+    * banded — the frame the verified-family SQL oracles read.
+    */
+  private[dedup] def gatedBanded(withId: DataFrame, column: String,
+      sigCfg: MinHashConfig): DataFrame = {
     val text = coalesce(col(column), lit(""))
     // r20: early-exit fused gate (no token-array materialization) —
     // ≡ size(split(text, "[^A-Za-z_0-9]", -1)) >= n, FusedTextSpec
@@ -380,29 +376,19 @@ object MinHashDedup {
     val spread =
       if (srcFiles == 0 || srcFiles * 2 < par) base.repartition(par)
       else base
-    val banded = spread.select(col(IdCol).as("id"),
+    spread.select(col(IdCol).as("id"),
       posexplode(signatureColumn(sigCfg)(text)).as(Seq("band", "bsig")))
-    bucketMinEdges(SideChannel.through(banded, bandedSink), sigCfg.skewSalts,
-        cacheSink)
-      .join(withId.select(col(IdCol).as("__x__"), col(column).as("__ta__")),
-        Seq("__x__"))
-      .join(withId.select(col(IdCol).as("__y__"), col(column).as("__tb__")),
-        Seq("__y__"))
-      .where(verified(col("__ta__"), col("__tb__")))
-      .select(col("__x__"), col("__y__"))
   }
 
   /** The shared front half of every minhash-family pass: the identical/
     * short-class star edges plus the exploded (id, band, bsig) signature
-    * frame of the class REPRESENTATIVES (optionally routed through the
-    * `bandedSink` side-channel). Split out of [[candidateEdges]] so the
-    * incremental store path ([[deduplicateAgainstStore]]) can band-join
-    * the same frame against a persisted corpus store instead of feeding
-    * [[bucketMinEdges]].
+    * frame of the class REPRESENTATIVES. Split out of [[candidateEdges]]
+    * so the incremental store path ([[deduplicateAgainstStore]]) can
+    * band-join the same frame against a persisted corpus store instead of
+    * feeding [[bucketMinEdges]].
     */
   private[graft] def classEdgesAndBanded(withId: DataFrame, column: String,
-      cfg: MinHashConfig,
-      bandedSink: Option[String] = None): (DataFrame, DataFrame) = {
+      cfg: MinHashConfig): (DataFrame, DataFrame) = {
     val text = coalesce(col(column), lit(""))
 
     // 1) ONE streaming window does two jobs at once. Key = the text
@@ -441,8 +427,20 @@ object MinHashDedup {
     val banded = reps
       .select(col("id"), posexplode(sig(col("__t__")))
         .as(Seq("band", "bsig")))
-    (identEdges, SideChannel.through(banded, bandedSink))
+    (identEdges, banded)
   }
+
+  /** The class-representative (id, band, bsig) frame that every
+    * minhash-family entry point bands `df` into, over the ids
+    * [[Clustering.run]] assigns for `orderCol` (plus `idOffset`, the
+    * store path's increment offset) — the frame the minhash SQL oracles
+    * read. Ids must be data-derived for the frame to match a later run.
+    */
+  private[graft] def bandedFrame(df: DataFrame, column: String,
+      cfg: MinHashConfig, orderCol: Option[String],
+      idOffset: Long = 0L): DataFrame =
+    classEdgesAndBanded(Clustering.withIds(df, orderCol, idOffset), column,
+      cfg)._2
 
   /** Incremental dedup — the production shape for a continuously-growing
     * corpus: drop rows of `newDf` that are near-duplicates of `refDf`
@@ -455,7 +453,7 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L): DataFrame =
     Clustering.against(newDf, refDf, maxDriverEdges)(
-      candidates(column, cfg, None))
+      candidates(column, cfg))
 
   /** The increment side's id offset: see [[Clustering.NewIdOffset]]. */
   val NewIdOffset: Long = Clustering.NewIdOffset
@@ -486,21 +484,19 @@ object MinHashDedup {
     */
   def bandedStore(refDf: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
-      orderCol: Option[String] = None): DataFrame = {
+      orderCol: Option[String] = None): DataFrame =
     // the ident-edge branch is discarded, so the corpus is scanned ONCE —
     // no id-pin persist (ADVICE r10: a cache unpersisted before the
     // store materializes is pure bookkeeping overhead)
-    val withId = refDf.withColumn(IdCol, idExpr(orderCol))
-    val (_, banded) = classEdgesAndBanded(withId, column, cfg)
-    banded.groupBy("band", "bsig").agg(min(col("id")).as("id"))
-  }
+    bandedFrame(refDf, column, cfg, orderCol)
+      .groupBy("band", "bsig").agg(min(col("id")).as("id"))
 
   /** Write a [[bandedStore]] to parquet, REPARTITIONED on (band, bsig) so
     * the increment's band-join reads co-located buckets (publish through
     * [[graft.sources.Sources]]' bucketed publish when a metastore is
-    * available for a fully shuffle-free join). Registers the path as a
-    * side-channel export. Returns the read-back frame — callers should
-    * join against the bytes on disk, not the lineage.
+    * available for a fully shuffle-free join). Returns the read-back
+    * frame — callers should join against the bytes on disk, not the
+    * lineage.
     */
   def exportBandedStore(refDf: DataFrame, column: String, path: String,
       cfg: MinHashConfig = MinHashConfig(),
@@ -508,7 +504,6 @@ object MinHashDedup {
     val store = bandedStore(refDf, column, cfg, orderCol)
     store.repartition(parallelism(refDf), col("band"), col("bsig"))
       .write.mode("overwrite").parquet(path)
-    SideChannel.record(path)
     refDf.sparkSession.read.parquet(path)
   }
 
@@ -550,10 +545,9 @@ object MinHashDedup {
   def bandedJournal(refDf: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       orderCol: Option[String] = None): DataFrame = {
-    val withId = refDf.withColumn(IdCol, idExpr(orderCol))
     val text = coalesce(col(column), lit(""))
     val sig = signatureColumn(cfg)
-    withId
+    Clustering.withIds(refDf, orderCol)
       .select(col(IdCol).as("id"), posexplode(sig(text))
         .as(Seq("band", "bsig")))
       .select("band", "bsig", "id")
@@ -611,22 +605,17 @@ object MinHashDedup {
       column: String, cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      newIdOffset: Long = NewIdOffset,
-      bandedSink: Option[String] = None): DataFrame =
+      newIdOffset: Long = NewIdOffset): DataFrame =
     Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
       (withId, sink) =>
-        val (identEdges, banded0) = classEdgesAndBanded(withId, column, cfg,
-          bandedSink)
+        val (identEdges, banded0) = classEdgesAndBanded(withId, column, cfg)
         // one signature pass feeds both the within-increment bucket edges
-        // and the store join (a bandedSink read-back is already
-        // materialized; otherwise persist — |increment|×bands rows, the
-        // frame a nightly run would append to the store afterwards
-        // anyway). Every frame pinned here or by the skew machinery goes
-        // to the sink (ADVICE r13), released once the survivors are
-        // checkpointed.
-        val banded =
-          if (bandedSink.isDefined) banded0
-          else { val p = banded0.persist(); sink += p; p }
+        // and the store join: persist — |increment|×bands rows, the frame
+        // a nightly run would append to the store afterwards anyway.
+        // Every frame pinned here or by the skew machinery goes to the
+        // sink (ADVICE r13), released once the survivors are checkpointed.
+        val banded = banded0.persist()
+        sink += banded
         val crossEdges = banded
           .join(store.withColumnRenamed("id", "__sid__"), Seq("band", "bsig"))
           .select(col("id").as("__x__"), col("__sid__").as("__y__"))

@@ -97,23 +97,30 @@ object NgramJaccard {
         cacheSink = Some(sink)))(_.keep(_))
 
   /** Exact-Jaccard-verified candidate pairs — the edge list feeding the
-    * clustering. Exposed for the keep-first invariant specs.
-    *
-    * `bandedSink`: when given, the exploded (id, band, bsig) frame is
-    * written there (overwrite) and candidates come from the read-back —
-    * the correctness oracle then derives bucket-min candidates AND the
-    * exact-Jaccard verification itself in SQL from the signatures + corpus
-    * (QueriesExtra2.ngramKeepFirstSql); both engines' division is IEEE
-    * double, so the ≥ threshold comparison agrees bit-for-bit. The verify
+    * clustering. Exposed for the keep-first invariant specs. The verify
     * is the single-pass JVM kernel [[jaccardDocs]].
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
-      bandedSink: Option[String] = None,
       cacheSink: Option[Clustering.Sink] = None): DataFrame = {
     val jac = udf { (a: String, b: String) => jaccardDocs(a, b, n) }
     MinHashDedup.verifiedCandidates(withId, column,
-      cfg.copy(ngramSize = n, minNgramSize = n, threshold = threshold),
-      bandedSink, cacheSink)(jac(_, _) >= threshold)
+      sigCfg(n, threshold, cfg), cacheSink)(jac(_, _) >= threshold)
   }
+
+  /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates
+    * from, over the ids [[Clustering.run]] assigns for `orderCol`: the
+    * SQL oracle derives bucket-min candidates from it AND re-verifies the
+    * exact Jaccard from the corpus (QueriesExtra2.ngramKeepFirstSql; both
+    * engines' division is IEEE double, so `>= threshold` agrees
+    * bit-for-bit).
+    */
+  private[graft] def bandedFrame(df: DataFrame, column: String, n: Int,
+      threshold: Double, cfg: MinHashConfig,
+      orderCol: Option[String]): DataFrame =
+    MinHashDedup.gatedBanded(Clustering.withIds(df, orderCol), column,
+      sigCfg(n, threshold, cfg))
+
+  private def sigCfg(n: Int, threshold: Double, cfg: MinHashConfig) =
+    cfg.copy(ngramSize = n, minNgramSize = n, threshold = threshold)
 }

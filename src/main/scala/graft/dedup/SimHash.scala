@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object SimHash {
 
-  import Clustering.{IdCol, Sink, idExpr}
+  import Clustering.{IdCol, Sink}
 
   /** FNV-1a 64-bit — public-domain hash, stable across JVMs. */
   def fnv1a64(s: String): Long = {
@@ -78,25 +78,28 @@ object SimHash {
     * plus band-join pairs checked at ≤ `maxHamming` bits. Exposed for the
     * keep-first invariant specs — the component-min of exactly these edges
     * IS the kept set.
-    *
-    * `sigSink`: when given, the (id, sig) frame is written there
-    * (overwrite) and the rest of the dataflow runs off the read-back — the
-    * correctness oracle's input is then the 64-bit signatures alone, and
-    * DuckDB re-derives banding (shift+mask chunks), the hamming-≤k verify
-    * (`bit_count(xor(...))`) and the clustering all by itself
-    * (QueriesExtra2.simhashKeepFirstSql).
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
-      maxHamming: Int, sigSink: Option[String] = None,
-      cacheSink: Option[Sink] = None): DataFrame =
-    verifiedEdgesFromSigs(
-      SideChannel.through(sigsOf(withId, column, signature), sigSink),
-      maxHamming, cacheSink = cacheSink)
+      maxHamming: Int, cacheSink: Option[Sink] = None): DataFrame =
+    verifiedEdgesFromSigs(sigsOf(withId, column, signature), maxHamming,
+      cacheSink = cacheSink)
 
   /** The (id, sig) frame of an id-carrying frame. */
   private def sigsOf(withId: DataFrame, column: String,
       sigOf: Column => Column): DataFrame =
     withId.select(col(IdCol).as("id"), sigOf(col(column)).as("sig"))
+
+  /** The (id, sig) frame every hamming-family entry point derives its
+    * edges from, null signatures included, over the ids [[Clustering.run]]
+    * assigns for `orderCol` (plus `idOffset`, the store paths' increment
+    * offset). The SQL oracles read it and re-derive banding (shift+mask
+    * chunks), the hamming-≤k verify (`bit_count(xor(...))`) and the
+    * clustering by themselves (QueriesExtra2.simhashKeepFirstSql).
+    */
+  private[graft] def sigFrame(df: DataFrame, column: String,
+      sigOf: Column => Column, orderCol: Option[String],
+      idOffset: Long = 0L): DataFrame =
+    sigsOf(Clustering.withIds(df, orderCol, idOffset), column, sigOf)
 
   /** Hot-bucket depth cap for the pigeonhole self-join (VERDICT r12
     * #2): a (band, chunk) bucket deeper than this is SPLIT by
@@ -305,20 +308,17 @@ object SimHash {
     * dedups ([[graft.multimodal.ImageHash.deduplicateByDHash]] and
     * siblings): signature column, shared pigeonhole edges, shared
     * [[Clustering]] crossover; null signatures (undecodable payloads)
-    * always survive. `sigSink` exports the (id, sig) frame for the SQL
-    * oracle. The bounded guard's per-level frontier caches are released
-    * once the clustering materialized (VERDICT r14 #5).
+    * always survive. The bounded guard's per-level frontier caches are
+    * released once the clustering materialized (VERDICT r14 #5).
     */
   def deduplicateBySig(df: DataFrame, column: String,
       sigOf: Column => Column,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      sigSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdgesFromSigs(
-        SideChannel.through(sigsOf(withId, column, sigOf), sigSink),
-        maxHamming, cacheSink = Some(sink)))(_.keep(_))
+      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
+        cacheSink = Some(sink)))(_.keep(_))
 
   // ------------------------------------------------------------------
   // Persisted SIGNATURE store — the hamming family's twin of
@@ -371,8 +371,7 @@ object SimHash {
   def sigJournal(refDf: DataFrame, column: String,
       sigOf: Column => Column = signature,
       orderCol: Option[String] = None): DataFrame =
-    refDf.select(idExpr(orderCol).as("id"), sigOf(col(column)).as("sig"))
-      .where(col("sig").isNotNull)
+    sigFrame(refDf, column, sigOf, orderCol).where(col("sig").isNotNull)
 
   /** Takedown: drop every journal row of the given ids (one-column
     * frame, any name).
@@ -449,8 +448,7 @@ object SimHash {
     * `newIdOffset`; `orderCol` unique non-null Longs. Null-signature
     * rows always survive. EAGER: survivors localCheckpointed, internal
     * caches released (the per-batch nightly caller must not accumulate
-    * cached frames). `sigSink` exports the increment's (id, sig) frame
-    * for the SQL oracle.
+    * cached frames).
     */
   def deduplicateAgainstSigStore(newDf: DataFrame, store: DataFrame,
       column: String,
@@ -458,10 +456,9 @@ object SimHash {
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      newIdOffset: Long = MinHashDedup.NewIdOffset,
-      sigSink: Option[String] = None): DataFrame =
+      newIdOffset: Long = MinHashDedup.NewIdOffset): DataFrame =
     dedupAgainstStoreImpl(newDf, column, sigOf, maxHamming,
-      maxDriverEdges, orderCol, newIdOffset, sigSink)(
+      maxDriverEdges, orderCol, newIdOffset)(
       sigs => storeCrossEdges(sigs, store, maxHamming))
 
   /** [[deduplicateAgainstSigStore]] against a PUBLISHED
@@ -476,23 +473,20 @@ object SimHash {
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None,
-      newIdOffset: Long = MinHashDedup.NewIdOffset,
-      sigSink: Option[String] = None): DataFrame =
+      newIdOffset: Long = MinHashDedup.NewIdOffset): DataFrame =
     dedupAgainstStoreImpl(newDf, column, sigOf, maxHamming,
-      maxDriverEdges, orderCol, newIdOffset, sigSink)(
+      maxDriverEdges, orderCol, newIdOffset)(
       sigs => crossEdgesPreBanded(sigs,
         bandedStore.withColumnRenamed("id", "__sid__")
           .withColumnRenamed("sig", "ssig"), maxHamming))
 
   private def dedupAgainstStoreImpl(newDf: DataFrame, column: String,
       sigOf: Column => Column, maxHamming: Int, maxDriverEdges: Long,
-      orderCol: Option[String], newIdOffset: Long,
-      sigSink: Option[String])(
+      orderCol: Option[String], newIdOffset: Long)(
       crossOf: DataFrame => DataFrame): DataFrame =
     Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
       (withId, sink) =>
-        val sigs =
-          SideChannel.through(sigsOf(withId, column, sigOf), sigSink)
+        val sigs = sigsOf(withId, column, sigOf)
         verifiedEdgesFromSigs(sigs, maxHamming, cacheSink = Some(sink))
           .union(crossOf(sigs))
     }

@@ -132,13 +132,11 @@ object AudioHash {
     * each cluster's first row — [[SimHash.deduplicate]] with the audio
     * fingerprint as the signature (shared banding/verify/clustering;
     * undecodable payloads keep a null signature and always survive).
-    * `sigSink` exports the (id, sig) frame for the SQL oracle.
     */
   def deduplicateByEHash(df: DataFrame, binCol: String,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      sigSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     SimHash.deduplicateBySig(df, binCol, ehashUdf, maxHamming,
-      maxDriverEdges, orderCol, sigSink)
+      maxDriverEdges, orderCol)
 }

@@ -171,14 +171,12 @@ object ImageHash {
     * each cluster's first row. Exactly [[SimHash.deduplicate]] with the
     * image hash as the signature — shared banding, verify, and
     * clustering crossover; rows whose payload doesn't decode keep a null
-    * signature and always survive. `sigSink` exports the (id, sig)
-    * frame for the SQL oracle.
+    * signature and always survive.
     */
   def deduplicateByDHash(df: DataFrame, binCol: String,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      sigSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     SimHash.deduplicateBySig(df, binCol, dhashUdf, maxHamming,
-      maxDriverEdges, orderCol, sigSink)
+      maxDriverEdges, orderCol)
 }

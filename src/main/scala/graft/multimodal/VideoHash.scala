@@ -191,14 +191,12 @@ object VideoHash {
 
   /** Near-dedup rows whose streams hash within `maxHamming` bits —
     * [[SimHash.deduplicate]] with the frame-size fingerprint as the
-    * signature; undecodable payloads survive. `sigSink` exports the
-    * (id, sig) frame for the SQL oracle.
+    * signature; undecodable payloads survive.
     */
   def deduplicateByFHash(df: DataFrame, binCol: String,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
-      orderCol: Option[String] = None,
-      sigSink: Option[String] = None): DataFrame =
+      orderCol: Option[String] = None): DataFrame =
     SimHash.deduplicateBySig(df, binCol, fhashUdf, maxHamming,
-      maxDriverEdges, orderCol, sigSink)
+      maxDriverEdges, orderCol)
 }

@@ -16,13 +16,12 @@ import graft.text.TextFilter
   */
 final class Preprocessor(
     df: DataFrame,
-    columnName: String,
+    private[graft] val columnName: String,
     cleaners: Seq[(String, Column => Column)],
     filters: Seq[TextFilter],
-    dedup: Option[graft.dedup.MinHashConfig] = None,
+    private[graft] val dedup: Option[graft.dedup.MinHashConfig] = None,
     verbose: Boolean = false,
-    dedupOrderCol: Option[String] = None,
-    dedupBandedSink: Option[String] = None,
+    private[graft] val dedupOrderCol: Option[String] = None,
     dedupAuditStats: Boolean = false,
     dedupJournalPath: Option[String] = None) {
 
@@ -39,9 +38,9 @@ final class Preprocessor(
         "deduplication.journal_path requires a data-derived dedup " +
           "order column (journal ids must be recompute-stable)")
     }
-    val cleaned = Preprocessor.clean(df, columnName, cleaners)
     if (verbose) {
-      Preprocessor.filterStats(cleaned, columnName, filters).foreach {
+      Preprocessor.filterStats(Preprocessor.clean(df, columnName, cleaners),
+          columnName, filters).foreach {
         case (name, total, kept) =>
           val reduced =
             if (total == 0) 0.0 else (total - kept).toDouble / total * 100
@@ -50,7 +49,7 @@ final class Preprocessor(
             f"(reduced $reduced%.2f%%)")
       }
     }
-    val filtered = Preprocessor.applyFilters(cleaned, columnName, filters)
+    val filtered = dedupInput
     val deduped = dedup match {
       case Some(cfg) if dedupAuditStats =>
         // audited dedup (VERDICT r8 #5): kept rows AND the cluster-size
@@ -58,8 +57,7 @@ final class Preprocessor(
         // (one row per distinct cluster size), so logging it eagerly
         // costs one small agg over the already-checkpointed roots
         val (kept, stats) = graft.dedup.MinHashDedup.deduplicateWithStats(
-          filtered, columnName, cfg, orderCol = dedupOrderCol,
-          bandedSink = dedupBandedSink)
+          filtered, columnName, cfg, orderCol = dedupOrderCol)
         stats.orderBy(col("cluster_size")).collect().foreach { r =>
           println(s"[graft] dedup($columnName) cluster_size=${r.getLong(0)} " +
             s"n_clusters=${r.getLong(1)}")
@@ -67,7 +65,7 @@ final class Preprocessor(
         kept
       case Some(cfg) =>
         graft.dedup.MinHashDedup.deduplicate(filtered, columnName, cfg,
-          orderCol = dedupOrderCol, bandedSink = dedupBandedSink)
+          orderCol = dedupOrderCol)
       case None => filtered
     }
     dedupJournalPath match {
@@ -77,13 +75,9 @@ final class Preprocessor(
         // the |kept|×bands artifact `Retention.run` later deletes from
         // and compacts. Requires a DATA-DERIVED order column: journal
         // ids must re-derive to the keep-first ids on any later read
-        // (monotonically_increasing_id is not recompute-stable).
-        val cfg = dedup.getOrElse(sys.error(
-          "deduplication.journal_path requires do_deduplication: true — " +
-            "the journal is the dedup pass's retention artifact"))
-        require(dedupOrderCol.isDefined,
-          "deduplication.journal_path requires a data-derived dedup " +
-            "order column (journal ids must be recompute-stable)")
+        // (monotonically_increasing_id is not recompute-stable). Both
+        // preconditions were validated at the top of run().
+        val cfg = dedup.get
         // checkpoint the kept rows once: the journal write and the
         // caller's downstream both read materialized blocks instead of
         // re-running the clean/filter/dedup trunk twice (the S4
@@ -96,6 +90,11 @@ final class Preprocessor(
       case None => deduped
     }
   }
+
+  /** `df` cleaned and filtered: the frame the dedup pass clusters. */
+  private[graft] def dedupInput: DataFrame =
+    Preprocessor.applyFilters(Preprocessor.clean(df, columnName, cleaners),
+      columnName, filters)
 }
 
 object Preprocessor {

@@ -64,11 +64,10 @@ object Splits {
   def leakageSafeSplit(df: DataFrame, textCol: String, idCol: String,
       fractions: Seq[(String, Double)],
       cfg: graft.dedup.MinHashConfig = graft.dedup.MinHashConfig(),
-      maxDriverEdges: Long = 10_000_000L,
-      bandedSink: Option[String] = None): DataFrame =
+      maxDriverEdges: Long = 10_000_000L): DataFrame =
     leakageSafeSplitFromRoots(
       graft.dedup.MinHashDedup.clusterRoots(df, textCol, cfg,
-        maxDriverEdges, Some(idCol), bandedSink), idCol, fractions)
+        maxDriverEdges, Some(idCol)), idCol, fractions)
 
   /** The assignment alone, over an EXISTING (id, root) frame — e.g. the
     * [[graft.dedup.MinHashDedup.clusterRoots]] of the dedup pass the

@@ -78,7 +78,7 @@ class ExtrasSpec extends AnyFunSuite {
   }
 
   test("side-channel claims only after a successful write (ADVICE r7)") {
-    import graft.dedup.SideChannel
+    import graft.SideChannel
     val good = s"/tmp/graft_sidechannel_spec_${System.nanoTime()}"
     val df = spark.range(3).toDF("id")
     // unclaimed until written: once() keeps offering the path

@@ -4,6 +4,11 @@ scale factor, execute each oracle SQL in DuckDB over the same parquet tables,
 and compare (columns sorted by name, rows sorted, exact values).
 
 Usage: python3 tools/verify_local.py [sfdir] [outdir] [--skip-spark]
+
+sbt runs in the checkout that holds this script. graft.Verify writes
+status.json (per query: "ok", or the error it threw) and exits non-zero if
+any query threw; every query that wrote output is still compared, then the
+failed queries are listed and the script exits non-zero.
 """
 import json
 import math
@@ -15,20 +20,25 @@ import duckdb
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
+REPO = Path(__file__).resolve().parents[1]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
 def run_spark():
+    """Run graft.Verify; True iff it exited 0. A non-zero exit still leaves
+    the outputs of the queries that ran, so the caller compares those."""
     cmd = ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
-    tail = "\n".join((r.stdout + r.stderr).splitlines()[-25:])
-    if r.returncode != 0:
-        print(tail)
-        sys.exit(1)
+    (OUT / "status.json").unlink(missing_ok=True)
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
     for line in (r.stdout + r.stderr).splitlines():
         if "[verify]" in line:
             print(line)
+    if not (OUT / "status.json").exists():
+        # Verify never finished (e.g. a compile error): nothing to compare
+        print("\n".join((r.stdout + r.stderr).splitlines()[-25:]))
+        sys.exit(1)
+    return r.returncode == 0
 
 
 def norm_cell(v):
@@ -50,8 +60,7 @@ def canon(rows, cols):
 
 
 def main():
-    if "--skip-spark" not in sys.argv:
-        run_spark()
+    spark_ok = "--skip-spark" in sys.argv or run_spark()
     con = duckdb.connect()
     import os as _os
     for t in TABLES:
@@ -182,7 +191,16 @@ def main():
         {"sf": scale, "pass": n_pass, "fail": n_fail, "results": results},
         indent=1, sort_keys=True))
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    status_file = OUT / "status.json"
+    status = (json.loads(status_file.read_text())
+              if status_file.exists() else {})
+    threw = sorted(n for n, st in status.items() if st != "ok")
+    if threw:
+        print(f"{len(threw)} queries threw in graft.Verify: "
+              + ", ".join(threw))
+    elif not spark_ok:
+        print("graft.Verify exited non-zero")
+    sys.exit(1 if n_fail or threw or not spark_ok else 0)
 
 
 if __name__ == "__main__":
