@@ -94,11 +94,12 @@ object QueriesFlagshipOracle {
       .withColumn("__mid__", col("custkey") * (1L << 20) + col("pos0"))
     val cfg = MinHashConfig(ngramSize = 5, numPerm = 256, threshold = 0.7,
       minNgramSize = 5)
-    // the id pin caches the rendered trunk: the edge build computes and
-    // caches it, and the clustering probe + the final scan reuse the
-    // cache (Pin.Held — same leak-until-action pattern as the other
-    // dedup queries; a localCheckpoint here cost ~1s of copy at sf0.1).
-    // The banded export (first run per JVM) computes the trunk apart.
+    // the id pin holds the rendered trunk: the edge build computes and
+    // stores it, and the clustering probe + the final scan read it back
+    // (Pin.Held — a lazy local checkpoint that the returned frame owns,
+    // freed once that frame is dropped; an earlier localCheckpoint of
+    // the output measured ~1s of copy at sf0.1). The banded export
+    // (first run per JVM) computes the trunk apart.
     val path =
       QueriesExtra2.bandedPath("flagship", QueriesExtra2.scaleKey(dir))
     SideChannel.exportOnce(path)(

@@ -8,8 +8,9 @@ import graft.text.{Cleaners, Filters}
 /** Per-operator throughput (rows/s): each cleaner/filter expression over
   * the documents corpus replicated `factor`× (default 100 → 500k rows at
   * sf0.1), materialized through the noop sink (full compute, no I/O).
-  * Compare with `tools/ref_throughput.py` (the reference's single-threaded
-  * pandas loop over the same texts).
+  * Compare with the reference's single-threaded pandas loop over the
+  * same texts, whose per-operator rows/s PERF.md records ("Throughput vs
+  * the reference").
   */
 object Throughput {
   def main(args: Array[String]): Unit = {
@@ -24,7 +25,8 @@ object Throughput {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // derived inputs, identical constructions to tools/ref_throughput.py:
+    // derived inputs, the constructions the reference side of PERF.md's
+    // throughput table was measured over:
     //  - split: first half + splitter token + second half (f6/f8 operate
     //    on splitter-joined documents — filters.py:131-140,159-175)
     //  - conv: a 3-message conversation per document, 2 trained (the R5

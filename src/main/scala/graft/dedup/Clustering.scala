@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * is NOT bounded and the corpus-scale aggregation is the honest cost.
   *
   * Every output takes the `withId` frame the edges were built over (id
-  * column [[Clustering.IdCol]]).
+  * column [[Clustering.IdCol]]). A lazy output that reads held ids keeps
+  * their pin alive for exactly as long as the output itself is
+  * referenced — see [[Clustering.run]].
   */
 private[graft] sealed trait Clustering {
 
@@ -81,49 +83,24 @@ private[graft] object Clustering {
       idOffset: Long = 0L): DataFrame =
     withIds(df, orderCol, idOffset).persist()
 
-  /** When [[run]] releases the `assignId` corpus pin. */
+  /** What [[run]]'s output reads its ids from once `run` returns. */
   sealed trait Pin
   object Pin {
-    /** Lazy output: released iff the ids are recompute-stable (a named
-      * `orderCol`) — see [[releasePinIf]].
+    /** A lazy single-consumer output: synthetic ids (no `orderCol`) are
+      * [[Held]]; a named, recompute-stable order is cached for the
+      * clustering only and the output re-derives it from source (r19
+      * measured that faster than holding a cache: the keep filter
+      * pushes below the expensive projections).
       */
     case object IfStable extends Pin
-    /** Kept for the output's lifetime: the ids are synthetic even under
-      * a name (the union-tagged incremental order), or the output has a
-      * second, later consumer that must read the cache.
+    /** The output reads the very ids the clustering saw, from a lazy
+      * local checkpoint it owns: the ids are synthetic even under a name
+      * (the union-tagged incremental order), or the output has a second,
+      * later consumer.
       */
     case object Held extends Pin
-    /** The output materialized inside [[run]]: always released. */
+    /** The output materialized inside [[run]]: cached for the call. */
     case object Released extends Pin
-  }
-
-  /** Release the `assignId` corpus pin AFTER clustering materialized
-    * (every [[Clustering]] is built by collecting edges or converging and
-    * checkpointing roots — nothing re-reads the cache except the LAZY
-    * output frame): with a DATA-DERIVED `orderCol` the ids recompute
-    * deterministically, so that output safely re-reads the source
-    * instead of each call pinning one corpus-sized cache for the JVM
-    * lifetime — the r14 soak showed a long-lived driver accumulating
-    * exactly one `LocalTableScan/FileScan + id` cache per dedup call
-    * (VERDICT r14 #5). `orderCol = None` keeps the pin:
-    * monotonically_increasing_id is NOT recompute-stable, and re-rolling
-    * ids under an already-broadcast root map would keep the wrong rows.
-    *
-    * r19 NOTE (measured, kept as-is): a deferred one-slot release (park
-    * the pin, drain at the next dedup call) was tried so the caller's
-    * terminal action could read the cache instead of re-deriving the
-    * upstream plan. Paired best-of-3 benches showed NO win — the lazy
-    * output's re-derivation is cheap because the keep-filter (a
-    * deterministic UDF on the id column) pushes below the expensive
-    * projections, e.g. the flagship re-runs its trunk only up to the io
-    * select for the 547 kept rows — and flagship_e2e_minhash regressed
-    * ~0.4 s under the extra retained blocks. Immediate release stands.
-    */
-  def releasePinIf(withId: DataFrame, orderCol: Option[String],
-      pin: Pin): Unit = pin match {
-    case Pin.Released => withId.unpersist()
-    case Pin.IfStable => if (orderCol.isDefined) withId.unpersist()
-    case Pin.Held => ()
   }
 
   /** Frames an edge builder pinned (auto-probe banded frame, salted
@@ -149,17 +126,32 @@ private[graft] object Clustering {
   /** The one entry-point shape every dedup family shares: attach ids,
     * build the family's edges over them (`edges` gets the id frame and a
     * [[Sink]]), cluster the edges ONCE, derive the output, then release
-    * what was pinned — the sink's frames always, the corpus pin by `pin`.
+    * what was pinned — the sink's frames always.
+    *
+    * The corpus pin: every family scans the id frame at least twice
+    * (edge building + the output). A held pin ([[Pin]]) is a LAZY local
+    * checkpoint — the first job that reads it stores its blocks, and
+    * they belong to the frames built over it: ContextCleaner frees them
+    * once the last output is dropped, a lost block fails the job instead
+    * of re-rolling monotonically_increasing_id under an already-built
+    * root map, and no other call can alias or drop it (Spark's cache is
+    * keyed by plan and shared across the session, so a `persist()` pin
+    * is shared by two calls over one frame and dropped by either one's
+    * release). Every other pin is a `persist()` released before `run`
+    * returns.
     */
   def run[A](df: DataFrame, orderCol: Option[String], maxDriverEdges: Long,
       pin: Pin = Pin.IfStable, idOffset: Long = 0L)(
       edges: (DataFrame, Sink) => DataFrame)(
       output: (Clustering, DataFrame) => A): A = {
-    val withId = assignId(df, orderCol, idOffset)
+    val held = pin == Pin.Held || pin == Pin.IfStable && orderCol.isEmpty
+    val withId =
+      if (held) withIds(df, orderCol, idOffset).localCheckpoint(eager = false)
+      else assignId(df, orderCol, idOffset)
     val out = withCacheRelease { sink =>
       output(of(edges(withId, sink), maxDriverEdges), withId)
     }
-    releasePinIf(withId, orderCol, pin)
+    if (!held) withId.unpersist()
     out
   }
 

@@ -138,7 +138,8 @@ object MinHash {
     sigCalls.incrementAndGet()
     val hv = new Array[Long](numPerm)
     java.util.Arrays.fill(hv, MaxHash)
-    tokens(if (content == null) "" else content, ngramSize, minNgramSize)
+    // null = no shingles: the all-MAX_HASH signature of a short doc
+    if (content != null) tokens(content, ngramSize, minNgramSize)
       .foreach { t =>
         val v = permValues(t)
         var p = 0

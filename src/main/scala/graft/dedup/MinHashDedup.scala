@@ -221,21 +221,20 @@ object MinHashDedup {
     *     stats = the same histogram as [[clusterSizeStats]].
     * Kept SET equality with [[deduplicate]] + [[clusterSizeStats]] is
     * proven by DedupInvariantSpec (driver path) and ScaleSoakSpec
-    * (distributed path). The corpus pin stays live for the lazy kept
-    * frame.
+    * (distributed path). The kept frame reads the held corpus pin, which
+    * lives exactly as long as that frame ([[Clustering.run]]).
     */
   def deduplicateWithStats(df: DataFrame, column: String,
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): (DataFrame, DataFrame) =
     // Pin.Held, deliberately: this is a TWO-consumer API — stats
-    // materialize eagerly inside the call (reading the corpus cache), the
-    // kept frame lazily afterwards. Releasing between the two makes the
+    // materialize eagerly inside the call (storing the pin's blocks), the
+    // kept frame lazily afterwards. Re-deriving between the two makes the
     // second consumer re-run the whole upstream (the flagship's cleaner
     // trunk: measured +1.4 s on flagship_chat_pipeline at sf0.1, r15).
-    // Single-consumer entry points ([[deduplicate]] et al.) release —
-    // their one output materialization pays the same recompute a cache
-    // write would.
+    // The pin is a lazy local checkpoint owned by the kept frame: freed
+    // once the caller drops it, never shared with another call's pin.
     Clustering.run(df, orderCol, maxDriverEdges, Pin.Held)(
       candidates(column, cfg))((c, withId) =>
       (c.keep(withId), c.histogram(withId)))
@@ -295,7 +294,8 @@ object MinHashDedup {
     * monotonically_increasing_id): with a named order the corpus cache
     * is released as soon as clustering materializes
     * ([[Clustering.Pin.IfStable]]), and the lazy output re-derives ids
-    * from source.
+    * from source. Without one, the output reads the synthetic ids from
+    * a held pin that lives exactly as long as the output frame.
     *
     * `maxDriverEdges`: above this, clustering switches from the driver
     * UnionFind (reference-faithful) to distributed min-label propagation —
@@ -394,38 +394,40 @@ object MinHashDedup {
     // 1) ONE streaming window does two jobs at once. Key = the text
     //    itself, except short docs (< minNgramSize tokens — empty shingle
     //    set, all-MAX_HASH signature, minhash_deduplication.py:50-51,109)
-    //    which all share a sentinel key. Identical texts share every LSH
-    //    band and short docs share the one degenerate bucket, so in both
-    //    cases the reference clusters the whole class — the window's
-    //    star edges to the class min reproduce that without materializing
-    //    the r2 hot-key array, and leave ONE representative per class for
-    //    the (now much smaller, evenly re-partitioned) banding stage.
-    //    The sentinel "\u0000" is itself a short text, so a real doc
-    //    equal to it lands in the same class it belongs to anyway.
+    //    which all share the NULL key (text is null-coalesced, so no real
+    //    doc has it). Identical texts share every LSH band and short docs
+    //    share the one degenerate bucket, so in both cases the reference
+    //    clusters the whole class — the window's star edges to the class
+    //    min reproduce that without materializing the r2 hot-key array,
+    //    and leave ONE representative per class for the (now much
+    //    smaller, evenly re-partitioned) banding stage.
     // r20: early-exit fused gate ≡ size(split(text, "[^A-Za-z_0-9]",
     // -1)) < minNgramSize without materializing the token array per row
     // (FusedTextSpec differential); text is already null-coalesced
     val isShort =
       !graft.text.FusedText.nonAlphaPartsAtLeast(text, cfg.minNgramSize)
-    val classKey = when(isShort, lit("\u0000")).otherwise(text)
+    val classKey = when(!isShort, text)
     // explicit key repartition: pins the signature stage's parallelism
     // (AQE would coalesce this small shuffle to 1-2 partitions and run
-    // the UDF serially) and doubles as the window's clustering
+    // the UDF serially) and doubles as the window's clustering. Both
+    // branches read the same two columns, so the second reuses the
+    // first's exchange — the corpus shuffles once.
     val withClassMin = withId
-      .select(col(IdCol).as("id"), text.as("__t__"), classKey.as("__k__"))
+      .select(col(IdCol).as("id"), classKey.as("__k__"))
       .repartition(parallelism(withId), col("__k__"))
       .withColumn("__kmin__",
         min(col("id")).over(Window.partitionBy(col("__k__"))))
     val identEdges = withClassMin.where(col("id") =!= col("__kmin__"))
       .select(col("id").as("__x__"), col("__kmin__").as("__y__"))
     val reps = withClassMin.where(col("id") === col("__kmin__"))
-      .select(col("id"), col("__t__"))
+      .select(col("id"), col("__k__"))
 
-    // 2) LSH banding over representatives (the lone short-class rep
-    //    hashes to an all-MAX_HASH singleton bucket — no edges)
+    // 2) LSH banding over representatives, signing the class key: the
+    //    text itself, or null for the short class, whose lone rep hashes
+    //    to an all-MAX_HASH singleton bucket — no edges
     val sig = signatureColumn(cfg)
     val banded = reps
-      .select(col("id"), posexplode(sig(col("__t__")))
+      .select(col("id"), posexplode(sig(col("__k__")))
         .as(Seq("band", "bsig")))
     (identEdges, banded)
   }

@@ -45,19 +45,14 @@ object Runner {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    run(spark, args(0), args(1))
-    // count the PUBLISHED parquet — counting the returned frame would
-    // replay the whole pipeline a second time (r17 review catch)
-    val cfg = MiniYaml.parse(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(args(0))))
-    // Sources.load, not read.parquet: `output_format: arrow` publishes
-    // the HF layout, which load() sniffs and dispatches
-    val n = Sources.load(spark,
-      s"${args(1)}/${cfg("output_dataset_path")}").count()
+    val n = run(spark, args(0), args(1)).count()
     println(s"[runner] published $n chatml rows")
     spark.stop()
   }
 
+  /** Run the config at `configPath`; returns the published output, read
+    * back — see [[runParsed]].
+    */
   def run(spark: SparkSession, configPath: String, outBase: String,
       dedupOrderCol: Option[String] = None): DataFrame = {
     val cfg = MiniYaml.parse(java.nio.file.Files.readString(
@@ -65,6 +60,10 @@ object Runner {
     runParsed(spark, cfg, outBase, dedupOrderCol)
   }
 
+  /** Run a parsed config and publish its output; returns the PUBLISHED
+    * rows read back, not the lazy pipeline plan — using the result never
+    * replays the pipeline (r17 review catch) and holds no pin of it.
+    */
   def runParsed(spark: SparkSession, cfg: Map[String, Any], outBase: String,
       dedupOrderCol: Option[String] = None): DataFrame = {
     // each entry: dataset_path + optional `split:` selector (utils.py:173
@@ -174,6 +173,8 @@ object Runner {
       case "arrow" => Sources.saveToDisk(shuffled, s"$outBase/$outPath",
         compression = outCompression) // "" = uncompressed (HF default)
     }
-    shuffled
+    // Sources.load, not read.parquet: `output_format: arrow` publishes
+    // the HF layout, which load() sniffs and dispatches
+    Sources.load(spark, s"$outBase/$outPath")
   }
 }

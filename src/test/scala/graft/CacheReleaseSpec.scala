@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{EditDistanceDedup, MinHashConfig, MinHashDedup,
   NgramJaccard, SimHash}
+import graft.pipeline.Runner
 
 /** The cache-release proof promised as r13 #6's done-criterion (VERDICT
   * r14 what's-wrong #3 / next-round #5): a long-lived driver — the store
@@ -162,5 +163,98 @@ class CacheReleaseSpec extends AnyFunSuite {
     assert(after <= baseline + 8,
       s"pinned caches grew $baseline -> $after over 18 distributed-path " +
         "calls — the min-label roots frame is leaking")
+  }
+
+  /** A one-dataset chat config for `Runner.run` whose response pass
+    * deduplicates in physical row order (no `dedupOrderCol`), over this
+    * round's corpus as the trained responses.
+    */
+  private def runnerConfig(round: Int): String = {
+    val dir = s"/tmp/graft_cache_release_runner/$round"
+    def msg(content: Column, train: Boolean, role: String) =
+      struct(content.as("content"), lit(train).as("do_train"),
+        lit(role).as("role"))
+    corpus(round).select(array(
+        msg(lit("please tell me something about data pipelines"), false,
+          "User"),
+        msg(col("text"), true, "Assistant")).as("conversation"))
+      .write.mode("overwrite").parquet(s"$dir/ds")
+    val path = java.nio.file.Paths.get(s"$dir/config.yaml")
+    java.nio.file.Files.writeString(path,
+      s"""datasets:
+         |  - dataset_path: "$dir/ds"
+         |output_dataset_path: "chatml"
+         |instruction_config:
+         |response_config:
+         |  deduplication:
+         |    do_deduplication: true
+         |    args:
+         |      ngram_size: 3
+         |      min_ngram_size: 3
+         |""".stripMargin)
+    path.toString
+  }
+
+  test("dropped outputs of row-order and held-pin dedup calls leave " +
+      "getPersistentRDDs at its floor") {
+    // every call here holds its corpus pin for the lazy output: no
+    // `orderCol` (synthetic ids), a two-consumer API, or the union-tagged
+    // incremental order. A pin the session caches for good grows
+    // getPersistentRDDs by one per call (+21 below, over the +8 slack);
+    // a pin the output owns is freed once the output is dropped
+    def call(i: Int): Long = (i % 7) match {
+      case 0 => MinHashDedup.deduplicate(corpus(i), "text", Cfg).count()
+      case 1 => MinHashDedup.deduplicateWithStats(corpus(i), "text", Cfg)
+        ._1.count()
+      case 2 => MinHashDedup.deduplicateWithStats(corpus(i), "text", Cfg,
+        orderCol = Some("doc_id"))._1.count()
+      case 3 => MinHashDedup.clusterRoots(corpus(i), "text", Cfg).count()
+      case 4 => MinHashDedup.deduplicateWeighted(corpus(i), "text", Cfg)
+        .count()
+      case 5 => MinHashDedup.deduplicateAgainst(corpus(i),
+        corpus(i + 1000), "text", Cfg).count()
+      case _ => Runner.run(spark, runnerConfig(i),
+        s"/tmp/graft_cache_release_runner/$i/out").count()
+    }
+
+    (0 until 7).foreach(call) // warmup
+    val baseline = settledFloor()
+    (7 until 28).foreach(call)
+    val after = settledCount(atMost = baseline + 8)
+    assert(after <= baseline + 8,
+      s"pinned caches grew $baseline -> $after over 21 calls whose " +
+        "outputs were dropped — a corpus pin outlives its output")
+  }
+
+  test("a held corpus pin belongs to its output: a later call over the " +
+      "same frame neither drops nor shares it") {
+    // the corpus is read through a counting identity UDF: a kept frame
+    // that reads its own pin never runs it again, one that lost its pin
+    // re-derives the corpus — under `orderCol = None` with fresh
+    // monotonically_increasing_id values behind an already-built root
+    // map. Spark's cache is keyed by plan, so a persist()-ed pin would be
+    // shared by every call over the same frame, and a later call's
+    // release would drop an earlier call's pin.
+    val path = "/tmp/graft_cache_release_alias"
+    corpus(0).write.mode("overwrite").parquet(path)
+    val reads = spark.sparkContext.longAccumulator("corpus reads")
+    val tap = udf { (t: String) => reads.add(1); t }
+    val docs = spark.read.parquet(path).withColumn("text", tap(col("text")))
+
+    def check(orderCol: Option[String])(later: => Unit): Unit = {
+      val (kept, stats) = MinHashDedup.deduplicateWithStats(docs, "text",
+        Cfg, orderCol = orderCol)
+      assert(stats.collect().nonEmpty)
+      val rows = kept.collect().toSet
+      later
+      val before = reads.value
+      assert(kept.collect().toSet === rows)
+      assert(reads.value === before,
+        s"orderCol = $orderCol: the kept frame re-derived its corpus " +
+          "after a later call over the same frame")
+    }
+    check(None)(MinHashDedup.clusterSizeStats(docs, "text", Cfg).collect())
+    check(Some("doc_id"))(SimHash.deduplicate(docs, "text",
+      orderCol = Some("doc_id")).count())
   }
 }

@@ -218,6 +218,36 @@ class DedupInvariantSpec extends AnyFunSuite {
     assert(hist.map { case (sz, n) => sz * n }.sum == corpus.count())
   }
 
+  test("minhash classes: one rep per identical text or short class, each " +
+      "signed as its own text, at minNgramSize 1, 2 and 3") {
+    // the short class (< minNgramSize tokens) signs all-MAX_HASH, like
+    // each of its members' own text; "\u0000" is two empty tokens, so it
+    // is short only from minNgramSize 3 on and must not join the short
+    // class below that
+    import spark.implicits._
+    val texts = Seq("alpha", "beta", "gamma delta", "\u0000", "",
+      "the same words repeat here", "the same words repeat here",
+      "a longer document with several words in it")
+    val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val reps = Map(1 -> Set(0L, 1L, 2L, 3L, 4L, 5L, 7L),
+      2 -> Set(0L, 2L, 3L, 5L, 7L), 3 -> Set(0L, 5L, 7L))
+    reps.foreach { case (n, expectedReps) =>
+      val cfg = MinHashConfig(ngramSize = n, minNgramSize = n)
+      val (b, r) = graft.dedup.OptimalParam(cfg.threshold, cfg.numPerm)
+      val bands = MinHashDedup.bandedFrame(corpus, "text", cfg,
+          Some("doc_id")).collect().groupBy(_.getLong(0))
+        .map { case (id, rows) => id -> rows.sortBy(_.getInt(1))
+          .map(_.getAs[Array[Byte]](2).toSeq).toSeq }
+      assert(bands.keySet === expectedReps, s"minNgramSize=$n")
+      bands.foreach { case (id, got) =>
+        val own = graft.dedup.MinHash.bandSignatures(texts(id.toInt),
+          cfg.numPerm, n, n, b, r).map(_.toSeq).toSeq
+        assert(got === own, s"minNgramSize=$n, doc $id")
+      }
+    }
+  }
+
   test("deduplicateWeighted: kept set == hard dedup, weights conserve the corpus") {
     val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
     val corpus = corpusWithDupes

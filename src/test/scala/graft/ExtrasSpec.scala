@@ -266,8 +266,8 @@ class ExtrasSpec extends AnyFunSuite {
     assert(kept.count() === docs.count()) // edit never a substring -> all kept
   }
 
-  // golden derived ONCE from /root/reference's embed_func/UnionFind over
-  // the same parquet by tools/ref_minhash_golden.py (committed JSON)
+  // golden derived ONCE from the reference's own embed_func/UnionFind
+  // over the same parquet, committed as minhash_golden_sf001.json
   private lazy val minhashGolden: Seq[Long] = {
     val src = scala.io.Source.fromInputStream(
       getClass.getClassLoader

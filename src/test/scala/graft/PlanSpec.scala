@@ -180,6 +180,28 @@ class PlanSpec extends AnyFunSuite {
       s"keep-first aggregate lost its map-side partial\n${p.take(800)}")
   }
 
+  test("minhash class-key window shuffles the corpus once: the " +
+      "representatives' branch reuses the star edges' exchange") {
+    // both branches of the identical/short-class window must read the
+    // same (id, class key) exchange; a column one branch prunes and the
+    // other keeps makes two exchanges and nothing reused
+    import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val withId = Clustering.withIds(
+        Queries.table(spark, sf, "documents"), Some("doc_id"))
+      val p = MinHashDedup.candidateEdges(withId, "text",
+        MinHashConfig(ngramSize = 3, minNgramSize = 3))
+        .queryExecution.executedPlan.toString
+      val classKey = p.linesIterator
+        .filter(l => l.contains("REPARTITION_BY_NUM") && l.contains("__k__"))
+        .toSeq
+      assert(classKey.count(!_.contains("ReusedExchange")) === 1, p)
+      assert(classKey.count(_.contains("ReusedExchange")) === 1, p)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("optimizer rule collapses nested stripWs") {
     import graft.text.Cleaners.stripWs
     GraftFunctions.register(spark) // functions only; rule applied manually
