@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with total + per-query seconds over
   * `SparkEntry.queries` at `SPARK_GRAFT_SF_DIR`. A tiny untimed warmup
   * first exercises session/codegen startup so per-query numbers measure
@@ -82,16 +80,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeat = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts to named queries (profiling
     // aid; the driver never sets it, so round numbers stay comparable)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: print formatted physical plans for selected queries (all
   * queries when no names given) — used to confirm pushdown/pruning,
   * broadcast strategies, and WholeStageCodegen coverage.
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     Queries.all
       .filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>

@@ -36,7 +36,7 @@ object ScaleGen {
     * with Zipf(`exponent`) weights, so the hottest template owns a large
     * constant fraction of the corpus — the Common Crawl reality of
     * templated boilerplate. Every token carries the template id (zero
-    * cross-template shingle overlap — the SoakEdges lesson: sloppy
+    * cross-template shingle overlap — the r8 >10M-edge soak's lesson: sloppy
     * synthetic corpora legitimately merge into one component), and each
     * doc gets ONE unique tail token, so texts are near- but never
     * exact-identical: the identical-text pre-collapse cannot absorb the
@@ -103,14 +103,7 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dest = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // events.ts is TIMESTAMP(NANOS) — read as long; the derived table then
     // carries plain int64 nanos, which Queries.events consumes identically
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -170,14 +163,8 @@ object ScaleGen {
       write(read(t), t, 1)
     }
 
-    // adversarial LSH-banding skew corpus (VERDICT r11 #1): Zipf-template
-    // boilerplate whose hottest class owns ~38% of the docs — consumed by
-    // `runMain graft.SoakSkew` (which can also generate it in-memory)
-    write(zipfTemplateDocs(spark, 30_000L * factor, templates = 500,
-      exponent = 1.5), "documents_zipf", 8)
-
     val counts = Seq("orders", "lineitem", "customer", "documents",
-      "embeddings", "events", "documents_zipf").map { t =>
+      "embeddings", "events").map { t =>
       t -> spark.read.parquet(s"$dest/$t.parquet").count()
     }
     println(s"[scalegen] $dest factor=$factor " +

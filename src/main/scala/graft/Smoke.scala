@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-style smoke: run the flagship `SparkEntry.entry` at sf0.001 and
   * print its row count + a sample (the driver checks rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val df = graft.chat.ChatPipeline.flagship(spark, sf)
     val n = df.count()
     println(s"[smoke] flagship rows = $n")

@@ -441,7 +441,6 @@ object ConnectedComponents {
       converged = changed == 0
       i += 1
     }
-    DedupMetrics.lastCcRounds.set(i)
     val out = cur.localCheckpoint(true)
     cur.unpersist()
     sym.unpersist()

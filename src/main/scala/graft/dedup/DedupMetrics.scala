@@ -1,7 +1,7 @@
 package graft.dedup
 
 /** Observability for the scale-crossover machinery: which clustering path
-  * each [[Clustering.of]] call took. The soak harness asserts the
+  * each [[Clustering.of]] call took. `ScaleSoakSpec` asserts the
   * distributed branch actually FIRES (VERDICT r6 #1 — before r7 it had
   * never executed) and that its kept set equals the driver UnionFind's.
   */
@@ -9,42 +9,6 @@ object DedupMetrics {
   val emptyPath = new java.util.concurrent.atomic.AtomicLong
   val driverPath = new java.util.concurrent.atomic.AtomicLong
   val distributedPath = new java.util.concurrent.atomic.AtomicLong
-  /** Rounds the last [[ConnectedComponents.distributed]] run took to
-    * converge (star-shaped LSH components ⇒ expect 2-3; a high value
-    * means long propagation chains — worth a look at the edge shape).
-    */
-  val lastCcRounds = new java.util.concurrent.atomic.AtomicLong
-  /** Routing evidence for the banded-hamming bucket guard
-    * (`SimHash.boundedBucketPairs` — shared by simhash and the
-    * image/audio/video perceptual dedups): levels the LAST recursion
-    * ran, the max bucket depth its level-0 probe saw, and the cumulative
-    * number of deep-bucket SPLIT levels taken (0 ⇒ every frontier was
-    * flat and the guard cost one map-side agg, nothing else). The
-    * recursion loop is driver-side, so plain atomics are exact.
-    */
-  val lastBucketLevels = new java.util.concurrent.atomic.AtomicLong
-  val lastBucketMaxDepth = new java.util.concurrent.atomic.AtomicLong
-  val bucketDeepSplits = new java.util.concurrent.atomic.AtomicLong
   def snapshot: String = s"empty=${emptyPath.get} driver=${driverPath.get} " +
-    s"distributed=${distributedPath.get} ccRounds=${lastCcRounds.get}"
-
-  /** Point-in-time counter values, for PER-PHASE deltas in soak logs:
-    * the cumulative counters read misleadingly next to a phase-local
-    * flag once an earlier phase has incremented them (r17 VERDICT
-    * "what's wrong" #3 — `distributedBranch=false` beside
-    * `distributed=1`).
-    */
-  final case class Counts(empty: Long, driver: Long, distributed: Long)
-  def counts: Counts =
-    Counts(emptyPath.get, driverPath.get, distributedPath.get)
-  /** Human-readable delta since `prev` (ccRounds stays last-value).
-    * ASCII "d" prefix, not Δ — soak logs pass through JVMs whose
-    * default stderr charset mangles non-ASCII to '?'.
-    */
-  def deltaString(prev: Counts): String = {
-    val c = counts
-    s"dEmpty=${c.empty - prev.empty} dDriver=${c.driver - prev.driver} " +
-      s"dDistributed=${c.distributed - prev.distributed} " +
-      s"ccRounds=${lastCcRounds.get}"
-  }
+    s"distributed=${distributedPath.get}"
 }

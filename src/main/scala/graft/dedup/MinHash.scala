@@ -227,7 +227,7 @@ final case class MinHashConfig(
       * [[MinHashConfig.AutoSalts]] (-1) probes the banded frame's max
       * bucket depth and routes hot frames to a skew-safe bucket-min
       * only above [[MinHashConfig.SkewDepthThreshold]] — the measured
-      * crossover (`graft.SoakSkewSweep`, PERF.md round-13 skew table:
+      * crossover (PERF.md round-13 skew table:
       * the plain window WINS at shallow buckets, where a single-task
       * sort is cheaper than any extra stage). Auto mode persists the
       * banded frame (it is scanned twice: probe + edges); prefer an
@@ -245,10 +245,10 @@ object MinHashConfig {
     * [[MinHashDedup.bucketMinEdgesAgg]] instead).
     */
   val DefaultSkewSalts: Int = 32
-  /** Measured plain-vs-agg crossover depth (graft.SoakSkewSweep,
-    * local[32], 25 hot buckets of this depth + 2M background rows —
-    * the PERF.md round-13 skew table): below it the plain single
-    * window wins (1.1 s vs agg 1.7 s at 10^5 — a single-task sort of a
+  /** Measured plain-vs-agg crossover depth (local[32], 25 hot buckets
+    * of this depth + 2M background rows — the PERF.md round-13 skew
+    * table): below it the plain single window wins (1.1 s vs agg
+    * 1.7 s at 10^5 — a single-task sort of a
     * shallow hot bucket is cheaper than a second scan; the judge's r12
     * measurement, reproduced), at and above it the agg-join variant
     * wins (1.33× at 10^6, 1.43× at 4×10^6, 1.18× at 10^7 — and the

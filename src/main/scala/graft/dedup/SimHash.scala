@@ -135,8 +135,8 @@ object SimHash {
     * self-joins verify TRUE hamming on the full signatures, so the
     * emitted pair SET is exactly the unbounded plan's (modulo
     * duplicate emissions, which the clustering absorbs) — proven by
-    * SimHashBoundedSpec at cap 32 vs cap ∞ and soaked by
-    * `graft.SoakSkewHamming` at a 100k-deep synthetic template class.
+    * SimHashBoundedSpec at cap 32 vs cap ∞ and soaked at a 100k-deep
+    * synthetic template class (PERF.md round 13).
     *
     * Cost when no bucket exceeds the cap (the common corpus): ONE
     * map-side-combined max-depth probe over the banded frame — no
@@ -235,9 +235,7 @@ object SimHash {
     var frontier = level0
     var rw = remWidth0
     var done = false
-    var levels = 0L
     while (!done) {
-      levels += 1
       val sw = rw / bands // sub-chunk width; 0 = cannot split further
       // persisted: the probe is an extra scan, and every branch below
       // re-reads the frontier at least once (verify self-join / depth
@@ -260,7 +258,6 @@ object SimHash {
       val maxDepth = cached.groupBy("bkey").agg(count(lit(1)).as("__d__"))
         .agg(coalesce(max(col("__d__")), lit(0L)))
         .collect()(0).getLong(0)
-      if (levels == 1L) DedupMetrics.lastBucketMaxDepth.set(maxDepth)
       if (maxDepth <= bucketCap || sw < 1) {
         // flat frontier (the common case — guard costs one map-side agg
         // job and nothing else; NO depth tagging reaches the output
@@ -270,7 +267,6 @@ object SimHash {
         parts += verify(cached)
         done = true
       } else {
-        DedupMetrics.bucketDeepSplits.incrementAndGet()
         // localCheckpoint, not persist: the recursion's per-level
         // lineage nests InMemoryRelations (each of which re-prints its
         // whole child plan), and an extra cached layer per level pushed
@@ -299,7 +295,6 @@ object SimHash {
         rw -= sw
       }
     }
-    DedupMetrics.lastBucketLevels.set(levels)
     parts.reduce(_ union _)
   }
 

@@ -38,13 +38,7 @@ object Runner {
     require(args.length >= 2,
       "usage: Runner <config.yaml> <outBase> (hub repo ids in " +
         "output_dataset_path resolve under outBase)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val n = run(spark, args(0), args(1)).count()
     println(s"[runner] published $n chatml rows")
     spark.stop()

@@ -3,8 +3,6 @@ package graft.scoring
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Segmentation-divergence probe (VERDICT r16 #3 — the ftfy_divergence
   * precedent): MEASURE the greedy-vs-Viterbi-vs-BPE gap over the actual
   * scoring inputs instead of asserting it, and dump every segmentation
@@ -52,12 +50,7 @@ object SpDivergence {
       .getOrElse(SentencePieceTable.fromResource("graft/graft-en.pieces")
         .getOrElse(sys.error("missing shipped piece table")))
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("text").collect().map(_.getString(0))
     spark.stop()

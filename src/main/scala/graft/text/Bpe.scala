@@ -90,8 +90,8 @@ object Bpe {
     * always present) and rewrites ONLY the words that contain the merged
     * pair, adjusting pair counts along the changed boundaries. Selection
     * order is bit-identical to the rescan loop: max weighted count, ties
-    * to the lexicographically smallest pair (BpeSpec goldens +
-    * BpeBench's naive-equivalence check pin it).
+    * to the lexicographically smallest pair (BpeSpec's goldens and its
+    * rescan-equivalence test pin it).
     */
   def trainFromCounts(wc: Seq[(String, Long)], numMerges: Int): BpeModel = {
     import scala.collection.mutable
@@ -197,9 +197,9 @@ object Bpe {
     BpeModel(merges.result())
   }
 
-  /** The r8 full-rescan loop, kept as the oracle for BpeSpec /
-    * [[graft.BpeBench]] equivalence (identical merge sequences). O(words
-    * × merges) — never call it on a real dictionary.
+  /** The r8 full-rescan loop, kept as the oracle for BpeSpec's
+    * equivalence test (identical merge sequences). O(words × merges) —
+    * never call it on a real dictionary.
     */
   private[graft] def trainFromCountsRescan(wc: Seq[(String, Long)],
       numMerges: Int): BpeModel = {

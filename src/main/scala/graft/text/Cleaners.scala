@@ -131,36 +131,6 @@ object FtfyLite extends Serializable {
   private val cp1252 = Charset.forName("windows-1252")
   private val latin1 = Charset.forName("ISO-8859-1")
 
-  /** Row-scoped trace of which repair paths and gate decisions fired —
-    * the measurable half of the C1/ftfy divergence question (VERDICT
-    * r12 #6). Real ftfy is unreachable in this zero-egress sandbox
-    * (not in system python, the driver python, or the reference tree),
-    * but FtfyLite can only diverge from ftfy-6 on rows where one of
-    * these decision points ENGAGES — rows no repair path touches go
-    * through the same deterministic transform chain in both — so the
-    * measured engagement rate UPPER-BOUNDS the divergence rate
-    * (`graft.FtfyProbe`, COVERAGE.md). Tracing is off (null) outside
-    * [[fixTraced]]; the hot path pays one ThreadLocal read per
-    * decision point, on rows that already entered repair machinery.
-    */
-  private[graft] final class RowTrace {
-    var plainRoundTrip = false // whole-string round-trip accepted
-    var rewriteAccepted = false // restore_byte_a0 retry gate-accepted
-    var spanAccepted = false // decode_inconsistent_utf8 gate-accepted
-    var gateRefused = false // a decodable candidate refused by the gate
-    var lossyCollapsed = false // replace_lossy_sequences rewrote
-    def engaged: Boolean = plainRoundTrip || rewriteAccepted ||
-      spanAccepted || gateRefused || lossyCollapsed
-  }
-  private val rowTrace = new ThreadLocal[RowTrace]
-
-  /** [[fix]] plus the row's repair/gate trace — driver-side probe use. */
-  private[graft] def fixTraced(s: String): (String, RowTrace) = {
-    val t = new RowTrace
-    rowTrace.set(t)
-    try (fix(s), t) finally rowTrace.remove()
-  }
-
   /** Re-encode through `cs`; any unmappable char aborts the attempt. */
   private def encodeVia(s: String, cs: Charset): Option[Array[Byte]] = {
     val enc = cs.newEncoder()
@@ -272,23 +242,12 @@ object FtfyLite extends Serializable {
     // U+0800 -- refused). Caller guarantees a lead-class char exists.
     def attempt(enc: Option[Array[Byte]]): Option[String] = enc.flatMap {
       bytes =>
-        val t = rowTrace.get
         val plain =
           utf8Strict(java.nio.ByteBuffer.wrap(bytes)).filter(_ != s)
-        if (plain.isDefined) {
-          if (t != null) t.plainRoundTrip = true
-          plain
-        } else restoreByteA0(bytes).flatMap { rb =>
+        if (plain.isDefined) plain
+        else restoreByteA0(bytes).flatMap { rb =>
           utf8Strict(java.nio.ByteBuffer.wrap(rb))
-            .filter(_ != s) match {
-            case Some(r) if plausibleDecode(r) =>
-              if (t != null) t.rewriteAccepted = true
-              Some(r)
-            case Some(_) =>
-              if (t != null) t.gateRefused = true
-              None
-            case None => None
-          }
+            .filter(r => r != s && plausibleDecode(r))
         }
     }
     attempt(sloppyEncode(s)).orElse(attempt(encodeVia(s, latin1)))
@@ -381,17 +340,13 @@ object FtfyLite extends Serializable {
     while (i < s.length) {
       val n = groupLen(i)
       if (n > 0) {
-        val t = rowTrace.get
         sloppyEncode(s.substring(i, i + n)).flatMap(b =>
           utf8Strict(java.nio.ByteBuffer.wrap(b))) match {
           case Some(dec) if plausibleDecode(dec) =>
-            if (t != null) t.spanAccepted = true
             if (out == null) out = new java.lang.StringBuilder
             out.append(s, last, i).append(dec)
             last = i + n
-          case Some(_) =>
-            if (t != null) t.gateRefused = true
-          case None => ()
+          case _ => ()
         }
         i += n
       } else i += 1
@@ -419,8 +374,6 @@ object FtfyLite extends Serializable {
           trail.exists(isDamage)
       }
       if (ok) {
-        val t = rowTrace.get
-        if (t != null) t.lossyCollapsed = true
         if (out == null) out = new java.lang.StringBuilder
         out.append(s, last, i).append('\ufffd')
         last = i + n

@@ -77,10 +77,31 @@ class BpeSpec extends AnyFunSuite {
       val w = stem + suffixes(rnd.nextInt(suffixes.size))
       (if (w.isEmpty) "x" else w) -> (1000L / i + rnd.nextInt(3))
     }.distinct
-    val fast = Bpe.trainFromCounts(wc, 500)
-    val slow = Bpe.trainFromCountsRescan(wc, 500)
-    assert(fast.merges === slow.merges)
-    assert(fast.merges.size > 100) // non-degenerate: the loop really ran
+    // Second input: a seeded Zipf "morpheme" dictionary (3,000 stems of
+    // random letter pairs/triples plus common suffixes, 800 merges) whose
+    // pair mass stays deep for hundreds of merges.
+    val mrnd = new scala.util.Random(7)
+    val syllables = Vector("ing", "tion", "er", "est", "pre", "un", "re",
+      "al", "ment", "ness", "ist", "ity", "ous", "ive", "en", "ed", "ly")
+    def letter = ('a' + mrnd.nextInt(26)).toChar.toString
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    while (seen.size < 3000) {
+      val stem = (1 to mrnd.nextInt(3) + 1).map { _ =>
+        letter + letter + (if (mrnd.nextInt(3) == 0) letter else "")
+      }.mkString
+      seen += (stem + syllables(mrnd.nextInt(syllables.size)) +
+        (if (mrnd.nextInt(5) == 0) syllables(mrnd.nextInt(syllables.size))
+         else ""))
+    }
+    val morphemes = seen.toSeq.zipWithIndex.map { case (w, i) =>
+      w -> math.max(1L, 2_000_000L / (i + 1) + (i % 7))
+    }
+    Seq(wc -> 500, morphemes -> 800).foreach { case (dict, numMerges) =>
+      val fast = Bpe.trainFromCounts(dict, numMerges)
+      val slow = Bpe.trainFromCountsRescan(dict, numMerges)
+      assert(fast.merges === slow.merges)
+      assert(fast.merges.size > 100) // non-degenerate: the loop really ran
+    }
   }
 
   test("distributed train equals trainFromCounts on the same dictionary, repartition-invariant") {

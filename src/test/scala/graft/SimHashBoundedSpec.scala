@@ -13,8 +13,8 @@ import graft.dedup.{Clustering, SimHash}
   * unbounded plan's verified pair set (dupes aside; clustering absorbs
   * them) and hence the same kept sets, at every maxHamming width shape
   * (bands=1 full-width chunk, bands=3 with an uncovered top bit,
-  * bands=4 exact). `graft.SoakSkewHamming` runs the same proof at a
-  * 100k-deep class plus the timing/pair-count table.
+  * bands=4 exact). PERF.md records the same proof at a 100k-deep class
+  * plus the timing/pair-count table.
   */
 class SimHashBoundedSpec extends AnyFunSuite {
 

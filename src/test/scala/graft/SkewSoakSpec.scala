@@ -12,8 +12,8 @@ import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
   * the `skewSalts` variant must produce EXACTLY the plain window's kept
   * set and cluster roots. The edge SETS legitimately differ (two-hop
   * member → salt-partial-min → bucket-min chains vs direct stars);
-  * connectivity and component minima must not. `graft.SoakSkew` runs the
-  * same proof at 1M docs plus the timing table.
+  * connectivity and component minima must not. PERF.md records the same
+  * proof at 1M docs plus the timing table.
   */
 class SkewSoakSpec extends AnyFunSuite {
 

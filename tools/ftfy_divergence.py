@@ -12,9 +12,9 @@ It reads the engine's own c1_fix_utf8 output (written by graft.Verify:
 with the source documents table, runs ftfy.fix_text over the raw texts,
 and reports the exact disagreement rate plus every differing row.
 
-Inside the sandbox, `runMain graft.FtfyProbe` computes the sound upper
-bound instead (engagement rate of the heuristic decision points — the
-only rows where the two implementations CAN differ).
+Without ftfy, COVERAGE.md's "Measured C1/ftfy divergence bound" holds the
+committed sound upper bound instead (engagement rate of the heuristic
+decision points — the only rows where the two implementations CAN differ).
 """
 import sys
 
@@ -25,9 +25,9 @@ def main() -> int:
     except ImportError:
         print("ftfy is not installed in this environment.")
         print("This sandbox is zero-egress: the exact rate cannot be")
-        print("computed here. Run `runMain graft.FtfyProbe` for the")
-        print("measured upper bound (see COVERAGE.md), or run this")
-        print("script where `pip install ftfy` works.")
+        print("computed here. COVERAGE.md's \"Measured C1/ftfy divergence")
+        print("bound\" holds the committed upper bound; run this script")
+        print("where `pip install ftfy` works for the exact rate.")
         return 2
 
     import duckdb
