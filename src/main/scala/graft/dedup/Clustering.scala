@@ -103,9 +103,9 @@ private[graft] object Clustering {
     case object Released extends Pin
   }
 
-  /** Frames an edge builder pinned (auto-probe banded frame, salted
-    * staged frame, hamming-guard frontiers, a store path's banded
-    * frame), released by [[withCacheRelease]].
+  /** Frames an edge builder pinned (skew-probe banded frame,
+    * hamming-guard frontiers, a store path's banded frame), released by
+    * [[withCacheRelease]].
     */
   type Sink = mutable.Buffer[DataFrame]
 

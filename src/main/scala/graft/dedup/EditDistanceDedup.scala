@@ -53,16 +53,15 @@ object EditDistanceDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdges(withId, column, n, threshold, cfg,
-        cacheSink = Some(sink)))(_.keep(_))
+      verifiedEdges(withId, column, n, threshold, cfg, sink))(_.keep(_))
 
   /** Levenshtein-verified candidate pairs — the edge list feeding the
-    * clustering. `cacheSink` collects the frames the skew remedies pin,
+    * clustering. `cacheSink` collects the frames the skew probe pins,
     * for entry-point release.
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
-      cacheSink: Option[Clustering.Sink] = None): DataFrame =
+      cacheSink: Clustering.Sink): DataFrame =
     MinHashDedup.verifiedCandidates(withId, column,
       cfg.copy(ngramSize = n, minNgramSize = n), cacheSink)(
       levSimilarity(_, _) >= threshold)

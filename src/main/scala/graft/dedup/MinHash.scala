@@ -216,35 +216,26 @@ final case class MinHashConfig(
     numPerm: Int = 256,
     threshold: Double = 0.7,
     minNgramSize: Int = 5,
-    /** > 1 routes the LSH bucket-min stage through the salted two-stage
-      * variant ([[MinHashDedup.bucketMinEdgesSalted]]): a TEMPLATED
-      * corpus (boilerplate docs that are near- but not exact-identical,
-      * so the identical-text pre-collapse cannot absorb them) lands one
-      * (band, bsig) bucket of the whole template class on ONE window
-      * task; salting splits it `skewSalts` ways at the cost of a second
-      * (reduced-frame) shuffle. Kept sets and cluster roots are
-      * IDENTICAL either way (SkewSoakSpec); 0 = plain single window;
-      * [[MinHashConfig.AutoSalts]] (-1) probes the banded frame's max
-      * bucket depth and routes hot frames to a skew-safe bucket-min
-      * only above [[MinHashConfig.SkewDepthThreshold]] — the measured
-      * crossover (PERF.md round-13 skew table:
-      * the plain window WINS at shallow buckets, where a single-task
-      * sort is cheaper than any extra stage). Auto mode persists the
-      * banded frame (it is scanned twice: probe + edges); prefer an
-      * explicit 0 when the corpus shape is already known flat.
+    /** true probes the banded frame's max bucket depth
+      * ([[MinHashDedup.probeSkewDeep]]) and routes a frame whose deepest
+      * bucket reaches [[MinHashConfig.SkewDepthThreshold]] to the
+      * agg-join bucket-min ([[MinHashDedup.bucketMinEdgesAgg]]): a
+      * TEMPLATED corpus (boilerplate docs that are near- but not
+      * exact-identical, so the identical-text pre-collapse cannot absorb
+      * them) lands one (band, bsig) bucket of the whole template class
+      * on ONE window task, which the agg-join's map-side partial
+      * aggregation avoids. Below the threshold the plain window runs —
+      * the measured crossover (PERF.md round-13 skew table: the plain
+      * window WINS at shallow buckets, where a single-task sort is
+      * cheaper than any extra stage). Kept sets and cluster roots are
+      * IDENTICAL either way (SkewSoakSpec). The probe persists the
+      * banded frame (it is scanned twice: probe + edges), so false —
+      * the plain window, no probe — stays the default for corpora known
+      * to be flat.
       */
-    skewSalts: Int = 0)
+    skewProbe: Boolean = false)
 
 object MinHashConfig {
-  /** `skewSalts` sentinel: probe the banded frame and decide. */
-  val AutoSalts: Int = -1
-  /** Salt count convention for the EXPLICIT salted variant (kept for
-    * its equality lineage; the r13 sweep measured it slower than the
-    * plain window at every depth except a marginal 1.15× at 10^6 —
-    * PERF.md round-13 — so auto mode routes skew to
-    * [[MinHashDedup.bucketMinEdgesAgg]] instead).
-    */
-  val DefaultSkewSalts: Int = 32
   /** Measured plain-vs-agg crossover depth (local[32], 25 hot buckets
     * of this depth + 2M background rows — the PERF.md round-13 skew
     * table): below it the plain single window wins (1.1 s vs agg

@@ -1,7 +1,5 @@
 package graft.dedup
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object MinHashDedup {
 
-  import Clustering.{IdCol, Pin}
+  import Clustering.{IdCol, Pin, Sink}
 
   def signatureColumn(cfg: MinHashConfig): Column => Column = {
     val (b, r) = OptimalParam(cfg.threshold, cfg.numPerm)
@@ -51,24 +49,15 @@ object MinHashDedup {
   /** Star edges (member, bucket-min) per duplicate bucket from an
     * exploded (id, band, bsig) frame. Streaming window aggregate — one
     * shuffle on (band, bsig), no per-bucket array; hot buckets spill.
+    * `skewProbe` first runs [[probeSkewDeep]] and routes a frame with a
+    * bucket at or above [[MinHashConfig.SkewDepthThreshold]] to
+    * [[bucketMinEdgesAgg]]; the probe's pinned frame goes to `cacheSink`.
     */
-  private[graft] def bucketMinEdges(banded: DataFrame,
-      skewSalts: Int = 0,
-      cacheSink: Option[mutable.Buffer[DataFrame]] = None): DataFrame =
-    if (skewSalts == MinHashConfig.AutoSalts &&
-        probeSkewDeep(banded, cacheSink))
+  private[graft] def bucketMinEdges(banded: DataFrame, skewProbe: Boolean,
+      cacheSink: Sink): DataFrame =
+    if (skewProbe && probeSkewDeep(banded, cacheSink))
       bucketMinEdgesAgg(banded) // probe already persisted the frame
-    else if (skewSalts > 1) {
-      // the salted variant consumes its stage-1 frame in TWO union
-      // branches (member + merge edges): persist the input so a failed
-      // exchange reuse (AQE replan, reuse disabled) cannot re-run the
-      // signature stage twice (ADVICE r12). Registered with the
-      // cacheSink so entry points release it once the clustering has
-      // materialized the edges (ADVICE r13 / VERDICT r13 #3).
-      val pinned = banded.persist()
-      cacheSink.foreach(_ += pinned)
-      bucketMinEdgesSalted(pinned, skewSalts, cacheSink)
-    } else {
+    else {
       val w = Window.partitionBy("band", "bsig")
       banded.repartition(parallelism(banded), col("band"), col("bsig"))
         .withColumn("__min__", min(col("id")).over(w))
@@ -89,9 +78,9 @@ object MinHashDedup {
     * point can release it after edge materialization.
     */
   private[graft] def probeSkewDeep(banded: DataFrame,
-      cacheSink: Option[mutable.Buffer[DataFrame]] = None): Boolean = {
+      cacheSink: Sink): Boolean = {
     val pinned = banded.persist()
-    cacheSink.foreach(_ += pinned)
+    cacheSink += pinned
     val maxDepth = pinned
       .groupBy("band", "bsig").agg(count(lit(1)).as("__d__"))
       .agg(coalesce(max(col("__d__")), lit(0L)))
@@ -104,78 +93,20 @@ object MinHashDedup {
     deep
   }
 
-  /** Salted two-stage bucket-min (VERDICT r11 #1) — the skew-safe twin of
-    * the plain window above for TEMPLATED corpora (the Common Crawl
-    * reality: 100k near-identical boilerplate docs share every hot
-    * (band, bsig) bucket, and since their texts differ, the
-    * identical-text pre-collapse can't absorb them — the plain window
-    * then sorts the whole class on ONE task per bucket).
-    *
-    * Stage 1 salts each row by `pmod(hash(id), salts)` and windows over
-    * (band, bsig, salt): a hot bucket spreads across `salts` tasks, each
-    * emitting member → salt-partial-min star edges. Stage 2 windows the
-    * REDUCED frame (exactly one surviving row per (bucket, salt) — the
-    * rows where id = partial min, no extra distinct pass) over
-    * (band, bsig), chaining the ≤`salts` partial minima to the true
-    * bucket min.
-    *
-    * The EDGE SET differs from the plain variant (two-hop chains instead
-    * of direct member → bucket-min stars), but min is associative and
-    * clustering consumes only CONNECTIVITY: every member stays connected
-    * to its bucket min, so components, component minima, kept sets, and
-    * the oracle's independent signature-frame closure replay are all
-    * unchanged (SkewSoakSpec proves kept/root equality; the DuckDB
-    * oracle never sees engine edges, only signatures).
-    *
-    * Cost trade: one extra shuffle+window over the stage-2 frame, which
-    * is ≤ |banded| (one row per bucket-salt slice; ≈ |banded| when
-    * buckets are mostly singletons) — so the plain window stays the
-    * default and `MinHashConfig.skewSalts` opts a templated corpus in.
-    */
-  private[graft] def bucketMinEdgesSalted(banded: DataFrame,
-      salts: Int,
-      cacheSink: Option[mutable.Buffer[DataFrame]] = None): DataFrame = {
-    val w1 = Window.partitionBy("band", "bsig", "__salt__")
-    val w2 = Window.partitionBy("band", "bsig")
-    // PERSISTED: member and merge edges are two filters of this frame,
-    // and exchange reuse alone proved unreliable — the r13 sweep
-    // measured the unpersisted form re-running the whole stage-1
-    // shuffle+window (salted 46 s vs plain 16 s at 4M-deep buckets;
-    // with the cache the stage runs once). Registered with the
-    // cacheSink for post-materialization release (ADVICE r13).
-    val staged = banded
-      .withColumn("__salt__", pmod(hash(col("id")), lit(salts)))
-      .repartition(parallelism(banded),
-        col("band"), col("bsig"), col("__salt__"))
-      .withColumn("__pmin__", min(col("id")).over(w1))
-      .persist()
-    cacheSink.foreach(_ += staged)
-    val memberEdges = staged.where(col("id") =!= col("__pmin__"))
-      .select(col("id").as("__x__"), col("__pmin__").as("__y__"))
-    val mergeEdges = staged.where(col("id") === col("__pmin__"))
-      .select(col("band"), col("bsig"), col("__pmin__"))
-      .withColumn("__min__", min(col("__pmin__")).over(w2))
-      .where(col("__pmin__") =!= col("__min__"))
-      .select(col("__pmin__").as("__x__"), col("__min__").as("__y__"))
-    memberEdges.union(mergeEdges).distinct()
-  }
-
-  /** Aggregate-then-join bucket-min — the skew remedy that beats both
-    * the plain window AND the salted two-stage variant at deep buckets
-    * (r13 sweep, PERF.md): `groupBy(band, bsig).min(id)` crushes a hot
-    * bucket MAP-SIDE (partial aggregation emits ≤ one row per bucket
-    * per mapper, so the agg shuffle is skew-free by construction), and
-    * the join back to the banded frame distributes edge emission — AQE
-    * broadcasts the min frame when it is small and splits skewed join
-    * partitions otherwise (OptimizeSkewedJoin), so no single task ever
-    * owns a hot bucket end-to-end. The edge SET is IDENTICAL to the
-    * plain window's (the same member → bucket-min stars, unlike the
-    * salted variant's two-hop chains) — SkewSoakSpec pins frame-level
-    * equality. Cost: the banded frame is consumed twice (agg + join),
-    * so callers persist it — [[probeSkewDeep]]'s auto path already
-    * has (its probe is the same aggregation shape, so by the time this
-    * runs the frame is cached and the agg is the probe re-run plus the
-    * join).
+  /** Aggregate-then-join bucket-min — the skew remedy that beats the
+    * plain window at deep buckets (r13 sweep, PERF.md):
+    * `groupBy(band, bsig).min(id)` crushes a hot bucket MAP-SIDE
+    * (partial aggregation emits ≤ one row per bucket per mapper, so the
+    * agg shuffle is skew-free by construction), and the join back to the
+    * banded frame distributes edge emission — AQE broadcasts the min
+    * frame when it is small and splits skewed join partitions otherwise
+    * (OptimizeSkewedJoin), so no single task ever owns a hot bucket
+    * end-to-end. The edge SET is IDENTICAL to the plain window's (the
+    * same member → bucket-min stars) — SkewSoakSpec pins frame-level
+    * equality. Cost: the banded frame is consumed twice (agg + join), so
+    * callers persist it — [[probeSkewDeep]] already has (its probe is
+    * the same aggregation shape, so by the time this runs the frame is
+    * cached and the agg is the probe re-run plus the join).
     */
   private[graft] def bucketMinEdgesAgg(banded: DataFrame): DataFrame = {
     val mins = banded.groupBy("band", "bsig")
@@ -310,8 +241,8 @@ object MinHashDedup {
 
   /** [[candidateEdges]] as a [[Clustering.run]] edge builder. */
   private def candidates(column: String,
-      cfg: MinHashConfig): (DataFrame, Clustering.Sink) => DataFrame =
-    (withId, sink) => candidateEdges(withId, column, cfg, Some(sink))
+      cfg: MinHashConfig): (DataFrame, Sink) => DataFrame =
+    (withId, sink) => candidateEdges(withId, column, cfg, sink)
 
   /** The candidate edge list feeding the clustering (identical-class star
     * edges + LSH band collisions — candidates, not verified pairs: the
@@ -321,10 +252,9 @@ object MinHashDedup {
     * (QueriesExtra2.minhashCtes).
     */
   private[graft] def candidateEdges(withId: DataFrame, column: String,
-      cfg: MinHashConfig,
-      cacheSink: Option[mutable.Buffer[DataFrame]] = None): DataFrame = {
+      cfg: MinHashConfig, cacheSink: Sink): DataFrame = {
     val (identEdges, banded) = classEdgesAndBanded(withId, column, cfg)
-    bucketMinEdges(banded, cfg.skewSalts, cacheSink).union(identEdges)
+    bucketMinEdges(banded, cfg.skewProbe, cacheSink).union(identEdges)
   }
 
   /** LSH candidates verified by an exact pair predicate — the one body
@@ -334,19 +264,19 @@ object MinHashDedup {
     * (they cannot shingle, so the reference LSH would flood them into ONE
     * all-MAX_HASH bucket only for verification to reject every pair);
     * candidates are star-shaped per bucket via the streaming bucket-min
-    * window (`sigCfg.skewSalts` reaches it — VERDICT r12 #3); then only
+    * window (`sigCfg.skewProbe` reaches it — VERDICT r12 #3); then only
     * candidate pairs pull their texts back in (broadcast-able candidate
     * side at bench scale, shuffle join on id at cluster scale) and keep
     * the pair iff `verified(textA, textB)`. ALL verified pairs go to
     * clustering (multi-edges are fine for both union-find and min-label
     * propagation); a per-node min-reduction would drop cross-links and
     * over-keep vs transitive clustering. `cacheSink` collects the frames
-    * the skew remedies pin, for entry-point release.
+    * the skew probe pins, for entry-point release.
     */
   private[dedup] def verifiedCandidates(withId: DataFrame, column: String,
-      sigCfg: MinHashConfig, cacheSink: Option[Clustering.Sink])(
+      sigCfg: MinHashConfig, cacheSink: Sink)(
       verified: (Column, Column) => Column): DataFrame =
-    bucketMinEdges(gatedBanded(withId, column, sigCfg), sigCfg.skewSalts,
+    bucketMinEdges(gatedBanded(withId, column, sigCfg), sigCfg.skewProbe,
         cacheSink)
       .join(withId.select(col(IdCol).as("__x__"), col(column).as("__ta__")),
         Seq("__x__"))
@@ -622,7 +552,7 @@ object MinHashDedup {
           .join(store.withColumnRenamed("id", "__sid__"), Seq("band", "bsig"))
           .select(col("id").as("__x__"), col("__sid__").as("__y__"))
           .distinct()
-        bucketMinEdges(banded, cfg.skewSalts, Some(sink))
+        bucketMinEdges(banded, cfg.skewProbe, sink)
           .union(identEdges).union(crossEdges)
     }
 }

@@ -93,8 +93,7 @@ object NgramJaccard {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdges(withId, column, n, threshold, cfg,
-        cacheSink = Some(sink)))(_.keep(_))
+      verifiedEdges(withId, column, n, threshold, cfg, sink))(_.keep(_))
 
   /** Exact-Jaccard-verified candidate pairs — the edge list feeding the
     * clustering. Exposed for the keep-first invariant specs. The verify
@@ -102,7 +101,7 @@ object NgramJaccard {
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
       n: Int, threshold: Double, cfg: MinHashConfig,
-      cacheSink: Option[Clustering.Sink] = None): DataFrame = {
+      cacheSink: Clustering.Sink): DataFrame = {
     val jac = udf { (a: String, b: String) => jaccardDocs(a, b, n) }
     MinHashDedup.verifiedCandidates(withId, column,
       sigCfg(n, threshold, cfg), cacheSink)(jac(_, _) >= threshold)

@@ -80,9 +80,9 @@ object SimHash {
     * IS the kept set.
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
-      maxHamming: Int, cacheSink: Option[Sink] = None): DataFrame =
+      maxHamming: Int, cacheSink: Sink): DataFrame =
     verifiedEdgesFromSigs(sigsOf(withId, column, signature), maxHamming,
-      cacheSink = cacheSink)
+      cacheSink)
 
   /** The (id, sig) frame of an id-carrying frame. */
   private def sigsOf(withId: DataFrame, column: String,
@@ -149,9 +149,8 @@ object SimHash {
     * store, bounded by the increment) and keeps the plain join.
     */
   private[graft] def verifiedEdgesFromSigs(sigsRaw: DataFrame,
-      maxHamming: Int,
-      bucketCap: Int = DefaultBucketCap,
-      cacheSink: Option[Sink] = None): DataFrame = {
+      maxHamming: Int, cacheSink: Sink,
+      bucketCap: Int = DefaultBucketCap): DataFrame = {
     val bands = maxHamming + 1
     val width = 64 / bands
     val sigs = sigsRaw.where(col("sig").isNotNull)
@@ -220,7 +219,7 @@ object SimHash {
     */
   private def boundedBucketPairs(level0: DataFrame, remWidth0: Int,
       maxHamming: Int, bucketCap: Int,
-      cacheSink: Option[Sink]): DataFrame = {
+      cacheSink: Sink): DataFrame = {
     val bands = maxHamming + 1
     def verify(b: DataFrame): DataFrame =
       b.select(col("bkey"), col("id").as("__ida__"),
@@ -241,7 +240,7 @@ object SimHash {
       // re-reads the frontier at least once (verify self-join / depth
       // join) — without the cache the signature stage upstream re-runs
       val cached = frontier.select("bkey", "id", "sig", "rem").persist()
-      cacheSink.foreach(_ += cached)
+      cacheSink += cached
       // r20 (guide §1.2/§2.4 — remove jobs from the common path): ONE
       // job decides flat vs deep — max depth via two nested map-side-
       // combined aggregations (no skew hazard: the inner agg emits ≤ one
@@ -313,7 +312,7 @@ object SimHash {
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
       verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
-        cacheSink = Some(sink)))(_.keep(_))
+        sink))(_.keep(_))
 
   // ------------------------------------------------------------------
   // Persisted SIGNATURE store — the hamming family's twin of
@@ -482,7 +481,7 @@ object SimHash {
     Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
       (withId, sink) =>
         val sigs = sigsOf(withId, column, sigOf)
-        verifiedEdgesFromSigs(sigs, maxHamming, cacheSink = Some(sink))
+        verifiedEdgesFromSigs(sigs, maxHamming, sink)
           .union(crossOf(sigs))
     }
 
@@ -499,5 +498,5 @@ object SimHash {
       maxDriverEdges: Long = 10_000_000L): DataFrame =
     Clustering.against(newDf, refDf, maxDriverEdges)((withId, sink) =>
       verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
-        cacheSink = Some(sink)))
+        sink))
 }

@@ -206,30 +206,23 @@ object PipelineConfig {
         // beyond the reference (VERDICT r13 #4): the hot-bucket skew
         // remedy is config-reachable, not API-only — `skew_salts: auto`
         // enables the max-depth probe + measured-crossover routing to
-        // the agg-join bucket-min ([[graft.dedup.MinHashConfig.AutoSalts]];
-        // self-disables on flat corpora), an integer > 1 forces the
-        // salted two-stage variant, 0/absent keeps the plain window
+        // the agg-join bucket-min ([[graft.dedup.MinHashConfig.skewProbe]];
+        // self-disables on flat corpora), 0/absent keeps the plain window
         // (the reference read path ignores the key entirely, so
-        // reference configs are unaffected)
-        val skew = args.get("skew_salts").map(_.toString.trim) match {
-          case Some(s) if s.equalsIgnoreCase("auto") =>
-            graft.dedup.MinHashConfig.AutoSalts
-          case Some(s) =>
-            // a config typo must name the key, not surface as a raw
-            // NumberFormatException from deep inside parsing (ADVICE r14)
-            try s.toInt
-            catch {
-              case _: NumberFormatException => sys.error(
-                s"dedup.skew_salts must be 'auto' or an integer, got: $s")
-            }
-          case None => 0
+        // reference configs are unaffected). A config typo must name the
+        // key, not surface from deep inside parsing (ADVICE r14).
+        val skewProbe = args.get("skew_salts").map(_.toString.trim) match {
+          case Some(s) if s.equalsIgnoreCase("auto") => true
+          case Some("0") | None => false
+          case Some(s) => sys.error(
+            s"dedup.skew_salts must be 'auto' or 0, got: $s")
         }
         Some(graft.dedup.MinHashConfig(
           ngramSize = i("ngram_size", 5),
           numPerm = i("num_perm", 256),
           threshold = dd("threshold", 0.7),
           minNgramSize = i("min_ngram_size", 5),
-          skewSalts = skew))
+          skewProbe = skewProbe))
       case _ => None
     }
 

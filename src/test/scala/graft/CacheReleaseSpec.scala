@@ -11,11 +11,11 @@ import graft.pipeline.Runner
 /** The cache-release proof promised as r13 #6's done-criterion (VERDICT
   * r14 what's-wrong #3 / next-round #5): a long-lived driver — the store
   * API's whole premise is a nightly session calling dedup over and over —
-  * must not accumulate pinned caches across calls. The skew machinery
-  * (auto probe, salted stage-1) persists |corpus|×bands frames that only
-  * `withCacheRelease` frees; before r14 every call leaked one, and the
-  * ADVICE r14 follow-up found the EditDistance/NgramJaccard entry points
-  * still leaking after the minhash trunk was fixed.
+  * must not accumulate pinned caches across calls. The skew probe
+  * persists |corpus|×bands frames that only `withCacheRelease` frees;
+  * before r14 every call leaked one, and the ADVICE r14 follow-up found
+  * the EditDistance/NgramJaccard entry points still leaking after the
+  * minhash trunk was fixed.
   *
   * The loop makes every call's plan UNIQUE (a per-round literal suffix):
   * Spark's CacheManager dedupes persist() by logical plan, so repeated
@@ -37,6 +37,7 @@ class CacheReleaseSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val Cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
+  private val Probed = Cfg.copy(skewProbe = true)
 
   /** ~100 docs, a templated class + unique tails — enough shape that
     * banding produces real buckets without slowing 50 rounds. */
@@ -96,7 +97,7 @@ class CacheReleaseSpec extends AnyFunSuite {
     floor
   }
 
-  test("50 dedup calls (minhash salted/auto, store increments, " +
+  test("50 dedup calls (minhash skew probe, store increments, " +
       "edit-distance, ngram-jaccard, simhash) leave getPersistentRDDs " +
       "bounded (VERDICT r14 #5 / ADVICE r14)") {
     // a persisted store frame, built once — the nightly session shape
@@ -106,23 +107,22 @@ class CacheReleaseSpec extends AnyFunSuite {
     assert(store.count() > 0)
 
     def call(i: Int): Long = (i % 6) match {
-      case 0 => // forced salted: pins the staged stage-1 frame
-        MinHashDedup.deduplicate(corpus(i), "text",
-          Cfg.copy(skewSalts = 4), orderCol = Some("doc_id")).count()
-      case 1 => // auto: the probe pins the banded frame (flat → window)
-        MinHashDedup.deduplicate(corpus(i), "text",
-          Cfg.copy(skewSalts = MinHashConfig.AutoSalts),
+      case 0 => // the probe pins the banded frame (flat → window)
+        MinHashDedup.deduplicate(corpus(i), "text", Probed,
+          orderCol = Some("doc_id")).count()
+      case 1 => // plain window: no probe, no pin beyond the corpus
+        MinHashDedup.deduplicate(corpus(i), "text", Cfg,
           orderCol = Some("doc_id")).count()
       case 2 => // eager store-increment path (localCheckpoint + release)
         MinHashDedup.deduplicateAgainstStore(corpus(i), store, "text",
           Cfg, orderCol = Some("doc_id")).count()
       case 3 => // ADVICE r14: edit-distance entry point now releases too
         EditDistanceDedup.deduplicate(corpus(i), "text", n = 3,
-          threshold = 0.6, cfg = Cfg.copy(skewSalts = 4),
+          threshold = 0.6, cfg = Probed,
           orderCol = Some("doc_id")).count()
       case 4 => // ADVICE r14: ngram-jaccard entry point now releases too
         NgramJaccard.deduplicate(corpus(i), "text", n = 3,
-          threshold = 0.5, cfg = Cfg.copy(skewSalts = 4),
+          threshold = 0.5, cfg = Probed,
           orderCol = Some("doc_id")).count()
       case _ => // hamming family: bounded-guard frontier caches release
         SimHash.deduplicate(corpus(i), "text", maxHamming = 3,

@@ -81,8 +81,10 @@ class DedupInvariantSpec extends AnyFunSuite {
   test("simhash: edges valid, kept = component mins, pigeonhole complete") {
     val corpus = corpusWithDupes
     val withId = Clustering.assignId(corpus, Some("doc_id"))
-    val edges = SimHash.verifiedEdges(withId, "text", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val edges = Clustering.withCacheRelease { sink =>
+      SimHash.verifiedEdges(withId, "text", 3, sink)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     val texts = corpus.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val sigs = texts.map { case (id, t) => id -> SimHash.simhash64(t) }
@@ -121,9 +123,11 @@ class DedupInvariantSpec extends AnyFunSuite {
     val threshold = 0.7
     val corpus = corpusWithDupes
     val withId = Clustering.assignId(corpus, Some("doc_id"))
-    val edges = NgramJaccard
-      .verifiedEdges(withId, "text", n, threshold, MinHashConfig())
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val edges = Clustering.withCacheRelease { sink =>
+      NgramJaccard
+        .verifiedEdges(withId, "text", n, threshold, MinHashConfig(), sink)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     val texts = corpus.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     // (a) every edge passes the exact-Jaccard verify kernel

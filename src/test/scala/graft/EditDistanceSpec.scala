@@ -80,8 +80,10 @@ class EditDistanceSpec extends AnyFunSuite {
     val withId = Clustering.assignId(docs, Some("doc_id"))
     val texts = withId.select(col(Clustering.IdCol).as("id"),
       col("text")).as[(Long, String)].collect().toMap
-    val edges = EditDistanceDedup.verifiedEdges(withId, "text", 5, 0.8,
-      MinHashConfig()).as[(Long, Long)].collect()
+    val edges = Clustering.withCacheRelease { sink =>
+      EditDistanceDedup.verifiedEdges(withId, "text", 5, 0.8,
+        MinHashConfig(), sink).as[(Long, Long)].collect()
+    }
     assert(edges.nonEmpty)
     for ((x, y) <- edges) {
       val (a, b) = (texts(x), texts(y))

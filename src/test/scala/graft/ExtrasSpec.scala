@@ -60,21 +60,19 @@ class ExtrasSpec extends AnyFunSuite {
            |  args:
            |    threshold: 0.7$argLine
            |""".stripMargin)).get
-    assert(dedupOf("").skewSalts === 0, "absent key keeps the plain window")
-    assert(dedupOf("\n    skew_salts: auto").skewSalts ===
-      graft.dedup.MinHashConfig.AutoSalts)
-    assert(dedupOf("\n    skew_salts: Auto").skewSalts ===
-      graft.dedup.MinHashConfig.AutoSalts, "case-insensitive (ADVICE r14)")
-    assert(dedupOf("\n    skew_salts: 32").skewSalts === 32)
-    // a typo'd value must name the key, not throw a raw
+    assert(!dedupOf("").skewProbe, "absent key keeps the plain window")
+    assert(!dedupOf("\n    skew_salts: 0").skewProbe)
+    assert(dedupOf("\n    skew_salts: auto").skewProbe)
+    assert(dedupOf("\n    skew_salts: Auto").skewProbe,
+      "case-insensitive (ADVICE r14)")
+    // any other value must name the key, not throw a raw
     // NumberFormatException from inside parsing (ADVICE r14)
-    val e = intercept[RuntimeException] {
-      dedupOf("\n    skew_salts: 16.0")
+    for (v <- Seq("32", "16.0", "true")) {
+      val e = intercept[RuntimeException] {
+        dedupOf(s"\n    skew_salts: $v")
+      }
+      assert(e.getMessage.contains("skew_salts"), e.getMessage)
     }
-    assert(e.getMessage.contains("skew_salts"), e.getMessage)
-    assert(intercept[RuntimeException] {
-      dedupOf("\n    skew_salts: true")
-    }.getMessage.contains("skew_salts"))
   }
 
   test("side-channel claims only after a successful write (ADVICE r7)") {
@@ -790,21 +788,6 @@ class ExtrasSpec extends AnyFunSuite {
     val viaTyped = typed.collect()
       .map(r => (r.instruction, r.response)).toSet
     assert(viaTyped === viaColumns)
-  }
-
-  test("salted aggregation equals plain groupBy") {
-    import spark.implicits._
-    // power-law keys: one hot key with 900 rows
-    val df = ((1 to 900).map(_ => "hot") ++ (1 to 100).map(i => s"k$i"))
-      .toDF("user_id").withColumn("v", lit(2.5))
-    val plain = df.groupBy("user_id").count()
-      .as[(String, Long)].collect().toMap
-    val salted = graft.pipeline.Skew.saltedCount(df, "user_id")
-      .as[(String, Long)].collect().toMap
-    assert(salted === plain)
-    val sums = graft.pipeline.Skew.saltedAgg(df, "user_id", col("v"),
-      sum, sum, "total").as[(String, Double)].collect().toMap
-    assert(sums("hot") === 900 * 2.5)
   }
 
   test("bucketed publish round-trips and joins without shuffle of sides") {

@@ -191,9 +191,11 @@ class PlanSpec extends AnyFunSuite {
     try {
       val withId = Clustering.withIds(
         Queries.table(spark, sf, "documents"), Some("doc_id"))
-      val p = MinHashDedup.candidateEdges(withId, "text",
-        MinHashConfig(ngramSize = 3, minNgramSize = 3))
-        .queryExecution.executedPlan.toString
+      val p = Clustering.withCacheRelease { sink =>
+        MinHashDedup.candidateEdges(withId, "text",
+          MinHashConfig(ngramSize = 3, minNgramSize = 3), sink)
+          .queryExecution.executedPlan.toString
+      }
       val classKey = p.linesIterator
         .filter(l => l.contains("REPARTITION_BY_NUM") && l.contains("__k__"))
         .toSeq

@@ -28,6 +28,12 @@ class SimHashBoundedSpec extends AnyFunSuite {
   private def pairSet(edges: DataFrame): Set[(Long, Long)] =
     edges.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The verified pair set at `cap`, its pinned frontiers released. */
+  private def pairSet(sigs: DataFrame, k: Int, cap: Int): Set[(Long, Long)] =
+    Clustering.withCacheRelease { sink =>
+      pairSet(SimHash.verifiedEdgesFromSigs(sigs, k, sink, cap))
+    }
+
   test("bounded (cap 32, multi-level) == unbounded pair set on a " +
       "templated sig cloud; deep buckets genuinely present") {
     val sigs = ScaleGen.templateSigCloud(spark, 3000L,
@@ -36,11 +42,10 @@ class SimHashBoundedSpec extends AnyFunSuite {
     // whose deepest (band, chunk) bucket dwarfs the cap
     val reps = sigs.select("sig").distinct().count()
     assert(reps > 1000, s"only $reps distinct sigs")
-    val plain = pairSet(
-      SimHash.verifiedEdgesFromSigs(sigs, 3, Int.MaxValue))
+    val plain = pairSet(sigs, 3, Int.MaxValue)
     assert(plain.nonEmpty)
     for (cap <- Seq(32, 256)) {
-      val bounded = pairSet(SimHash.verifiedEdgesFromSigs(sigs, 3, cap))
+      val bounded = pairSet(sigs, 3, cap)
       assert(bounded == plain,
         s"cap=$cap: only-plain=${(plain -- bounded).take(5)} " +
           s"only-bounded=${(bounded -- plain).take(5)}")
@@ -53,9 +58,8 @@ class SimHashBoundedSpec extends AnyFunSuite {
     val sigs = ScaleGen.templateSigCloud(spark, 800L,
       varyingBits = 12, flips = 3).persist()
     for (k <- Seq(0, 1, 2)) {
-      val plain = pairSet(
-        SimHash.verifiedEdgesFromSigs(sigs, k, Int.MaxValue))
-      val bounded = pairSet(SimHash.verifiedEdgesFromSigs(sigs, k, 16))
+      val plain = pairSet(sigs, k, Int.MaxValue)
+      val bounded = pairSet(sigs, k, 16)
       assert(bounded == plain, s"maxHamming=$k diverged")
     }
     sigs.unpersist()
@@ -68,13 +72,14 @@ class SimHashBoundedSpec extends AnyFunSuite {
       .select(col("id").as(Clustering.IdCol), col("id").as("keep_id"),
         col("sig"))
       .persist()
-    def kept(cap: Int): Set[Long] =
+    def kept(cap: Int): Set[Long] = Clustering.withCacheRelease { sink =>
       Clustering.keepFirst(base,
         SimHash.verifiedEdgesFromSigs(
           base.select(col(Clustering.IdCol).as("id"), col("sig")),
-          3, cap),
+          3, sink, cap),
         maxDriverEdges = 10_000_000L)
         .select("keep_id").collect().map(_.getLong(0)).toSet
+    }
     val unbounded = kept(Int.MaxValue)
     assert(kept(SimHash.DefaultBucketCap) == unbounded)
     assert(kept(64) == unbounded)
@@ -88,29 +93,30 @@ class SimHashBoundedSpec extends AnyFunSuite {
     // 100 distinct small sigs: every row shares band 3's all-zero chunk
     // (high 16 bits), so the deepest (band, chunk) bucket is EXACTLY 100
     val sigs = spark.range(100).select(col("id"), col("id").as("sig"))
-    val plain = pairSet(
-      SimHash.verifiedEdgesFromSigs(sigs, 3, Int.MaxValue))
+    val plain = pairSet(sigs, 3, Int.MaxValue)
     assert(plain.nonEmpty)
-    // cap above the max depth: the level-0 probe must short-circuit —
-    // same pair set, and the depth-tagging join provably absent from
-    // the emitted plan (the __d__ count column never appears)
-    val flat = SimHash.verifiedEdgesFromSigs(sigs, 3, 128)
-    assert(pairSet(flat) == plain)
-    assert(!flat.queryExecution.analyzed.toString.contains("__d__"),
-      "flat corpus must take the probe short-circuit (no depth join)")
-    // control: a bucket deeper than the cap must engage the tagged
-    // recursion (the join on the per-bucket __d__ count reaches the plan)
-    val deep = SimHash.verifiedEdgesFromSigs(sigs, 3, 16)
-    assert(pairSet(deep) == plain)
-    assert(deep.queryExecution.analyzed.toString.contains("__d__"),
-      "deep bucket must engage the depth-tagged recursion")
+    Clustering.withCacheRelease { sink =>
+      // cap above the max depth: the level-0 probe must short-circuit —
+      // same pair set, and the depth-tagging join provably absent from
+      // the emitted plan (the __d__ count column never appears)
+      val flat = SimHash.verifiedEdgesFromSigs(sigs, 3, sink, 128)
+      assert(pairSet(flat) == plain)
+      assert(!flat.queryExecution.analyzed.toString.contains("__d__"),
+        "flat corpus must take the probe short-circuit (no depth join)")
+      // control: a bucket deeper than the cap must engage the tagged
+      // recursion (the join on the per-bucket __d__ count reaches the
+      // plan)
+      val deep = SimHash.verifiedEdgesFromSigs(sigs, 3, sink, 16)
+      assert(pairSet(deep) == plain)
+      assert(deep.queryExecution.analyzed.toString.contains("__d__"),
+        "deep bucket must engage the depth-tagged recursion")
+    }
   }
 
   test("null sigs still survive and never cluster under the bounded path") {
     val df = spark.range(10).select(col("id"),
       when(col("id") < 5, lit(7L)).otherwise(lit(null)).as("sig"))
-    val edges = SimHash.verifiedEdgesFromSigs(df, 3, 16)
     // ids 0-4 share sig 7 → ident stars to 0; null rows produce nothing
-    assert(pairSet(edges) == Set((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)))
+    assert(pairSet(df, 3, 16) == Set((1L, 0L), (2L, 0L), (3L, 0L), (4L, 0L)))
   }
 }

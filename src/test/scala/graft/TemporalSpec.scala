@@ -68,30 +68,6 @@ class TemporalSpec extends AnyFunSuite {
       (30L, None)))       // nothing after 25
   }
 
-  test("saltedJoin matches the plain join (inner and left)") {
-    import spark.implicits._
-    // skewed left: one hot key
-    val left = ((1 to 500).map(i => (1L, i)) ++ Seq((2L, 0), (3L, 7)))
-      .toDF("k", "x")
-    val right = Seq((1L, "a"), (1L, "b"), (2L, "c"), (9L, "z"))
-      .toDF("k", "y")
-    for (jt <- Seq("inner", "left")) {
-      val plain = left.join(right, Seq("k"), jt)
-        .select("k", "x", "y").collect()
-        .map(r => (r.getLong(0), r.getInt(1), Option(r.getString(2))))
-        .sorted.toSeq
-      val salted = graft.pipeline.Skew
-        .saltedJoin(left, right, "k", saltBuckets = 8, joinType = jt)
-        .select("k", "x", "y").collect()
-        .map(r => (r.getLong(0), r.getInt(1), Option(r.getString(2))))
-        .sorted.toSeq
-      assert(salted === plain, s"joinType=$jt")
-    }
-    intercept[IllegalArgumentException] {
-      graft.pipeline.Skew.saltedJoin(left, right, "k", 8, "full_outer")
-    }
-  }
-
   test("sessionize splits on gaps > maxGap and keeps boundaries inclusive") {
     import spark.implicits._
     // gaps: 100 (== maxGap, same session), 101 (new session)
