@@ -48,8 +48,7 @@ object Queries {
 
   private def docs(s: SparkSession, dir: String) = table(s, dir, "documents")
 
-  /** Escape a string for a single-quoted DuckDB literal. */
-  private def q(s: String): String = "'" + s.replace("'", "''") + "'"
+  import OracleSql.q
 
   // ------------------------------------------------------------------
   // Shared synthetic "document" constructions. documents.text is clean

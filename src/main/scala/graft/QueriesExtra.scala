@@ -117,7 +117,7 @@ object QueriesExtra {
     },
     Some {
       import graft.text.Pii
-      val q = (s: String) => "'" + s.replace("'", "''") + "'"
+      import OracleSql.q
       val injected = "(CASE WHEN doc_id%3=0 THEN 'contact user' || " +
         "(doc_id%7) || '@example.com asap ' ELSE '' END) || " +
         "substr(text, 1, 80) || (CASE WHEN doc_id%4=0 THEN ' from 10.0.'" +

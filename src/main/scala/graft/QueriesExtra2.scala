@@ -424,7 +424,7 @@ object QueriesExtra2 {
       edges: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     graft.dedup.Clustering.run(corpus, Some(idCol), 10000000L,
-      graft.dedup.Clustering.Pin.Released)((withId, _) =>
+      graft.dedup.Clustering.Pin.Released)(withId =>
       SideChannel.through(edges(withId),
         SideChannel.once(dedupEdgesPath(variant, scaleKey(dir)))))(
       // lineage cut so the id cache can release

@@ -105,8 +105,7 @@ object QueriesFlagshipOracle {
     SideChannel.exportOnce(path)(
       MinHashDedup.bandedFrame(rendered, "response", cfg, Some("__mid__")))
     Clustering.run(rendered, Some("__mid__"), 10000000L, Clustering.Pin.Held)(
-        (withId, sink) => MinHashDedup.candidateEdges(withId, "response",
-          cfg, sink))(_.keep(_))
+        MinHashDedup.candidateEdges(_, "response", cfg))(_.keep(_))
       .where(Filters.checkLowercaseRatio(0.55).keep(col("instruction")))
       .select(col("source"), col("rendered"))
       .orderBy("source", "rendered")

@@ -103,30 +103,9 @@ private[graft] object Clustering {
     case object Released extends Pin
   }
 
-  /** Frames an edge builder pinned (skew-probe banded frame,
-    * hamming-guard frontiers, a store path's banded frame), released by
-    * [[withCacheRelease]].
-    */
-  type Sink = mutable.Buffer[DataFrame]
-
-  /** Run `body` with a fresh [[Sink]], then release every frame it
-    * collected (VERDICT r13 #3 / ADVICE r13). Safe once a [[Clustering]]
-    * is built: building it fully materializes the edge frame (driver
-    * collect, or the distributed min-label loop whose roots are
-    * checkpointed), so the released caches are never re-read. A
-    * long-lived session calling dedup repeatedly therefore never
-    * accumulates one pinned |corpus|×bands cache per call.
-    */
-  def withCacheRelease[A](body: Sink => A): A = {
-    val sink = mutable.Buffer.empty[DataFrame]
-    try body(sink)
-    finally sink.foreach(_.unpersist())
-  }
-
   /** The one entry-point shape every dedup family shares: attach ids,
-    * build the family's edges over them (`edges` gets the id frame and a
-    * [[Sink]]), cluster the edges ONCE, derive the output, then release
-    * what was pinned — the sink's frames always.
+    * build the family's edges over them, cluster the edges ONCE, derive
+    * the output.
     *
     * The corpus pin: every family scans the id frame at least twice
     * (edge building + the output). A held pin ([[Pin]]) is a LAZY local
@@ -138,27 +117,25 @@ private[graft] object Clustering {
     * keyed by plan and shared across the session, so a `persist()` pin
     * is shared by two calls over one frame and dropped by either one's
     * release). Every other pin is a `persist()` released before `run`
-    * returns.
+    * returns. A frame an edge builder pins (the skew probe's banded
+    * frame, the hamming guard's frontiers, a store path's banded frame)
+    * is a lazy local checkpoint the same way, owned by the edge frame
+    * that reads it: building the [[Clustering]] fully materializes the
+    * edges, so nothing re-reads those blocks, and ContextCleaner frees
+    * them once the edge frame is dropped.
     */
   def run[A](df: DataFrame, orderCol: Option[String], maxDriverEdges: Long,
       pin: Pin = Pin.IfStable, idOffset: Long = 0L)(
-      edges: (DataFrame, Sink) => DataFrame)(
+      edges: DataFrame => DataFrame)(
       output: (Clustering, DataFrame) => A): A = {
     val held = pin == Pin.Held || pin == Pin.IfStable && orderCol.isEmpty
     val withId =
       if (held) withIds(df, orderCol, idOffset).localCheckpoint(eager = false)
       else assignId(df, orderCol, idOffset)
-    val out = withCacheRelease { sink =>
-      output(of(edges(withId, sink), maxDriverEdges), withId)
-    }
+    val out = output(of(edges(withId), maxDriverEdges), withId)
     if (!held) withId.unpersist()
     out
   }
-
-  /** Edge list → kept rows, for callers that already hold `withId`. */
-  def keepFirst(withId: DataFrame, edges: DataFrame,
-      maxDriverEdges: Long): DataFrame =
-    of(edges, maxDriverEdges).keep(withId)
 
   private val MarkCol = "__graft_dedup_new__"
   private val OrderCol = "__graft_dedup_order__"
@@ -175,7 +152,7 @@ private[graft] object Clustering {
     * order column is synthetic even though it is named.
     */
   def against(newDf: DataFrame, refDf: DataFrame, maxDriverEdges: Long)(
-      edges: (DataFrame, Sink) => DataFrame): DataFrame = {
+      edges: DataFrame => DataFrame): DataFrame = {
     val tagged = refDf
       .selectExpr(newDf.columns.map(c => s"`$c`").toIndexedSeq: _*)
       .withColumn(MarkCol, lit(false))
@@ -190,12 +167,13 @@ private[graft] object Clustering {
     * `orderCol` (or row order) + `newIdOffset`, `edges` links increment
     * rows to each other and to store ids (all below the offset), and the
     * surviving rows — |increment|-bounded — are localCheckpointed before
-    * every cache is released. The per-batch caller this shape serves must
-    * not accumulate cached frames across batches (ADVICE r10).
+    * the id cache is released, so nothing the call pinned stays
+    * referenced. The per-batch caller this shape serves must not
+    * accumulate cached frames across batches (ADVICE r10).
     */
   def againstStore(newDf: DataFrame, orderCol: Option[String],
       newIdOffset: Long, maxDriverEdges: Long)(
-      edges: (DataFrame, Sink) => DataFrame): DataFrame =
+      edges: DataFrame => DataFrame): DataFrame =
     run(newDf, orderCol, maxDriverEdges, Pin.Released, newIdOffset)(edges)(
       _.keep(_).localCheckpoint(true))
 
@@ -320,7 +298,10 @@ private[graft] object Clustering {
 
   /** Probe + cluster an edge frame ONCE: the bounded-head collect decides
     * driver UnionFind vs distributed min-label. The edge frame is
-    * persisted for the probe and released before returning.
+    * persisted for the probe and released before returning. Either
+    * result holds no reference to the edges (a driver map, or roots
+    * checkpointed eagerly), so the frames an edge builder pinned are
+    * never read again and ContextCleaner frees them with the edges.
     */
   def of(edgesRaw: DataFrame, maxDriverEdges: Long): Clustering = {
     val edges = edgesRaw.toDF("__x__", "__y__").persist()

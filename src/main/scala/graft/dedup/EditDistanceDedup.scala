@@ -52,18 +52,17 @@ object EditDistanceDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
-    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdges(withId, column, n, threshold, cfg, sink))(_.keep(_))
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      verifiedEdges(_, column, n, threshold, cfg))(_.keep(_))
 
   /** Levenshtein-verified candidate pairs — the edge list feeding the
-    * clustering. `cacheSink` collects the frames the skew probe pins,
-    * for entry-point release.
+    * clustering. Under `cfg.skewProbe` the banded frame is pinned for
+    * the probe, a pin the returned edges own.
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
-      n: Int, threshold: Double, cfg: MinHashConfig,
-      cacheSink: Clustering.Sink): DataFrame =
+      n: Int, threshold: Double, cfg: MinHashConfig): DataFrame =
     MinHashDedup.verifiedCandidates(withId, column,
-      cfg.copy(ngramSize = n, minNgramSize = n), cacheSink)(
+      cfg.copy(ngramSize = n, minNgramSize = n))(
       levSimilarity(_, _) >= threshold)
 
   /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates

@@ -42,8 +42,8 @@ object EmbeddingDedup {
       threshold: Double,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
-    Clustering.run(df, orderCol, maxDriverEdges)((withId, _) =>
-      verifiedEdges(withId, embCol, blockCol, threshold))(_.keep(_))
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      verifiedEdges(_, embCol, blockCol, threshold))(_.keep(_))
 
   /** Above-threshold within-block cosine pairs — the verified edge list
     * feeding the clustering. Exposed for the keep-first invariant specs.

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object MinHashDedup {
 
-  import Clustering.{IdCol, Pin, Sink}
+  import Clustering.{IdCol, Pin}
 
   def signatureColumn(cfg: MinHashConfig): Column => Column = {
     val (b, r) = OptimalParam(cfg.threshold, cfg.numPerm)
@@ -49,22 +49,32 @@ object MinHashDedup {
   /** Star edges (member, bucket-min) per duplicate bucket from an
     * exploded (id, band, bsig) frame. Streaming window aggregate — one
     * shuffle on (band, bsig), no per-bucket array; hot buckets spill.
-    * `skewProbe` first runs [[probeSkewDeep]] and routes a frame with a
-    * bucket at or above [[MinHashConfig.SkewDepthThreshold]] to
-    * [[bucketMinEdgesAgg]]; the probe's pinned frame goes to `cacheSink`.
+    * `skewProbe` pins the frame — a lazy local checkpoint the returned
+    * edges own — and hands the pin to [[probedBucketMinEdges]].
     */
-  private[graft] def bucketMinEdges(banded: DataFrame, skewProbe: Boolean,
-      cacheSink: Sink): DataFrame =
-    if (skewProbe && probeSkewDeep(banded, cacheSink))
-      bucketMinEdgesAgg(banded) // probe already persisted the frame
-    else {
-      val w = Window.partitionBy("band", "bsig")
-      banded.repartition(parallelism(banded), col("band"), col("bsig"))
-        .withColumn("__min__", min(col("id")).over(w))
-        .where(col("id") =!= col("__min__"))
-        .select(col("id").as("__x__"), col("__min__").as("__y__"))
-        .distinct()
-    }
+  private[graft] def bucketMinEdges(banded: DataFrame,
+      skewProbe: Boolean): DataFrame =
+    if (skewProbe) probedBucketMinEdges(banded.localCheckpoint(eager = false))
+    else windowBucketMinEdges(banded)
+
+  /** [[probeSkewDeep]] over an already pinned banded frame, then the
+    * edges: [[bucketMinEdgesAgg]] at or above
+    * [[MinHashConfig.SkewDepthThreshold]], the plain window below. The
+    * probe and either edge form read the one pin, so the signatures
+    * upstream of it are computed once.
+    */
+  private def probedBucketMinEdges(pinned: DataFrame): DataFrame =
+    if (probeSkewDeep(pinned)) bucketMinEdgesAgg(pinned)
+    else windowBucketMinEdges(pinned)
+
+  private def windowBucketMinEdges(banded: DataFrame): DataFrame = {
+    val w = Window.partitionBy("band", "bsig")
+    banded.repartition(parallelism(banded), col("band"), col("bsig"))
+      .withColumn("__min__", min(col("id")).over(w))
+      .where(col("id") =!= col("__min__"))
+      .select(col("id").as("__x__"), col("__min__").as("__y__"))
+      .distinct()
+  }
 
   /** AUTO skew decision (VERDICT r12 #1: "auto-enabled from a cheap
     * bucket-depth probe"): max (band, bsig) bucket depth via ONE
@@ -72,16 +82,11 @@ object MinHashDedup {
     * carries ≤ one row per (bucket, mapper), so the probe never has a
     * hot reducer itself — true iff the deepest bucket clears the
     * measured [[MinHashConfig.SkewDepthThreshold]] crossover, routing
-    * the caller to [[bucketMinEdgesAgg]]. The frame is persisted first
-    * (the probe is an extra scan; without the cache it would re-run
-    * the signature UDFs) and registered with `cacheSink` so the entry
-    * point can release it after edge materialization.
+    * the caller to [[bucketMinEdgesAgg]]. The probe is an extra scan:
+    * callers pass a pinned frame, or it re-runs the signature UDFs.
     */
-  private[graft] def probeSkewDeep(banded: DataFrame,
-      cacheSink: Sink): Boolean = {
-    val pinned = banded.persist()
-    cacheSink += pinned
-    val maxDepth = pinned
+  private[graft] def probeSkewDeep(banded: DataFrame): Boolean = {
+    val maxDepth = banded
       .groupBy("band", "bsig").agg(count(lit(1)).as("__d__"))
       .agg(coalesce(max(col("__d__")), lit(0L)))
       .collect()(0).getLong(0)
@@ -104,9 +109,9 @@ object MinHashDedup {
     * end-to-end. The edge SET is IDENTICAL to the plain window's (the
     * same member → bucket-min stars) — SkewSoakSpec pins frame-level
     * equality. Cost: the banded frame is consumed twice (agg + join), so
-    * callers persist it — [[probeSkewDeep]] already has (its probe is
+    * callers pin it — [[probedBucketMinEdges]] already has (its probe is
     * the same aggregation shape, so by the time this runs the frame is
-    * cached and the agg is the probe re-run plus the join).
+    * stored and the agg is the probe re-run plus the join).
     */
   private[graft] def bucketMinEdgesAgg(banded: DataFrame): DataFrame = {
     val mins = banded.groupBy("band", "bsig")
@@ -134,7 +139,7 @@ object MinHashDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges, Pin.Released)(
-      candidates(column, cfg))(_.histogram(_))
+      candidateEdges(_, column, cfg))(_.histogram(_))
 
   /** One clustering pass, two outputs: (kept rows, cluster-size
     * histogram). Calling [[deduplicate]] and [[clusterSizeStats]]
@@ -167,7 +172,7 @@ object MinHashDedup {
     // The pin is a lazy local checkpoint owned by the kept frame: freed
     // once the caller drops it, never shared with another call's pin.
     Clustering.run(df, orderCol, maxDriverEdges, Pin.Held)(
-      candidates(column, cfg))((c, withId) =>
+      candidateEdges(_, column, cfg))((c, withId) =>
       (c.keep(withId), c.histogram(withId)))
 
   /** PUBLIC (id, root) cluster-membership frame — every row maps to its
@@ -185,7 +190,7 @@ object MinHashDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg))(_.roots(_))
+      candidateEdges(_, column, cfg))(_.roots(_))
 
   /** Duplication-aware SOFT dedup: keep each cluster's first row and
     * attach `weight` = cluster size instead of silently discarding the
@@ -209,7 +214,7 @@ object MinHashDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg))(_.weighted(_))
+      candidateEdges(_, column, cfg))(_.weighted(_))
 
   /** Near-dedup `df` on `column`, keeping each cluster's first row
     * (min id == first in row order, matching the reference's contiguous-id
@@ -237,12 +242,7 @@ object MinHashDedup {
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
     Clustering.run(df, orderCol, maxDriverEdges)(
-      candidates(column, cfg))(_.keep(_))
-
-  /** [[candidateEdges]] as a [[Clustering.run]] edge builder. */
-  private def candidates(column: String,
-      cfg: MinHashConfig): (DataFrame, Sink) => DataFrame =
-    (withId, sink) => candidateEdges(withId, column, cfg, sink)
+      candidateEdges(_, column, cfg))(_.keep(_))
 
   /** The candidate edge list feeding the clustering (identical-class star
     * edges + LSH band collisions — candidates, not verified pairs: the
@@ -252,9 +252,9 @@ object MinHashDedup {
     * (QueriesExtra2.minhashCtes).
     */
   private[graft] def candidateEdges(withId: DataFrame, column: String,
-      cfg: MinHashConfig, cacheSink: Sink): DataFrame = {
+      cfg: MinHashConfig): DataFrame = {
     val (identEdges, banded) = classEdgesAndBanded(withId, column, cfg)
-    bucketMinEdges(banded, cfg.skewProbe, cacheSink).union(identEdges)
+    bucketMinEdges(banded, cfg.skewProbe).union(identEdges)
   }
 
   /** LSH candidates verified by an exact pair predicate — the one body
@@ -270,14 +270,12 @@ object MinHashDedup {
     * the pair iff `verified(textA, textB)`. ALL verified pairs go to
     * clustering (multi-edges are fine for both union-find and min-label
     * propagation); a per-node min-reduction would drop cross-links and
-    * over-keep vs transitive clustering. `cacheSink` collects the frames
-    * the skew probe pins, for entry-point release.
+    * over-keep vs transitive clustering.
     */
   private[dedup] def verifiedCandidates(withId: DataFrame, column: String,
-      sigCfg: MinHashConfig, cacheSink: Sink)(
+      sigCfg: MinHashConfig)(
       verified: (Column, Column) => Column): DataFrame =
-    bucketMinEdges(gatedBanded(withId, column, sigCfg), sigCfg.skewProbe,
-        cacheSink)
+    bucketMinEdges(gatedBanded(withId, column, sigCfg), sigCfg.skewProbe)
       .join(withId.select(col(IdCol).as("__x__"), col(column).as("__ta__")),
         Seq("__x__"))
       .join(withId.select(col(IdCol).as("__y__"), col(column).as("__tb__")),
@@ -385,7 +383,7 @@ object MinHashDedup {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L): DataFrame =
     Clustering.against(newDf, refDf, maxDriverEdges)(
-      candidates(column, cfg))
+      candidateEdges(_, column, cfg))
 
   /** The increment side's id offset: see [[Clustering.NewIdOffset]]. */
   val NewIdOffset: Long = Clustering.NewIdOffset
@@ -517,8 +515,8 @@ object MinHashDedup {
     *    bsig) rows against the store's occupied buckets — any collision
     *    links the new row to a retained id, which can never be its
     *    cluster min (ids offset by `newIdOffset`), so the row drops.
-    * The increment's banded frame is computed ONCE (persisted) and feeds
-    * both edge families; the store-side join is broadcast-able when the
+    * The increment's banded frame is computed ONCE (pinned) and feeds
+    * both edge families, and the skew probe when `cfg.skewProbe` is set; the store-side join is broadcast-able when the
     * increment is small and co-located when the store is bucket-published
     * on (band, bsig).
     *
@@ -529,9 +527,10 @@ object MinHashDedup {
     * and ids already above the store's.
     *
     * EAGER: the surviving rows (|increment|-bounded) are materialized via
-    * localCheckpoint and the internal withId/banded caches released
-    * before returning — the per-batch caller this API targets must not
-    * accumulate cached frames across batches (see [[clusterSizeStats]]).
+    * localCheckpoint and the withId cache released before returning; the
+    * banded pin belongs to the dropped edges, so ContextCleaner frees it
+    * — the per-batch caller this API targets must not accumulate cached
+    * frames across batches (see [[clusterSizeStats]]).
     */
   def deduplicateAgainstStore(newDf: DataFrame, store: DataFrame,
       column: String, cfg: MinHashConfig = MinHashConfig(),
@@ -539,20 +538,20 @@ object MinHashDedup {
       orderCol: Option[String] = None,
       newIdOffset: Long = NewIdOffset): DataFrame =
     Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
-      (withId, sink) =>
+      withId =>
         val (identEdges, banded0) = classEdgesAndBanded(withId, column, cfg)
         // one signature pass feeds both the within-increment bucket edges
-        // and the store join: persist — |increment|×bands rows, the frame
-        // a nightly run would append to the store afterwards anyway.
-        // Every frame pinned here or by the skew machinery goes to the
-        // sink (ADVICE r13), released once the survivors are checkpointed.
-        val banded = banded0.persist()
-        sink += banded
+        // and the store join: pin — |increment|×bands rows, the frame a
+        // nightly run would append to the store afterwards anyway. The
+        // skew probe reads this pin too instead of storing a second copy.
+        val banded = banded0.localCheckpoint(eager = false)
         val crossEdges = banded
           .join(store.withColumnRenamed("id", "__sid__"), Seq("band", "bsig"))
           .select(col("id").as("__x__"), col("__sid__").as("__y__"))
           .distinct()
-        bucketMinEdges(banded, cfg.skewProbe, sink)
-          .union(identEdges).union(crossEdges)
+        val withinEdges =
+          if (cfg.skewProbe) probedBucketMinEdges(banded)
+          else windowBucketMinEdges(banded)
+        withinEdges.union(identEdges).union(crossEdges)
     }
 }

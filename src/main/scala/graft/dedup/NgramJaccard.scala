@@ -92,19 +92,18 @@ object NgramJaccard {
       cfg: MinHashConfig = MinHashConfig(),
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
-    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdges(withId, column, n, threshold, cfg, sink))(_.keep(_))
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      verifiedEdges(_, column, n, threshold, cfg))(_.keep(_))
 
   /** Exact-Jaccard-verified candidate pairs — the edge list feeding the
     * clustering. Exposed for the keep-first invariant specs. The verify
     * is the single-pass JVM kernel [[jaccardDocs]].
     */
   private[graft] def verifiedEdges(withId: DataFrame, column: String,
-      n: Int, threshold: Double, cfg: MinHashConfig,
-      cacheSink: Clustering.Sink): DataFrame = {
+      n: Int, threshold: Double, cfg: MinHashConfig): DataFrame = {
     val jac = udf { (a: String, b: String) => jaccardDocs(a, b, n) }
     MinHashDedup.verifiedCandidates(withId, column,
-      sigCfg(n, threshold, cfg), cacheSink)(jac(_, _) >= threshold)
+      sigCfg(n, threshold, cfg))(jac(_, _) >= threshold)
   }
 
   /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates

@@ -52,7 +52,7 @@ object SemDedup {
       threshold: Double, iters: Int = 3, trainFraction: Double = 1.0,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
-    Clustering.run(df, orderCol, maxDriverEdges)((withId, _) =>
-      verifiedEdges(withId, embCol, k, threshold, iters, trainFraction))(
+    Clustering.run(df, orderCol, maxDriverEdges)(
+      verifiedEdges(_, embCol, k, threshold, iters, trainFraction))(
       _.keep(_))
 }

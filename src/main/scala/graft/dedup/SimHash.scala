@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object SimHash {
 
-  import Clustering.{IdCol, Sink}
+  import Clustering.IdCol
 
   /** FNV-1a 64-bit — public-domain hash, stable across JVMs. */
   def fnv1a64(s: String): Long = {
@@ -73,16 +73,6 @@ object SimHash {
       orderCol: Option[String] = None): DataFrame =
     deduplicateBySig(df, column, signature, maxHamming, maxDriverEdges,
       orderCol)
-
-  /** The verified edge list feeding the clustering: hamming-0 star edges
-    * plus band-join pairs checked at ≤ `maxHamming` bits. Exposed for the
-    * keep-first invariant specs — the component-min of exactly these edges
-    * IS the kept set.
-    */
-  private[graft] def verifiedEdges(withId: DataFrame, column: String,
-      maxHamming: Int, cacheSink: Sink): DataFrame =
-    verifiedEdgesFromSigs(sigsOf(withId, column, signature), maxHamming,
-      cacheSink)
 
   /** The (id, sig) frame of an id-carrying frame. */
   private def sigsOf(withId: DataFrame, column: String,
@@ -142,15 +132,14 @@ object SimHash {
     * map-side-combined max-depth probe over the banded frame — no
     * depth tagging, no window (r14; the r13 unconditional window count
     * cost `incr_img_dedup` ~0.3 s on a flat corpus). The frame is
-    * (k+1)×reps narrow rows, persisted (`cacheSink` lets the entry
-    * points release those caches once the clustering materialized).
+    * (k+1)×reps narrow rows, pinned per level as a lazy local
+    * checkpoint that the returned edges own (freed with them).
     * The store-side cross join
     * ([[crossEdgesPreBanded]]) is a different shape (increment ×
     * store, bounded by the increment) and keeps the plain join.
     */
   private[graft] def verifiedEdgesFromSigs(sigsRaw: DataFrame,
-      maxHamming: Int, cacheSink: Sink,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
+      maxHamming: Int, bucketCap: Int = DefaultBucketCap): DataFrame = {
     val bands = maxHamming + 1
     val width = 64 / bands
     val sigs = sigsRaw.where(col("sig").isNotNull)
@@ -186,8 +175,7 @@ object SimHash {
             s"band * $width) END")
             .bitwiseOR(col("sig").bitwiseAND(
               expr(s"shiftleft(1L, band * $width) - 1L")))).as("rem"))
-        boundedBucketPairs(level0, 64 - width, maxHamming, bucketCap,
-          cacheSink)
+        boundedBucketPairs(level0, 64 - width, maxHamming, bucketCap)
       }
     // ALL verified pairs feed the clustering (union-find and the
     // distributed min-label path both absorb multi-edges/duplicates):
@@ -218,8 +206,7 @@ object SimHash {
     * and distinct sigs confined to w free bits number ≤ 2^w).
     */
   private def boundedBucketPairs(level0: DataFrame, remWidth0: Int,
-      maxHamming: Int, bucketCap: Int,
-      cacheSink: Sink): DataFrame = {
+      maxHamming: Int, bucketCap: Int): DataFrame = {
     val bands = maxHamming + 1
     def verify(b: DataFrame): DataFrame =
       b.select(col("bkey"), col("id").as("__ida__"),
@@ -236,11 +223,11 @@ object SimHash {
     var done = false
     while (!done) {
       val sw = rw / bands // sub-chunk width; 0 = cannot split further
-      // persisted: the probe is an extra scan, and every branch below
+      // pinned: the probe is an extra scan, and every branch below
       // re-reads the frontier at least once (verify self-join / depth
-      // join) — without the cache the signature stage upstream re-runs
-      val cached = frontier.select("bkey", "id", "sig", "rem").persist()
-      cacheSink += cached
+      // join) — without the pin the signature stage upstream re-runs
+      val cached = frontier.select("bkey", "id", "sig", "rem")
+        .localCheckpoint(eager = false)
       // r20 (guide §1.2/§2.4 — remove jobs from the common path): ONE
       // job decides flat vs deep — max depth via two nested map-side-
       // combined aggregations (no skew hazard: the inner agg emits ≤ one
@@ -250,8 +237,8 @@ object SimHash {
       // designed to be ~free on — paid a checkpoint job + block writes
       // + a second collect job for a frame it then discarded. The depth
       // frame is now materialized only on the DEEP branch; that branch
-      // re-runs the depth aggregation once, but over the PERSISTED
-      // frontier (a cache scan — r14's double-agg concern was the
+      // re-runs the depth aggregation once, but over the PINNED
+      // frontier (a block scan — r14's double-agg concern was the
       // unpersisted form re-running the signature stage), and deep
       // corpora already pay a per-level shuffle that dwarfs it.
       val maxDepth = cached.groupBy("bkey").agg(count(lit(1)).as("__d__"))
@@ -269,9 +256,9 @@ object SimHash {
         // localCheckpoint, not persist: the recursion's per-level
         // lineage nests InMemoryRelations (each of which re-prints its
         // whole child plan), and an extra cached layer per level pushed
-        // plan-string generation exponential — eager checkpoint
-        // truncates depths to an RDD scan, so the level plan carries
-        // ONE cached branch. Blocks are tiny and GC-reaped.
+        // plan-string generation exponential — like the frontier pin,
+        // the checkpoint truncates depths to an RDD scan, so no level
+        // plan nests a cached one. Blocks are tiny and GC-reaped.
         val depths = cached.groupBy("bkey").agg(count(lit(1)).as("__d__"))
           .localCheckpoint(true)
         val tagged = cached.join(depths, Seq("bkey"))
@@ -302,17 +289,18 @@ object SimHash {
     * dedups ([[graft.multimodal.ImageHash.deduplicateByDHash]] and
     * siblings): signature column, shared pigeonhole edges, shared
     * [[Clustering]] crossover; null signatures (undecodable payloads)
-    * always survive. The bounded guard's per-level frontier caches are
-    * released once the clustering materialized (VERDICT r14 #5).
+    * always survive. The bounded guard's per-level frontier pins belong
+    * to the edge frame, so ContextCleaner frees them once the clustering
+    * materialized and dropped it (VERDICT r14 #5).
     */
   def deduplicateBySig(df: DataFrame, column: String,
       sigOf: Column => Column,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L,
       orderCol: Option[String] = None): DataFrame =
-    Clustering.run(df, orderCol, maxDriverEdges)((withId, sink) =>
-      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
-        sink))(_.keep(_))
+    Clustering.run(df, orderCol, maxDriverEdges)(withId =>
+      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming))(
+      _.keep(_))
 
   // ------------------------------------------------------------------
   // Persisted SIGNATURE store — the hamming family's twin of
@@ -440,8 +428,8 @@ object SimHash {
     * retained (via the persisted store) or of earlier `newDf` rows;
     * return the surviving `newDf` rows. Store ids must be <
     * `newIdOffset`; `orderCol` unique non-null Longs. Null-signature
-    * rows always survive. EAGER: survivors localCheckpointed, internal
-    * caches released (the per-batch nightly caller must not accumulate
+    * rows always survive. EAGER: survivors localCheckpointed, nothing
+    * else left pinned (the per-batch nightly caller must not accumulate
     * cached frames).
     */
   def deduplicateAgainstSigStore(newDf: DataFrame, store: DataFrame,
@@ -479,10 +467,9 @@ object SimHash {
       orderCol: Option[String], newIdOffset: Long)(
       crossOf: DataFrame => DataFrame): DataFrame =
     Clustering.againstStore(newDf, orderCol, newIdOffset, maxDriverEdges) {
-      (withId, sink) =>
+      withId =>
         val sigs = sigsOf(withId, column, sigOf)
-        verifiedEdgesFromSigs(sigs, maxHamming, sink)
-          .union(crossOf(sigs))
+        verifiedEdgesFromSigs(sigs, maxHamming).union(crossOf(sigs))
     }
 
   /** Recompute-path incremental dedup (the spec twin of
@@ -496,7 +483,6 @@ object SimHash {
       sigOf: Column => Column = signature,
       maxHamming: Int = 3,
       maxDriverEdges: Long = 10_000_000L): DataFrame =
-    Clustering.against(newDf, refDf, maxDriverEdges)((withId, sink) =>
-      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming,
-        sink))
+    Clustering.against(newDf, refDf, maxDriverEdges)(withId =>
+      verifiedEdgesFromSigs(sigsOf(withId, column, sigOf), maxHamming))
 }

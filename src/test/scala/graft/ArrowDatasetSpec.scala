@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,13 +17,7 @@ import graft.sources.{ArrowDataset, Sources}
   * The expected values below mirror the generator verbatim; change them
   * together.
   */
-class ArrowDatasetSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
 
   private def resourceDir(name: String): String = {
     val url = getClass.getClassLoader.getResource(name)

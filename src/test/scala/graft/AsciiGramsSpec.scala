@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.text.AsciiGrams
   * Kelvin K lowers to ASCII 'k' (token char!) and İ to i + combining
   * dot, so a byte-level shortcut on the RAW text would diverge.
   */
-class AsciiGramsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsciiGramsSpec extends AnyFunSuite with SharedSession {
 
   private def texts = Seq(
     "", " ", "___", "The Quick  Brown-Fox_1 jumps!",

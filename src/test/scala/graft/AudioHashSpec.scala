@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.AudioHash
@@ -9,14 +8,7 @@ import graft.multimodal.AudioHash
   * perceptual-dedup semantics (the [[ImageHashSpec]] battery transposed
   * to WAV clips).
   */
-class AudioHashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class AudioHashSpec extends AnyFunSuite with SharedSession {
 
   private def wav(samples: Array[Short], channels: Int = 1,
       format: Int = 1, bits: Int = 16,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.Bpe
@@ -9,15 +8,7 @@ import graft.text.Bpe
   * loop is the one step the bpe_encode_tokens oracle does not re-derive
   * in SQL, so it is pinned here instead.
   */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SharedSession {
 
   // Sennrich et al. 2016 §3.2 corpus. Weighted pair counts by hand:
   //   round 1: es=9, st=9, t</w>=9 -> tie, lexicographic min = (e,s)

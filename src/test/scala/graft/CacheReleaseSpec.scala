@@ -1,21 +1,23 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{EditDistanceDedup, MinHashConfig, MinHashDedup,
-  NgramJaccard, SimHash}
+import graft.dedup.{Clustering, EditDistanceDedup, MinHashConfig,
+  MinHashDedup, NgramJaccard, SimHash}
 import graft.pipeline.Runner
 
 /** The cache-release proof promised as r13 #6's done-criterion (VERDICT
   * r14 what's-wrong #3 / next-round #5): a long-lived driver — the store
   * API's whole premise is a nightly session calling dedup over and over —
-  * must not accumulate pinned caches across calls. The skew probe
-  * persists |corpus|×bands frames that only `withCacheRelease` frees;
-  * before r14 every call leaked one, and the ADVICE r14 follow-up found
-  * the EditDistance/NgramJaccard entry points still leaking after the
-  * minhash trunk was fixed.
+  * must not accumulate pinned caches across calls. The skew probe pins
+  * |corpus|×bands frames; before r14 every call leaked one, and the
+  * ADVICE r14 follow-up found the EditDistance/NgramJaccard entry points
+  * still leaking after the minhash trunk was fixed. Those pins are now
+  * lazy local checkpoints owned by the edge frames that read them, so
+  * ContextCleaner frees them even when an edge builder is called
+  * directly and nothing releases anything.
   *
   * The loop makes every call's plan UNIQUE (a per-round literal suffix):
   * Spark's CacheManager dedupes persist() by logical plan, so repeated
@@ -27,14 +29,7 @@ import graft.pipeline.Runner
   * reaps dropped localCheckpoint blocks asynchronously, so the final
   * measurement retries over gc cycles instead of reading once.
   */
-class CacheReleaseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class CacheReleaseSpec extends AnyFunSuite with SharedSession {
 
   private val Cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
   private val Probed = Cfg.copy(skewProbe = true)
@@ -106,7 +101,7 @@ class CacheReleaseSpec extends AnyFunSuite {
         orderCol = Some("doc_id"))).persist()
     assert(store.count() > 0)
 
-    def call(i: Int): Long = (i % 6) match {
+    def call(i: Int): Long = (i % 8) match {
       case 0 => // the probe pins the banded frame (flat → window)
         MinHashDedup.deduplicate(corpus(i), "text", Probed,
           orderCol = Some("doc_id")).count()
@@ -124,20 +119,28 @@ class CacheReleaseSpec extends AnyFunSuite {
         NgramJaccard.deduplicate(corpus(i), "text", n = 3,
           threshold = 0.5, cfg = Probed,
           orderCol = Some("doc_id")).count()
-      case _ => // hamming family: bounded-guard frontier caches release
+      case 5 => // hamming family: bounded-guard frontier pins
         SimHash.deduplicate(corpus(i), "text", maxHamming = 3,
           orderCol = Some("doc_id")).count()
+      case 6 => // an edge builder alone: the probe's pin, no caller
+        MinHashDedup.candidateEdges(
+          Clustering.withIds(corpus(i), Some("doc_id")), "text", Probed)
+          .count()
+      case _ => // an edge builder alone: the frontier pins, no caller
+        SimHash.verifiedEdgesFromSigs(corpus(i).select(
+          col("doc_id").as("id"), SimHash.signature(col("text")).as("sig")),
+          3).count()
     }
 
-    (0 until 6).foreach(call) // warmup: steady-state pins settle
+    (0 until 8).foreach(call) // warmup: steady-state pins settle
     val baseline = settledFloor() // just settle, record floor
-    (6 until 50).foreach(call)
-    // 44 varied-plan calls after baseline: a per-call leak adds ≥ 1
-    // entry per call (≈ +44); bounded means a small constant of
+    (8 until 50).foreach(call)
+    // 42 varied-plan calls after baseline: a per-call leak adds ≥ 1
+    // entry per call (≈ +42); bounded means a small constant of
     // still-referenced frames (the store + cleaner stragglers)
     val after = settledCount(atMost = baseline + 8)
     assert(after <= baseline + 8,
-      s"pinned caches grew $baseline -> $after over 44 calls — " +
+      s"pinned caches grew $baseline -> $after over 42 calls — " +
         "a dedup entry point is leaking persisted frames")
     store.unpersist()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.scoring.NaiveBayes
   * quantization — the one step the DuckDB oracle does not re-derive —
   * argmax/tie-break/OOV semantics) and the token-budget mixture ops.
   */
-class ClassifierSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class ClassifierSpec extends AnyFunSuite with SharedSession {
 
   // 4 docs, 2 labels; df: b->3 a->2 d->2 c->1; V=3 keeps (b, a, d) —
   // exercises truncation AND the df-tie token-asc break (a vs d at df=2)

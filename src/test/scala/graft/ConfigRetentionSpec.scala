@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{MinHashConfig, MinHashDedup}
@@ -12,14 +12,7 @@ import graft.pipeline.{MiniYaml, PipelineConfig, Preprocessor, Retention}
   * publish the banded journal of the kept rows; a `retention:` block
   * then deletes ids and compacts to the store the next run resumes over.
   */
-class ConfigRetentionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class ConfigRetentionSpec extends AnyFunSuite with SharedSession {
 
   private val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
 

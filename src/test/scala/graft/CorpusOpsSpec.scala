@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +10,7 @@ import graft.text.Chunker
 /** Batch-6 corpus-management operators: hash splits, per-group caps,
   * chunking, cross-doc boilerplate removal, compression-ratio signal.
   */
-class CorpusOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class CorpusOpsSpec extends AnyFunSuite with SharedSession {
 
   private def sf001 = "/root/testdata/sf0.001"
 

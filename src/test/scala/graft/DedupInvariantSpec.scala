@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,15 +23,7 @@ import graft.dedup.{Clustering, DedupMetrics, EmbeddingDedup, MinHashConfig, Min
   * A day-one semantic bug (wrong band math, wrong verify threshold,
   * wrong representative choice) now fails a proof, not a pin.
   */
-class DedupInvariantSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DedupInvariantSpec extends AnyFunSuite with SharedSession {
 
   private def sf001 = "/root/testdata/sf0.001"
 
@@ -81,10 +73,10 @@ class DedupInvariantSpec extends AnyFunSuite {
   test("simhash: edges valid, kept = component mins, pigeonhole complete") {
     val corpus = corpusWithDupes
     val withId = Clustering.assignId(corpus, Some("doc_id"))
-    val edges = Clustering.withCacheRelease { sink =>
-      SimHash.verifiedEdges(withId, "text", 3, sink)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
+    val edges = SimHash.verifiedEdgesFromSigs(withId.select(
+        col(Clustering.IdCol).as("id"),
+        SimHash.signature(col("text")).as("sig")), 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val texts = corpus.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val sigs = texts.map { case (id, t) => id -> SimHash.simhash64(t) }
@@ -123,11 +115,9 @@ class DedupInvariantSpec extends AnyFunSuite {
     val threshold = 0.7
     val corpus = corpusWithDupes
     val withId = Clustering.assignId(corpus, Some("doc_id"))
-    val edges = Clustering.withCacheRelease { sink =>
-      NgramJaccard
-        .verifiedEdges(withId, "text", n, threshold, MinHashConfig(), sink)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    }
+    val edges = NgramJaccard
+      .verifiedEdges(withId, "text", n, threshold, MinHashConfig())
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val texts = corpus.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     // (a) every edge passes the exact-Jaccard verify kernel
@@ -430,7 +420,7 @@ class DedupInvariantSpec extends AnyFunSuite {
     val ids = cells.keys.toSeq
     val roots = unionRoots(ids, edges)
     val expected = ids.filter(i => roots(i) == i).toSet
-    val kept = Clustering.keepFirst(withId, edgesDf, 10000000L)
+    val kept = Clustering.of(edgesDf, 10000000L).keep(withId)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept == expected,
       s"kept diff: extra=${kept -- expected}, missing=${expected -- kept}")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +13,7 @@ import graft.dedup.{MinHashConfig, MinHashDedup, SimHash}
   * member (a near-dup increment must still die), and deleting a class
   * ENTIRELY frees it (a near-dup increment must now survive).
   */
-class DedupRetentionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class DedupRetentionSpec extends AnyFunSuite with SharedSession {
 
   private val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
 

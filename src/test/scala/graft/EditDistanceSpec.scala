@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{Clustering, EditDistanceDedup, MinHashConfig}
 
-class EditDistanceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class EditDistanceSpec extends AnyFunSuite with SharedSession {
 
   import spark.implicits._
 
@@ -80,10 +71,8 @@ class EditDistanceSpec extends AnyFunSuite {
     val withId = Clustering.assignId(docs, Some("doc_id"))
     val texts = withId.select(col(Clustering.IdCol).as("id"),
       col("text")).as[(Long, String)].collect().toMap
-    val edges = Clustering.withCacheRelease { sink =>
-      EditDistanceDedup.verifiedEdges(withId, "text", 5, 0.8,
-        MinHashConfig(), sink).as[(Long, Long)].collect()
-    }
+    val edges = EditDistanceDedup.verifiedEdges(withId, "text", 5, 0.8,
+      MinHashConfig()).as[(Long, Long)].collect()
     assert(edges.nonEmpty)
     for ((x, y) <- edges) {
       val (a, b) = (texts(x), texts(y))

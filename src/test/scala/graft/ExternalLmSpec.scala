@@ -12,7 +12,7 @@ import graft.scoring.{ArpaModel, ArpaScorer, ExternalLm, ExternalLmScorer,
   * piece table the external scorer degenerates to today's
   * f2_check_perplexity behavior exactly.
   */
-class ExternalLmSpec extends AnyFunSuite {
+class ExternalLmSpec extends AnyFunSuite with SharedSession {
 
   private def table(entries: (String, Double)*): SentencePieceTable =
     SentencePieceTable.parse(
@@ -217,12 +217,6 @@ class ExternalLmSpec extends AnyFunSuite {
 
   test("check_perplexity config args lm_path/pieces_path route through " +
       "the external model (filter scores == direct scorer)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_extlm_cfg")
     def dump(res: String, name: String): String = {

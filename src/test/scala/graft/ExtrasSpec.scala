@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the scale extras: dedup variants, ANN recall, multimodal
   * plumbing, streaming parity, YAML config resolution.
   */
-class ExtrasSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class ExtrasSpec extends AnyFunSuite with SharedSession {
 
   test("mini-yaml parses the reference config shape") {
     val cfg = graft.pipeline.MiniYaml.parse(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -16,14 +16,7 @@ import graft.text.{Cleaners, Filters, GraftTextKernels, StripWs}
   * differential against the ORIGINAL composed expressions over a hostile
   * generated corpus.
   */
-class FusedTextSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class FusedTextSpec extends AnyFunSuite with SharedSession {
 
   // ---- pure-JVM reference semantics (Python, with the engine's ASCII strip)
 

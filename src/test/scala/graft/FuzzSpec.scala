@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards for the adversarial-unicode fuzz harness: the corpus must stay
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the fuzz oracles would keep passing vacuously) and the C1 goldens must
   * stay discriminating (some fragment must actually change under ftfy).
   */
-class FuzzSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class FuzzSpec extends AnyFunSuite with SharedSession {
 
   private def hasCp(s: String, cp: Int): Boolean =
     s.codePoints().anyMatch(_ == cp)

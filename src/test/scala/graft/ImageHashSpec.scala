@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.ImageHash
@@ -10,14 +9,7 @@ import graft.multimodal.ImageHash
   * collapse, small structural change (≤3 bits) merges via the band
   * join, large change survives, undecodable payloads pass through.
   */
-class ImageHashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class ImageHashSpec extends AnyFunSuite with SharedSession {
 
   private def pgm(w: Int, h: Int, px: Array[Byte],
       header: String = ""): Array[Byte] = {

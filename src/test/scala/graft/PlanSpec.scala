@@ -8,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * true as the code evolves — filters at the scan, pruned read schemas,
   * broadcast anti-join, codegen'd custom expressions, strip collapse.
   */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -191,11 +183,9 @@ class PlanSpec extends AnyFunSuite {
     try {
       val withId = Clustering.withIds(
         Queries.table(spark, sf, "documents"), Some("doc_id"))
-      val p = Clustering.withCacheRelease { sink =>
-        MinHashDedup.candidateEdges(withId, "text",
-          MinHashConfig(ngramSize = 3, minNgramSize = 3), sink)
-          .queryExecution.executedPlan.toString
-      }
+      val p = MinHashDedup.candidateEdges(withId, "text",
+          MinHashConfig(ngramSize = 3, minNgramSize = 3))
+        .queryExecution.executedPlan.toString
       val classKey = p.linesIterator
         .filter(l => l.contains("REPARTITION_BY_NUM") && l.contains("__k__"))
         .toSeq
@@ -426,15 +416,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("extensions class registers functions and rule on a fresh session") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
+    // extensions apply only to a session the builder creates: when the
+    // test JVM's shared session already exists, register directly on it
+    // and verify SQL works
+    val s2 = SparkSession.getDefaultSession.getOrElse(SparkSession.builder()
+      .master("local[4]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    // getOrCreate may return the existing session (extensions only apply
-    // to new ones) — register directly in that case and verify SQL works
+      .getOrCreate())
     try s2.sql("SELECT graft_strip(' y ')").head()
     catch {
       case _: Exception => GraftFunctions.register(s2)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -134,13 +133,7 @@ class PropertySpec extends AnyFunSuite {
 /** Spark-bound equivalence: distributed min-propagation clustering must
   * agree with the driver UnionFind on random graphs.
   */
-class DistributedCcSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class DistributedCcSpec extends AnyFunSuite with SharedSession {
 
   test("distributed clustering == driver union-find on random graphs") {
     import spark.implicits._

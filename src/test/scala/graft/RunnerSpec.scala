@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +15,7 @@ import graft.pipeline.Runner
   * `minhash_config:`) end-to-end through Runner.run and checks the
   * published chatml dataset.
   */
-class RunnerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RunnerSpec extends AnyFunSuite with SharedSession {
 
   private val MsgSchema = StructType(Seq(
     StructField("content", StringType),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import graft.dedup.{DedupMetrics, MinHashConfig, MinHashDedup}
   * and must actually fire (DedupMetrics proves the branch was taken, not
   * silently skipped).
   */
-class ScaleSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class ScaleSoakSpec extends AnyFunSuite with SharedSession {
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.01/documents.parquet")

@@ -8,7 +8,7 @@ import graft.scoring.{ArpaModel, ArpaScorer, CcNetNormalizer}
   * model), the reference's document-scoring semantics
   * (kenlm_model.py:122-142), and plausibility of the shipped model.
   */
-class ScoringSpec extends AnyFunSuite {
+class ScoringSpec extends AnyFunSuite with SharedSession {
 
   // tiny hand-written order-4 model: vocab {a, b}, two bigrams (with
   // order-2 backoff weights), two trigrams (one carrying an order-3
@@ -121,11 +121,6 @@ class ScoringSpec extends AnyFunSuite {
   }
 
   test("ccnet buckets: LM-scored approx cutoffs track exact terciles") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val docs = graft.Queries.table(spark, "/root/testdata/sf0.001",
       "documents")
     val exact = graft.scoring.Buckets

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.SimHash
@@ -12,14 +12,7 @@ import graft.multimodal.ImageHash
   * passthrough on both sides — the DedupStoreSpec battery for
   * [[SimHash.sigStore]]/[[SimHash.deduplicateAgainstSigStore]].
   */
-class SigStoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class SigStoreSpec extends AnyFunSuite with SharedSession {
 
   private def pgmOf(hash: Long, offset: Int): Array[Byte] =
     TestFixtures.pgmOf(hash, offset)

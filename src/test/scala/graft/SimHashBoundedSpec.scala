@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,23 +16,14 @@ import graft.dedup.{Clustering, SimHash}
   * bands=4 exact). PERF.md records the same proof at a 100k-deep class
   * plus the timing/pair-count table.
   */
-class SimHashBoundedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class SimHashBoundedSpec extends AnyFunSuite with SharedSession {
 
   private def pairSet(edges: DataFrame): Set[(Long, Long)] =
     edges.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** The verified pair set at `cap`, its pinned frontiers released. */
+  /** The verified pair set at `cap`. */
   private def pairSet(sigs: DataFrame, k: Int, cap: Int): Set[(Long, Long)] =
-    Clustering.withCacheRelease { sink =>
-      pairSet(SimHash.verifiedEdgesFromSigs(sigs, k, sink, cap))
-    }
+    pairSet(SimHash.verifiedEdgesFromSigs(sigs, k, cap))
 
   test("bounded (cap 32, multi-level) == unbounded pair set on a " +
       "templated sig cloud; deep buckets genuinely present") {
@@ -72,14 +63,11 @@ class SimHashBoundedSpec extends AnyFunSuite {
       .select(col("id").as(Clustering.IdCol), col("id").as("keep_id"),
         col("sig"))
       .persist()
-    def kept(cap: Int): Set[Long] = Clustering.withCacheRelease { sink =>
-      Clustering.keepFirst(base,
+    def kept(cap: Int): Set[Long] = Clustering.of(
         SimHash.verifiedEdgesFromSigs(
-          base.select(col(Clustering.IdCol).as("id"), col("sig")),
-          3, sink, cap),
-        maxDriverEdges = 10_000_000L)
-        .select("keep_id").collect().map(_.getLong(0)).toSet
-    }
+          base.select(col(Clustering.IdCol).as("id"), col("sig")), 3, cap),
+        maxDriverEdges = 10_000_000L).keep(base)
+      .select("keep_id").collect().map(_.getLong(0)).toSet
     val unbounded = kept(Int.MaxValue)
     assert(kept(SimHash.DefaultBucketCap) == unbounded)
     assert(kept(64) == unbounded)
@@ -95,22 +83,20 @@ class SimHashBoundedSpec extends AnyFunSuite {
     val sigs = spark.range(100).select(col("id"), col("id").as("sig"))
     val plain = pairSet(sigs, 3, Int.MaxValue)
     assert(plain.nonEmpty)
-    Clustering.withCacheRelease { sink =>
-      // cap above the max depth: the level-0 probe must short-circuit —
-      // same pair set, and the depth-tagging join provably absent from
-      // the emitted plan (the __d__ count column never appears)
-      val flat = SimHash.verifiedEdgesFromSigs(sigs, 3, sink, 128)
-      assert(pairSet(flat) == plain)
-      assert(!flat.queryExecution.analyzed.toString.contains("__d__"),
-        "flat corpus must take the probe short-circuit (no depth join)")
-      // control: a bucket deeper than the cap must engage the tagged
-      // recursion (the join on the per-bucket __d__ count reaches the
-      // plan)
-      val deep = SimHash.verifiedEdgesFromSigs(sigs, 3, sink, 16)
-      assert(pairSet(deep) == plain)
-      assert(deep.queryExecution.analyzed.toString.contains("__d__"),
-        "deep bucket must engage the depth-tagged recursion")
-    }
+    // cap above the max depth: the level-0 probe must short-circuit —
+    // same pair set, and the depth-tagging join provably absent from
+    // the emitted plan (the __d__ count column never appears)
+    val flat = SimHash.verifiedEdgesFromSigs(sigs, 3, 128)
+    assert(pairSet(flat) == plain)
+    assert(!flat.queryExecution.analyzed.toString.contains("__d__"),
+      "flat corpus must take the probe short-circuit (no depth join)")
+    // control: a bucket deeper than the cap must engage the tagged
+    // recursion (the join on the per-bucket __d__ count reaches the
+    // plan)
+    val deep = SimHash.verifiedEdgesFromSigs(sigs, 3, 16)
+    assert(pairSet(deep) == plain)
+    assert(deep.queryExecution.analyzed.toString.contains("__d__"),
+      "deep bucket must engage the depth-tagged recursion")
   }
 
   test("null sigs still survive and never cluster under the bounded path") {

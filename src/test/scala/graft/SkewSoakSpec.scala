@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
+import graft.dedup.{Clustering, MinHash, MinHashConfig, MinHashDedup}
 
 /** Hot-bucket routing equivalence (VERDICT r11 #1): on a Zipf-template
   * skewed corpus — near- but not exact-identical boilerplate, the shape
@@ -13,14 +12,7 @@ import graft.dedup.{Clustering, MinHashConfig, MinHashDedup}
   * the agg-join bucket-min it routes deep frames to must emit exactly
   * the plain window's edge frame.
   */
-class SkewSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class SkewSoakSpec extends AnyFunSuite with SharedSession {
 
   private val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
   private val probed = cfg.copy(skewProbe = true)
@@ -81,16 +73,14 @@ class SkewSoakSpec extends AnyFunSuite {
     val docs = ScaleGen.zipfTemplateDocs(spark, 500L, 5, 1.5).persist()
     val withId = Clustering.assignId(docs, Some("doc_id"))
     val (_, banded) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
-    Clustering.withCacheRelease { sink =>
-      assert(!MinHashDedup.probeSkewDeep(banded, sink))
-      // synthetic threshold-deep frame → skew handling engaged
-      val deep = spark.range(SkewDepthThreshold)
-        .select(lit(0).as("band"), lit(Array[Byte](1, 2)).as("bsig"),
-          col("id"))
-      assert(MinHashDedup.probeSkewDeep(deep, sink))
-      // empty frame degenerates safely
-      assert(!MinHashDedup.probeSkewDeep(deep.where(lit(false)), sink))
-    }
+    assert(!MinHashDedup.probeSkewDeep(banded))
+    // synthetic threshold-deep frame → skew handling engaged
+    val deep = spark.range(SkewDepthThreshold)
+      .select(lit(0).as("band"), lit(Array[Byte](1, 2)).as("bsig"),
+        col("id"))
+    assert(MinHashDedup.probeSkewDeep(deep))
+    // empty frame degenerates safely
+    assert(!MinHashDedup.probeSkewDeep(deep.where(lit(false))))
     // end-to-end: probed config keeps exactly the plain set
     val plainKept = MinHashDedup.deduplicate(docs, "text", cfg,
       orderCol = Some("doc_id")).select("doc_id")
@@ -108,14 +98,50 @@ class SkewSoakSpec extends AnyFunSuite {
     val withId = Clustering.assignId(docs, Some("doc_id"))
     val (_, banded0) = MinHashDedup.classEdgesAndBanded(withId, "text", cfg)
     val banded = banded0.persist()
-    Clustering.withCacheRelease { sink =>
-      val plain = MinHashDedup.bucketMinEdges(banded, skewProbe = false,
-        sink)
-      val agg = MinHashDedup.bucketMinEdgesAgg(banded)
-      assert(plain.except(agg).count() == 0L &&
-        agg.except(plain).count() == 0L)
-      assert(plain.count() == agg.count() && plain.count() > 0L)
-    }
+    val plain = MinHashDedup.bucketMinEdges(banded, skewProbe = false)
+    val agg = MinHashDedup.bucketMinEdgesAgg(banded)
+    assert(plain.except(agg).count() == 0L &&
+      agg.except(plain).count() == 0L)
+    assert(plain.count() == agg.count() && plain.count() > 0L)
     banded.unpersist(); docs.unpersist()
+  }
+
+  test("skewProbe computes each row's signatures once across the probe " +
+      "and the edges, through deduplicate and deduplicateAgainstStore") {
+    // the probe pins the banded frame and the edges must read that pin:
+    // edges over the unpinned frame re-run the signature kernel, which
+    // MinHash.sigCalls counts (local mode: executors share this JVM)
+    val docs = ScaleGen.zipfTemplateDocs(spark, 500L, 5, 1.5).persist()
+    val store = MinHashDedup.bandedStore(docs.where(col("doc_id") < 300),
+      "text", cfg, orderCol = Some("doc_id")).persist()
+    assert(store.count() > 0L)
+    val batch = docs.where(col("doc_id") >= 300)
+    def sigCalls(run: => Long): Long = {
+      val before = MinHash.sigCalls.get()
+      run
+      MinHash.sigCalls.get() - before
+    }
+    def dedup(c: MinHashConfig): Long = sigCalls(MinHashDedup.deduplicate(
+      docs, "text", c, orderCol = Some("doc_id")).count())
+    val plain = dedup(cfg)
+    assert(plain > 0L)
+    assert(dedup(probed) == plain)
+
+    // the store path pins its banded frame for the store join anyway;
+    // the probe reads that pin instead of storing a second copy, so the
+    // call leaves two pins at most: that frame and the survivors
+    var newPins = 0
+    def againstStore(c: MinHashConfig): Long = sigCalls {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val kept = MinHashDedup.deduplicateAgainstStore(batch, store, "text",
+        c, orderCol = Some("doc_id"))
+      newPins = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      kept.count()
+    }
+    val plainStore = againstStore(cfg)
+    assert(plainStore > 0L)
+    assert(againstStore(probed) == plainStore)
+    assert(newPins <= 2, s"the probed store path left $newPins new pins")
+    store.unpersist(); docs.unpersist()
   }
 }

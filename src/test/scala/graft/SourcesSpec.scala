@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,14 +14,7 @@ import graft.sources.Sources
   * (the exact nested feature shape the reference pushes to the hub,
   * main.py:74). Pinned structurally, no network needed.
   */
-class SourcesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class SourcesSpec extends AnyFunSuite with SharedSession {
 
   test("published chatml parquet keeps the hub-ingestible nested shape") {
     val out = "/tmp/graft_publish_spec"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,14 +21,7 @@ import graft.streaming.StreamingPipeline
   * — and the resumed kept set equals an independent recompute against
   * the physically retained corpus.
   */
-class StreamingRetentionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class StreamingRetentionSpec extends AnyFunSuite with SharedSession {
 
   private val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
 

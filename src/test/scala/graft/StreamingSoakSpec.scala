@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming state-bound soak (VERDICT r6 #7): drive the simhash
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * number of batches (the failure mode of plain `dropDuplicates`, whose
   * key state is never evicted).
   */
-class StreamingSoakSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class StreamingSoakSpec extends AnyFunSuite with SharedSession {
 
   test("near-dedup state stays bounded under watermark eviction") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{MinHashConfig, MinHashDedup}
@@ -13,14 +13,7 @@ import graft.streaming.StreamingPipeline
   * the state the stream carries must be the bounded store frame — no
   * Spark streaming state store at all.
   */
-class StreamingStoreDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class StreamingStoreDedupSpec extends AnyFunSuite with SharedSession {
 
   private val cfg = MinHashConfig(ngramSize = 3, minNgramSize = 3)
 

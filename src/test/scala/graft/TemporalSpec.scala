@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Specs for the batch-5 operators: as-of join, sessionization,
   * bounded-gap pairs, Bloom incremental dedup, and term statistics.
   */
-class TemporalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class TemporalSpec extends AnyFunSuite with SharedSession {
 
   import graft.temporal.Temporal
 

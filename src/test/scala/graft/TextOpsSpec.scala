@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -196,15 +195,7 @@ class TextOpsSpec extends AnyFunSuite {
 /** Spark-bound operator tests: cleaners/filters as Column expressions,
   * pipeline, dedup E2E, sampling invariants.
   */
-class SparkOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SparkOpsSpec extends AnyFunSuite with SharedSession {
 
   def one(text: String, c: org.apache.spark.sql.Column => org.apache.spark.sql.Column): String = {
     import spark.implicits._

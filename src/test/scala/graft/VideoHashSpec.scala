@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.multimodal.VideoHash
@@ -9,14 +8,7 @@ import graft.multimodal.VideoHash
   * perceptual-dedup semantics (the ImageHash/AudioHash battery for the
   * codec-free frame-size fingerprint).
   */
-class VideoHashSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .getOrCreate()
+class VideoHashSpec extends AnyFunSuite with SharedSession {
 
   private def box(typ: String, payload: Array[Byte]): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + payload.length)

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Warc
 
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with SharedSession {
 
   private def rec(headers: Seq[(String, String)], payload: String,
       version: String = "WARC/1.0", sep: String = "\r\n\r\n"): String =
@@ -89,12 +89,6 @@ class WarcSpec extends AnyFunSuite {
     // split by recordsUdf; the crawl E2E builds its WARC bytes in-query
     // for the oracle, this pins the whole-file path
     import org.apache.spark.sql.functions._
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .getOrCreate()
     val path = new java.io.File(
       "src/test/resources/fixtures/sample.warc").getAbsolutePath
     assert(new java.io.File(path).isFile, s"fixture missing at $path")
