@@ -119,9 +119,10 @@ object Bench {
     // WALL cost is cut instead by running it on a small thread pool
     // (SPARK_GRAFT_WARM_THREADS, default 4): Spark schedules concurrent
     // jobs FIFO at stage granularity, most queries leave most of the 32
-    // cores idle, and the one-time exports are race-free — every
-    // side-channel path is written by exactly ONE query (audited r19)
-    // and SideChannel serializes each path's export as defense-in-depth.
+    // cores idle, and the one-time exports are race-free — every export
+    // goes through SideChannel, which serializes each path's write, so
+    // the pqknn frames (shared by 2 queries) and the external-LM dump
+    // (shared by 3) are written once even when their queries overlap.
     // A query's exports happen before it calls its library entry point,
     // so once the warm pass has claimed them a timed rep runs exactly the
     // entry point's plan — the one pipeline.Runner runs.

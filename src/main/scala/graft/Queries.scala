@@ -331,6 +331,6 @@ object Queries {
     QueriesExtra2.all ++ QueriesExtra3.all ++ QueriesExtra4.all ++
     QueriesExtra5.all ++ QueriesExtra6.all ++ QueriesExtra7.all ++
     QueriesExtra8.all ++ QueriesExtra9.all ++ QueriesExtra10.all ++
-    QueriesExtra11.all ++ QueriesExtra12.all ++ QueriesExtra13.all ++
+    QueriesExtra11.all ++ QueriesArrow.all ++
     QueriesFuzz.all
 }

@@ -28,9 +28,6 @@ object QueriesExtra10 {
   private def pqkTablesPath(key: String) = s"/tmp/graft_pqknn_tables_$key"
   private def pqkProbesPath(key: String) = s"/tmp/graft_pqknn_probes_$key"
 
-  private val pqkWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Batched IVF-PQ serving, oracled: 5 query rows, each ADC-ranked
     * against only its own probed cells' codes, top-3 per query. Four
     * exported frames let DuckDB replay the ENTIRE pruned integer ranking
@@ -45,8 +42,9 @@ object QueriesExtra10 {
     */
   /** Shared setup for the batched-serving queries (knn + refine): the
     * SAME deterministic model/cells/queries, and the four side-channel
-    * frames exported once per (JVM, scale) under the write-then-claim
-    * contract — whichever query runs first in a fresh JVM writes them.
+    * frames exported once per (JVM, scale) through [[SideChannel]] —
+    * both queries call this, so whichever runs first in a fresh JVM
+    * writes them and a concurrent caller waits on the per-path lock.
     * Returns (queries, encoded, model, probes-read-back, release).
     */
   private def pqkSetup(s: org.apache.spark.sql.SparkSession, dir: String):
@@ -61,25 +59,17 @@ object QueriesExtra10 {
       k = 16, iters = 5, maxTrain = 2000)
     val encoded = Pq.encode(cells, "embedding", model, "_codes")
     val key = QueriesExtra2.scaleKey(dir)
-    // write-then-claim (the ann_ivf_topk contract): the key is recorded
-    // only after ALL four exports succeed
-    if (!pqkWritten.contains(key)) {
-      cells.select(col("vec_id"), col("__cell__").as("cell"))
-        .write.mode("overwrite").parquet(pqkCellsPath(key))
-      Pq.codesFrame(encoded, "vec_id", "_codes")
-        .write.mode("overwrite").parquet(pqkCodesPath(key))
+    SideChannel.exportOnce(pqkCellsPath(key))(
+      cells.select(col("vec_id"), col("__cell__").as("cell")))
+    SideChannel.exportOnce(pqkCodesPath(key))(
+      Pq.codesFrame(encoded, "vec_id", "_codes"))
+    SideChannel.exportOnce(pqkTablesPath(key))(
       Pq.adcTablesFrame(queries.withColumnRenamed("vec_id", "query_id"),
-          "embedding", "query_id", model)
-        .write.mode("overwrite").parquet(pqkTablesPath(key))
+        "embedding", "query_id", model))
+    val probes = SideChannel.readBack(pqkProbesPath(key))(
       Pq.probeCellsBatch(cells, queries, "embedding", "vec_id",
-          "__cell__", nprobe = 3)
-        .write.mode("overwrite").parquet(pqkProbesPath(key))
-      pqkWritten.add(key)
-      Seq(pqkCellsPath(key), pqkCodesPath(key), pqkTablesPath(key),
-        pqkProbesPath(key)).foreach(SideChannel.record)
-    }
-    (queries, encoded, model, s.read.parquet(pqkProbesPath(key)),
-      () => { cells.unpersist(); () })
+        "__cell__", nprobe = 3))
+    (queries, encoded, model, probes, () => { cells.unpersist(); () })
   }
 
   /** The per-query integer ADC ranking CTE chain from the four exported

@@ -107,11 +107,10 @@ object QueriesExtra4 {
   val compressRatio: QueryDef = QueryDef("ta_compress_ratio",
     (s, dir) => {
       val side = SideChannel.through(
+        QueriesExtra2.compLenPath(QueriesExtra2.scaleKey(dir)))(
         docs(s, dir).select(col(d).as("id"),
           graft.analysis.Compression.deflateLen(col("text"))
-            .as("comp_len")),
-        SideChannel.once(
-          QueriesExtra2.compLenPath(QueriesExtra2.scaleKey(dir))))
+            .as("comp_len")))
       docs(s, dir)
         // coalesce: null text must keep deflateRatio's null/empty ⇒ 1.0
         // contract (octet_length(NULL) is NULL, which would leak a NULL

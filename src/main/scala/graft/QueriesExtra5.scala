@@ -92,10 +92,8 @@ object QueriesExtra5 {
       val model = NaiveBayes.train(withDoc, "_doc", "lang", VocabV)
       val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      SideChannel.through(wDf,
-        SideChannel.once(nbPath(key) + "/weights"))
-      SideChannel.through(pDf,
-        SideChannel.once(nbPath(key) + "/priors"))
+      SideChannel.exportOnce(nbPath(key) + "/weights")(wDf)
+      SideChannel.exportOnce(nbPath(key) + "/priors")(pDf)
       // r19: fused tokenize+score kernel — same integer sums as predict
       // with the default featurizer (ClassifierSpec differential)
       NaiveBayes.predictTokens(
@@ -159,10 +157,8 @@ object QueriesExtra5 {
         distinctFeatures = Some(c => NaiveBayes.charGramsDistinctCol(c, 2, 4)))
       val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      SideChannel.through(wDf,
-        SideChannel.once(nbCgramPath(key) + "/weights"))
-      SideChannel.through(pDf,
-        SideChannel.once(nbCgramPath(key) + "/priors"))
+      SideChannel.exportOnce(nbCgramPath(key) + "/weights")(wDf)
+      SideChannel.exportOnce(nbCgramPath(key) + "/priors")(pDf)
       // r19: scoring via one DFA scan of the same lowercased haystack the
       // gram featurizer reads — identical integer sums (ClassifierSpec
       // pins predictSubstring == predict on this featurizer)
@@ -260,9 +256,8 @@ object QueriesExtra5 {
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
       val key = QueriesExtra2.scaleKey(dir)
-      SideChannel.through(
-        graft.text.Bpe.wordEncodings(s, docs, model, "text"),
-        SideChannel.once(bpePath(key)))
+      SideChannel.exportOnce(bpePath(key))(
+        graft.text.Bpe.wordEncodings(s, docs, model, "text"))
       val counts = graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"))
       Mixture.tokenBudgetSelectCounted(docs, d, "source", counts,
@@ -328,9 +323,8 @@ object QueriesExtra5 {
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
       val key = QueriesExtra2.scaleKey(dir)
-      SideChannel.through(
-        graft.text.Bpe.wordEncodings(s, docs, model, "text"),
-        SideChannel.once(bpePath(key)))
+      SideChannel.exportOnce(bpePath(key))(
+        graft.text.Bpe.wordEncodings(s, docs, model, "text"))
       graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"), col("bpe_text"))
         .orderBy(d)

@@ -130,8 +130,7 @@ object QueriesExtra6 {
       val docs = dsirDocs(s, dir)
       val (m, grid) = Dsir.fitWithGrid(docs.where(col("lang") === "en"),
         docs, col("_doc"), Buckets)
-      SideChannel.through(Dsir.modelFrame(s, m),
-        SideChannel.once(dsirPath(key)))
+      SideChannel.exportOnce(dsirPath(key))(Dsir.modelFrame(s, m))
       (m, grid)
     })
 
@@ -228,11 +227,9 @@ object QueriesExtra6 {
         k = 16, iters = 5, maxTrain = 2000)
       val encoded = Pq.encode(emb, "embedding", model, "_codes")
       val key = QueriesExtra2.scaleKey(dir)
-      SideChannel.through(
-        Pq.codesFrame(encoded, "vec_id", "_codes"),
-        SideChannel.once(pqCodesPath(key)))
-      SideChannel.through(Pq.adcTable(s, qv, model),
-        SideChannel.once(pqTablePath(key)))
+      SideChannel.exportOnce(pqCodesPath(key))(
+        Pq.codesFrame(encoded, "vec_id", "_codes"))
+      SideChannel.exportOnce(pqTablePath(key))(Pq.adcTable(s, qv, model))
       Pq.adcTopK(encoded, "vec_id", "_codes", qv, model, 10)
         .orderBy("rank")
     },

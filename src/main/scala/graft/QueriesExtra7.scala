@@ -170,8 +170,7 @@ object QueriesExtra7 {
           "vec_id", "cell", k = 16, iters = 3, trainFraction = 0.5)
         .select(col("vec_id"), col("cell"))
       val key = QueriesExtra2.scaleKey(dir)
-      val cells = SideChannel.through(assigned,
-        SideChannel.once(cellsBalPath(key)))
+      val cells = SideChannel.through(cellsBalPath(key))(assigned)
       graft.sampling.ClusterBalance.capPerCell(cells, "vec_id", "cell",
           quota = 20, seed = 5L)
         .orderBy("vec_id")

@@ -82,11 +82,9 @@ object QueriesExtra9 {
   val incrNearDedup: QueryDef = QueryDef("incr_near_dedup",
     (s, dir) => {
       val key = QueriesExtra2.scaleKey(dir)
-      if (SideChannel.once(storePath(key)).isDefined) {
+      SideChannel.writeOnce(storePath(key))(
         MinHashDedup.exportBandedStore(refFrame(s, dir), "text",
-          storePath(key), IncrCfg, orderCol = Some(d))
-        SideChannel.record(storePath(key))
-      }
+          storePath(key), IncrCfg, orderCol = Some(d)))
       val store = s.read.parquet(storePath(key))
       val docs = Queries.table(s, dir, "documents")
       val inc = docs.where(col(d) % 11 === 0)
@@ -509,9 +507,6 @@ object QueriesExtra9 {
   private def ivfpqCodesPath(key: String) = s"/tmp/graft_ivfpq_codes_$key"
   private def ivfpqAdcPath(key: String) = s"/tmp/graft_ivfpq_adc_$key"
 
-  private val ivfpqWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** IVF-PQ promoted from spec-only to an oracled suite query (VERDICT r9
     * #4): coarse k-means cells prune the scan (`ann_ivf_topk` precedent —
     * the cell assignment and the probe DECISION are exported), PQ codes +
@@ -535,25 +530,16 @@ object QueriesExtra9 {
         k = 16, iters = 5, maxTrain = 2000)
       val encoded = Pq.encode(cells, "embedding", model, "_codes")
       val key = QueriesExtra2.scaleKey(dir)
-      // write-then-claim (the ann_ivf_topk contract): the key is recorded
-      // only after ALL four exports succeed
-      if (!ivfpqWritten.contains(key)) {
-        cells.select(col("vec_id"), col("__cell__").as("cell"))
-          .write.mode("overwrite").parquet(ivfpqCellsPath(key))
-        Ann.probeCells(cells, query, "embedding", "__cell__", nprobe = 3)
-          .select(col("__cell__").as("cell"))
-          .write.mode("overwrite").parquet(ivfpqProbedPath(key))
-        Pq.codesFrame(encoded, "vec_id", "_codes")
-          .write.mode("overwrite").parquet(ivfpqCodesPath(key))
-        Pq.adcTable(s, qv, model)
-          .write.mode("overwrite").parquet(ivfpqAdcPath(key))
-        ivfpqWritten.add(key)
-        Seq(ivfpqCellsPath(key), ivfpqProbedPath(key), ivfpqCodesPath(key),
-          ivfpqAdcPath(key)).foreach(SideChannel.record)
-      }
-      // prune against the just-written probe decision (shared with the
+      SideChannel.exportOnce(ivfpqCellsPath(key))(
+        cells.select(col("vec_id"), col("__cell__").as("cell")))
+      SideChannel.exportOnce(ivfpqCodesPath(key))(
+        Pq.codesFrame(encoded, "vec_id", "_codes"))
+      SideChannel.exportOnce(ivfpqAdcPath(key))(Pq.adcTable(s, qv, model))
+      // prune against the exported probe decision (shared with the
       // oracle), then ADC-scan only the probed cells' codes
-      val probed = broadcast(s.read.parquet(ivfpqProbedPath(key))
+      val probed = broadcast(SideChannel.readBack(ivfpqProbedPath(key))(
+        Ann.probeCells(cells, query, "embedding", "__cell__", nprobe = 3)
+          .select(col("__cell__").as("cell")))
         .select(col("cell").as("__cell__")))
       val out = Pq.adcTopK(
         encoded.join(probed, Seq("__cell__"), "left_semi"),

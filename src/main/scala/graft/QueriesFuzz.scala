@@ -27,7 +27,7 @@ import graft.text.{Cleaners, Filters, WordLists}
   * Known divergences deliberately NOT probed (documented, not silent):
   * Turkish dotted İ (ICU lowercases to `i` + combining dot, JVM per-char
   * folding to bare `i`; no corpus phrase depends on it) and cc_net
-  * `strip_accents` over arbitrary unicode (engine-bound NFD subset —
+  * accent stripping over arbitrary unicode (engine-bound NFD subset —
   * covered by the injected-char `ccnet_normalize` oracle).
   */
 object QueriesFuzz {
@@ -168,14 +168,11 @@ object QueriesFuzz {
     * combining mark right after an emoji genuinely appears. (The first
     * cut used three indices that were all functions of i%N, which
     * collapsed the corpus to 24 distinct texts — caught in review; a
-    * FuzzSpec distinctness assertion now pins this.)
+    * FuzzSpec distinctness assertion now pins this.) Exported once per
+    * JVM; every fuzz query and its oracle read the bytes on disk.
     */
-  @volatile private var corpusWritten = false
-
-  private def ensureCorpus(s: SparkSession): Unit = {
-    if (corpusWritten) return
-    synchronized {
-      if (corpusWritten) return
+  private[graft] def corpus(s: SparkSession): DataFrame =
+    SideChannel.readBack(CorpusPath) {
       val frags = array(Fragments.map(f => lit(f._1)): _*)
       val j = col("fid") % N
       val k = (col("fid") / N) % N
@@ -188,15 +185,7 @@ object QueriesFuzz {
             element_at(frags, ((j + k) % N + 1).cast("int")))
             .as("text"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(CorpusPath)
-      corpusWritten = true
     }
-  }
-
-  private[graft] def corpus(s: SparkSession): DataFrame = {
-    ensureCorpus(s)
-    s.read.parquet(CorpusPath)
-  }
 
   private val FuzzTable = s"parquet_scan('$CorpusPath/*.parquet')"
 

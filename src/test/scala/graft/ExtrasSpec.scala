@@ -68,24 +68,59 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
 
   test("side-channel claims only after a successful write (ADVICE r7)") {
     import graft.SideChannel
-    val good = s"/tmp/graft_sidechannel_spec_${System.nanoTime()}"
+    val path = s"/tmp/graft_sidechannel_spec_${System.nanoTime()}"
     val df = spark.range(3).toDF("id")
-    // unclaimed until written: once() keeps offering the path
-    assert(SideChannel.once(good).contains(good))
-    assert(SideChannel.once(good).contains(good),
-      "once() must not claim before the write lands")
-    // a FAILED write must leave the path unclaimed (a claim-at-once
-    // design silently suppressed the export for the JVM lifetime)
-    val bad = "/proc/graft_no_such_dir/x"
-    intercept[Exception] {
-      SideChannel.through(df, SideChannel.once(bad))
+    var bodies = 0
+    // unclaimed until written
+    assert(!SideChannel.exportedPaths.contains(path),
+      "nothing may claim before the write lands")
+    // a FAILED write must leave the path unclaimed and retryable (a
+    // claim-before-write design silently suppressed the export for the
+    // JVM lifetime)
+    intercept[java.io.IOException] {
+      SideChannel.writeOnce(path) {
+        bodies += 1
+        throw new java.io.IOException("write failed")
+      }
     }
-    assert(SideChannel.once(bad).contains(bad),
+    assert(!SideChannel.exportedPaths.contains(path),
       "failed write must not claim")
-    // a successful write claims: later once() calls skip the export
-    val back = SideChannel.through(df, SideChannel.once(good))
-    assert(back.count() == 3)
-    assert(SideChannel.once(good).isEmpty, "successful write must claim")
+    assert(SideChannel.writeOnce(path) {
+      bodies += 1
+      df.write.mode("overwrite").parquet(path)
+    }, "a path whose write failed is written by the next call")
+    // a successful write claims: later bodies are skipped and readers see
+    // the bytes on disk
+    assert(SideChannel.exportedPaths.contains(path),
+      "successful write must claim")
+    assert(!SideChannel.writeOnce(path) { bodies += 1 })
+    assert(SideChannel.readBack(path)(fail("claimed frame rebuilt"))
+      .count() == 3)
+    assert(bodies == 2, "bodies run: the failed one and the successful one")
+  }
+
+  test("side-channel: two threads writing one fresh path run the body once") {
+    import graft.SideChannel
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val path = s"/tmp/graft_sidechannel_race_${System.nanoTime()}"
+    val bodies = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    // the body outlasts the gap between the threads' claim checks, so
+    // without the per-path lock both would run it
+    val writers = (1 to 2).map(_ => Future {
+      start.await()
+      SideChannel.writeOnce(path) {
+        bodies.incrementAndGet()
+        Thread.sleep(300)
+      }
+    })
+    start.countDown()
+    val ran = writers.map(Await.result(_, 30.seconds))
+    assert(bodies.get == 1, "write body runs exactly once")
+    assert(ran.count(identity) == 1, "exactly one caller reports the write")
+    assert(SideChannel.exportedPaths.contains(path))
   }
 
   test("simhash: identical docs collapse, distinct survive") {
