@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -40,57 +38,16 @@ import graft.sources.ArrowDataset
   */
 object QueriesArrow {
 
-  /** Scale-keyed output dir (VERDICT r16 "what's wrong" #3 discipline):
-    * the key folds in the sf dir path AND the source parquet's (name,
-    * length, mtime) listing, so a driver-regenerated corpus at the same
-    * path can never alias a stale dump.
-    */
-  private def keyedDir(dir: String, tag: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val sig = Option(src.listFiles()).getOrElse(Array.empty)
-      .sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString(dir + "|", ",", "")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"/tmp/graft_arrow_${tag}_$key"
-  }
-
-  /** Run `body` holding an exclusive OS file lock on `dir/.lock`
-    * (creating `dir`): the query layer's one cross-JVM exclusion, for
-    * frames that concurrent verify/bench JVMs would otherwise race.
-    */
-  private[graft] def withDirLock(dir: String)(body: => Unit): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val ch = java.nio.channels.FileChannel.open(Paths.get(s"$dir/.lock"),
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try body finally { lock.release(); ch.close() }
-  }
-
-  /** Write-once per corpus generation, across JVMs: the dir lock
-    * serializes concurrent verify/bench JVMs and the marker file makes
-    * the write idempotent — once a marker exists no JVM writes the dir
-    * again, so concurrent readers are safe (shard bytes depend on shuffle
-    * order and are NOT cross-JVM identical, unlike the ExtLm dumps).
-    * Inside a JVM, [[SideChannel.writeOnce]] skips the lock after the
-    * first call.
+  /** Saves the corpus once per run into the side channel `arrow_<tag>`
+    * and loads it back on every run: each run's writer makes the shards
+    * its loads read.
     */
   private def arrowQuery(name: String, tag: String)(
       save: (DataFrame, String) => Unit): QueryDef = QueryDef(name,
     (s, dir) => {
-      // keyedDir computed ONCE: it hashes the source parquet's mtime
-      // listing, so a second evaluation during a concurrent testdata
-      // refresh could diverge from the locked/marked dir
-      val out = keyedDir(dir, tag)
-      SideChannel.writeOnce(out)(withDirLock(out) {
-        val marker = Paths.get(s"$out/_GRAFT_ARROW_OK")
-        if (!Files.exists(marker)) {
-          save(Queries.table(s, dir, "documents"), out)
-          Files.createFile(marker)
-        }
-      })
-      ArrowDataset.load(s, out)
+      SideChannel.writeOnce(dir, s"arrow_$tag")(
+        save(Queries.table(s, dir, "documents"), _))
+      ArrowDataset.load(s, SideChannel.path(s"arrow_$tag"))
         .select("doc_id", "text", "lang", "source", "n_chars")
     },
     Some("SELECT doc_id, text, lang, source, n_chars FROM documents"))

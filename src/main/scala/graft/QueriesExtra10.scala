@@ -23,11 +23,6 @@ object QueriesExtra10 {
 
   // ---- batched IVF-PQ kNN join (query batch × corpus codes) ----
 
-  private def pqkCellsPath(key: String) = s"/tmp/graft_pqknn_cells_$key"
-  private def pqkCodesPath(key: String) = s"/tmp/graft_pqknn_codes_$key"
-  private def pqkTablesPath(key: String) = s"/tmp/graft_pqknn_tables_$key"
-  private def pqkProbesPath(key: String) = s"/tmp/graft_pqknn_probes_$key"
-
   /** Batched IVF-PQ serving, oracled: 5 query rows, each ADC-ranked
     * against only its own probed cells' codes, top-3 per query. Four
     * exported frames let DuckDB replay the ENTIRE pruned integer ranking
@@ -42,9 +37,9 @@ object QueriesExtra10 {
     */
   /** Shared setup for the batched-serving queries (knn + refine): the
     * SAME deterministic model/cells/queries, and the four side-channel
-    * frames exported once per (JVM, scale) through [[SideChannel]] —
+    * frames exported once per run through [[SideChannel]] —
     * both queries call this, so whichever runs first in a fresh JVM
-    * writes them and a concurrent caller waits on the per-path lock.
+    * writes them and a concurrent caller waits on the per-name lock.
     * Returns (queries, encoded, model, probes-read-back, release).
     */
   private def pqkSetup(s: org.apache.spark.sql.SparkSession, dir: String):
@@ -58,17 +53,17 @@ object QueriesExtra10 {
     val model = Pq.train(emb, "embedding", "vec_id", dim = 64, m = 8,
       k = 16, iters = 5, maxTrain = 2000)
     val encoded = Pq.encode(cells, "embedding", model, "_codes")
-    val key = QueriesExtra2.scaleKey(dir)
-    SideChannel.exportOnce(pqkCellsPath(key))(
+    SideChannel.exportOnce(dir, "pqknn_cells")(
       cells.select(col("vec_id"), col("__cell__").as("cell")))
-    SideChannel.exportOnce(pqkCodesPath(key))(
+    SideChannel.exportOnce(dir, "pqknn_codes")(
       Pq.codesFrame(encoded, "vec_id", "_codes"))
-    SideChannel.exportOnce(pqkTablesPath(key))(
+    SideChannel.exportOnce(dir, "pqknn_tables")(
       Pq.adcTablesFrame(queries.withColumnRenamed("vec_id", "query_id"),
         "embedding", "query_id", model))
-    val probes = SideChannel.readBack(pqkProbesPath(key))(
+    SideChannel.exportOnce(dir, "pqknn_probes")(
       Pq.probeCellsBatch(cells, queries, "embedding", "vec_id",
         "__cell__", nprobe = 3))
+    val probes = s.read.parquet(SideChannel.path("pqknn_probes"))
     (queries, encoded, model, probes, () => { cells.unpersist(); () })
   }
 
@@ -79,13 +74,13 @@ object QueriesExtra10 {
     */
   private def pqkKnnCtes: String =
     "WITH cells AS (SELECT * FROM parquet_scan('" +
-      pqkCellsPath(QueriesExtra2.OracleScaleKey) + "/*.parquet')), " +
+      SideChannel.sqlPath("pqknn_cells") + "/*.parquet')), " +
       "probes AS (SELECT * FROM parquet_scan('" +
-      pqkProbesPath(QueriesExtra2.OracleScaleKey) + "/*.parquet')), " +
+      SideChannel.sqlPath("pqknn_probes") + "/*.parquet')), " +
       "codes AS (SELECT * FROM parquet_scan('" +
-      pqkCodesPath(QueriesExtra2.OracleScaleKey) + "/*.parquet')), " +
+      SideChannel.sqlPath("pqknn_codes") + "/*.parquet')), " +
       "qt AS (SELECT * FROM parquet_scan('" +
-      pqkTablesPath(QueriesExtra2.OracleScaleKey) + "/*.parquet')), " +
+      SideChannel.sqlPath("pqknn_tables") + "/*.parquet')), " +
       // candidates: corpus rows whose cell this query probed, minus self
       "pr AS (SELECT p.query_id, c.vec_id FROM probes p JOIN cells c " +
       "ON c.cell = p.cell WHERE c.vec_id <> p.query_id), " +
@@ -235,8 +230,7 @@ object QueriesExtra10 {
     * shared by the image and audio perceptual-dedup oracles.
     */
   private def nullableSigKeepFirstSql(variant: String): String = {
-    val glob = QueriesExtra2.sigPath(variant,
-      QueriesExtra2.OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_sigs_$variant") + "/*.parquet"
     "WITH RECURSIVE s AS (SELECT id, sig FROM " +
       s"parquet_scan('$glob') WHERE sig IS NOT NULL), " +
       "cmu AS (SELECT id, sig, min(id) OVER (PARTITION BY sig) AS smin " +
@@ -261,16 +255,17 @@ object QueriesExtra10 {
     */
   private def exportSigs(docs: DataFrame, column: String,
       sigOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      path: String, idOffset: Long = 0L): Unit =
-    SideChannel.exportOnce(path)(graft.dedup.SimHash.sigFrame(docs, column,
-      sigOf, Some("doc_id"), idOffset))
+      dir: String, variant: String, idOffset: Long = 0L): Unit =
+    SideChannel.exportOnce(dir, s"dedup_sigs_$variant")(
+      graft.dedup.SimHash.sigFrame(docs, column, sigOf, Some("doc_id"),
+        idOffset))
 
   val imgDhashDedup: QueryDef = QueryDef("img_dhash_dedup",
     (s, dir) => {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), imgBytesUdf(col("doc_id")).as("img"))
       exportSigs(docs, "img", graft.multimodal.ImageHash.dhashUdf,
-        QueriesExtra2.sigPath(imgSigVariant, QueriesExtra2.scaleKey(dir)))
+        dir, imgSigVariant)
       graft.multimodal.ImageHash.deduplicateByDHash(docs, "img",
           maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
@@ -342,7 +337,7 @@ object QueriesExtra10 {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), wavBytesUdf(col("doc_id")).as("clip"))
       exportSigs(docs, "clip", graft.multimodal.AudioHash.ehashUdf,
-        QueriesExtra2.sigPath(audioSigVariant, QueriesExtra2.scaleKey(dir)))
+        dir, audioSigVariant)
       graft.multimodal.AudioHash.deduplicateByEHash(docs, "clip",
           maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
@@ -352,8 +347,6 @@ object QueriesExtra10 {
   // ---- incremental perceptual dedup against a persisted sig store ----
 
   private val Off = graft.dedup.MinHashDedup.NewIdOffset
-
-  private def sigStorePath(key: String) = s"/tmp/graft_sig_store_img_$key"
 
   /** Retained-corpus image per doc: 20 hash classes (so the store is 20
     * rows — one per distinct signature), with ≡0 mod 83 docs carrying
@@ -399,19 +392,17 @@ object QueriesExtra10 {
         .select(col("doc_id"), refImgUdf(col("doc_id")).as("img"))
       val inc = docs.where(col("doc_id") % 11 === 0)
         .select(col("doc_id"), incImgUdf(col("doc_id")).as("img"))
-      val key = QueriesExtra2.scaleKey(dir)
-      val store = SideChannel.readBack(sigStorePath(key))(
+      SideChannel.exportOnce(dir, "sig_store_img")(
         SimHash.sigStore(ref, "img", ImageHash.dhashUdf, Some("doc_id")))
-      exportSigs(inc, "img", ImageHash.dhashUdf,
-        QueriesExtra2.sigPath("incrimg", key), Off)
+      val store = s.read.parquet(SideChannel.path("sig_store_img"))
+      exportSigs(inc, "img", ImageHash.dhashUdf, dir, "incrimg", Off)
       SimHash.deduplicateAgainstSigStore(inc, store, "img",
           ImageHash.dhashUdf, maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
     },
     Some {
-      val stGlob = sigStorePath(QueriesExtra2.OracleScaleKey) + "/*.parquet"
-      val incGlob = QueriesExtra2.sigPath("incrimg",
-        QueriesExtra2.OracleScaleKey) + "/*.parquet"
+      val stGlob = SideChannel.sqlPath("sig_store_img") + "/*.parquet"
+      val incGlob = SideChannel.sqlPath("dedup_sigs_incrimg") + "/*.parquet"
       "WITH RECURSIVE st AS (SELECT sig, id AS sid FROM " +
         s"parquet_scan('$stGlob')), " +
         s"incs AS (SELECT id, sig FROM parquet_scan('$incGlob')), " +
@@ -513,7 +504,7 @@ object QueriesExtra10 {
       val docs = Queries.table(s, dir, "documents")
         .select(col("doc_id"), mp4BytesUdf(col("doc_id")).as("clip"))
       exportSigs(docs, "clip", graft.multimodal.VideoHash.fhashUdf,
-        QueriesExtra2.sigPath(videoSigVariant, QueriesExtra2.scaleKey(dir)))
+        dir, videoSigVariant)
       graft.multimodal.VideoHash.deduplicateByFHash(docs, "clip",
           maxHamming = 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")

@@ -27,122 +27,78 @@ import graft.scoring.{ExternalLm, ExternalLmScorer, TrainSp}
   */
 object QueriesExtra11 {
 
-  /** The "external" model pair on disk (dumped from the shipped
-    * resources once per JVM, then ingested back through the file API).
-    * Corpus-independent — no scale key, like the f2 ARPA dump.
-    */
-  private val ExtLmDir = "/tmp/graft_extlm"
-  private val ExtLmTables = "/tmp/graft_extlm_tables"
   private val ArpaRes = "graft/graft-en-sp.arpa"
   private val PiecesRes = "graft/graft-en.pieces"
 
   @volatile private var extLmScorer: ExternalLmScorer = null
   @volatile private var extLmBinScorer: ExternalLmScorer = null
 
-  /** Concurrent-JVM-safe resource dump (VERDICT r16 "what's wrong" #3):
-    * two verify/bench JVMs racing a plain REPLACE_EXISTING copy could
-    * expose a half-written model file to the other's reader. Each writer
-    * copies to its own temp name and ATOMIC_MOVEs into place — the
-    * content is identical across JVMs (same classpath resource), so
-    * whoever lands last is fine and no reader ever sees a partial file.
-    */
   private def resourceToFile(res: String, dest: String): Unit = {
     val in = getClass.getClassLoader.getResourceAsStream(res)
     require(in != null, s"missing resource $res")
-    val destPath = java.nio.file.Paths.get(dest)
-    val tmp = destPath.resolveSibling(
-      s".${destPath.getFileName}.${java.lang.ProcessHandle.current.pid}.tmp")
-    try {
-      java.nio.file.Files.copy(in, tmp,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.move(tmp, destPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally {
-      in.close()
-      java.nio.file.Files.deleteIfExists(tmp)
-    }
+    try java.nio.file.Files.copy(in, java.nio.file.Paths.get(dest),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
   }
 
-  /** Dump resources → files, ingest via [[ExternalLm.fromFiles]], export
-    * model + pieces AS DATA for the oracle. Once per JVM, through
-    * [[SideChannel.writeOnce]] on the tables the oracle reads (all three
-    * queries call this); the scorer is memoized so executor tasks (same
-    * JVM at local[32]; on a cluster ship the two files with
+  /** Dump the resources as the "external" model pair into the side
+    * channel `extlm`, ingest them via [[ExternalLm.fromFiles]], and export
+    * model + pieces AS DATA to `extlm_tables` for the oracle. Once per
+    * run, through [[SideChannel.writeOnce]] on the tables the oracle reads
+    * (all three queries call this); the scorers are memoized so executor
+    * tasks (same JVM at local[32]; on a cluster ship the files with
     * `SparkFiles.addFile` first) reuse one parsed model.
     */
-  private def ensureExternalLm(
-      s: org.apache.spark.sql.SparkSession): ExternalLmScorer = {
-    SideChannel.writeOnce(ExtLmTables) {
-      // cross-JVM exclusion for the parquet exports (VERDICT r16 #3):
-      // overwrite-mode deletes the directory first, so a concurrent
-      // verify/bench JVM re-exporting the same frames could hand DuckDB
-      // a half-replaced glob. The flat model files are atomic-moved;
-      // the parquet side serializes on the dir lock (identical content
-      // per JVM, so whoever writes last is equivalent).
-      QueriesArrow.withDirLock(ExtLmDir) {
-        resourceToFile(ArpaRes, s"$ExtLmDir/model.arpa")
-        resourceToFile(PiecesRes, s"$ExtLmDir/pieces.vocab")
-        val scorer = ExternalLm.fromFiles(s"$ExtLmDir/model.arpa",
-          Some(s"$ExtLmDir/pieces.vocab"))
-        // r17: compile the text ARPA to graft's binary `.glm` (same
-        // atomic-move discipline as the flat files) and build a SECOND
-        // scorer whose LM half loads through the PackedLm path — the
-        // f2_external_lm_bin oracle proves the compiled representation
-        // answers the full document chain hash-identically.
-        locally {
-          val glm = java.nio.file.Paths.get(s"$ExtLmDir/model.glm")
-          val tmpGlm = glm.resolveSibling(
-            s".model.glm.${java.lang.ProcessHandle.current.pid}.tmp")
-          try {
-            graft.scoring.PackedLm.compileFile(s"$ExtLmDir/model.arpa",
-              tmpGlm.toString)
-            java.nio.file.Files.move(tmpGlm, glm,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          } finally java.nio.file.Files.deleteIfExists(tmpGlm)
-        }
-        extLmBinScorer = ExternalLm.fromFiles(s"$ExtLmDir/model.glm",
-          Some(s"$ExtLmDir/pieces.vocab"))
-        OracleSql.dumpArpa(s, scorer.model, ExtLmTables)
-        import s.implicits._
-        scorer.pieces.get.rows.toDF("piece", "len", "score")
-          .write.mode("overwrite").parquet(s"$ExtLmTables/pieces")
-        extLmScorer = scorer
-      }
+  private def ensureExternalLm(s: org.apache.spark.sql.SparkSession,
+      dir: String): Unit =
+    SideChannel.writeOnce(dir, "extlm_tables") { tables =>
+      val lm = SideChannel.path("extlm")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(lm))
+      resourceToFile(ArpaRes, s"$lm/model.arpa")
+      resourceToFile(PiecesRes, s"$lm/pieces.vocab")
+      val scorer = ExternalLm.fromFiles(s"$lm/model.arpa",
+        Some(s"$lm/pieces.vocab"))
+      // r17: compile the text ARPA to graft's binary `.glm` and build a
+      // SECOND scorer whose LM half loads through the PackedLm path — the
+      // f2_external_lm_bin oracle proves the compiled representation
+      // answers the full document chain hash-identically.
+      graft.scoring.PackedLm.compileFile(s"$lm/model.arpa", s"$lm/model.glm")
+      extLmBinScorer = ExternalLm.fromFiles(s"$lm/model.glm",
+        Some(s"$lm/pieces.vocab"))
+      OracleSql.dumpArpa(s, scorer.model, tables)
+      import s.implicits._
+      scorer.pieces.get.rows.toDF("piece", "len", "score")
+        .write.mode("overwrite").parquet(s"$tables/pieces")
+      extLmScorer = scorer
     }
-    extLmScorer
-  }
 
-  /** Shared scorer UDF shape for the text-ARPA and compiled-.glm paths.
-    * Fast path: the driver populated the field during query construction
-    * and local-mode executors share the JVM; a separate-JVM executor
-    * (non-local master) re-resolves through the path-keyed per-JVM
-    * cache instead of NPE-ing on the driver-only var — it still needs
-    * the files present (SparkFiles.addFile them; ensureExternalLm's doc).
-    * `fast` must be a closure over the @volatile field, not its value,
-    * so executors observe the post-construction write.
+  /** The scorer UDF over `lmFile` (`model.arpa`, or the compiled
+    * `model.glm`), after [[ensureExternalLm]]. Fast path: the driver
+    * populated the memo `fast` reads and local-mode executors share the
+    * JVM; a separate-JVM executor (non-local master) re-resolves the
+    * files at the driver's side-channel path through the path-keyed
+    * per-JVM cache instead of NPE-ing on the driver-only var — it still
+    * needs the files present (SparkFiles.addFile them). `fast` must be a
+    * closure over the @volatile field, not its value, so executors
+    * observe the post-construction write.
     */
-  private def mkScoreUdf(fast: () => ExternalLmScorer, lmFile: String) =
+  private def scoreUdf(s: org.apache.spark.sql.SparkSession, dir: String,
+      fast: () => ExternalLmScorer, lmFile: String) = {
+    ensureExternalLm(s, dir)
+    val lm = SideChannel.path("extlm")
     udf { (t: String) =>
-      val s = fast()
-      val scorer =
-        if (s != null) s
-        else graft.scoring.ExternalLm.cached(s"$ExtLmDir/$lmFile",
-          Some(s"$ExtLmDir/pieces.vocab"))
+      val scorer = Option(fast()).getOrElse(
+        ExternalLm.cached(s"$lm/$lmFile", Some(s"$lm/pieces.vocab")))
       scorer.score(if (t == null) "" else t)
     }
-
-  private val scoreUdf = mkScoreUdf(() => extLmScorer, "model.arpa")
-  private val scoreBinUdf = mkScoreUdf(() => extLmBinScorer, "model.glm")
+  }
 
   val f2External: QueryDef = QueryDef("f2_external_lm",
-    (s, dir) => {
-      ensureExternalLm(s)
-      Queries.table(s, dir, "documents")
-        .select(col("doc_id"), scoreUdf(col("text")).as("ext_lm_ppl"))
-        .orderBy("doc_id")
-    },
+    (s, dir) => Queries.table(s, dir, "documents")
+      .select(col("doc_id"),
+        scoreUdf(s, dir, () => extLmScorer, "model.arpa")(
+          col("text")).as("ext_lm_ppl"))
+      .orderBy("doc_id"),
     Some(replaySql("text")))
 
   /** Multi-line whole-doc oracle (ADVICE r16 medium — the divergence it
@@ -155,14 +111,12 @@ object QueriesExtra11 {
     * `<s>..</s>` event chain with a single +1 per document.
     */
   val f2ExternalMultiline: QueryDef = QueryDef("f2_external_lm_multiline",
-    (s, dir) => {
-      ensureExternalLm(s)
-      Queries.table(s, dir, "documents")
-        .select(col("doc_id"),
-          scoreUdf(concat(col("text"), lit("\n"), col("text"),
-            lit("\nx  y z"))).as("ext_lm_ppl"))
-        .orderBy("doc_id")
-    },
+    (s, dir) => Queries.table(s, dir, "documents")
+      .select(col("doc_id"),
+        scoreUdf(s, dir, () => extLmScorer, "model.arpa")(concat(
+          col("text"), lit("\n"), col("text"), lit("\nx  y z")))
+          .as("ext_lm_ppl"))
+      .orderBy("doc_id"),
     Some(replaySql("text || chr(10) || text || chr(10) || 'x  y z'")))
 
   /** r17: the same documents scored through the COMPILED `.glm` LM
@@ -176,12 +130,11 @@ object QueriesExtra11 {
     * in-JVM parity (PackedLmSpec covers that bit-exactly).
     */
   val f2ExternalBin: QueryDef = QueryDef("f2_external_lm_bin",
-    (s, dir) => {
-      ensureExternalLm(s)
-      Queries.table(s, dir, "documents")
-        .select(col("doc_id"), scoreBinUdf(col("text")).as("ext_lm_ppl"))
-        .orderBy("doc_id")
-    },
+    (s, dir) => Queries.table(s, dir, "documents")
+      .select(col("doc_id"),
+        scoreUdf(s, dir, () => extLmBinScorer, "model.glm")(
+          col("text")).as("ext_lm_ppl"))
+      .orderBy("doc_id"),
     Some(replaySql("text")))
 
   /** The full DuckDB replay over an arbitrary raw-document SQL
@@ -211,9 +164,10 @@ object QueriesExtra11 {
         s"WHEN p$k.piece IS NOT NULL THEN $k "
       }.mkString + "ELSE 1 END"
       "WITH RECURSIVE " +
-        arpaCtes(ExtLmTables) +
-        s"pc AS (SELECT piece, len FROM " +
-        s"parquet_scan('$ExtLmTables/pieces/*.parquet') WHERE len >= 2), " +
+        arpaCtes(SideChannel.sqlPath("extlm_tables")) +
+        s"pc AS (SELECT piece, len FROM parquet_scan('" +
+        SideChannel.sqlPath("extlm_tables") +
+        "/pieces/*.parquet') WHERE len >= 2), " +
         s"d AS (SELECT doc_id, $norm AS norm FROM documents), " +
         "d2 AS (SELECT doc_id, CASE WHEN norm = '' THEN '' ELSE " +
         "'▁' || replace(norm, ' ', '▁') END AS s FROM d), " +

@@ -238,50 +238,18 @@ object QueriesExtra2 {
         "ORDER BY a"
     })
 
-  /** Side-channel parquet for the dedup oracles: the queries materialize
-    * their verified edge lists here, and DuckDB independently recomputes
-    * transitive closure → component minima → keep-first (a recursive-CTE
-    * replay of the clustering, the same materialized-decision pattern as
-    * the IVF oracle). Edge VALIDITY is proven separately by
-    * DedupInvariantSpec's kernel re-verification, so between the two, both
-    * halves of each variant — pair finding and clustering — are checked
-    * by something that is not the engine itself.
-    */
-  /** Paths are keyed by the SCALE DIR the query ran against: the driver
-    * benches at sf0.1 and oracle-checks at sf0.01 in unspecified order,
-    * so the two runs must never clobber each other's materialized
-    * decisions. The STATIC oracle strings pin the correctness gate's
-    * scale ([[OracleScaleKey]]); `tools/verify_local.py` therefore only
-    * oracle-compares at sf0.01 (other scales still run rows-only).
-    */
-  private[graft] val OracleScaleKey = "sf0.01"
-
-  private[graft] def scaleKey(dir: String): String =
-    new java.io.File(dir).getName
-
-  private[graft] def dedupEdgesPath(variant: String, key: String) =
-    s"/tmp/graft_dedup_edges_${variant}_$key"
-
-  /** r7: the minhash/simhash/ngram oracles' side-channel input moved one
-    * level UP the trust chain — from Spark-computed edge lists to the raw
-    * SIGNATURE frames (exploded (id, band, bsig) for the minhash family,
-    * (id, sig) for simhash). DuckDB now derives candidate edges itself
+  /** Side channels of the dedup oracles, named by variant: the minhash
+    * family exports its exploded (id, band, bsig) SIGNATURE frame as
+    * `dedup_banded_<variant>`, simhash its (id, sig) frame as
+    * `dedup_sigs_<variant>`, and the embedding dedup its verified edge
+    * list as `dedup_edges_<variant>`. DuckDB derives the candidate edges
     * (bucket-min per band / bit-sliced banding + hamming verify / exact
-    * Jaccard verify), so banding and candidate generation are oracle-
-    * checked, not just the clustering replay.
+    * Jaccard verify) and replays the clustering — transitive closure →
+    * component minima → keep-first — itself, so pair finding and
+    * clustering are both checked by something that is not the engine.
+    * Edge VALIDITY is proven separately by DedupInvariantSpec's kernel
+    * re-verification.
     */
-  private[graft] def bandedPath(variant: String, key: String) =
-    s"/tmp/graft_dedup_banded_${variant}_$key"
-
-  private[graft] def sigPath(variant: String, key: String) =
-    s"/tmp/graft_dedup_sigs_${variant}_$key"
-
-  /** (doc_id, deflate-compressed length) frame for the ta_compress_ratio
-    * oracle — see [[graft.analysis.Compression.deflateLen]].
-    */
-  private[graft] def compLenPath(key: String) =
-    s"/tmp/graft_compress_len_$key"
-
   /** The symmetrize → transitive-closure → component-min CTE chain over a
     * materialized undirected edge list. ONE definition shared by every
     * clustering oracle (the four dedup variants and the flagship minhash
@@ -302,7 +270,7 @@ object QueriesExtra2 {
     */
   private[graft] def keepFirstSql(variant: String, table: String,
       idCol: String): String = {
-    val p = dedupEdgesPath(variant, OracleScaleKey) + "/*.parquet"
+    val p = SideChannel.sqlPath(s"dedup_edges_$variant") + "/*.parquet"
     "WITH RECURSIVE " + closureCtes(p) + " " +
       s"SELECT t.$idCol FROM $table t LEFT JOIN root r ON t.$idCol = r.id " +
       s"WHERE r.root IS NULL OR r.root = t.$idCol ORDER BY t.$idCol"
@@ -345,7 +313,7 @@ object QueriesExtra2 {
   /** Full minhash keep-first oracle over a plain (idCol, text) table. */
   private[graft] def minhashKeepFirstSql(variant: String, minNgram: Int,
       table: String, idCol: String): String = {
-    val glob = bandedPath(variant, OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_banded_$variant") + "/*.parquet"
     s"WITH RECURSIVE dsrc AS (SELECT $idCol AS id, text AS t FROM $table), " +
       minhashCtes(glob, minNgram) + " " +
       s"SELECT t.$idCol FROM $table t LEFT JOIN root r ON t.$idCol = r.id " +
@@ -360,7 +328,7 @@ object QueriesExtra2 {
     */
   private[graft] def simhashKeepFirstSql(variant: String, maxHamming: Int,
       table: String, idCol: String): String = {
-    val glob = sigPath(variant, OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_sigs_$variant") + "/*.parquet"
     val bands = maxHamming + 1
     val width = 64 / bands
     val mask = (1L << width) - 1
@@ -388,7 +356,7 @@ object QueriesExtra2 {
     */
   private[graft] def ngramKeepFirstSql(variant: String, n: Int,
       threshold: Double, table: String, idCol: String): String = {
-    val glob = bandedPath(variant, OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_banded_$variant") + "/*.parquet"
     val gram = (0 until n).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
     s"WITH RECURSIVE bnd AS (SELECT id, band, bsig FROM " +
       s"parquet_scan('$glob')), " +
@@ -416,7 +384,7 @@ object QueriesExtra2 {
   /** Shared body for the edge-oracled dedup queries (embedding only since
     * r7 — see [[dedupEmbedding]] for why its oracle input stays at the
     * edge level): assign doc-derived ids, export the verified edges once
-    * per (JVM, scale) and cluster their read-back.
+    * per run and cluster their read-back.
     */
   private[graft] def edgeOracledDedup(s: org.apache.spark.sql.SparkSession,
       corpus: org.apache.spark.sql.DataFrame, idCol: String,
@@ -425,7 +393,7 @@ object QueriesExtra2 {
       : org.apache.spark.sql.DataFrame =
     graft.dedup.Clustering.run(corpus, Some(idCol), 10000000L,
       graft.dedup.Clustering.Pin.Released)(withId =>
-      SideChannel.through(dedupEdgesPath(variant, scaleKey(dir)))(
+      SideChannel.through(dir, s"dedup_edges_$variant")(
         edges(withId)))(
       // lineage cut so the id cache can release
       _.keep(_).select(idCol).orderBy(idCol).localCheckpoint(true))
@@ -435,12 +403,12 @@ object QueriesExtra2 {
     graft.dedup.MinHashConfig(ngramSize = 3, minNgramSize = 3)
 
   /** The documents table, after exporting its [[DocsMinhash]] banded
-    * frame (doc_id ids) for `variant`'s oracle once per (JVM, scale).
+    * frame (doc_id ids) for `variant`'s oracle once per run.
     */
   private[graft] def docsBanded(s: org.apache.spark.sql.SparkSession,
       dir: String, variant: String): org.apache.spark.sql.DataFrame = {
     val docs = Queries.table(s, dir, "documents")
-    SideChannel.exportOnce(bandedPath(variant, scaleKey(dir)))(
+    SideChannel.exportOnce(dir, s"dedup_banded_$variant")(
       graft.dedup.MinHashDedup.bandedFrame(docs, "text", DocsMinhash,
         Some("doc_id")))
     docs
@@ -453,7 +421,7 @@ object QueriesExtra2 {
     (s, dir) => {
       import graft.dedup.SimHash
       val docs = Queries.table(s, dir, "documents")
-      SideChannel.exportOnce(sigPath("simhash", scaleKey(dir)))(
+      SideChannel.exportOnce(dir, "dedup_sigs_simhash")(
         SimHash.sigFrame(docs, "text", SimHash.signature, Some("doc_id")))
       SimHash.deduplicate(docs, "text", 3, orderCol = Some("doc_id"))
         .select("doc_id").orderBy("doc_id")
@@ -470,7 +438,7 @@ object QueriesExtra2 {
     (s, dir) => {
       import graft.dedup.{MinHashConfig, NgramJaccard}
       val docs = Queries.table(s, dir, "documents")
-      SideChannel.exportOnce(bandedPath("ngram", scaleKey(dir)))(
+      SideChannel.exportOnce(dir, "dedup_banded_ngram")(
         NgramJaccard.bandedFrame(docs, "text", 5, 0.7, MinHashConfig(),
           Some("doc_id")))
       NgramJaccard.deduplicate(docs, "text", 5, 0.7, orderCol = Some("doc_id"))
@@ -532,14 +500,12 @@ object QueriesExtra2 {
     * scorer but the parsed model constants. The 1-dp rounding absorbs
     * any cross-engine ulp noise in the sum.
     */
-  private val ArpaTablePath = "/tmp/graft_arpa_tables"
-
   val f2: QueryDef = QueryDef("f2_check_perplexity",
     (s, dir) => {
       // the model dump is corpus-independent and the model is fixed per
       // JVM — write it once, not per bench repetition (348k rows)
-      SideChannel.writeOnce(ArpaTablePath)(OracleSql.dumpArpa(s,
-        graft.scoring.ArpaScorer.model, ArpaTablePath))
+      SideChannel.writeOnce(dir, "arpa_tables")(OracleSql.dumpArpa(s,
+        graft.scoring.ArpaScorer.model, _))
       Queries.table(s, dir, "documents")
         .select(col("doc_id"),
           graft.scoring.Perplexity.filter(0, 1e9).score(col("text"))
@@ -550,7 +516,7 @@ object QueriesExtra2 {
       import OracleSql._
       // documents.text is single-line; the ccnet chain is the same
       // fragment the (injected-char) ccnet_normalize oracle hash-matches
-      "WITH " + arpaCtes(ArpaTablePath) +
+      "WITH " + arpaCtes(SideChannel.sqlPath("arpa_tables")) +
         s"d AS (SELECT doc_id, ${ccnet("text")} AS norm FROM documents), " +
         "t AS (SELECT doc_id, list_filter(regexp_split_to_array(norm, " +
         "'\\s+'), x -> x <> '') AS ws FROM d), " +
@@ -672,7 +638,7 @@ object QueriesExtra2 {
     (s, dir) => {
       // the oracle reads the response dedup's banded frame: band the
       // same dedup input, over the same `__mid__` ids
-      SideChannel.exportOnce(bandedPath("flagship_main", scaleKey(dir))) {
+      SideChannel.exportOnce(dir, "dedup_banded_flagship_main") {
         val resp = graft.chat.ChatPipeline.flagshipResponse(s, dir)
         graft.dedup.MinHashDedup.bandedFrame(resp.dedupInput,
           resp.columnName, resp.dedup.get, resp.dedupOrderCol)

@@ -106,8 +106,7 @@ object QueriesExtra4 {
     */
   val compressRatio: QueryDef = QueryDef("ta_compress_ratio",
     (s, dir) => {
-      val side = SideChannel.through(
-        QueriesExtra2.compLenPath(QueriesExtra2.scaleKey(dir)))(
+      val side = SideChannel.through(dir, "compress_len")(
         docs(s, dir).select(col(d).as("id"),
           graft.analysis.Compression.deflateLen(col("text"))
             .as("comp_len")))
@@ -125,8 +124,7 @@ object QueriesExtra4 {
         .orderBy(d)
     },
     Some {
-      val p = QueriesExtra2.compLenPath(QueriesExtra2.OracleScaleKey) +
-        "/*.parquet"
+      val p = SideChannel.sqlPath("compress_len") + "/*.parquet"
       "SELECT d.doc_id, CAST(COALESCE(strlen(d.text), 0) AS BIGINT) " +
         "AS n_bytes, s.comp_len, " +
         "CASE WHEN COALESCE(strlen(d.text), 0) = 0 THEN 1.0 ELSE " +

@@ -75,10 +75,8 @@ object QueriesExtra5 {
       "LEFT JOIN tot t ON t.label = l.label " +
       "ORDER BY v.token, l.label"))
 
-  private def nbPath(key: String) = s"/tmp/graft_nb_model_$key"
-
   /** Train-and-score: the integer-quantized model is the side-channel
-    * (exported once per JVM+scale, like the F2 ARPA dump); DuckDB replays
+    * (exported once per run, like the F2 ARPA dump); DuckDB replays
     * scoring from it — tokenize, vocab join (OOV drops out; the appended
     * `zzunseen` token exercises that on both engines), exact integer
     * score sums, argmax with the label-ascending tie-break, margin to the
@@ -90,10 +88,9 @@ object QueriesExtra5 {
       val withDoc = Queries.table(s, dir, "documents")
         .withColumn("_doc", docExprSpark)
       val model = NaiveBayes.train(withDoc, "_doc", "lang", VocabV)
-      val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      SideChannel.exportOnce(nbPath(key) + "/weights")(wDf)
-      SideChannel.exportOnce(nbPath(key) + "/priors")(pDf)
+      SideChannel.exportOnce(dir, "nb_model/weights")(wDf)
+      SideChannel.exportOnce(dir, "nb_model/priors")(pDf)
       // r19: fused tokenize+score kernel — same integer sums as predict
       // with the default featurizer (ClassifierSpec differential)
       NaiveBayes.predictTokens(
@@ -104,7 +101,7 @@ object QueriesExtra5 {
         .orderBy(d)
     },
     Some {
-      val base = nbPath(QueriesExtra2.OracleScaleKey)
+      val base = SideChannel.sqlPath("nb_model")
       s"WITH w AS (SELECT * FROM parquet_scan('$base/weights/*.parquet')), " +
         s"p AS (SELECT * FROM parquet_scan('$base/priors/*.parquet')), " +
         s"d AS (SELECT doc_id, $docExprSql || ' zzunseen' AS t FROM documents), " +
@@ -123,8 +120,6 @@ object QueriesExtra5 {
         "CAST(score - coalesce(nxt, score) AS BIGINT) AS nb_margin_micro " +
         "FROM rk WHERE rn = 1 ORDER BY doc_id"
     })
-
-  private def nbCgramPath(key: String) = s"/tmp/graft_nb_cgram_$key"
 
   /** Char-[2,4]-gram vocabulary budget: the soup corpus + markers yield
     * well over this many distinct grams, so the TakeOrdered top-V
@@ -155,10 +150,9 @@ object QueriesExtra5 {
       val model = NaiveBayes.train(withDoc, "_doc", "lang", CgramV,
         cgramFeat, substringHaystack = Some(lower(col("_doc"))),
         distinctFeatures = Some(c => NaiveBayes.charGramsDistinctCol(c, 2, 4)))
-      val key = QueriesExtra2.scaleKey(dir)
       val (wDf, pDf) = NaiveBayes.modelFrames(s, model)
-      SideChannel.exportOnce(nbCgramPath(key) + "/weights")(wDf)
-      SideChannel.exportOnce(nbCgramPath(key) + "/priors")(pDf)
+      SideChannel.exportOnce(dir, "nb_cgram/weights")(wDf)
+      SideChannel.exportOnce(dir, "nb_cgram/priors")(pDf)
       // r19: scoring via one DFA scan of the same lowercased haystack the
       // gram featurizer reads — identical integer sums (ClassifierSpec
       // pins predictSubstring == predict on this featurizer)
@@ -170,7 +164,7 @@ object QueriesExtra5 {
         .orderBy(d)
     },
     Some {
-      val base = nbCgramPath(QueriesExtra2.OracleScaleKey)
+      val base = SideChannel.sqlPath("nb_cgram")
       s"WITH w AS (SELECT * FROM parquet_scan('$base/weights/*.parquet')), " +
         s"p AS (SELECT * FROM parquet_scan('$base/priors/*.parquet')), " +
         s"d AS (SELECT doc_id, lower($docExprSql || ' zzunseen') AS lt " +
@@ -255,8 +249,7 @@ object QueriesExtra5 {
       val docs = Queries.table(s, dir, "documents")
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
-      val key = QueriesExtra2.scaleKey(dir)
-      SideChannel.exportOnce(bpePath(key))(
+      SideChannel.exportOnce(dir, "bpe_words")(
         graft.text.Bpe.wordEncodings(s, docs, model, "text"))
       val counts = graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"))
@@ -266,7 +259,7 @@ object QueriesExtra5 {
         .orderBy(d)
     },
     Some {
-      val p = bpePath(QueriesExtra2.OracleScaleKey) + "/*.parquet"
+      val p = SideChannel.sqlPath("bpe_words") + "/*.parquet"
       val valuesSql = MixBudgetsBpe.toSeq.sortBy(_._1)
         .map { case (src, b) => s"('$src', $b)" }.mkString(", ")
       s"WITH we AS (SELECT * FROM parquet_scan('$p')), " +
@@ -307,8 +300,6 @@ object QueriesExtra5 {
       s"FROM (SELECT source, lang, $wordLenSql AS toks FROM documents) " +
       "GROUP BY CUBE (source, lang) ORDER BY grp, source, lang"))
 
-  private def bpePath(key: String) = s"/tmp/graft_bpe_words_$key"
-
   /** BPE trainer + encoder: one word-count shuffle, driver merge loop
     * over the bounded dictionary, closure-model encode. The per-word
     * encoding table is the side-channel (the merge-apply loop is the one
@@ -322,15 +313,14 @@ object QueriesExtra5 {
       val docs = Queries.table(s, dir, "documents")
       val model = graft.text.Bpe.train(docs, "text", numMerges = 40,
         maxWords = 200)
-      val key = QueriesExtra2.scaleKey(dir)
-      SideChannel.exportOnce(bpePath(key))(
+      SideChannel.exportOnce(dir, "bpe_words")(
         graft.text.Bpe.wordEncodings(s, docs, model, "text"))
       graft.text.Bpe.encode(docs, model, "text")
         .select(col(d), col("n_bpe_tokens"), col("bpe_text"))
         .orderBy(d)
     },
     Some {
-      val p = bpePath(QueriesExtra2.OracleScaleKey) + "/*.parquet"
+      val p = SideChannel.sqlPath("bpe_words") + "/*.parquet"
       s"WITH we AS (SELECT * FROM parquet_scan('$p')), " +
         "t AS (SELECT doc_id, regexp_extract_all(lower(text), " +
         "'[\\p{L}\\p{N}_]+') AS ws FROM documents), " +

@@ -76,8 +76,7 @@ object QueriesExtra7 {
     */
   private def levKeepFirstSql(variant: String, threshold: Double,
       table: String, idCol: String): String = {
-    val glob = QueriesExtra2.bandedPath(variant,
-      QueriesExtra2.OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_banded_$variant") + "/*.parquet"
     s"WITH RECURSIVE bnd AS (SELECT id, band, bsig FROM " +
       s"parquet_scan('$glob')), " +
       "lshm AS (SELECT id, min(id) OVER (PARTITION BY band, bsig) AS mn " +
@@ -102,8 +101,7 @@ object QueriesExtra7 {
     (s, dir) => {
       import graft.dedup.{EditDistanceDedup, MinHashConfig}
       val docs = Queries.table(s, dir, "documents")
-      SideChannel.exportOnce(
-        QueriesExtra2.bandedPath("editdist", QueriesExtra2.scaleKey(dir)))(
+      SideChannel.exportOnce(dir, "dedup_banded_editdist")(
         EditDistanceDedup.bandedFrame(docs, "text", 5, MinHashConfig(),
           Some("doc_id")))
       EditDistanceDedup.deduplicate(docs, "text", 5, 0.8,
@@ -156,8 +154,6 @@ object QueriesExtra7 {
 
   // ---- cluster-balanced diversity sampling ----
 
-  private def cellsBalPath(key: String) = s"/tmp/graft_cells_balanced_$key"
-
   /** Cluster-balanced sampling over the learned k-means cells: the cell
     * assignment is the side-channel (float-argmax k-means is Spark's, the
     * IVF/SemDedup precedent); DuckDB replays the entire quota pass — the
@@ -169,14 +165,13 @@ object QueriesExtra7 {
       val assigned = graft.similarity.Ann.kmeansAssign(emb, "embedding",
           "vec_id", "cell", k = 16, iters = 3, trainFraction = 0.5)
         .select(col("vec_id"), col("cell"))
-      val key = QueriesExtra2.scaleKey(dir)
-      val cells = SideChannel.through(cellsBalPath(key))(assigned)
+      val cells = SideChannel.through(dir, "cells_balanced")(assigned)
       graft.sampling.ClusterBalance.capPerCell(cells, "vec_id", "cell",
           quota = 20, seed = 5L)
         .orderBy("vec_id")
     },
     Some("WITH c AS (SELECT vec_id, cell FROM parquet_scan('" +
-      cellsBalPath(QueriesExtra2.OracleScaleKey) + "/*.parquet')), " +
+      SideChannel.sqlPath("cells_balanced") + "/*.parquet')), " +
       "r AS (SELECT vec_id, cell, row_number() OVER (PARTITION BY cell " +
       "ORDER BY md5('5:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn " +
       "FROM c) SELECT vec_id, cell FROM r WHERE rn <= 20 ORDER BY vec_id"))

@@ -94,8 +94,7 @@ object QueriesExtra8 {
       QueriesExtra2.DocsMinhash)
       .orderBy("doc_id"),
     Some {
-      val glob = QueriesExtra2
-        .bandedPath("minhash_leaksplit", QueriesExtra2.OracleScaleKey) +
+      val glob = SideChannel.sqlPath("dedup_banded_minhash_leaksplit") +
         "/*.parquet"
       val h = "substr(md5(CAST(root AS VARCHAR)), 1, 4)"
       "WITH RECURSIVE dsrc AS (SELECT doc_id AS id, text AS t FROM " +
@@ -147,8 +146,7 @@ object QueriesExtra8 {
       .select(col(d), col("weight"))
       .orderBy(d),
     Some {
-      val glob = QueriesExtra2
-        .bandedPath("minhash_weighted", QueriesExtra2.OracleScaleKey) +
+      val glob = SideChannel.sqlPath("dedup_banded_minhash_weighted") +
         "/*.parquet"
       "WITH RECURSIVE dsrc AS (SELECT doc_id AS id, text AS t FROM " +
         "documents), " + QueriesExtra2.minhashCtes(glob, 3) + ", " +

@@ -100,9 +100,7 @@ object QueriesFlagshipOracle {
     // freed once that frame is dropped; an earlier localCheckpoint of
     // the output measured ~1s of copy at sf0.1). The banded export
     // (first run per JVM) computes the trunk apart.
-    val path =
-      QueriesExtra2.bandedPath("flagship", QueriesExtra2.scaleKey(dir))
-    SideChannel.exportOnce(path)(
+    SideChannel.exportOnce(dir, "dedup_banded_flagship")(
       MinHashDedup.bandedFrame(rendered, "response", cfg, Some("__mid__")))
     Clustering.run(rendered, Some("__mid__"), 10000000L, Clustering.Pin.Held)(
         MinHashDedup.candidateEdges(_, "response", cfg))(_.keep(_))
@@ -163,8 +161,7 @@ object QueriesFlagshipOracle {
     */
   private def minhashOracleSql(variant: String): String = {
     import OracleSql._
-    val glob = QueriesExtra2
-      .bandedPath(variant, QueriesExtra2.OracleScaleKey) + "/*.parquet"
+    val glob = SideChannel.sqlPath(s"dedup_banded_$variant") + "/*.parquet"
     // RECURSIVE must follow WITH; the trunk CTEs lead, the signature-
     // derived clustering CTEs (which need the trunk's dsrc) follow
     "WITH RECURSIVE " + trunkCtes.stripPrefix("WITH ") + ", " +

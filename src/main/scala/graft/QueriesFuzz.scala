@@ -18,11 +18,10 @@ import graft.text.{Cleaners, Filters, WordLists}
   *
   * The corpus is DETERMINISTIC and scale-independent: N hostile
   * fragments composed 3-at-a-time by index arithmetic into N² rows,
-  * written once per JVM to a /tmp parquet side-channel that BOTH engines
+  * written once per run to a parquet side channel that BOTH engines
   * read — so encoding round-trips through parquet (e.g. unpaired
   * surrogates, which UTF-8 cannot carry) equalize before either engine
-  * sees the text. Same pattern as the ARPA model dump: no scale key in
-  * the path, so the oracle stays comparable at every scale factor.
+  * sees the text.
   *
   * Known divergences deliberately NOT probed (documented, not silent):
   * Turkish dotted İ (ICU lowercases to `i` + combining dot, JVM per-char
@@ -31,8 +30,6 @@ import graft.text.{Cleaners, Filters, WordLists}
   * covered by the injected-char `ccnet_normalize` oracle).
   */
 object QueriesFuzz {
-
-  private[graft] val CorpusPath = "/tmp/graft_fuzz_corpus"
 
   /** (fragment, hand-written ftfy-6 expected output). The expectations
     * are authored from the ftfy pipeline semantics (cleaners.py:5-8
@@ -169,10 +166,10 @@ object QueriesFuzz {
     * cut used three indices that were all functions of i%N, which
     * collapsed the corpus to 24 distinct texts — caught in review; a
     * FuzzSpec distinctness assertion now pins this.) Exported once per
-    * JVM; every fuzz query and its oracle read the bytes on disk.
+    * run; every fuzz query and its oracle read the bytes on disk.
     */
-  private[graft] def corpus(s: SparkSession): DataFrame =
-    SideChannel.readBack(CorpusPath) {
+  private[graft] def corpus(s: SparkSession, dir: String): DataFrame = {
+    SideChannel.exportOnce(dir, "fuzz_corpus") {
       val frags = array(Fragments.map(f => lit(f._1)): _*)
       val j = col("fid") % N
       val k = (col("fid") / N) % N
@@ -186,15 +183,18 @@ object QueriesFuzz {
             .as("text"))
         .coalesce(1)
     }
+    s.read.parquet(SideChannel.path("fuzz_corpus"))
+  }
 
-  private val FuzzTable = s"parquet_scan('$CorpusPath/*.parquet')"
+  private val FuzzTable =
+    s"parquet_scan('${SideChannel.sqlPath("fuzz_corpus")}/*.parquet')"
 
   /** All five cleaners over the hostile corpus in one query: C1 on the
     * bare fragment against the hand-written ftfy goldens, C2-C5 on the
     * composed text with DuckDB recomputing each transform.
     */
   val fuzzCleaners: QueryDef = QueryDef("fuzz_cleaners",
-    (s, dir) => corpus(s)
+    (s, dir) => corpus(s, dir)
       .select(col("fid"),
         Cleaners.fixUtf8Encoding(col("frag")).as("c1"),
         Cleaners.normalizeWhitespace(col("text")).as("c2"),
@@ -217,7 +217,7 @@ object QueriesFuzz {
     * DuckDB from the stored bytes.
     */
   val fuzzFilters: QueryDef = QueryDef("fuzz_filters",
-    (s, dir) => corpus(s)
+    (s, dir) => corpus(s, dir)
       .select(col("fid"),
         Filters.checkWordNumber().score(col("text")).as("wc"),
         Filters.checkNsfwWords().score(col("text")).as("nsfw"),
@@ -277,7 +277,7 @@ object QueriesFuzz {
         when(col("fid") % 2 === 0, lit("he went home"))
           .otherwise(lit("he went home")),
         lit(gtok), lit("she stayed put here"))
-      corpus(s)
+      corpus(s, dir)
         .select(col("fid"),
           Filters.checkTruncation(ttok).score(truncDoc).as("trunc"),
           Filters.checkGender(gtok).score(genderDoc).as("gender"))

@@ -184,8 +184,7 @@ object QueriesPipeline {
         QueriesExtra2.DocsMinhash, orderCol = Some("doc_id"))
       .orderBy("cluster_size"),
     Some {
-      val glob = QueriesExtra2
-        .bandedPath("minhash_stats", QueriesExtra2.OracleScaleKey) +
+      val glob = SideChannel.sqlPath("dedup_banded_minhash_stats") +
         "/*.parquet"
       "WITH RECURSIVE dsrc AS (SELECT doc_id AS id, text AS t FROM " +
         "documents), " + QueriesExtra2.minhashCtes(glob, 3) + ", " +

@@ -22,9 +22,10 @@ object SparkEntry {
     Queries.all.map(qd => qd.name -> qd.run).toMap
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops (driver
-    * records a weaker rows-only check).
+    * the same parquet tables, its side-channel paths resolved to this
+    * run's root. Omitted for non-SQL-expressible ops (driver records a
+    * weaker rows-only check).
     */
-  def oracleSql: Map[String, String] =
-    Queries.all.flatMap(qd => qd.oracle.map(qd.name -> _)).toMap
+  def oracleSql: Map[String, String] = Queries.all.flatMap(qd =>
+    qd.oracle.map(qd.name -> SideChannel.resolve(_))).toMap
 }

@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB oracle compare. status.json
+  * plus oracle_sql.json, for the DuckDB oracle compare. The side channels
+  * its oracle SQL reads go to `<outDir>_side`, beside `outDir`: emptied
+  * at start and kept after exit, for the compare. status.json
   * records every query that ran: "ok", or the error class and message it
   * threw (its output directory is then removed, so no stale parquet is
   * compared). Exits non-zero if any query threw, after writing every
@@ -25,6 +27,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    SideChannel.keepAt(
+      s"${java.nio.file.Paths.get(outDir).toAbsolutePath.normalize}_side")
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=a,b restricts the dump for fast local
@@ -52,12 +56,6 @@ object Verify {
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // provenance manifest: every /tmp side-channel frame THIS run exported.
-    // verify_local retargets scale-pinned oracles only against manifested
-    // paths — an existing dir alone could be stale (older JVM/code/corpus)
-    // and would silently corrupt the compare.
-    Files.writeString(Paths.get(s"$outDir/side_channels.json"),
-      SideChannel.exportedPaths.map(jsonString).mkString("[", ",", "]"))
     Files.writeString(Paths.get(s"$outDir/status.json"), status
       .map { case (k, err) =>
         s"${jsonString(k)}: ${jsonString(err.getOrElse("ok"))}" }

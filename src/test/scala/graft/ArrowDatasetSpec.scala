@@ -125,7 +125,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
         Array.empty[Byte], null, null, Seq(Seq())))
     val df = spark.createDataFrame(data.asJava, schema).repartition(2)
 
-    val out = "/tmp/graft_arrow_spec_lattice"
+    val out = tmp("arrow_spec_lattice")
     ArrowDataset.save(df, out, batchRows = 2)
     val re = ArrowDataset.load(spark, out)
     assert(re.schema === schema.copy(fields = schema.fields.map(
@@ -146,7 +146,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
 
   test("round-trips documents.parquet bit-exactly") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val out = "/tmp/graft_arrow_spec_docs"
+    val out = tmp("arrow_spec_docs")
     ArrowDataset.save(docs.repartition(3), out)
     val re = ArrowDataset.load(spark, out)
     assert(re.count() === docs.count())
@@ -157,7 +157,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     // inputs to tools/arrow_interop.py, which re-reads them with REAL
     // pyarrow (codec interop in the writer direction)
     for (codec <- Seq("zstd", "lz4")) {
-      val cdir = s"/tmp/graft_arrow_spec_docs_$codec"
+      val cdir = tmp(s"arrow_spec_docs_$codec")
       ArrowDataset.save(docs.repartition(3), cdir, compression = codec)
       assert(ArrowDataset.load(spark, cdir).orderBy("doc_id")
         .collect().toSeq === a)
@@ -171,7 +171,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructType(Seq(StructField("id", LongType),
         StructField("t", StringType))))
       .repartition(4) // > row count: at least two shards are empty
-    val out = "/tmp/graft_arrow_spec_layout"
+    val out = tmp("arrow_spec_layout")
     ArrowDataset.save(df, out)
 
     val files = new java.io.File(out).listFiles().map(_.getName).sorted
@@ -217,7 +217,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructField("t", StringType)))
     val data = (0L until 10L).map(i => Row(i, s"row$i"))
     val df = spark.createDataFrame(data.asJava, schema).coalesce(1)
-    val out = "/tmp/graft_arrow_spec_batches"
+    val out = tmp("arrow_spec_batches")
     ArrowDataset.save(df, out, batchRows = 1) // 10 one-row batches
     val re = ArrowDataset.load(spark, out)
     assert(re.orderBy("id").collect().map(_.getString(1)).toSeq
@@ -234,7 +234,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructField("embedding", ArrayType(FloatType))))
     val df = spark.createDataFrame(
       Seq(Row(Seq(Row("hi", true, "User")), Seq(1.0f))).asJava, schema)
-    val out = "/tmp/graft_arrow_spec_features"
+    val out = tmp("arrow_spec_features")
     ArrowDataset.save(df, out)
     val info = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/dataset_info.json")), "UTF-8")
@@ -254,7 +254,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], schema)
     assert(empty.rdd.getNumPartitions === 0) // the degenerate case
-    val out = "/tmp/graft_arrow_spec_empty"
+    val out = tmp("arrow_spec_empty")
     ArrowDataset.save(empty, out)
     val re = ArrowDataset.load(spark, out)
     assert(re.count() === 0)
@@ -295,7 +295,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructField("t", StringType)))
     def df(rows: Seq[Row]) =
       spark.createDataFrame(rows.asJava, schema).repartition(2)
-    val out = "/tmp/graft_arrow_spec_append"
+    val out = tmp("arrow_spec_append")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
 
     ArrowDataset.appendBatch(df(Seq(Row(1L, "a"), Row(2L, "b"))), out, 0L)
@@ -346,8 +346,8 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val out = s"/tmp/graft_arrow_stream_$stamp"
-    val ckpt = s"/tmp/graft_arrow_stream_ckpt_$stamp"
+    val out = tmp(s"arrow_stream_$stamp")
+    val ckpt = tmp(s"arrow_stream_ckpt_$stamp")
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val q = graft.streaming.StreamingPipeline.foreachBatchArrowPublish(
@@ -396,7 +396,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
 
   test("saveDict round-trips a split dict through the DatasetDict layout") {
     import spark.implicits._
-    val out = "/tmp/graft_arrow_spec_dict"
+    val out = tmp("arrow_spec_dict")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val train = Seq((1L, "a"), (2L, "b")).toDF("id", "t")
     val test0 = Seq((9L, "z")).toDF("id", "t")
@@ -428,9 +428,9 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     def shardBytes(dir: String): Long =
       new java.io.File(dir).listFiles()
         .filter(_.getName.endsWith(".arrow")).map(_.length()).sum
-    val plain = "/tmp/graft_arrow_spec_comp_none"
-    val zstd = "/tmp/graft_arrow_spec_comp_zstd"
-    val lz4 = "/tmp/graft_arrow_spec_comp_lz4"
+    val plain = tmp("arrow_spec_comp_none")
+    val zstd = tmp("arrow_spec_comp_zstd")
+    val lz4 = tmp("arrow_spec_comp_lz4")
     ArrowDataset.save(df, plain)
     ArrowDataset.save(df, zstd, compression = "zstd")
     ArrowDataset.save(df, lz4, compression = "lz4")
@@ -443,7 +443,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
         s"$dir not compressed: ${shardBytes(dir)} vs ${shardBytes(plain)}")
     }
     val e = intercept[IllegalArgumentException] {
-      ArrowDataset.save(df, "/tmp/graft_arrow_spec_comp_bad",
+      ArrowDataset.save(df, tmp("arrow_spec_comp_bad"),
         compression = "snappy")
     }
     assert(e.getMessage.contains("snappy"))
@@ -451,7 +451,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
 
   test("save over a previous save sweeps stale shards from the manifest") {
     import spark.implicits._
-    val out = "/tmp/graft_arrow_spec_resave"
+    val out = tmp("arrow_spec_resave")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     ArrowDataset.save((0L until 8L).toDF("id").repartition(4), out)
     assert(new java.io.File(out).listFiles()
@@ -473,7 +473,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("t", StringType)))
-    val out = "/tmp/graft_arrow_spec_append_empty"
+    val out = tmp("arrow_spec_append_empty")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val empty = spark.createDataFrame(Seq.empty[Row].asJava, schema)
     ArrowDataset.appendBatch(empty, out, 0L)
@@ -497,7 +497,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructField("emb", ArrayType(FloatType, containsNull = true))))
     val tight = StructType(Seq(StructField("id", LongType),
       StructField("emb", ArrayType(FloatType, containsNull = false))))
-    val out = "/tmp/graft_arrow_spec_append_nullab"
+    val out = tmp("arrow_spec_append_nullab")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     ArrowDataset.appendBatch(spark.createDataFrame(
       Seq(Row(1L, Seq(1.0f))).asJava, loose), out, 0L)
@@ -530,7 +530,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
       StructField("t", StringType)))
     def df(rows: Seq[Row]) =
       spark.createDataFrame(rows.asJava, schema).repartition(2)
-    val out = "/tmp/graft_arrow_spec_torn"
+    val out = tmp("arrow_spec_torn")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
 
     ArrowDataset.appendBatch(df(Seq(Row(1L, "a"), Row(2L, "b"))), out, 0L)
@@ -592,7 +592,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     // replay leaves the published names continuously readable (a
     // concurrent poller never observes an absent shard) and converges
     // to the replayed rows with no temp residue.
-    val out = "/tmp/graft_arrow_spec_replace_window"
+    val out = tmp("arrow_spec_replace_window")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("t", StringType)))
@@ -681,7 +681,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
     val want = rows.map(r => (r.getLong(0), r)).sortBy(_._1).map(_._2)
 
     for (codec <- Seq("none", "zstd", "lz4")) {
-      val out = s"/tmp/graft_arrow_spec_fuzz_$codec"
+      val out = tmp(s"arrow_spec_fuzz_$codec")
       ArrowDataset.save(df, out, batchRows = 7, compression = codec)
       val got = ArrowDataset.load(spark, out).orderBy("id").collect()
       assert(got.length === want.length, codec)
@@ -704,7 +704,7 @@ class ArrowDatasetSpec extends AnyFunSuite with SharedSession {
   test("unsupported types fail loudly before any task runs") {
     val withTs = spark.range(1).withColumn("ts", current_timestamp())
     val e = intercept[IllegalArgumentException] {
-      ArrowDataset.save(withTs, "/tmp/graft_arrow_spec_unsupported")
+      ArrowDataset.save(withTs, tmp("arrow_spec_unsupported"))
     }
     assert(e.getMessage.contains("unsupported"))
   }

@@ -173,7 +173,7 @@ class CacheReleaseSpec extends AnyFunSuite with SharedSession {
     * round's corpus as the trained responses.
     */
   private def runnerConfig(round: Int): String = {
-    val dir = s"/tmp/graft_cache_release_runner/$round"
+    val dir = tmp(s"cache_release_runner/$round")
     def msg(content: Column, train: Boolean, role: String) =
       struct(content.as("content"), lit(train).as("do_train"),
         lit(role).as("role"))
@@ -217,7 +217,7 @@ class CacheReleaseSpec extends AnyFunSuite with SharedSession {
       case 5 => MinHashDedup.deduplicateAgainst(corpus(i),
         corpus(i + 1000), "text", Cfg).count()
       case _ => Runner.run(spark, runnerConfig(i),
-        s"/tmp/graft_cache_release_runner/$i/out").count()
+        tmp(s"cache_release_runner/$i/out")).count()
     }
 
     (0 until 7).foreach(call) // warmup
@@ -238,7 +238,7 @@ class CacheReleaseSpec extends AnyFunSuite with SharedSession {
     // map. Spark's cache is keyed by plan, so a persist()-ed pin would be
     // shared by every call over the same frame, and a later call's
     // release would drop an earlier call's pin.
-    val path = "/tmp/graft_cache_release_alias"
+    val path = tmp("cache_release_alias")
     corpus(0).write.mode("overwrite").parquet(path)
     val reads = spark.sparkContext.longAccumulator("corpus reads")
     val tap = udf { (t: String) => reads.add(1); t }

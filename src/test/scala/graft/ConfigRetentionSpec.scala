@@ -84,8 +84,8 @@ class ConfigRetentionSpec extends AnyFunSuite with SharedSession {
       "of the physically retained corpus; deleted content re-ingestable") {
     import spark.implicits._
     val stamp = System.nanoTime()
-    val jPath = s"/tmp/graft_cfg_journal_$stamp"
-    val sPath = s"/tmp/graft_cfg_store_$stamp"
+    val jPath = tmp(s"cfg_journal_$stamp")
+    val sPath = tmp(s"cfg_store_$stamp")
 
     // run 1: config-driven pipeline with journaling on
     val kept = new Preprocessor(corpus, "text",
@@ -130,10 +130,10 @@ class ConfigRetentionSpec extends AnyFunSuite with SharedSession {
       "compacted_journal_path both honor the block") {
     import spark.implicits._
     val stamp = System.nanoTime()
-    val jPath = s"/tmp/graft_cfg_pjournal_$stamp"
-    val idsPath = s"/tmp/graft_cfg_pids_$stamp"
-    val sPath = s"/tmp/graft_cfg_pstore_$stamp"
-    val j2Path = s"/tmp/graft_cfg_pjournal2_$stamp"
+    val jPath = tmp(s"cfg_pjournal_$stamp")
+    val idsPath = tmp(s"cfg_pids_$stamp")
+    val sPath = tmp(s"cfg_pstore_$stamp")
+    val j2Path = tmp(s"cfg_pjournal2_$stamp")
 
     MinHashDedup.bandedJournal(corpus, "text", cfg, Some("doc_id"))
       .write.mode("overwrite").parquet(jPath)
@@ -178,8 +178,8 @@ class ConfigRetentionSpec extends AnyFunSuite with SharedSession {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val stamp = System.nanoTime()
-    val jPath = s"/tmp/graft_cfg_sjournal_$stamp"
-    val sPath = s"/tmp/graft_cfg_sstore_$stamp"
+    val jPath = tmp(s"cfg_sjournal_$stamp")
+    val sPath = tmp(s"cfg_sstore_$stamp")
 
     // night 0: the retained corpus's journal seeds the SAME directory the
     // stream appends into (the production layout — one retention artifact)
@@ -193,10 +193,10 @@ class ConfigRetentionSpec extends AnyFunSuite with SharedSession {
       store0, "text", cfg, "doc_id")
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
-    val outPath = s"/tmp/graft_cfg_sout_$stamp"
+    val outPath = tmp(s"cfg_sout_$stamp")
     val q = graft.streaming.StreamingPipeline.foreachBatchStoreNearDedup(
       mem.toDF.toDF("doc_id", "text"), dedup, outPath,
-      s"/tmp/graft_cfg_sckpt_$stamp", journalPath = Some(jPath))
+      tmp(s"cfg_sckpt_$stamp"), journalPath = Some(jPath))
     val freshText = "a streamed survivor document about watermark " +
       "semantics and incremental retention journals in one directory"
     try {

@@ -77,7 +77,7 @@ class DedupStoreSpec extends AnyFunSuite with SharedSession {
   test("store round-trips through parquet export identically") {
     val ref = df(refRows)
     val inc = df(newRows)
-    val path = s"/tmp/graft_store_spec_${System.nanoTime()}"
+    val path = tmp(s"store_spec_${System.nanoTime()}")
     val store = MinHashDedup.exportBandedStore(ref, "text", path, cfg,
       orderCol = Some("id"))
     val viaExport = keptIds(MinHashDedup.deduplicateAgainstStore(
@@ -137,7 +137,7 @@ class DedupStoreSpec extends AnyFunSuite with SharedSession {
     // a stale managed-table LOCATION from an earlier JVM blocks CTAS even
     // with SaveMode.Overwrite when the table isn't in this catalog
     spark.sql("DROP TABLE IF EXISTS graft_store_bucketed_spec")
-    val loc = new java.io.File("/tmp/graft_warehouse/graft_store_bucketed_spec")
+    val loc = new java.io.File(tmp("warehouse/graft_store_bucketed_spec"))
     if (loc.exists()) {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

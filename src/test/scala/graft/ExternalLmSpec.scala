@@ -106,7 +106,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
 
   test("check_perplexity lm_segment: viterbi routes the mode; a typo " +
       "names the key") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_extlm_vit")
+    val tmp = freshDir("extlm_vit")
     def dump(res: String, name: String): String = {
       val in = getClass.getClassLoader.getResourceAsStream(res)
       val p = tmp.resolve(name)
@@ -146,7 +146,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
   test("piece table file round-trip: parse == fromFile, maxPieceLen " +
       "tracks the longest piece") {
     val lines = Seq("▁hello\t-3.5", "lo\t-2.0", "x\t-4.25")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sp")
+    val dir = freshDir("sp")
     val f = dir.resolve("pieces.vocab")
     java.nio.file.Files.write(f,
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))
@@ -159,7 +159,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
 
   test("ArpaModel.fromFile round-trips the shipped resource and scores " +
       "identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_arpa")
+    val dir = freshDir("arpa")
     val f = dir.resolve("model.arpa")
     val in = getClass.getClassLoader
       .getResourceAsStream("graft/graft-en.arpa")
@@ -188,7 +188,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
 
   test("fromFiles loads the shipped piece pair; piece segmentation " +
       "changes tokenization but keeps the reference's doc semantics") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_extlm_spec")
+    val tmp = freshDir("extlm_spec")
     def dump(res: String, name: String): String = {
       val in = getClass.getClassLoader.getResourceAsStream(res)
       assert(in != null, s"missing resource $res")
@@ -218,7 +218,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
   test("check_perplexity config args lm_path/pieces_path route through " +
       "the external model (filter scores == direct scorer)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_extlm_cfg")
+    val tmp = freshDir("extlm_cfg")
     def dump(res: String, name: String): String = {
       val in = getClass.getClassLoader.getResourceAsStream(res)
       val p = tmp.resolve(name)
@@ -386,7 +386,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
 
   test("fromFileAuto sniffs format: proto bytes → binary parse, text " +
       "vocab → text parse, text starting with a blank line still text") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sp_sniff")
+    val tmp = freshDir("sp_sniff")
     val proto = SpProtoBuilder.model(
       Seq(("▁ab", -1.0f, 1), ("cd", -2.0f, 1)), modelType = Some(2))
     val pModel = tmp.resolve("t.sp.model")
@@ -468,7 +468,7 @@ class ExternalLmSpec extends AnyFunSuite with SharedSession {
   test("pieces path scores the WHOLE doc as one chain: \\n removed " +
       "(lines concatenate, no space), whitespace collapsed, single +1 " +
       "— the reference's exact get_perplexity shape") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_extlm_ml")
+    val tmp = freshDir("extlm_ml")
     def dump(res: String, name: String): String = {
       val in = getClass.getClassLoader.getResourceAsStream(res)
       val p = tmp.resolve(name)

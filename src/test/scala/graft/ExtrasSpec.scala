@@ -68,34 +68,29 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
 
   test("side-channel claims only after a successful write (ADVICE r7)") {
     import graft.SideChannel
-    val path = s"/tmp/graft_sidechannel_spec_${System.nanoTime()}"
+    val sf = "/root/testdata/sf0.001"
+    val name = s"sidechannel_spec_${System.nanoTime()}"
     val df = spark.range(3).toDF("id")
     var bodies = 0
-    // unclaimed until written
-    assert(!SideChannel.exportedPaths.contains(path),
-      "nothing may claim before the write lands")
-    // a FAILED write must leave the path unclaimed and retryable (a
+    // a FAILED write must leave the name unclaimed and retryable (a
     // claim-before-write design silently suppressed the export for the
     // JVM lifetime)
     intercept[java.io.IOException] {
-      SideChannel.writeOnce(path) {
+      SideChannel.writeOnce(sf, name) { _ =>
         bodies += 1
         throw new java.io.IOException("write failed")
       }
     }
-    assert(!SideChannel.exportedPaths.contains(path),
-      "failed write must not claim")
-    assert(SideChannel.writeOnce(path) {
+    assert(bodies == 1, "nothing may claim before the write lands")
+    assert(SideChannel.writeOnce(sf, name) { p =>
       bodies += 1
-      df.write.mode("overwrite").parquet(path)
+      df.write.mode("overwrite").parquet(p)
     }, "a path whose write failed is written by the next call")
     // a successful write claims: later bodies are skipped and readers see
     // the bytes on disk
-    assert(SideChannel.exportedPaths.contains(path),
+    assert(!SideChannel.writeOnce(sf, name) { _ => bodies += 1 },
       "successful write must claim")
-    assert(!SideChannel.writeOnce(path) { bodies += 1 })
-    assert(SideChannel.readBack(path)(fail("claimed frame rebuilt"))
-      .count() == 3)
+    assert(spark.read.parquet(SideChannel.path(name)).count() == 3)
     assert(bodies == 2, "bodies run: the failed one and the successful one")
   }
 
@@ -104,14 +99,15 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val path = s"/tmp/graft_sidechannel_race_${System.nanoTime()}"
+    val sf = "/root/testdata/sf0.001"
+    val name = s"sidechannel_race_${System.nanoTime()}"
     val bodies = new java.util.concurrent.atomic.AtomicInteger
     val start = new java.util.concurrent.CountDownLatch(1)
     // the body outlasts the gap between the threads' claim checks, so
     // without the per-path lock both would run it
     val writers = (1 to 2).map(_ => Future {
       start.await()
-      SideChannel.writeOnce(path) {
+      SideChannel.writeOnce(sf, name) { _ =>
         bodies.incrementAndGet()
         Thread.sleep(300)
       }
@@ -120,7 +116,7 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
     val ran = writers.map(Await.result(_, 30.seconds))
     assert(bodies.get == 1, "write body runs exactly once")
     assert(ran.count(identity) == 1, "exactly one caller reports the write")
-    assert(SideChannel.exportedPaths.contains(path))
+    assert(!SideChannel.writeOnce(sf, name) { _ => bodies.incrementAndGet() })
   }
 
   test("simhash: identical docs collapse, distinct survive") {
@@ -736,8 +732,7 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
       (2L, java.sql.Timestamp.valueOf("2026-01-01 00:00:02"), base),
       (3L, java.sql.Timestamp.valueOf("2026-01-01 00:00:03"),
         "a completely different and unrelated piece of text entirely"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_nd").toString
+    val dir = freshDir("stream_nd").toString
     rows.toDF("id", "ts", "text").write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val stream = spark.readStream.schema(schema).parquet(dir)

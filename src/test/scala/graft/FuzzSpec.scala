@@ -48,7 +48,7 @@ class FuzzSpec extends AnyFunSuite with SharedSession {
     val rows = QueriesFuzz.fuzzCleaners
       .run(spark, "/root/testdata/sf0.001").count()
     assert(rows == n2)
-    val texts = spark.read.parquet(QueriesFuzz.CorpusPath)
+    val texts = spark.read.parquet(SideChannel.path("fuzz_corpus"))
       .select("text").collect().map(_.getString(0))
     assert(texts.length == n2)
     // genuinely distinct compositions — all NxN (j, k) fragment pairs

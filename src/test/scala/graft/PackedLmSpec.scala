@@ -11,7 +11,7 @@ import graft.scoring.{ArpaModel, ArpaScorer, ExternalLm, PackedLm}
   * words that appear only inside higher-order grams, missing `<s>`,
   * explicit 0.0 backoffs, OOV queries, empty token streams.
   */
-class PackedLmSpec extends AnyFunSuite {
+class PackedLmSpec extends AnyFunSuite with SharedSession {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
 
@@ -153,7 +153,7 @@ class PackedLmSpec extends AnyFunSuite {
 
   test("file round-trip: write → read preserves every query bit-exactly," +
       " and compilation is byte-deterministic") {
-    val tmp = java.nio.file.Files.createTempDirectory("glm")
+    val tmp = freshDir("glm")
     val m = ArpaScorer.model // shipped 24k-vocab 4-gram model
     val packed = PackedLm.fromArpa(m)
     val f1 = tmp.resolve("a.glm").toString
@@ -176,7 +176,7 @@ class PackedLmSpec extends AnyFunSuite {
   test("loadModel sniffs the format: .glm → PackedLm, text → ArpaModel," +
       " and a fromFiles scorer over the .glm matches the text pair " +
       "exactly (the lm_path config seam)") {
-    val tmp = java.nio.file.Files.createTempDirectory("glmsniff")
+    val tmp = freshDir("glmsniff")
     val arpaFile = tmp.resolve("m.arpa").toString
     val glmFile = tmp.resolve("m.glm").toString
     val in = getClass.getClassLoader
@@ -202,7 +202,7 @@ class PackedLmSpec extends AnyFunSuite {
   test("streaming compiler: byte-deterministic, and equivalent to " +
       "fromArpa on the shipped model (score-parity; word ids of " +
       "structural-only words may legitimately differ)") {
-    val tmp = java.nio.file.Files.createTempDirectory("glmstream")
+    val tmp = freshDir("glmstream")
     val res = "graft/graft-en-sp.arpa"
     def lines(): Iterator[String] = {
       val in = getClass.getClassLoader.getResourceAsStream(res)

@@ -248,8 +248,7 @@ class PlanSpec extends AnyFunSuite with SharedSession {
     // claim/publish the side-channel, then pin the store-derivation plan
     // a repeat run (and a production takedown) actually executes
     plan("incr_retention_e2e")
-    val jPath = QueriesExtra2.bandedPath("retjournal",
-      QueriesExtra2.scaleKey(sf))
+    val jPath = SideChannel.path("dedup_banded_retjournal")
     val docs = Queries.table(spark, sf, "documents")
     val delIds = docs.where(col("doc_id").isin(3, 60) ||
       (col("doc_id") % 23 === 5 && col("doc_id") % 19 =!= 3))
@@ -346,7 +345,7 @@ class PlanSpec extends AnyFunSuite with SharedSession {
       k = 4, iters = 2, trainFraction = 0.5)
     val model = Pq.train(emb, "embedding", "vec_id", dim = 64, m = 8,
       k = 8, iters = 2, maxTrain = 200)
-    val path = s"/tmp/graft_pq_codes_pub_${System.nanoTime()}"
+    val path = tmp(s"pq_codes_pub_${System.nanoTime()}")
     graft.sources.Sources.publishPartitioned(
       Pq.encode(cells, "embedding", model, "codes")
         .select(col("vec_id"), col("cell"), col("codes")), path, "cell")
@@ -360,7 +359,7 @@ class PlanSpec extends AnyFunSuite with SharedSession {
     // local value list constant-folds away and doesn't qualify), which a
     // real MATERIALIZED probe decision — a filtered read of the exported
     // (cell, similarity) ranking, the ivf-pq queries' exact shape — has
-    val probePath = s"/tmp/graft_pq_probe_pub_${System.nanoTime()}"
+    val probePath = tmp(s"pq_probe_pub_${System.nanoTime()}")
     Seq((0, 0.9), (1, 0.8), (2, 0.1), (3, 0.05)).toDF("cell", "sim")
       .write.parquet(probePath)
     val probes = spark.read.parquet(probePath)

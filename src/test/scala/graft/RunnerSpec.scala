@@ -37,9 +37,9 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
   }
 
   test("vicuna-v0-shaped config runs end-to-end and publishes chatml") {
-    val ds1 = "/tmp/graft_runner_ds1"
-    val ds2 = "/tmp/graft_runner_ds2"
-    val outBase = "/tmp/graft_runner_out"
+    val ds1 = tmp("runner_ds1")
+    val ds2 = tmp("runner_ds2")
+    val outBase = tmp("runner_out")
 
     val dupResponse = "sure thing happy to help you glad to assist"
     writeDs(ds1, withSource = true, Seq(
@@ -102,7 +102,7 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
          |      threshold: 0.7
          |      min_ngram_size: 5
          |""".stripMargin
-    val cfgPath = "/tmp/graft_runner_cfg.yaml"
+    val cfgPath = tmp("runner_cfg.yaml")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(cfgPath), yaml)
 
@@ -151,7 +151,7 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
       Row(resp, true, "Assistant")))
     def df(resps: String*) = spark.createDataFrame(
       resps.map(conv).asJava, schema)
-    val src = "/tmp/graft_runner_dict_src"
+    val src = tmp("runner_dict_src")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(src))
     graft.sources.ArrowDataset.saveDict(Seq(
       "train" -> df("train answer words here are many enough"),
@@ -170,10 +170,10 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
          |response_config:
          |  filters:
          |""".stripMargin
-    val outBase = "/tmp/graft_runner_dict_out"
+    val outBase = tmp("runner_dict_out")
 
     // default: both splits concatenate (2 conversations published)
-    val cfgPath = "/tmp/graft_runner_dict_cfg.yaml"
+    val cfgPath = tmp("runner_dict_cfg.yaml")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(cfgPath), yaml(""))
     Runner.run(spark, cfgPath, outBase)
@@ -196,7 +196,7 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
     import scala.jdk.CollectionConverters._
     val schema = StructType(
       Seq(StructField("conversation", ArrayType(MsgSchema))))
-    val src = "/tmp/graft_runner_arrowout_src"
+    val src = tmp("runner_arrowout_src")
     spark.createDataFrame(Seq(Row(Seq(
       Row("hello there friend how are you today", false, "User"),
       Row("a fine answer with plenty of words here", true, "Assistant"))))
@@ -212,10 +212,10 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
          |response_config:
          |  filters:
          |""".stripMargin
-    val cfgPath = "/tmp/graft_runner_arrowout_cfg.yaml"
+    val cfgPath = tmp("runner_arrowout_cfg.yaml")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(cfgPath), yaml)
-    val outBase = "/tmp/graft_runner_arrowout"
+    val outBase = tmp("runner_arrowout")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outBase))
     Runner.run(spark, cfgPath, outBase)
     // published artifact IS an HF dataset directory (state.json +
@@ -264,7 +264,7 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
         |""".stripMargin
     val e = intercept[RuntimeException] {
       Runner.runParsed(spark, graft.pipeline.MiniYaml.parse(yaml),
-        "/tmp/graft_runner_missing_out")
+        tmp("runner_missing_out"))
     }
     assert(e.getMessage.contains("instruction_config"))
     // a PRESENT-but-bare key stays a deliberately empty section: parsing
@@ -273,7 +273,7 @@ class RunnerSpec extends AnyFunSuite with SharedSession {
     val yaml2 = yaml + "instruction_config:\n"
     val e2 = intercept[Exception] {
       Runner.runParsed(spark, graft.pipeline.MiniYaml.parse(yaml2),
-        "/tmp/graft_runner_missing_out")
+        tmp("runner_missing_out"))
     }
     assert(!e2.getMessage.contains("instruction_config"))
   }

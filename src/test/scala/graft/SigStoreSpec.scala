@@ -100,7 +100,7 @@ class SigStoreSpec extends AnyFunSuite with SharedSession {
       Some("id"))
     spark.sql("DROP TABLE IF EXISTS graft_sig_store_bucketed_spec")
     val loc = new java.io.File(
-      "/tmp/graft_warehouse/graft_sig_store_bucketed_spec")
+      tmp("warehouse/graft_sig_store_bucketed_spec"))
     if (loc.exists()) {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

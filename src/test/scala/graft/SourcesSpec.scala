@@ -17,7 +17,7 @@ import graft.sources.Sources
 class SourcesSpec extends AnyFunSuite with SharedSession {
 
   test("published chatml parquet keeps the hub-ingestible nested shape") {
-    val out = "/tmp/graft_publish_spec"
+    val out = tmp("publish_spec")
     val flagship = graft.chat.ChatPipeline
       .flagship(spark, "/root/testdata/sf0.001")
     Sources.publish(flagship, out)

@@ -61,9 +61,9 @@ class StreamingRetentionSpec extends AnyFunSuite with SharedSession {
       Some("doc_id"))
     val store0 = MinHashDedup.compactJournal(refJournal)
     val stamp = System.nanoTime()
-    val outPath = s"/tmp/graft_stream_ret_out_$stamp"
-    val jPath = s"/tmp/graft_stream_ret_journal_$stamp"
-    val ckpt = s"/tmp/graft_stream_ret_ckpt_$stamp"
+    val outPath = tmp(s"stream_ret_out_$stamp")
+    val jPath = tmp(s"stream_ret_journal_$stamp")
+    val ckpt = tmp(s"stream_ret_ckpt_$stamp")
 
     // ---- run 1: real stream wiring, journal append enabled ----
     val batch1 = Seq(

@@ -59,8 +59,8 @@ class StreamingStoreDedupSpec extends AnyFunSuite with SharedSession {
     val store0 = MinHashDedup.bandedStore(df(refRows), "text", cfg,
       Some("doc_id"))
     val stamp = System.nanoTime()
-    val outPath = s"/tmp/graft_stream_store_out_$stamp"
-    val ckpt = s"/tmp/graft_stream_store_ckpt_$stamp"
+    val outPath = tmp(s"stream_store_out_$stamp")
+    val ckpt = tmp(s"stream_store_ckpt_$stamp")
 
     // ---- streamed path: two micro-batches through foreachBatch ----
     val dedup = new StreamingPipeline.StoreNearDedup(store0, "text", cfg,
@@ -139,14 +139,14 @@ class StreamingStoreDedupSpec extends AnyFunSuite with SharedSession {
     val store0 = SimHash.sigStore(ref, "img", ImageHash.dhashUdf,
       Some("doc_id"))
     val stamp = System.nanoTime()
-    val outPath = s"/tmp/graft_stream_sig_out_$stamp"
+    val outPath = tmp(s"stream_sig_out_$stamp")
     val dedup = new StreamingPipeline.SigStoreNearDedup(store0, "img",
       ImageHash.dhashUdf, 3, "doc_id")
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Byte])]
     val q = StreamingPipeline.foreachBatchSigStoreNearDedup(
       mem.toDF.toDF("doc_id", "img"), dedup, outPath,
-      s"/tmp/graft_stream_sig_ckpt_$stamp")
+      tmp(s"stream_sig_ckpt_$stamp"))
     try {
       mem.addData(b1); q.processAllAvailable()
       mem.addData(b2); q.processAllAvailable()

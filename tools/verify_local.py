@@ -8,10 +8,13 @@ Usage: python3 tools/verify_local.py [sfdir] [outdir] [--skip-spark]
 sbt runs in the checkout that holds this script. graft.Verify writes
 status.json (per query: "ok", or the error it threw) and exits non-zero if
 any query threw; every query that wrote output is still compared, then the
-failed queries are listed and the script exits non-zero.
+failed queries are listed and the script exits non-zero. The oracle SQL in
+oracle_sql.json names the side channels that graft.Verify wrote beside the out
+dir (`<outdir>_side`), so every oracle is compared as is, at any scale.
 """
 import json
 import math
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -62,12 +65,11 @@ def canon(rows, cols):
 def main():
     spark_ok = "--skip-spark" in sys.argv or run_spark()
     con = duckdb.connect()
-    import os as _os
     for t in TABLES:
         # driver testdata is one file per table; ScaleGen-derived corpora
         # (e.g. /tmp/graft_sf1) are Spark directory-per-table — glob those
         p = f"{SF_DIR}/{t}.parquet"
-        if _os.path.isdir(p):
+        if os.path.isdir(p):
             p = f"{p}/*.parquet"
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{p}')")
     oracle = json.loads((OUT / "oracle_sql.json").read_text())
@@ -77,8 +79,7 @@ def main():
     # "FAIL <q>: no spark output" for every unselected query and a
     # misleading "1 pass, 92 fail" summary. Restricted runs now end
     # "N pass, 0 fail".
-    import os as _os2
-    only_env = _os2.environ.get("SPARK_GRAFT_VERIFY_ONLY", "").strip()
+    only_env = os.environ.get("SPARK_GRAFT_VERIFY_ONLY", "").strip()
     only = {q.strip() for q in only_env.split(",") if q.strip()} or None
     if only:
         missing = only - set(oracle)
@@ -86,55 +87,6 @@ def main():
         print(f"INFO restricted to {sorted(only)} "
               f"(SPARK_GRAFT_VERIFY_ONLY); oracle-less names treated "
               f"rows-only: {sorted(missing) or 'none'}")
-    # Side-channel oracles (dedup signature frames, IVF cells/probe,
-    # compress-len, ARPA-as-data) pin their /tmp parquet paths to the
-    # correctness gate's scale (sf0.01) in the STATIC oracle strings. The
-    # paths are scale-KEYED by construction (/tmp/graft_*_{sfN}), and a
-    # graft.Verify run at another scale writes that scale's frames — so
-    # RETARGET the pinned SQL to this scale's side-channels when they
-    # exist (VERDICT r7 #4: dedup oracle equality beyond sf0.01), and
-    # demote to rows-only when they don't (e.g. --skip-spark with no
-    # prior run at this scale).
-    import os
-    import re
-    scale = os.path.basename(SF_DIR.rstrip("/"))
-    # provenance manifest (written by graft.Verify since r8): the set of
-    # /tmp side-channel frames THAT run exported. A dir merely existing is
-    # not enough — it could be a stale frame from an older JVM, code
-    # version, or regenerated corpus, and comparing against it corrupts
-    # the gate in both directions (false FAIL or vacuous PASS).
-    manifest_file = OUT / "side_channels.json"
-    manifest = (set(json.loads(manifest_file.read_text()))
-                if manifest_file.exists() else None)
-    if scale != "sf0.01":
-        # the ARPA model dump and fuzz corpus are corpus-independent (no
-        # scale key in their paths) and stay comparable at every scale
-        retargeted = {}
-        for n, sql in oracle.items():
-            if "/tmp/graft_" in sql and "sf0.01" in sql:
-                new_sql = sql.replace("sf0.01", scale)
-                # the char class must cross '/' (the nb models export
-                # nested frames, /tmp/graft_nb_*_{sf}/weights) and
-                # include '*' so the glob tail can be split off — the
-                # manifest records the deepest claimed directory
-                dirs = {p.split("/*")[0] for p in
-                        re.findall(r"/tmp/graft_[A-Za-z0-9_./*]+", new_sql)}
-                fresh = (all(d in manifest for d in dirs) if manifest
-                         is not None else False)
-                if fresh and all(os.path.isdir(d) for d in dirs):
-                    retargeted[n] = new_sql
-                    print(f"INFO {n}: oracle retargeted to {scale} "
-                          "side-channels")
-                else:
-                    why = ("side-channel not in this run's manifest"
-                           if manifest is not None else
-                           "no side_channels.json — rerun without "
-                           "--skip-spark for frame provenance")
-                    print(f"INFO {n}: scale-pinned oracle, rows-only at "
-                          f"{scale} ({why})")
-            else:
-                retargeted[n] = sql
-        oracle = retargeted
     n_pass = n_fail = 0
     results = {}
     for name, sql in sorted(oracle.items()):
@@ -188,7 +140,8 @@ def main():
             results[p.name] = {"status": "rows_only", "rows": n}
     # CORRECTNESS-style artifact for scale sweeps (VERDICT r7 #4)
     (OUT / "compare.json").write_text(json.dumps(
-        {"sf": scale, "pass": n_pass, "fail": n_fail, "results": results},
+        {"sf": os.path.basename(SF_DIR.rstrip("/")), "pass": n_pass,
+         "fail": n_fail, "results": results},
         indent=1, sort_keys=True))
     print(f"\n{n_pass} pass, {n_fail} fail")
     status_file = OUT / "status.json"
