@@ -12,7 +12,8 @@ package graft
   * SELF-CERTIFYING (VERDICT r8 #1 — two rounds running, the headline
   * number overstated the engine because the artifact carried no evidence
   * of machine load or warmup cost): the JSON line now also carries
-  *  - `reps`: EVERY repetition's seconds per query, not just the best —
+  *  - `reps` (its own line, before the contract line): EVERY
+  *    repetition's seconds per query, not just the best —
   *    a loaded machine shows as high rep variance, a plan change as a
   *    uniform shift across reps;
   *  - `loadavg_before` / `loadavg_after`: /proc/loadavg 1-min samples
@@ -116,8 +117,8 @@ object Bench {
     // unsafe-row machinery, shuffle, janino, C2-compiled Spark core —
     // are still cold; a global pass has fully tiered-compiled all of it
     // before the first timed rep. The global pass stays, and the warmup
-    // WALL cost is cut instead by running it on a small thread pool
-    // (SPARK_GRAFT_WARM_THREADS, default 4): Spark schedules concurrent
+    // WALL cost is cut instead by running it on a pool of 4 threads:
+    // Spark schedules concurrent
     // jobs FIFO at stage granularity, most queries leave most of the 32
     // cores idle, and the one-time exports are race-free — every export
     // goes through SideChannel, which serializes each path's write, so
@@ -131,15 +132,9 @@ object Bench {
     // the reported best is load-noise-resistant where it matters most.
     // r8: flagship_e2e_minhash + dedup_cluster_stats joined the hot set —
     // they are now among the 5 most expensive lines (VERDICT r7).
-    val hotRepeat = math.max(repeat,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT_HOT", "3").toInt)
+    val hotRepeat = math.max(repeat, 3)
     val hot = Set("flagship_chat_pipeline", "dedup_minhash",
       "dedup_ngram_jaccard", "flagship_e2e_minhash", "dedup_cluster_stats")
-    // SPARK_GRAFT_BENCH_VERBOSE=1 prints every repetition to stderr —
-    // variance data for separating machine-load noise from plan changes
-    val verbose = sys.env.get("SPARK_GRAFT_BENCH_VERBOSE").contains("1")
-    val warmThreads = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_WARM_THREADS", "4").toInt)
     // every exception is recorded per query (first one wins), never
     // turned into a time: a throwing query must not look fast
     val errors = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -150,22 +145,16 @@ object Bench {
         false
       }
     val w0 = System.nanoTime()
-    if (warmThreads <= 1) {
-      qs.foreach { case (name, fn) =>
-        attempt(name, "warmup")(fn(spark, sfDir).count())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = qs.map { case (name, fn) =>
+        pool.submit(new Runnable {
+          def run(): Unit =
+            attempt(name, "warmup")(fn(spark, sfDir).count())
+        })
       }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
-      try {
-        val futures = qs.map { case (name, fn) =>
-          pool.submit(new Runnable {
-            def run(): Unit =
-              attempt(name, "warmup")(fn(spark, sfDir).count())
-          })
-        }
-        futures.foreach(_.get())
-      } finally pool.shutdown()
-    }
+      futures.foreach(_.get())
+    } finally pool.shutdown()
     val warmupSec = (System.nanoTime() - w0) / 1e9
     val results = qs.map { case (name, fn) =>
       // per-run isolation, OUTSIDE the timer: drop cached blocks leaked
@@ -181,7 +170,7 @@ object Bench {
         // dsir_fit must price the two fit aggregations, not a memo hit
         // (VERDICT r10 #2); other queries (dsir_select, dsir_bucket_counts)
         // keep the memo — they price steady serving by design
-        if (name == "dsir_fit") QueriesExtra6.clearFitMemo()
+        if (name == "dsir_fit") QueriesSampling.clearFitMemo()
         System.gc()
       }
       val n = if (hot(name)) hotRepeat else repeat
@@ -193,8 +182,6 @@ object Bench {
           Some((System.nanoTime() - t0) / 1e9)
         else None
       }
-      if (verbose) System.err.println(f"[bench] $name reps=" +
-        reps.map(_.fold("failed")(r => f"$r%.3f")).mkString(","))
       (name, reps)
     }.collect { case (name, reps) if reps.exists(_.isDefined) =>
       (name, reps.flatten.min, reps)

@@ -12,12 +12,17 @@ import graft.text.{Cleaners, WordLists}
   * an operator's semantics change. The perplexity oracles share one
   * model-as-data chain: [[dumpArpa]] writes an n-gram model's tables,
   * [[arpaCtes]] reads them back, [[ccnet]] normalizes the documents, and
-  * [[backoffReplay]] scores the tokens.
+  * [[backoffReplay]] scores the tokens. The dedup oracles share one
+  * clustering replay (see the dedup section below).
   */
 object OracleSql {
 
   /** Escape a string for a single-quoted DuckDB literal. */
   def q(s: String): String = "'" + s.replace("'", "''") + "'"
+
+  /** `parquet_scan` of the parquet files of side channel `name`. */
+  def scan(name: String): String =
+    s"parquet_scan('${SideChannel.sqlPath(name)}/*.parquet')"
 
   /** ASCII-whitespace class, spelled out: bundled-DuckDB RE2 `\s` does NOT
     * match `\x0b` (vertical tab), while the Spark-side [[Cleaners.stripWs]]
@@ -33,8 +38,24 @@ object OracleSql {
   /** `get_words` count mirror of [[graft.text.Filters.wordCount]] —
     * unicode word class, spelled out identically on both engines.
     */
-  def wordCount(e: String): String =
-    s"len(regexp_extract_all(lower($e), '[\\p{L}\\p{N}_]+'))"
+  def wordCount(e: String): String = s"len(${words(e)})"
+
+  /** The `get_words` tokens of [[wordCount]], as a list. */
+  def words(e: String): String =
+    s"regexp_extract_all(lower($e), '[\\p{L}\\p{N}_]+')"
+
+  /** [[graft.analysis.TermStats.words]] mirror: the `[a-z0-9_]` runs of
+    * the lowercased `e`, as a list.
+    */
+  def termWords(e: String): String =
+    s"list_filter(regexp_split_to_array(lower($e), '[^a-z0-9_]+'), " +
+      "x -> x <> '')"
+
+  /** Non-overlapping occurrences of the plain word `w` in `e`, as BIGINT
+    * (the `TextAnalysis` substring-count shape).
+    */
+  def occurrences(e: String, w: String): String =
+    s"CAST((length($e)-length(replace($e,'$w','')))//${w.length} AS BIGINT)"
 
   /** C2 normalize_whitespace: same char table as the Spark CharMap. */
   def normalizeWhitespace(e: String): String = {
@@ -79,6 +100,25 @@ object OracleSql {
   def completionKeep(e: String): String =
     s"${strip(e)}[-1:] IN (" +
       WordLists.CompletionPunctuations.map(q).mkString(", ") + ")"
+
+  /** [[graft.text.Html]] extraction's whitespace normalization of `e`:
+    * each line's space runs collapsed and trimmed, blank lines dropped.
+    */
+  def htmlNormalize(e: String): String =
+    "coalesce(list_aggregate(list_filter(list_transform(string_split(" +
+      e + ", chr(10)), x -> trim(regexp_replace(x, '[ \\t\\v\\f\\r]+', " +
+      "' ', 'g'))), x -> x <> ''), 'string_agg', chr(10)), '')"
+
+  /** [[graft.analysis.C4Filters.cleanLines]] mirror: the lines of `e`
+    * that end in terminal punctuation, hold ≥ 5 whitespace words and no
+    * "javascript", rejoined with \n ('' when none).
+    */
+  def c4CleanLines(e: String): String =
+    "coalesce(list_aggregate(list_filter(string_split(" + e + ", " +
+      "chr(10)), x -> substr(x, -1, 1) IN ('.', '!', '?', '\"') AND " +
+      "len(list_filter(regexp_split_to_array(x, '\\s+'), w -> w <> '')) " +
+      ">= 5 AND instr(lower(x), 'javascript') = 0), 'string_agg', " +
+      "chr(10)), '')"
 
   /** F5 char-repetition ratio as a CTE chain (utils.py:310-339 semantics:
     * frequency of all length-`n` char ngrams; ratio = mass of the
@@ -139,12 +179,12 @@ object OracleSql {
     m.quadRows.toDF("g", "p").write.mode("overwrite").parquet(s"$dir/quad")
   }
 
-  /** CTEs `uni`, `bi`, `tri`, `quad` over a [[dumpArpa]] directory, each
-    * followed by ", ".
+  /** CTEs `uni`, `bi`, `tri`, `quad` over the [[dumpArpa]] directory of
+    * side channel `name`, each followed by ", ".
     */
-  def arpaCtes(dir: String): String =
+  def arpaCtes(name: String): String =
     Seq("uni", "bi", "tri", "quad").map(t =>
-      s"$t AS (SELECT * FROM parquet_scan('$dir/$t/*.parquet')), ").mkString
+      s"$t AS (SELECT * FROM ${scan(s"$name/$t")}), ").mkString
 
   /** The KenLM scoring replay, from the CTE `mtok` to the end of the
     * statement: `<unk>` vocab mapping, the 4→3→2→1-gram backoff chain per
@@ -197,4 +237,225 @@ object OracleSql {
       "SELECT doc_id, round(pow(10, -logsum/len), 1) AS " +
       s"$outCol FROM res ORDER BY doc_id"
   }
+
+  // ---- dedup clustering replays ----
+  //
+  // Every dedup query exports the frame its oracle reads, named by
+  // variant: the minhash family its exploded (id, band, bsig) signature
+  // frame as `dedup_banded_<variant>`, the hamming family its (id, sig)
+  // frame as `dedup_sigs_<variant>`, and the embedding dedups their
+  // verified edge list as `dedup_edges_<variant>`. DuckDB derives the
+  // candidate edges (bucket-min per band, bit-sliced banding + hamming
+  // verify, exact Jaccard or Levenshtein verify) and replays the
+  // clustering — transitive closure → component minima → keep-first —
+  // itself, so pair finding and clustering are both checked by something
+  // that is not the engine. Edge VALIDITY is proven separately by
+  // DedupInvariantSpec's kernel re-verification.
+
+  /** Transitive closure → component minima over an `e(a, b)` CTE holding
+    * both directions of every edge, ending in `root(id, root)`.
+    */
+  private val reachRoot: String =
+    "reach(a, b) AS (SELECT a, b FROM e UNION " +
+      "SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a), " +
+      "root AS (SELECT a AS id, least(a, min(b)) AS root FROM reach " +
+      "GROUP BY a)"
+
+  /** Symmetrize → closure → component minima over an `e0(a, b)` CTE in
+    * scope — the shared tail of every signature-derived clustering.
+    */
+  private val closureFromE0: String =
+    "e AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0), " + reachRoot
+
+  /** The keep-first predicate over `root r`: `id` is its component's
+    * minimum, or in no component.
+    */
+  def isRoot(id: String): String = s"r.root IS NULL OR r.root = $id"
+
+  /** Keep-first tail: the ids of `table` that no smaller id reaches. */
+  def keepFirstTail(table: String, idCol: String): String =
+    s"SELECT t.$idCol FROM $table t LEFT JOIN root r ON t.$idCol = r.id " +
+      s"WHERE ${isRoot(s"t.$idCol")} ORDER BY t.$idCol"
+
+  /** Keep-first tail of an increment `from(id)` deduped against a store:
+    * its ids carry the `off` offset (every store id orders below every
+    * increment id) and come back as `doc_id`.
+    */
+  private def offsetKeepFirstTail(from: String, off: Long): String =
+    s"SELECT d.id - $off AS doc_id FROM $from d " +
+      s"LEFT JOIN root r ON d.id = r.id WHERE ${isRoot("d.id")} " +
+      "ORDER BY doc_id"
+
+  /** Keep-first over the exported undirected edge list
+    * `dedup_edges_<variant>` of (__x__, __y__): kept = ids not reachable
+    * from any smaller id.
+    */
+  def edgeKeepFirstSql(variant: String, table: String,
+      idCol: String): String = {
+    val edges = scan(s"dedup_edges_$variant")
+    s"WITH RECURSIVE e AS (SELECT __x__ AS a, __y__ AS b FROM $edges " +
+      s"UNION SELECT __y__, __x__ FROM $edges), " + reachRoot + " " +
+      keepFirstTail(table, idCol)
+  }
+
+  /** LSH candidate star edges `edges(a, b)` from the banded frame
+    * `dedup_banded_<variant>`: each id to the minimum id of every
+    * (band, bsig) bucket it is in. Leaves `bnd(id, band, bsig)` in scope.
+    */
+  def bucketMinCtes(variant: String, edges: String): String =
+    s"bnd AS (SELECT id, band, bsig FROM ${scan(s"dedup_banded_$variant")}), " +
+      "lshm AS (SELECT id, min(id) OVER (PARTITION BY band, bsig) AS mn " +
+      "FROM bnd), " +
+      s"$edges AS (SELECT DISTINCT id AS a, mn AS b FROM lshm " +
+      "WHERE id <> mn)"
+
+  /** Identical/short-class star edges `ide(a, b)` recomputed from a
+    * `dsrc(id, t)` CTE in scope. Partitioning by (short?, text-or-'') is
+    * the same grouping as MinHashDedup's sentinel key — DuckDB strings
+    * cannot hold NUL, so the sentinel is a separate boolean partition
+    * column instead.
+    */
+  def identCtes(minNgram: Int): String =
+    "tokc AS (SELECT id, len(regexp_split_to_array(coalesce(t, ''), " +
+      s"'[^A-Za-z_0-9]')) < $minNgram AS sh, coalesce(t, '') AS tt " +
+      "FROM dsrc), " +
+      "cmk AS (SELECT id, min(id) OVER (PARTITION BY sh, CASE WHEN sh " +
+      "THEN '' ELSE tt END) AS kmin FROM tokc), " +
+      "ide AS (SELECT id AS a, kmin AS b FROM cmk WHERE id <> kmin)"
+
+  /** MinHash clustering derived in SQL from `variant`'s banded frame:
+    * LSH bucket-min edges plus the identical/short-class edges of the
+    * `dsrc(id, t)` CTE in scope. Ends in `root(id, root)`.
+    */
+  def minhashCtes(variant: String, minNgram: Int): String =
+    bucketMinCtes(variant, "lshe") + ", " + identCtes(minNgram) + ", " +
+      "e0 AS (SELECT a, b FROM lshe UNION SELECT a, b FROM ide), " +
+      closureFromE0
+
+  /** The tail of a minhash dedup against a store `st(band, bsig, sid)`,
+    * after [[bucketMinCtes]] (`lshe`) and [[identCtes]] over the
+    * increment `dsrc`: store collisions via the same (band, bsig) join,
+    * closure, and the root-below-offset death rule.
+    */
+  def bandStoreTail(off: Long): String =
+    "crs AS (SELECT DISTINCT b.id AS a, st.sid AS b FROM bnd b " +
+      "JOIN st USING (band, bsig)), " +
+      "e0 AS (SELECT a, b FROM lshe UNION SELECT a, b FROM ide " +
+      "UNION SELECT a, b FROM crs), " +
+      closureFromE0 + " " + offsetKeepFirstTail("dsrc", off)
+
+  /** Two-stage ngram-Jaccard keep-first: bucket-min candidates from the
+    * banded frame, verified by the exact word-n-gram Jaccard recomputed
+    * from the corpus (both engines' division is IEEE double, so
+    * `>= threshold` agrees bit-for-bit).
+    */
+  def ngramKeepFirstSql(variant: String, n: Int, threshold: Double,
+      table: String, idCol: String): String = {
+    val gram = (0 until n).map(j => s"ws[i+$j]").mkString(" || ' ' || ")
+    "WITH RECURSIVE " + bucketMinCtes(variant, "cand") + ", " +
+      s"w AS (SELECT $idCol AS did, ${termWords("coalesce(text, '')")} " +
+      s"AS ws FROM $table), " +
+      s"g AS (SELECT did, CASE WHEN len(ws) < $n THEN [] ELSE " +
+      s"list_distinct(list_transform(range(1, len(ws) - ${n - 2}), " +
+      s"i -> $gram)) END AS gr FROM w), " +
+      "v AS (SELECT c.a, c.b FROM cand c JOIN g ga ON ga.did = c.a " +
+      "JOIN g gb ON gb.did = c.b WHERE CASE WHEN " +
+      "len(list_distinct(ga.gr || gb.gr)) = 0 THEN 0.0 ELSE " +
+      "len(list_filter(list_distinct(ga.gr), x -> list_contains(gb.gr, " +
+      s"x)))::DOUBLE / len(list_distinct(ga.gr || gb.gr)) END " +
+      s">= $threshold), " +
+      "e0 AS (SELECT a, b FROM v), " + closureFromE0 + " " +
+      keepFirstTail(table, idCol)
+  }
+
+  /** Levenshtein-verified keep-first: bucket-min candidates from the
+    * banded frame, verified by the normalized Levenshtein similarity of
+    * `text` (an SQL expression over `table`). The distance and lengths
+    * are integers and the similarity one IEEE double division, so
+    * `>= threshold` agrees bit-for-bit. DuckDB's levenshtein counts byte
+    * edits where Spark's counts codepoint edits: `encode` maps both
+    * operands to a string whose byte edits are the codepoint edits.
+    */
+  def levKeepFirstSql(variant: String, threshold: Double, text: String,
+      table: String, idCol: String,
+      encode: String => String = identity): String =
+    "WITH RECURSIVE " + bucketMinCtes(variant, "cand") + ", " +
+      s"d AS (SELECT $idCol AS did, $text AS t FROM $table), " +
+      "v AS (SELECT c.a, c.b FROM cand c JOIN d da ON da.did = c.a " +
+      "JOIN d db ON db.did = c.b WHERE CASE WHEN greatest(len(da.t), " +
+      "len(db.t)) = 0 THEN 1.0 ELSE 1.0 - " +
+      s"levenshtein(${encode("da.t")}, ${encode("db.t")})::DOUBLE" +
+      s" / greatest(len(da.t), len(db.t)) END >= $threshold), " +
+      "e0 AS (SELECT a, b FROM v), " + closureFromE0 + " " +
+      keepFirstTail(table, idCol)
+
+  /** Hamming-0 collapse of `from(id, sig)`: `ide(a, b)` ties each id to
+    * its signature's minimum id, `reps(id, sig)` keeps that minimum.
+    */
+  private def sigCollapseCtes(from: String): String =
+    s"cmu AS (SELECT id, sig, min(id) OVER (PARTITION BY sig) AS smin " +
+      s"FROM $from), " +
+      "ide AS (SELECT id AS a, smin AS b FROM cmu WHERE id <> smin), " +
+      "reps AS (SELECT id, sig FROM cmu WHERE id = smin)"
+
+  /** `name(idCol, sig, band, chunk)`: the k+1 bit-sliced band chunks of
+    * the signatures of `from` (arithmetic shift + mask equals the JVM's
+    * unsigned shift once masked).
+    */
+  private def sigBandsCte(name: String, idCol: String, from: String,
+      maxHamming: Int): String = {
+    val bands = maxHamming + 1
+    val width = 64 / bands
+    val mask = (1L << width) - 1
+    s"$name AS (SELECT $idCol, sig, band, (sig >> (band * $width)) & " +
+      s"$mask AS chunk FROM $from, LATERAL (SELECT unnest(" +
+      s"generate_series(0, ${bands - 1})) AS band) g)"
+  }
+
+  /** `pr(a, b)`: the pairs of `bd` that share a band chunk and differ in
+    * at most `maxHamming` bits.
+    */
+  private def sigPairsCte(bd: String, maxHamming: Int): String =
+    s"pr AS (SELECT y.id AS a, x.id AS b FROM $bd x JOIN $bd y ON " +
+      "x.band = y.band AND x.chunk = y.chunk AND x.id < y.id " +
+      s"WHERE bit_count(xor(x.sig, y.sig)) <= $maxHamming)"
+
+  /** SimHash keep-first from the exported (id, sig) frame alone: the
+    * hamming-0 collapse, the band chunks, the bucket self-join, the
+    * `bit_count(xor(...)) <= k` verify and the clustering. With
+    * `skipNullSigs`, NULL sigs (undecodable payloads) stay out of the
+    * clustering, so their rows fall through the final left join and
+    * survive.
+    */
+  def simhashKeepFirstSql(variant: String, maxHamming: Int, table: String,
+      idCol: String, skipNullSigs: Boolean = false): String =
+    s"WITH RECURSIVE s AS (SELECT id, sig FROM " +
+      scan(s"dedup_sigs_$variant") +
+      (if (skipNullSigs) " WHERE sig IS NOT NULL" else "") + "), " +
+      sigCollapseCtes("s") + ", " +
+      sigBandsCte("bd", "id", "reps", maxHamming) + ", " +
+      sigPairsCte("bd", maxHamming) + ", " +
+      "e0 AS (SELECT a, b FROM pr UNION SELECT a, b FROM ide), " +
+      closureFromE0 + " " + keepFirstTail(table, idCol)
+
+  /** The tail of a hamming dedup against a store `st(sig, sid)`: the
+    * increment's exported frame `dedup_sigs_<incVariant>` (NULL sigs pass
+    * through), its hamming-0 collapse and band pairs over reps, cross
+    * edges banding every increment row against the store, closure, and
+    * the root-below-offset death rule.
+    */
+  def sigStoreTail(incVariant: String, maxHamming: Int, off: Long): String =
+    s"incs AS (SELECT id, sig FROM ${scan(s"dedup_sigs_$incVariant")}), " +
+      "inc AS (SELECT id, sig FROM incs WHERE sig IS NOT NULL), " +
+      sigCollapseCtes("inc") + ", " +
+      sigBandsCte("bdr", "id", "reps", maxHamming) + ", " +
+      sigBandsCte("bda", "id", "inc", maxHamming) + ", " +
+      sigBandsCte("bds", "sid", "st", maxHamming) + ", " +
+      sigPairsCte("bdr", maxHamming) + ", " +
+      "crs AS (SELECT DISTINCT a.id AS a, s.sid AS b FROM bda a " +
+      "JOIN bds s ON a.band = s.band AND a.chunk = s.chunk " +
+      s"WHERE bit_count(xor(a.sig, s.sig)) <= $maxHamming), " +
+      "e0 AS (SELECT a, b FROM pr UNION SELECT a, b FROM ide " +
+      "UNION SELECT a, b FROM crs), " +
+      closureFromE0 + " " + offsetKeepFirstTail("incs", off)
 }

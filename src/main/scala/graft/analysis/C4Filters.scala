@@ -49,12 +49,6 @@ object C4Filters {
   def cleanLines(text: Column, minWords: Int = 5): Column =
     graft.text.FusedText.c4CleanLines(text, minWords)
 
-  /** Pre-r18 composed form — kept for the differential spec. */
-  private[graft] def cleanLinesComposed(text: Column,
-      minWords: Int = 5): Column =
-    array_join(filter(split(coalesce(text, lit("")), "\n"),
-      l => keepLine(l, minWords)), "\n")
-
   /** Sentence count of a text: number of terminal marks `[.!?]`. */
   def sentenceCount(text: Column): Column =
     size(split(text, "[.!?]", -1)) - 1

@@ -68,7 +68,7 @@ object EditDistanceDedup {
   /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates
     * from, over the ids [[Clustering.run]] assigns for `orderCol`: the
     * SQL oracle re-derives bucket-min candidates AND the Levenshtein
-    * verify from it (QueriesExtra7).
+    * verify from it (OracleSql.levKeepFirstSql).
     */
   private[graft] def bandedFrame(df: DataFrame, column: String, n: Int,
       cfg: MinHashConfig, orderCol: Option[String]): DataFrame =

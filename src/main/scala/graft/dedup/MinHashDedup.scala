@@ -249,7 +249,7 @@ object MinHashDedup {
     * reference treats any band collision as a duplicate,
     * minhash_deduplication.py:230-247). The correctness oracle reads the
     * signatures instead ([[bandedFrame]]) and derives these edges in SQL
-    * (QueriesExtra2.minhashCtes).
+    * (OracleSql.minhashCtes).
     */
   private[graft] def candidateEdges(withId: DataFrame, column: String,
       cfg: MinHashConfig): DataFrame = {
@@ -516,8 +516,9 @@ object MinHashDedup {
     *    links the new row to a retained id, which can never be its
     *    cluster min (ids offset by `newIdOffset`), so the row drops.
     * The increment's banded frame is computed ONCE (pinned) and feeds
-    * both edge families, and the skew probe when `cfg.skewProbe` is set; the store-side join is broadcast-able when the
-    * increment is small and co-located when the store is bucket-published
+    * both edge families, and the skew probe when `cfg.skewProbe` is
+    * set; the store-side join is broadcast-able when the increment is
+    * small and co-located when the store is bucket-published
     * on (band, bsig).
     *
     * `orderCol` values must be unique, non-null, and < 2^63 −

@@ -109,7 +109,7 @@ object NgramJaccard {
   /** The (id, band, bsig) frame [[verifiedEdges]] draws its candidates
     * from, over the ids [[Clustering.run]] assigns for `orderCol`: the
     * SQL oracle derives bucket-min candidates from it AND re-verifies the
-    * exact Jaccard from the corpus (QueriesExtra2.ngramKeepFirstSql; both
+    * exact Jaccard from the corpus (OracleSql.ngramKeepFirstSql; both
     * engines' division is IEEE double, so `>= threshold` agrees
     * bit-for-bit).
     */

@@ -84,7 +84,7 @@ object SimHash {
     * assigns for `orderCol` (plus `idOffset`, the store paths' increment
     * offset). The SQL oracles read it and re-derive banding (shift+mask
     * chunks), the hamming-≤k verify (`bit_count(xor(...))`) and the
-    * clustering by themselves (QueriesExtra2.simhashKeepFirstSql).
+    * clustering by themselves (OracleSql.simhashKeepFirstSql).
     */
   private[graft] def sigFrame(df: DataFrame, column: String,
       sigOf: Column => Column, orderCol: Option[String],

@@ -19,7 +19,7 @@ import graft.dedup.SimHash
   * exact integer arithmetic end to end, so signatures are deterministic
   * and the dedup DECISION is replayable in SQL from the exported
   * (id, sig) frame — the same trust split as text simhash
-  * (`QueriesExtra2.simhashKeepFirstSql`): pixel→hash is Spark's
+  * (`OracleSql.simhashKeepFirstSql`): pixel→hash is Spark's
   * (golden-vector spec'd), banding/hamming/clustering is the oracle's.
   *
   * dHash: box-average the grayscale raster down to a 9×8 grid, then one

@@ -49,7 +49,7 @@ object Mixture {
     */
   private val BucketHexChars = 2
 
-  private def budgetDf(df: DataFrame, sourceCol: String,
+  private[graft] def budgetDf(df: DataFrame, sourceCol: String,
       budgets: Map[String, Long]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -72,7 +72,7 @@ object Mixture {
         expr("budget div total_tokens").as("full_epochs"),
         (col("budget") % col("total_tokens")).as("remainder_tokens"))
 
-  private def md5Key(idCol: String, seed: Long): Column =
+  private[graft] def md5Key(idCol: String, seed: Long): Column =
     md5(concat(lit(s"$seed:"), col(idCol).cast("string")))
 
   /** Deterministic greedy fill of each source's budget: documents in
@@ -170,23 +170,5 @@ object Mixture {
       .select(col(idCol), col(sourceCol), col("toks"),
         col("full_epochs").as("epoch"))
     full.unionByName(remainder)
-  }
-
-  /** The r8 single-window formulation, kept ONLY as the equivalence
-    * reference for MixtureSpec (bucketed ≡ windowed on a multi-source
-    * corpus). Never call this at scale: the per-source window is a
-    * single-reducer sort.
-    */
-  private[graft] def tokenBudgetSelectWindowed(df: DataFrame, idCol: String,
-      sourceCol: String, tokenCount: Column, budgets: Map[String, Long],
-      seed: Long): DataFrame = {
-    val w = Window.partitionBy(sourceCol).orderBy(md5Key(idCol, seed),
-        col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("toks", tokenCount)
-      .join(broadcast(budgetDf(df, sourceCol, budgets)), Seq(sourceCol))
-      .withColumn("cum_tokens", sum(col("toks")).over(w))
-      .where(col("cum_tokens") <= col("budget"))
-      .drop("budget")
   }
 }

@@ -54,7 +54,7 @@ object SpDivergence {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("text").collect().map(_.getString(0))
     spark.stop()
-    val fuzz = graft.QueriesFuzz.Fragments.map(_._1)
+    val fuzz = graft.QueriesText.Fragments.map(_._1)
 
     // the scorer's exact pieces-path pretreatment (Perplexity.scala)
     val inputs = (docs ++ fuzz).map { raw =>

@@ -197,52 +197,6 @@ object Bpe {
     BpeModel(merges.result())
   }
 
-  /** The r8 full-rescan loop, kept as the oracle for BpeSpec's
-    * equivalence test (identical merge sequences). O(words × merges) —
-    * never call it on a real dictionary.
-    */
-  private[graft] def trainFromCountsRescan(wc: Seq[(String, Long)],
-      numMerges: Int): BpeModel = {
-    var words: Vector[(Vector[String], Long)] = wc.sortBy(_._1).map {
-      case (w, c) => (w.map(_.toString).toVector :+ EndOfWord, c)
-    }.toVector
-    val merges = Vector.newBuilder[(String, String)]
-    var n = 0
-    var exhausted = false
-    while (n < numMerges && !exhausted) {
-      val pc = scala.collection.mutable.Map.empty[(String, String), Long]
-      words.foreach { case (syms, c) =>
-        var i = 0
-        while (i < syms.length - 1) {
-          val p = (syms(i), syms(i + 1))
-          pc.update(p, pc.getOrElse(p, 0L) + c)
-          i += 1
-        }
-      }
-      if (pc.isEmpty) exhausted = true
-      else {
-        val (best, cnt) = pc.minBy { case ((a, b), c) => (-c, a, b) }
-        if (cnt < 2) exhausted = true // a pair seen once compresses nothing
-        else {
-          merges += best
-          words = words.map { case (syms, c) =>
-            val nb = Vector.newBuilder[String]
-            var i = 0
-            while (i < syms.length) {
-              if (i < syms.length - 1 && syms(i) == best._1 &&
-                  syms(i + 1) == best._2) {
-                nb += best._1 + best._2; i += 2
-              } else { nb += syms(i); i += 1 }
-            }
-            (nb.result(), c)
-          }
-          n += 1
-        }
-      }
-    }
-    BpeModel(merges.result())
-  }
-
   /** One distributed word-count pass (the corpus never shuffles — only
     * distinct words do), TakeOrdered top-`maxWords` dictionary
     * (count desc, word asc — deterministic), then the driver merge loop.

@@ -90,33 +90,12 @@ object Filters {
     * skipped; comparison stops at the shorter half (the reference loop's
     * `min_length`). r19: fused one-scan kernel
     * ([[GraftTextKernels.genderConflict]]) — the composed zip_with form
-    * below is retained as the `FusedTextSpec` differential reference (it
-    * was the slowest scalar op in the r19 throughput table, 0.36M rows/s
-    * from its per-row split/lower/array garbage).
+    * lives on as `FusedTextSpec`'s differential reference (it was the
+    * slowest scalar op in the r19 throughput table, 0.36M rows/s from its
+    * per-row split/lower/array garbage).
     */
   def checkGender(splitter: String = "<|gender_splitter|>"): TextFilter = {
     def keepF(c: Column): Column = FusedText.checkGender(c, splitter)
-    TextFilter("check_gender",
-      score = c => keepF(c).cast(IntegerType), keep = keepF)
-  }
-
-  /** Pre-fusion composed form of [[checkGender]] (r18 shape), kept as the
-    * differential-spec reference — requires the splitter present in every
-    * row (`element_at(parts, 2)` is an ANSI error otherwise).
-    */
-  private[graft] def checkGenderComposed(
-      splitter: String = "<|gender_splitter|>"): TextFilter = {
-    def keepF(c: Column): Column = {
-      val parts = split(c, java.util.regex.Pattern.quote(splitter))
-      val g = WordLists.GenderedWords.toIndexedSeq
-      def toks(half: Column): Column =
-        filter(split(lower(half), "\\s+"), w => length(w) > 0)
-      val a = toks(element_at(parts, 1))
-      val b = toks(element_at(parts, 2))
-      val n = least(size(a), size(b))
-      exists(zip_with(slice(a, lit(1), n), slice(b, lit(1), n), (x, y) =>
-        x.isin(g: _*) && y.isin(g: _*) && x =!= y), p => p)
-    }
     TextFilter("check_gender",
       score = c => keepF(c).cast(IntegerType), keep = keepF)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -351,6 +353,24 @@ class ClassifierSpec extends AnyFunSuite with SharedSession {
     }
   }
 
+  /** The r8 single-window formulation of `Mixture.tokenBudgetSelect`,
+    * the equivalence reference (bucketed ≡ windowed on a multi-source
+    * corpus). Never call this at scale: the per-source window is a
+    * single-reducer sort.
+    */
+  private def tokenBudgetSelectWindowed(df: DataFrame, idCol: String,
+      sourceCol: String, tokenCount: Column, budgets: Map[String, Long],
+      seed: Long): DataFrame = {
+    val w = Window.partitionBy(sourceCol)
+      .orderBy(Mixture.md5Key(idCol, seed), col(idCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("toks", tokenCount)
+      .join(broadcast(Mixture.budgetDf(df, sourceCol, budgets)), Seq(sourceCol))
+      .withColumn("cum_tokens", sum(col("toks")).over(w))
+      .where(col("cum_tokens") <= col("budget"))
+      .drop("budget")
+  }
+
   test("tokenBudgetSelect: bucketed two-phase prefix sum == single window") {
     // VERDICT r8 #2: the scale fix must not change one selected row or one
     // cum_tokens value. Corpus large enough that every source spans many
@@ -374,7 +394,7 @@ class ClassifierSpec extends AnyFunSuite with SharedSession {
     val bucketed = canon(
       Mixture.tokenBudgetSelect(docs, "id", "source", tok, budgets, 7L))
     val windowed = canon(
-      Mixture.tokenBudgetSelectWindowed(docs, "id", "source", tok, budgets,
+      tokenBudgetSelectWindowed(docs, "id", "source", tok, budgets,
         7L))
     assert(bucketed === windowed)
     assert(bucketed.nonEmpty && bucketed.size < 900) // both cut somewhere

@@ -451,9 +451,9 @@ class ExtrasSpec extends AnyFunSuite with SharedSession {
     // structurally different (window-rendered prefixes vs join-rebuilt
     // arrays), so agreement is meaningful.
     val dir = "/root/testdata/sf0.001"
-    val flagship = QueriesExtra2.flagship.run(spark, dir)
+    val flagship = QueriesChat.flagship.run(spark, dir)
       .collect().map(r => (r.getString(1), r.getString(0))).toSet
-    val twin = QueriesFlagshipOracle.runMinhash(spark, dir)
+    val twin = QueriesChat.runMinhash(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(twin.nonEmpty)
     assert(flagship === twin,

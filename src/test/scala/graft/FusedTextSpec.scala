@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField,
+  StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.text.{Cleaners, Filters, GraftTextKernels, StripWs}
+import graft.text.{Cleaners, Filters, GraftTextKernels, StripWs, TextFilter,
+  WordLists}
 
 /** The fused single-pass kernels (`GraftTextKernels`) must be
   * bit-identical to the composed column forms they replaced — proven three
@@ -56,14 +58,14 @@ class FusedTextSpec extends AnyFunSuite with SharedSession {
   private def u(s: String): UTF8String = UTF8String.fromString(s)
 
   private val hostile: Seq[String] = {
-    val frags = Seq("", " ", "\t\n\f\r", ".", "..", "...", "....",
+    val frags = Seq("", " ", "\t\n\u000B\f\r", ".", "..", "...", "....",
       ".....", "......", ".......", "…", "……", "..….", "…...", ". .",
       "a", "ab.", "ab!", "ab”", "ab…", "ab“", "ab“", "x…y", "😀",
       "😀.", "end)", "end]", "end`", "end;", "end~", "end'", "q\"",
       "tail ", " ", "é", "…\n...", "mid\ndle", "\nx\n",
       "..a.", "a...b", "....x", "..…", "…..", "text... more…done",
-      "a\r\nb", "a\rb", "ab", "ab", "ab", "ab",
-      "ab", "ab", "a b", "a b", "a\n \t\nb",
+      "a\r\nb", "a\rb", "a\u000Bb", "a\u000Cb", "a\u001Cb", "a\u001Db",
+      "a\u001Eb", "ab", "a b", "a b", "a\n \t\nb",
       " \t", "\n\n", "a\n", "\na", "a\r\n\r\nb", "x\r", "\r\n",
       "é\n \né", "one\ntwo\nthree", " pad \n\t\n last ")
     val joined = for {
@@ -311,6 +313,13 @@ class FusedTextSpec extends AnyFunSuite with SharedSession {
     }
   }
 
+  /** Pre-r18 composed form of `C4Filters.cleanLines` — the differential
+    * reference of the fused kernel.
+    */
+  private def cleanLinesComposed(text: Column, minWords: Int = 5): Column =
+    array_join(filter(split(coalesce(text, lit("")), "\n"),
+      l => graft.analysis.C4Filters.keepLine(l, minWords)), "\n")
+
   test("c4CleanLines matches the composed line-gate, null included") {
     val lines = Seq(
       "this line has five words.", "this line has five words",
@@ -335,7 +344,7 @@ class FusedTextSpec extends AnyFunSuite with SharedSession {
       StructType(Seq(StructField("text", StringType))))
     df.select(col("text"),
       graft.analysis.C4Filters.cleanLines(col("text")).as("fused"),
-      graft.analysis.C4Filters.cleanLinesComposed(col("text")).as("ref"))
+      cleanLinesComposed(col("text")).as("ref"))
       .collect().foreach { r =>
         assert(r.getString(1) === r.getString(2),
           s"for ${Option(r.getString(0)).getOrElse("<null>").take(60)}")
@@ -477,12 +486,33 @@ class FusedTextSpec extends AnyFunSuite with SharedSession {
       g(a(i)) && g(b(i)) && a(i) != b(i))
   }
 
+  /** Pre-fusion composed form of `Filters.checkGender` (r18 shape), the
+    * differential reference — requires the splitter present in every row
+    * (`element_at(parts, 2)` is an ANSI error otherwise).
+    */
+  private def checkGenderComposed(
+      splitter: String = "<|gender_splitter|>"): TextFilter = {
+    def keepF(c: Column): Column = {
+      val parts = split(c, java.util.regex.Pattern.quote(splitter))
+      val g = WordLists.GenderedWords.toIndexedSeq
+      def toks(half: Column): Column =
+        filter(split(lower(half), "\\s+"), w => length(w) > 0)
+      val a = toks(element_at(parts, 1))
+      val b = toks(element_at(parts, 2))
+      val n = least(size(a), size(b))
+      exists(zip_with(slice(a, lit(1), n), slice(b, lit(1), n), (x, y) =>
+        x.isin(g: _*) && y.isin(g: _*) && x =!= y), p => p)
+    }
+    TextFilter("check_gender",
+      score = c => keepF(c).cast(IntegerType), keep = keepF)
+  }
+
   test("genderConflict ≡ composed zip_with form ≡ JVM reference") {
     val tok = "<S>"
     val words = Seq("he", "she", "him", "her", "girl", "boy", "HE", "She",
       "hIm", "HER", "GIRL", "BoY", "x", "zz", "hello", "hé", "Hİ", "HİM",
       "Kim", "boy.", "?her", "girĺ")
-    val seps = Seq(" ", "\t", "\n", "  ", "\r\n", "  ")
+    val seps = Seq(" ", "\t", "\n", "  ", "\r\n", " \u000B ")
     val rnd = new scala.util.Random(20190816)
     def half(): String = {
       val n = rnd.nextInt(7)
@@ -505,7 +535,7 @@ class FusedTextSpec extends AnyFunSuite with SharedSession {
       StructType(Seq(StructField("text", StringType))))
     val got = df.select(col("text"),
       Filters.checkGender(tok).keep(col("text")).as("fused"),
-      Filters.checkGenderComposed(tok).keep(col("text")).as("composed"))
+      checkGenderComposed(tok).keep(col("text")).as("composed"))
       .collect()
     got.foreach { r =>
       val s = r.getString(0)

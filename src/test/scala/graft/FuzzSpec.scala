@@ -13,7 +13,7 @@ class FuzzSpec extends AnyFunSuite with SharedSession {
     s.codePoints().anyMatch(_ == cp)
 
   test("fragment set covers the hostile classes") {
-    val frags = QueriesFuzz.Fragments.map(_._1)
+    val frags = QueriesText.Fragments.map(_._1)
     assert(frags.exists(f => f.codePoints().anyMatch(_ > 0xFFFF)),
       "astral plane")
     assert(frags.exists(hasCp(_, 0x2028)), "line separator")
@@ -33,19 +33,19 @@ class FuzzSpec extends AnyFunSuite with SharedSession {
   }
 
   test("C1 goldens discriminate: some fragments transform, anchors do not") {
-    val (changed, same) = QueriesFuzz.Fragments.partition(f => f._1 != f._2)
+    val (changed, same) = QueriesText.Fragments.partition(f => f._1 != f._2)
     assert(changed.size >= 10, s"only ${changed.size} transforming fragments")
     assert(same.size >= 5, s"only ${same.size} identity anchors")
     // and the implementation agrees with every hand-written expectation
-    QueriesFuzz.Fragments.foreach { case (in, exp) =>
+    QueriesText.Fragments.foreach { case (in, exp) =>
       assert(graft.text.FtfyLite.fix(in) == exp,
         s"ftfy golden mismatch for ${in.codePoints().toArray.toSeq}")
     }
   }
 
   test("stored corpus preserves hostile bytes through parquet round-trip") {
-    val n2 = QueriesFuzz.Rows.toLong
-    val rows = QueriesFuzz.fuzzCleaners
+    val n2 = QueriesText.Rows.toLong
+    val rows = QueriesText.fuzzCleaners
       .run(spark, "/root/testdata/sf0.001").count()
     assert(rows == n2)
     val texts = spark.read.parquet(SideChannel.path("fuzz_corpus"))

@@ -212,7 +212,7 @@ class DistributedCcSpec extends AnyFunSuite with SharedSession {
     2 -> Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
       .map(t => "P5\n".getBytes("US-ASCII") ++ t.toArray),
     2 -> Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
-      .map(t => "RIFF    WAVE".getBytes("ISO-8859-1")
+      .map(t => "RIFF\u0000\u0000\u0000\u0000WAVE".getBytes("ISO-8859-1")
         ++ t.toArray),
     1 -> Gen.const(Array.empty[Byte]))
 
